@@ -255,6 +255,12 @@ object Route {
   def run(spark: SparkSession, trunk: DataFrame, sinks: Seq[SinkSpec], outDir: String,
           writeDefault: Boolean = true, ordered: Boolean = false,
           buckets: Int = 0, extraCounts: Map[String, Long] = Map.empty): RunResult = {
+    // '_' names are the run's own outputs (_default, _lineage, _counts,
+    // _metrics, _manifests): a sink named like one would merge into it or
+    // suppress it
+    sinks.foreach(sp => require(!sp.name.startsWith("_"),
+      s"sink name '${sp.name}' starts with '_', which is reserved for Route.run's " +
+        "own outputs (_default, _lineage, _counts, _metrics, _manifests) — rename the sink"))
     val trunk1 =
       if (ordered) trunk.repartitionByRange(col("doc_id")).sortWithinPartitions("doc_id")
       else trunk
@@ -279,6 +285,12 @@ object Route {
       // stable, and ordered mode's contract is within-file order), bucketed
       // runs (two-level layout), and names needing partition-path escaping.
       val outFs = new org.apache.hadoop.fs.Path(outDir).getFileSystem(hadoopConf)
+      // reap staging debris of a crashed earlier combined write, whatever
+      // this run writes (a fully resumed rerun stages nothing)
+      if (outFs.exists(new org.apache.hadoop.fs.Path(outDir)))
+        outFs.listStatus(new org.apache.hadoop.fs.Path(outDir))
+          .filter(_.getPath.getName.startsWith(".sinkstage-"))
+          .foreach(st => outFs.delete(st.getPath, true))
       def hasSuccess(name: String): Boolean =
         outFs.exists(new org.apache.hadoop.fs.Path(s"$outDir/$name", "_SUCCESS"))
       val combineEligible: Seq[SinkSpec] =
@@ -306,11 +318,6 @@ object Route {
             .withColumn("_sink",
               explode(filter(array(labels.toIndexedSeq: _*), v => v.isNotNull)))
             .drop(dropCols.toIndexedSeq: _*)
-          // reap staging debris from a crashed previous combined attempt
-          if (outFs.exists(new org.apache.hadoop.fs.Path(outDir)))
-            outFs.listStatus(new org.apache.hadoop.fs.Path(outDir))
-              .filter(_.getPath.getName.startsWith(".sinkstage-"))
-              .foreach(st => outFs.delete(st.getPath, true))
           val staging = new org.apache.hadoop.fs.Path(
             outDir, s".sinkstage-${java.util.UUID.randomUUID().toString.take(8)}")
           try {

@@ -17,8 +17,8 @@ import graft.model.Json
   * write is the commit point (Checkpoint.java:24-44,
   * FileCheckpointIO.java:94-110) — and the DLQ's immutable, rotated segment
   * files (DeadLetterQueueWriter.java). Here every ingested batch is an
-  * immutable data directory, and the commit point is the atomic rename of a
-  * tiny JSON manifest; data files are never the commit.
+  * immutable data directory, and the commit point is the atomic claim of a
+  * tiny JSON manifest's name; data files are never the commit.
   *
   * Layout under the table root:
   * {{{
@@ -33,11 +33,18 @@ import graft.model.Json
   * read and a full-listing of millions of files; it is also what makes
   * REPLACE (compaction) invisible to time travel and changelogs.
   *
-  * Concurrency contract: single writer per table (the reference pipeline is
-  * also the sole writer of its PQ/DLQ dirs). The manifest rename is a
-  * commit-or-fail-loudly guard, not a retry loop; a production multi-writer
-  * would layer Iceberg's optimistic CAS + uniquely-named data files on the
-  * same structure.
+  * Concurrency contract: single writer per table, except for
+  * [[appendConcurrent]] (the reference pipeline is also the sole writer of
+  * its PQ/DLQ dirs). Every commit point (a manifest on the main chain or a
+  * branch, a tag, a staged batch) is claimed through [[publishIfAbsent]],
+  * so a commit is commit-or-fail-loudly on every filesystem: a second
+  * writer that reaches a taken snapshot id fails instead of replacing the
+  * first writer's manifest (`link(2)` on `file:`, an exclusive rename
+  * elsewhere). The claim guards the metadata only. Two racing single-writer
+  * [[append]]s still pick the same `snap-N` data dir and can overwrite each
+  * other's files before one of them loses the claim, so concurrent writers
+  * use [[appendConcurrent]]: Iceberg's optimistic CAS over uniquely-named
+  * data dirs, on the same structure.
   *
   * Crash safety: a data dir written without its manifest is garbage — the
   * next append of that snapshot id overwrites it, and no reader ever lists
@@ -113,6 +120,7 @@ object SnapshotTable {
   private def manifestDir(root: Path) = new Path(root, "_manifests")
   private def dataDir(root: Path) = new Path(root, "data")
   private val ManifestName = "manifest-(\\d{6})\\.json".r
+  private def manifestName(id: Long) = f"manifest-$id%06d.json"
 
   private def idsIn(fs: FileSystem, d: Path): Seq[Long] = {
     if (!fs.exists(d)) Nil
@@ -238,7 +246,7 @@ object SnapshotTable {
     */
   def manifest(spark: SparkSession, dir: String, id: Long): Manifest = {
     val (fs, root) = fsOf(spark, dir)
-    val p = new Path(manifestDir(root), f"manifest-$id%06d.json")
+    val p = new Path(manifestDir(root), manifestName(id))
     require(fs.exists(p),
       s"snapshot $id of $dir does not exist (never committed, or expired); " +
         s"available: ${manifestIds(fs, root).mkString(",")}")
@@ -250,28 +258,185 @@ object SnapshotTable {
     try parse(scala.io.Source.fromInputStream(in, "UTF-8").mkString) finally in.close()
   }
 
-  /** Atomic (tmp+rename) manifest write into `intoDir`. `restamp` = stamp
-    * commit wall-clock now; fast-forward copies preserve the original stamp
-    * via raw-byte copy instead, never through here.
+  /** Publish `body` as `intoDir/name` only if no file holds that name yet.
+    * This is the one commit point of the table: manifests of the main chain
+    * and of branches (fork and fast-forward copies included), tags and
+    * staged batches all claim their name here. The bytes go to a
+    * writer-unique tmp file first, so racing writers never clobber each
+    * other's bytes; [[casClaim]] then claims the name atomically and the tmp
+    * file is deleted either way. Returns whether this writer won; a lost
+    * claim leaves the existing file byte-for-byte untouched.
     */
-  private def writeManifest(fs: FileSystem, intoDir: Path, m: Manifest,
-                            restamp: Boolean): Unit = {
+  private[graft] def publishIfAbsent(fs: FileSystem, intoDir: Path, name: String,
+                                     body: Array[Byte]): Boolean = {
     fs.mkdirs(intoDir)
-    val tmp = new Path(intoDir, f".manifest-${m.snapshotId}%06d.json.tmp")
-    val dst = new Path(intoDir, f"manifest-${m.snapshotId}%06d.json")
+    val token = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
+    val tmp = new Path(intoDir, s".$name.$token.tmp")
     val out = fs.create(tmp, true)
-    // wall-clock stamp at commit (never a rollback target's carried copy);
-    // monotonicity across commits is NOT assumed anywhere — asOfTimestamp
-    // scans, never binary-searches
-    val stamped = if (restamp) m.copy(commitTimeMs = System.currentTimeMillis()) else m
-    try out.write(render(stamped).getBytes("UTF-8")) finally out.close()
-    require(fs.rename(tmp, dst),
-      s"concurrent commit detected for snapshot ${m.snapshotId} of $intoDir — " +
-        "SnapshotTable is single-writer per table (see scaladoc)")
+    try out.write(body) finally out.close()
+    val won = casClaim(fs, tmp, new Path(intoDir, name))
+    fs.delete(tmp, false)
+    won
   }
 
+  /** Atomic claim of `dst` with `src`'s (complete) content. The obvious
+    * primitive, a rename that fails when the destination exists, is NOT a
+    * CAS on local filesystems: rename(2) silently REPLACES an existing
+    * destination, and Hadoop's LocalFileSystem layers a non-atomic
+    * exists-check plus a data/crc rename PAIR on top, which two racing
+    * writers interleave into a torn commit (observed as manifest checksum
+    * errors under a 4-writer race before this switched to link). So on
+    * `file:` schemes the claim is a HARD LINK of `src` onto the name —
+    * link(2) fails with EEXIST atomically in the kernel, and the linked file
+    * is complete the instant the name appears (no partial-content window
+    * for readers); a won claim keeps the inode alive through the name. On
+    * HDFS, rename-refusing-existing IS namenode-atomic, so other schemes
+    * keep fs.rename.
+    */
+  private def casClaim(fs: FileSystem, src: Path, dst: Path): Boolean =
+    if (Option(fs.getUri.getScheme).forall(_ == "file")) {
+      try {
+        java.nio.file.Files.createLink(
+          java.nio.file.Paths.get(dst.toUri.getPath),
+          java.nio.file.Paths.get(src.toUri.getPath))
+        true
+      } catch { case _: java.nio.file.FileAlreadyExistsException => false }
+    } else fs.rename(src, dst)
+
+  /** Claim snapshot `m.snapshotId` of the chain in `intoDir` (main's
+    * `_manifests` or a branch dir). `restamp` stamps the commit wall-clock
+    * time now; a fork copy keeps the stamp of the commit it copies.
+    * Monotonicity across commits is NOT assumed anywhere — asOfTimestamp
+    * scans, never binary-searches. False when the id is already taken.
+    */
+  private def claimManifest(fs: FileSystem, intoDir: Path, m: Manifest,
+                            restamp: Boolean = true): Boolean = {
+    val stamped = if (restamp) m.copy(commitTimeMs = System.currentTimeMillis()) else m
+    publishIfAbsent(fs, intoDir, manifestName(m.snapshotId), render(stamped).getBytes("UTF-8"))
+  }
+
+  /** [[claimManifest]] on a single-writer path: a taken id fails loudly. */
+  private def commitManifestTo(fs: FileSystem, intoDir: Path, m: Manifest,
+                               restamp: Boolean = true): Unit =
+    require(claimManifest(fs, intoDir, m, restamp),
+      s"concurrent commit detected for snapshot ${m.snapshotId} of $intoDir — " +
+        "SnapshotTable is single-writer per table (see scaladoc)")
+
   private def commitManifest(fs: FileSystem, root: Path, m: Manifest): Unit =
-    writeManifest(fs, manifestDir(root), m, restamp = true)
+    commitManifestTo(fs, manifestDir(root), m)
+
+  /** Parent side of a batch-id writer's commit: the child's snapshot id,
+    * the chain head it builds on (None on a virgin table), and the table's
+    * stats/bloom columns with this commit's own added.
+    */
+  private final case class ChildOf(next: Long, parent: Option[Manifest],
+                                   statsCols: Seq[String], bloomCols: Seq[String])
+
+  /** What a batch-id writer adds on top of its parent: the data dirs it
+    * wrote with their rows, stats and Bloom sidecars, and the parent dirs it
+    * `replaced`, whose stats and sketches leave with them. `replacedRows` is
+    * their PHYSICAL row count (the Manifest `totalRows` contract).
+    */
+  private final case class Child(added: Seq[String], rows: Long,
+                                 stats: Seq[DirStat], blooms: Seq[(String, String)],
+                                 replaced: Seq[String] = Nil, replacedRows: Long = 0L)
+
+  /** The one parent→child rule of every batch-id writer: [[append]],
+    * [[overwrite]], [[appendPartitioned]], [[overwritePartitions]],
+    * [[adoptFiles]], [[publishStaged]], [[appendToBranch]], and each attempt
+    * of [[appendConcurrent]]. It reads the chain head, resolves the batch
+    * ledger and skips a replayed batch id (returned as `skippedExisting`,
+    * and `stage` never runs), numbers the child, merges the schema and the
+    * stats/bloom column properties, lets `stage` write the data, carries
+    * the parent's live dirs, totals, ledger, stats, sketches and pending
+    * merge-on-read deletes onto the child manifest, and claims its id.
+    *
+    * `branch` commits on that branch chain dir instead of main's.
+    * `replaceAll` makes the child a new table state (the [[overwrite]]
+    * REPLACE): only the stats/bloom column properties carry over, the schema
+    * restamps to `schema`, and the ledger restarts with this batch — ledger
+    * invariant (the rollback precedent): batch id present == that batch's
+    * rows are present, and the replace removed every prior batch's rows.
+    *
+    * A lost claim fails loudly, so the result is always defined for a
+    * single writer; only a `contended` caller sees None, and rebases.
+    */
+  private def commitChild(spark: SparkSession, fs: FileSystem, root: Path, op: String,
+                          batchId: Option[String],
+                          schema: org.apache.spark.sql.types.StructType,
+                          statsBy: Seq[String] = Nil, bloomBy: Seq[String] = Nil,
+                          branch: Option[Path] = None, replaceAll: Boolean = false,
+                          contended: Boolean = false)
+                         (stage: ChildOf => Child): Option[Commit] = {
+    val chain = branch.getOrElse(manifestDir(root))
+    val ids = idsIn(fs, chain)
+    require(branch.isEmpty || ids.nonEmpty, s"branch dir $chain holds no manifests (corrupt branch)")
+    val parent = ids.lastOption.map(id => readManifestFile(fs, new Path(chain, manifestName(id))))
+    val ledger = resolveLedger(fs, chain, ids, parent, batchId)
+    batchId.flatMap(b => ledger.find(_._1 == b)) match {
+      case Some((_, snap)) => Some(Commit(snap, skippedExisting = true))
+      case None =>
+        val next = ids.lastOption.map(_ + 1).getOrElse(0L)
+        val base = if (replaceAll) None else parent
+        // schema evolution: a fresh state stamps the incoming schema, a
+        // child merges new columns in. A LEGACY chain (parent without a
+        // stamped schema) stays in footer-inference mode — stamping only
+        // the new columns would hide the older dirs' columns. Merged before
+        // `stage`, so a conflict fails before any data moves.
+        val schemaNow = base match {
+          case None => Some(schema.json)
+          case Some(p) => p.schema.map(ps => mergeSchemas(ps, schema).json)
+        }
+        // stats/bloom columns are table properties: once requested they are
+        // computed on every later commit too, so pruning stays complete
+        val to = ChildOf(next, parent,
+          (parent.map(_.statsCols).getOrElse(Nil) ++ statsBy).distinct,
+          (parent.map(_.bloomCols).getOrElse(Nil) ++ bloomBy).distinct)
+        val c = stage(to)
+        val gone = c.replaced.toSet
+        // the state the child inherits: an empty one on a fresh table or a REPLACE
+        val b = base.getOrElse(Manifest(-1L, None, "empty", None, Nil, Nil, 0L, 0L))
+        val m = Manifest(next, ids.lastOption, op, batchId,
+          added = c.added, live = b.live.filterNot(gone) ++ c.added,
+          addedRows = c.rows, totalRows = b.totalRows - c.replacedRows + c.rows,
+          batchCommits = (if (replaceAll) Nil else ledger) ++ batchId.map(_ -> next),
+          schemaJson = schemaNow,
+          statsCols = to.statsCols,
+          stats = b.stats.filterNot(st => gone(st.dir)) ++ c.stats,
+          bloomCols = to.bloomCols,
+          blooms = b.blooms.filterNot(bl => gone(bl._1)) ++ c.blooms,
+          // pending MOR deletes carry forward; the child's dirs have a newer
+          // addSeq than every delete seq, so they provably never touch them
+          deletes = b.deletes)
+        val won = if (contended) claimManifest(fs, chain, m)
+                  else { commitManifestTo(fs, chain, m); true }
+        Option.when(won)(Commit(next, skippedExisting = false))
+    }
+  }
+
+  /** Child of one data dir `name` written from `df` (an existing dir there
+    * is an UNCOMMITTED crash leftover, no manifest references it, so
+    * writing over it is the recovery path). Row count and stats bounds ride
+    * the write job (observed metrics); the sketches reuse the count.
+    */
+  private def writeChild(spark: SparkSession, fs: FileSystem, root: Path,
+                         df: DataFrame, name: String, to: ChildOf): Child = {
+    val dataPath = new Path(dataDir(root), name).toString
+    val (rows, stats, _) = writeMeasured(df, dataPath, name, to.statsCols)
+    Child(Seq(name), rows, stats,
+      computeBlooms(spark, fs, root, dataPath, name, to.bloomCols, rowsHint = rows))
+  }
+
+  /** Child of one data dir `name` already on disk (adopted streaming files,
+    * a published staged batch) holding `rows` rows: one stats job, then the
+    * sketches.
+    */
+  private def onDiskChild(spark: SparkSession, fs: FileSystem, root: Path,
+                          name: String, rows: Long, to: ChildOf): Child = {
+    val dataPath = new Path(dataDir(root), name).toString
+    Child(Seq(name), rows, computeStats(spark, dataPath, name, to.statsCols),
+      computeBlooms(spark, fs, root, dataPath, name, to.bloomCols, rowsHint = rows))
+  }
 
   /** Append `df` as a new snapshot. `batchId` is the exactly-once token: a
     * batch id already committed in the table is skipped (the original
@@ -283,70 +448,22 @@ object SnapshotTable {
     * skipped after the committing snapshot has been EXPIRED — the rows are
     * still in the table, only the history entry is gone.
     *
-    * The row count is taken from the written parquet footers (a
-    * metadata-only job at any scale — at production scale the writer's task
-    * metrics would be carried instead, same number).
+    * The row count is observed during the write job (at production scale
+    * the writer's task metrics would be carried instead, same number).
     */
   def append(spark: SparkSession, df: DataFrame, dir: String,
              batchId: Option[String] = None,
              statsBy: Seq[String] = Nil,
              bloomBy: Seq[String] = Nil): Commit = {
     val (fs, root) = fsOf(spark, dir)
-    val ids = manifestIds(fs, root)
-    val parent = ids.lastOption.map(manifest(spark, dir, _))
-    // Legacy migration: a chain written before the ledger existed carries
-    // per-snapshot batch_id but no cumulative ledger — when a batch-id
-    // append lands on such a chain, resolveLedger reconstructs it ONCE
-    // from the retained manifests (exactly what the old full-chain replay
-    // scan read); the new manifest then carries it forward, so this costs
-    // O(chain) at most once per table. Batch ids of legacy snapshots that
-    // were ALREADY expired are unrecoverable (the old format never
-    // persisted them cumulatively).
-    val ledger = resolveLedger(spark, dir, ids, parent, batchId)
-    val existing = batchId.flatMap(b => ledger.find(_._1 == b))
-    existing match {
-      case Some((_, snap)) => Commit(snap, skippedExisting = true)
-      case None =>
-        val next = ids.lastOption.map(_ + 1).getOrElse(0L)
-        val name = f"snap-$next%06d"
-        val dataPath = new Path(dataDir(root), name).toString
-        // schema evolution: fresh tables stamp the frame's schema; evolved
-        // appends merge new columns in. A LEGACY chain (parent without a
-        // stamped schema) stays in footer-inference mode — stamping only
-        // the new snapshot's columns would hide the older dirs' columns.
-        val schemaNow: Option[String] = parent match {
-          case None => Some(df.schema.json)
-          case Some(p) => p.schema.map(ps => mergeSchemas(ps, df.schema).json)
-        }
-        // stats columns are a table property: once requested they are
-        // computed on every later append too, so pruning stays complete
-        val scols = (parent.map(_.statsCols).getOrElse(Nil) ++ statsBy).distinct
-        val bcols = (parent.map(_.bloomCols).getOrElse(Nil) ++ bloomBy).distinct
-        // Overwrite: an existing dir here is an UNCOMMITTED crash leftover
-        // (no manifest references it) — rewriting it is the recovery path.
-        // Row count + stats bounds ride the write job (observed metrics).
-        val (rows, stats, _) = writeMeasured(df, dataPath, name, scols)
-        val m = Manifest(next, ids.lastOption, "append", batchId,
-          added = Seq(name), live = parent.map(_.live).getOrElse(Nil) :+ name,
-          addedRows = rows, totalRows = parent.map(_.totalRows).getOrElse(0L) + rows,
-          batchCommits = ledger ++ batchId.map(_ -> next),
-          schemaJson = schemaNow,
-          statsCols = scols,
-          stats = parent.map(_.stats).getOrElse(Nil) ++ stats,
-          bloomCols = bcols,
-          blooms = parent.map(_.blooms).getOrElse(Nil) ++
-            computeBlooms(spark, fs, root, dataPath, name, bcols, rowsHint = rows),
-          // pending MOR deletes carry forward; the new dir's addSeq is newer
-          // than every delete seq, so they provably never touch its rows
-          deletes = parent.map(_.deletes).getOrElse(Nil))
-        commitManifest(fs, root, m)
-        Commit(next, skippedExisting = false)
-    }
+    commitChild(spark, fs, root, "append", batchId, df.schema, statsBy, bloomBy) { to =>
+      writeChild(spark, fs, root, df, f"snap-${to.next}%06d", to)
+    }.get
   }
 
   /** Optimistic-concurrency append — the MULTI-WRITER variant of [[append]]
     * (Iceberg's commit model: uniquely-named data files + a compare-and-swap
-    * on the metadata pointer, here the exclusive rename onto
+    * on the metadata pointer, here the exclusive claim of
     * `manifest-NNNNNN.json`, which the filesystem refuses when a rival
     * already claimed the id). Many writers may call this against one table
     * simultaneously — the 100 TB ingest fan-in shape (many pipelines, one
@@ -355,7 +472,7 @@ object SnapshotTable {
     * conflict validation: its rows were never visible to any rival commit,
     * every field it contributes (live set, row totals, batch ledger, schema
     * merge, carried deletes) is recomputed against the head it actually
-    * lands on, and the commit linearizes at the successful rename. Losing a
+    * lands on, and the commit linearizes at the successful claim. Losing a
     * race costs one manifest re-read + a dir rename + stats/sketch jobs over
     * the writer's OWN dir — never a data rewrite, never a row re-shuffle.
     *
@@ -369,8 +486,6 @@ object SnapshotTable {
     *    re-read and our own rows predate nothing);
     *  - Bloom sidecars follow the dir name (stale-attempt sidecars are
     *    deleted eagerly); manifest stats relabel to the new name;
-    *  - the manifest TMP file carries the writer token — two writers racing
-    *    the same id must not clobber each other's tmp bytes before the CAS;
     *  - the exactly-once batch ledger re-checks against the current head
     *    each attempt: when a rival committed the same `batchId`, the staged
     *    dir is removed and the rival's commit returns as `skippedExisting`.
@@ -382,9 +497,9 @@ object SnapshotTable {
     * staging and commit would reap the in-flight dir; only appends racing
     * appends (and appends racing nothing) are unrestricted.
     *
-    * `beforeCommit` is a test seam invoked after each attempt's manifest is
-    * built, before its CAS (default no-op) — deterministic interleaving for
-    * specs.
+    * `beforeCommit` is a test seam invoked once per attempt after its data
+    * dir, stats and sidecars are staged, right before its claim (default
+    * no-op) — deterministic interleaving for specs.
     */
   def appendConcurrent(spark: SparkSession, df: DataFrame, dir: String,
                        batchId: Option[String] = None,
@@ -415,119 +530,58 @@ object SnapshotTable {
     val bloomMemo =
       scala.collection.mutable.Map[String, Option[org.apache.spark.util.sketch.BloomFilter]]()
     var sidecarsFor: (String, Seq[String]) = null // (dir name, cols) last written
+    def dropSidecars(): Unit = if (sidecarsFor != null) sidecarsFor._2.foreach(c =>
+      fs.delete(new Path(bloomDir(root), bloomFileName(sidecarsFor._1, c)), false))
     var attempt = 0
     while (attempt <= maxRetries) {
-      val ids = manifestIds(fs, root)
-      val parent = ids.lastOption.map(manifest(spark, dir, _))
-      val ledger = resolveLedger(spark, dir, ids, parent, batchId)
-      batchId.flatMap(b => ledger.find(_._1 == b)) match {
-        case Some((_, snap)) =>
+      commitChild(spark, fs, root, "append", batchId, df.schema, statsBy, bloomBy,
+          contended = true) { to =>
+        val newName = f"snap-${to.next}%06d-c$token"
+        if (newName != name) {
+          require(fs.rename(new Path(dataDir(root), name), new Path(dataDir(root), newName)),
+            s"failed to rename staged dir $name -> $newName under $dir")
+          // sidecars are keyed by dir name: the old attempt's are now stale
+          dropSidecars()
+          sidecarsFor = null
+          name = newName
+        }
+        val dataPath = new Path(dataDir(root), name).toString
+        // bounds for any column a rival's rebase added since the write
+        to.statsCols.filter(c => df.columns.contains(c) && !statMemo.contains(c)) match {
+          case Nil =>
+          case missing =>
+            val computed = computeStats(spark, dataPath, name, missing)
+            missing.foreach(c => statMemo(c) = computed.find(_.column == c))
+        }
+        val dirStats = to.statsCols.flatMap(c => statMemo.getOrElse(c, None))
+          .map(_.copy(dir = name))
+        val bPresent = to.bloomCols.filter(df.columns.contains)
+        bPresent.filterNot(bloomMemo.contains).foreach { c =>
+          bloomMemo(c) = buildBloom(spark.read.parquet(dataPath), c, math.max(rows, 1L))
+        }
+        val dirBlooms = bPresent.flatMap(c => bloomMemo(c).map { bf =>
+          if (sidecarsFor == null || sidecarsFor._1 != name || !sidecarsFor._2.contains(c))
+            writeBloomSidecar(fs, root, name, c, bf)
+          name -> c
+        })
+        sidecarsFor = (name, dirBlooms.map(_._2))
+        beforeCommit()
+        Child(Seq(name), rows, dirStats, dirBlooms)
+      } match {
+        case Some(c) if c.skippedExisting =>
           // a rival committed this very batch: exactly-once wins over our
           // staged bytes — drop them and return the rival's commit
-          if (sidecarsFor != null) sidecarsFor._2.foreach(c =>
-            fs.delete(new Path(bloomDir(root), bloomFileName(sidecarsFor._1, c)), false))
+          dropSidecars()
           fs.delete(new Path(dataDir(root), name), true)
-          return Commit(snap, skippedExisting = true)
-        case None =>
+          return c
+        case Some(c) => return c
+        case None => attempt += 1
       }
-      val next = ids.lastOption.map(_ + 1).getOrElse(0L)
-      val newName = f"snap-$next%06d-c$token"
-      if (newName != name) {
-        require(fs.rename(new Path(dataDir(root), name), new Path(dataDir(root), newName)),
-          s"failed to rename staged dir $name -> $newName under $dir")
-        // sidecars are keyed by dir name: the old attempt's are now stale
-        if (sidecarsFor != null) sidecarsFor._2.foreach(c =>
-          fs.delete(new Path(bloomDir(root), bloomFileName(sidecarsFor._1, c)), false))
-        sidecarsFor = null
-        name = newName
-      }
-      val dataPath = new Path(dataDir(root), name).toString
-      val scols = (parent.map(_.statsCols).getOrElse(Nil) ++ statsBy).distinct
-      val bcols = (parent.map(_.bloomCols).getOrElse(Nil) ++ bloomBy).distinct
-      // bounds for any column a rival's rebase added since the write
-      scols.filter(c => df.columns.contains(c) && !statMemo.contains(c)) match {
-        case Nil =>
-        case missing =>
-          val computed = computeStats(spark, dataPath, name, missing)
-          missing.foreach(c => statMemo(c) = computed.find(_.column == c))
-      }
-      val dirStats = scols.flatMap(c => statMemo.getOrElse(c, None))
-        .map(_.copy(dir = name))
-      val bPresent = bcols.filter(df.columns.contains)
-      bPresent.filterNot(bloomMemo.contains).foreach { c =>
-        bloomMemo(c) = buildBloom(spark.read.parquet(dataPath), c, math.max(rows, 1L))
-      }
-      val dirBlooms = bPresent.flatMap(c => bloomMemo(c).map { bf =>
-        if (sidecarsFor == null || sidecarsFor._1 != name || !sidecarsFor._2.contains(c))
-          writeBloomSidecar(fs, root, name, c, bf)
-        name -> c
-      })
-      sidecarsFor = (name, dirBlooms.map(_._2))
-      val schemaNow: Option[String] = parent match {
-        case None => Some(df.schema.json)
-        case Some(p) => p.schema.map(ps => mergeSchemas(ps, df.schema).json)
-      }
-      val m = Manifest(next, ids.lastOption, "append", batchId,
-        added = Seq(name), live = parent.map(_.live).getOrElse(Nil) :+ name,
-        addedRows = rows, totalRows = parent.map(_.totalRows).getOrElse(0L) + rows,
-        batchCommits = ledger ++ batchId.map(_ -> next),
-        schemaJson = schemaNow,
-        statsCols = scols,
-        stats = parent.map(_.stats).getOrElse(Nil) ++ dirStats,
-        bloomCols = bcols,
-        blooms = parent.map(_.blooms).getOrElse(Nil) ++ dirBlooms,
-        deletes = parent.map(_.deletes).getOrElse(Nil))
-      beforeCommit()
-      if (tryCommitManifest(fs, root, m, token)) return Commit(next, skippedExisting = false)
-      attempt += 1
     }
     sys.error(s"appendConcurrent lost the commit race $maxRetries times on $dir " +
       s"under sustained contention — staged dir $name is uncommitted (vacuum reaps it); " +
       "raise maxRetries or reduce concurrent writers")
   }
-
-  /** CAS half of [[appendConcurrent]]: write the manifest to a WRITER-UNIQUE
-    * tmp file, then atomically claim the id-naming file. The obvious
-    * primitive — rename onto the claimed name, failing when it exists — is
-    * NOT a CAS on local filesystems: rename(2) silently REPLACES an existing
-    * destination, and Hadoop's LocalFileSystem layers a non-atomic
-    * exists-check plus a data/crc rename PAIR on top, which two racing
-    * writers interleave into a torn commit (observed as manifest checksum
-    * errors under a 4-writer race before this switched to link). So on
-    * `file:` schemes the claim is a HARD LINK of the tmp onto the manifest
-    * name — link(2) fails with EEXIST atomically in the kernel, and the
-    * linked file is complete the instant the name appears (no
-    * partial-content window for readers). On HDFS, rename-refusing-existing
-    * IS namenode-atomic, so other schemes keep fs.rename. The tmp (and its
-    * crc sidecar) is deleted either way; a won claim keeps the inode alive
-    * through the manifest name.
-    */
-  private def tryCommitManifest(fs: FileSystem, root: Path, m: Manifest,
-                                token: String): Boolean = {
-    val intoDir = manifestDir(root)
-    fs.mkdirs(intoDir)
-    val tmp = new Path(intoDir, f".manifest-${m.snapshotId}%06d.$token.tmp")
-    val dst = new Path(intoDir, f"manifest-${m.snapshotId}%06d.json")
-    val out = fs.create(tmp, true)
-    val stamped = m.copy(commitTimeMs = System.currentTimeMillis())
-    try out.write(render(stamped).getBytes("UTF-8")) finally out.close()
-    val won = casClaim(fs, tmp, dst)
-    fs.delete(tmp, false)
-    won
-  }
-
-  /** Atomic claim of `dst` with `tmp`'s (complete) content: kernel-atomic
-    * link(2) on local filesystems, namenode-atomic rename elsewhere.
-    */
-  private def casClaim(fs: FileSystem, tmp: Path, dst: Path): Boolean =
-    if (Option(fs.getUri.getScheme).forall(_ == "file")) {
-      try {
-        java.nio.file.Files.createLink(
-          java.nio.file.Paths.get(dst.toUri.getPath),
-          java.nio.file.Paths.get(tmp.toUri.getPath))
-        true
-      } catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    } else fs.rename(tmp, dst)
 
   /** Create an EMPTY table: commits snapshot 0 stamping `schema` and the
     * stats/bloom table properties, with no data dirs — the CREATE TABLE
@@ -573,37 +627,11 @@ object SnapshotTable {
                 statsBy: Seq[String] = Nil,
                 bloomBy: Seq[String] = Nil): Commit = {
     val (fs, root) = fsOf(spark, dir)
-    val ids = manifestIds(fs, root)
-    val parent = ids.lastOption.map(manifest(spark, dir, _))
-    val ledger = resolveLedger(spark, dir, ids, parent, batchId)
-    batchId.flatMap(b => ledger.find(_._1 == b)) match {
-      case Some((_, snap)) => Commit(snap, skippedExisting = true)
-      case None =>
-        val next = ids.lastOption.map(_ + 1).getOrElse(0L)
-        val name = f"snap-$next%06d"
-        val dataPath = new Path(dataDir(root), name).toString
-        val scols = (parent.map(_.statsCols).getOrElse(Nil) ++ statsBy).distinct
-        val bcols = (parent.map(_.bloomCols).getOrElse(Nil) ++ bloomBy).distinct
-        // count + bounds observed during the write (empty overwrites are
-        // legal: the observed count is simply 0, no footer read needed)
-        val (rows, stats, _) = writeMeasured(df, dataPath, name, scols)
-        commitManifest(fs, root, Manifest(next, ids.lastOption, "overwrite",
-          batchId, added = Seq(name), live = Seq(name),
-          addedRows = rows, totalRows = rows,
-          // ledger invariant (the rollback precedent): batch id present ==
-          // that batch's rows are present. The replace removed every prior
-          // batch's rows, so only the overwrite's own id survives — a
-          // replayed old ingest re-applies onto the new state.
-          batchCommits = batchId.map(_ -> next).toSeq,
-          schemaJson = Some(df.schema.json),
-          statsCols = scols,
-          stats = stats,
-          bloomCols = bcols,
-          blooms = computeBlooms(spark, fs, root, dataPath, name, bcols,
-            rowsHint = rows),
-          deletes = Nil))
-        Commit(next, skippedExisting = false)
-    }
+    commitChild(spark, fs, root, "overwrite", batchId, df.schema, statsBy, bloomBy,
+        replaceAll = true) { to =>
+      // empty overwrites are legal: the observed count is simply 0
+      writeChild(spark, fs, root, df, f"snap-${to.next}%06d", to)
+    }.get
   }
 
   /** TRUNCATE: one metadata-only `overwrite` commit whose live set is
@@ -696,20 +724,6 @@ object SnapshotTable {
     readMerged(spark, root, m, dirs)
   }
 
-  /** Append with HIDDEN PARTITIONING: `partition` is a transform computed
-    * from the row (a day truncation, a bucket, an identity column — the
-    * Iceberg partition-spec analogue), and the batch commits ONE LIVE DIR
-    * PER DISTINCT TRANSFORM VALUE, each with its own manifest stats and
-    * Bloom sidecars. Readers stay transform-oblivious: per-dir bounds are
-    * tight on whatever the transform clusters, so the EXISTING
-    * `planScan`/`readWhere` pruning removes provably-empty partitions
-    * driver-side — the ingest-time layout a log table wants (daily
-    * partitions prune time ranges without waiting for a compaction pass).
-    * Same exactly-once batch ledger as [[append]]. Transform values must
-    * render into a path- and manifest-safe charset and be non-null (fail
-    * loudly — a silently escaped dir name would detach the manifest from
-    * the filesystem).
-    */
   /** Stage one hidden-partitioned data dir: write `df` partitioned by the
     * rendered transform under `data/<name>`, validate the child dir names
     * (NULL transform values and manifest-unsafe charsets fail loudly —
@@ -789,49 +803,50 @@ object SnapshotTable {
     (stats, rows.map(r => r.getString(0) -> r.getLong(1)).toMap)
   }
 
+  /** Child of the hidden-partition dirs `dirs` (holding `rows` rows) just
+    * written by [[stagePartitioned]]: one grouped job for every dir's bounds
+    * and counts, then per-dir sketches sized by those counts. Stats are
+    * computed PER LISTED CHILD DIR, never by grouping read-back `_p`
+    * values: Spark's partition-type inference canonicalizes numeric-looking
+    * strings ('01' -> 1), which would key stats to phantom dir names and
+    * silently disable pruning.
+    */
+  private def partitionedChild(spark: SparkSession, fs: FileSystem, root: Path,
+                               dirs: Seq[String], rows: Long,
+                               schema: org.apache.spark.sql.types.StructType,
+                               to: ChildOf): Child = {
+    val (stats, dirCounts) =
+      partitionedStats(spark, root, dirs, schema, to.statsCols, to.bloomCols)
+    Child(dirs, rows, stats, dirs.flatMap(d =>
+      computeBlooms(spark, fs, root, new Path(dataDir(root), d).toString, d, to.bloomCols,
+        rowsHint = dirCounts.getOrElse(d, -1L))))
+  }
+
+  /** Append with HIDDEN PARTITIONING: `partition` is a transform computed
+    * from the row (a day truncation, a bucket, an identity column — the
+    * Iceberg partition-spec analogue), and the batch commits ONE LIVE DIR
+    * PER DISTINCT TRANSFORM VALUE, each with its own manifest stats and
+    * Bloom sidecars. Readers stay transform-oblivious: per-dir bounds are
+    * tight on whatever the transform clusters, so the EXISTING
+    * `planScan`/`readWhere` pruning removes provably-empty partitions
+    * driver-side — the ingest-time layout a log table wants (daily
+    * partitions prune time ranges without waiting for a compaction pass).
+    * Same exactly-once batch ledger as [[append]]. Transform values must
+    * render into a path- and manifest-safe charset and be non-null (fail
+    * loudly — a silently escaped dir name would detach the manifest from
+    * the filesystem).
+    */
   def appendPartitioned(spark: SparkSession, df: DataFrame, dir: String,
                         partition: org.apache.spark.sql.Column,
                         batchId: Option[String] = None,
                         statsBy: Seq[String] = Nil,
                         bloomBy: Seq[String] = Nil): Commit = {
     val (fs, root) = fsOf(spark, dir)
-    val ids = manifestIds(fs, root)
-    val parent = ids.lastOption.map(manifest(spark, dir, _))
-    val ledger = resolveLedger(spark, dir, ids, parent, batchId)
-    batchId.flatMap(b => ledger.find(_._1 == b)) match {
-      case Some((_, snap)) => Commit(snap, skippedExisting = true)
-      case None =>
-        val next = ids.lastOption.map(_ + 1).getOrElse(0L)
-        val name = f"snap-$next%06d"
-        val (dirs, rows) = stagePartitioned(spark, fs, root, df, partition,
-          name, "partitioned append")
-        val schemaNow: Option[String] = parent match {
-          case None => Some(df.schema.json)
-          case Some(p) => p.schema.map(ps => mergeSchemas(ps, df.schema).json)
-        }
-        val scols = (parent.map(_.statsCols).getOrElse(Nil) ++ statsBy).distinct
-        val bcols = (parent.map(_.bloomCols).getOrElse(Nil) ++ bloomBy).distinct
-        // stats are computed PER LISTED CHILD DIR (like blooms), never by
-        // grouping read-back _p values: Spark's partition-type inference
-        // canonicalizes numeric-looking strings ('01' -> 1), which would
-        // key stats to phantom dir names and silently disable pruning.
-        // One grouped job covers every child dir (partitionedStats).
-        val (newStats, dirCounts) =
-          partitionedStats(spark, root, dirs, df.schema, scols, bcols)
-        commitManifest(fs, root, Manifest(next, ids.lastOption, "append", batchId,
-          added = dirs, live = parent.map(_.live).getOrElse(Nil) ++ dirs,
-          addedRows = rows, totalRows = parent.map(_.totalRows).getOrElse(0L) + rows,
-          batchCommits = ledger ++ batchId.map(_ -> next),
-          schemaJson = schemaNow,
-          statsCols = scols,
-          stats = parent.map(_.stats).getOrElse(Nil) ++ newStats,
-          bloomCols = bcols,
-          blooms = parent.map(_.blooms).getOrElse(Nil) ++ dirs.flatMap(d =>
-            computeBlooms(spark, fs, root, new Path(dataDir(root), d).toString, d, bcols,
-              rowsHint = dirCounts.getOrElse(d, -1L))),
-          deletes = parent.map(_.deletes).getOrElse(Nil)))
-        Commit(next, skippedExisting = false)
-    }
+    commitChild(spark, fs, root, "append", batchId, df.schema, statsBy, bloomBy) { to =>
+      val (dirs, rows) = stagePartitioned(spark, fs, root, df, partition,
+        f"snap-${to.next}%06d", "partitioned append")
+      partitionedChild(spark, fs, root, dirs, rows, df.schema, to)
+    }.get
   }
 
   /** DYNAMIC PARTITION OVERWRITE (Iceberg `overwritePartitions` / Spark's
@@ -868,67 +883,33 @@ object SnapshotTable {
                           statsBy: Seq[String] = Nil,
                           bloomBy: Seq[String] = Nil): Commit = {
     val (fs, root) = fsOf(spark, dir)
-    val ids = manifestIds(fs, root)
-    val parent = ids.lastOption.map(manifest(spark, dir, _))
-    val ledger = resolveLedger(spark, dir, ids, parent, batchId)
-    batchId.flatMap(b => ledger.find(_._1 == b)) match {
-      case Some((_, snap)) => Commit(snap, skippedExisting = true)
-      case None =>
-        // the layout gate sits AFTER the replay lookup: a batch committed
-        // before a later compact() destroyed the layout must still SKIP
-        // idempotently on replay, like every other committing path
-        parent.toSeq.flatMap(_.live).find(!_.contains("/_p=")).foreach(d => sys.error(
-          s"dynamic partition overwrite needs a fully partition-clustered table, " +
-            s"but live dir '$d' of $dir is not hidden-partitioned — ingest with " +
-            "appendPartitioned only (compact() also destroys the layout)"))
-        val next = ids.lastOption.map(_ + 1).getOrElse(0L)
-        val name = f"snap-$next%06d"
-        val (newDirs, rows) = stagePartitioned(spark, fs, root, df, partition,
-          name, "partitioned overwrite")
-        // replacement keys on the rendered value: a live dir whose _p=
-        // segment matches an incoming value is replaced wholesale
-        val newVals = newDirs.map(_.split('/').last).toSet
-        def valOf(d: String): String =
-          d.split('/').find(_.startsWith("_p=")).getOrElse("")
-        val (replaced, untouched) =
-          parent.map(_.live).getOrElse(Nil).partition(d => newVals.contains(valOf(d)))
-        // totalRows counts PHYSICAL rows in live dirs (the Manifest
-        // contract), so the replaced dirs subtract at their RAW count —
-        // pending MOR delete keys keep subtracting at read time, exactly
-        // as they did before the swap (mor-delete/update precedent)
-        val replacedRows =
-          if (replaced.isEmpty) 0L
-          else readDirs(spark, root, replaced, parent.flatMap(_.schema)).count()
-        val schemaNow: Option[String] = parent match {
-          case None => Some(df.schema.json)
-          case Some(p) => p.schema.map(ps => mergeSchemas(ps, df.schema).json)
-        }
-        val scols = (parent.map(_.statsCols).getOrElse(Nil) ++ statsBy).distinct
-        val bcols = (parent.map(_.bloomCols).getOrElse(Nil) ++ bloomBy).distinct
-        // one grouped job for every new dir's bounds+counts (partitionedStats)
-        val (newStats, dirCounts) =
-          partitionedStats(spark, root, newDirs, df.schema, scols, bcols)
-        val untouchedSet = untouched.toSet // O(1) carry filters (advice r05)
-        commitManifest(fs, root, Manifest(next, ids.lastOption, "dynoverwrite",
-          batchId, added = newDirs, live = untouched ++ newDirs,
-          addedRows = rows,
-          totalRows = parent.map(_.totalRows).getOrElse(0L) - replacedRows + rows,
-          batchCommits = ledger ++ batchId.map(_ -> next),
-          schemaJson = schemaNow,
-          statsCols = scols,
-          stats = parent.map(_.stats).getOrElse(Nil)
-              .filter(st => untouchedSet(st.dir)) ++ newStats,
-          bloomCols = bcols,
-          blooms = parent.map(_.blooms).getOrElse(Nil)
-              .filter(b => untouchedSet(b._1)) ++
-            newDirs.flatMap(d =>
-              computeBlooms(spark, fs, root, new Path(dataDir(root), d).toString, d, bcols,
-                rowsHint = dirCounts.getOrElse(d, -1L))),
-          // pending MOR deletes still apply to the untouched dirs (old
-          // addSeq); the new dirs' newer addSeq provably escapes them
-          deletes = parent.map(_.deletes).getOrElse(Nil)))
-        Commit(next, skippedExisting = false)
-    }
+    commitChild(spark, fs, root, "dynoverwrite", batchId, df.schema, statsBy, bloomBy) { to =>
+      val live = to.parent.toSeq.flatMap(_.live)
+      // the layout gate sits AFTER the replay lookup: a batch committed
+      // before a later compact() destroyed the layout must still SKIP
+      // idempotently on replay, like every other committing path
+      live.find(!_.contains("/_p=")).foreach(d => sys.error(
+        s"dynamic partition overwrite needs a fully partition-clustered table, " +
+          s"but live dir '$d' of $dir is not hidden-partitioned — ingest with " +
+          "appendPartitioned only (compact() also destroys the layout)"))
+      val (newDirs, rows) = stagePartitioned(spark, fs, root, df, partition,
+        f"snap-${to.next}%06d", "partitioned overwrite")
+      // replacement keys on the rendered value: a live dir whose _p=
+      // segment matches an incoming value is replaced wholesale
+      val newVals = newDirs.map(_.split('/').last).toSet
+      def valOf(d: String): String =
+        d.split('/').find(_.startsWith("_p=")).getOrElse("")
+      val replaced = live.filter(d => newVals.contains(valOf(d)))
+      // the replaced dirs subtract at their RAW count — pending MOR delete
+      // keys keep subtracting at read time, exactly as they did before the
+      // swap (mor-delete/update precedent), and still apply to the
+      // untouched dirs
+      val replacedRows =
+        if (replaced.isEmpty) 0L
+        else readDirs(spark, root, replaced, to.parent.flatMap(_.schema)).count()
+      partitionedChild(spark, fs, root, newDirs, rows, df.schema, to)
+        .copy(replaced = replaced, replacedRows = replacedRows)
+    }.get
   }
 
   /** ADOPT already-written parquet files as a new append snapshot — the
@@ -948,57 +929,41 @@ object SnapshotTable {
                                 writeSchema: org.apache.spark.sql.types.StructType): Commit = {
     require(files.nonEmpty, "adoptFiles with no files — skip the commit instead")
     val (fs, root) = fsOf(spark, dir)
-    val ids = manifestIds(fs, root)
-    val parent = ids.lastOption.map(manifest(spark, dir, _))
-    val ledger = resolveLedger(spark, dir, ids, parent, batchId)
-    batchId.flatMap(b => ledger.find(_._1 == b)) match {
-      case Some((_, snap)) =>
-        files.foreach(f => fs.delete(new Path(f), false))
-        Commit(snap, skippedExisting = true)
-      case None =>
-        val next = ids.lastOption.map(_ + 1).getOrElse(0L)
-        val name = f"snap-$next%06d"
-        val dest = new Path(dataDir(root), name)
-        // an existing dir here is an uncommitted crash leftover (no manifest
-        // references it) — clearing it is the recovery path, like append's
-        // overwrite mode
-        if (fs.exists(dest)) fs.delete(dest, true)
-        fs.mkdirs(dest)
-        files.foreach { f =>
-          val p = new Path(f)
-          require(fs.rename(p, new Path(dest, p.getName)),
-            s"adopt: rename of staged file $f into $dest failed")
-        }
-        val dataPath = dest.toString
-        val schemaNow: Option[String] = parent match {
-          case None => Some(writeSchema.json)
-          case Some(p) => p.schema.map(ps => mergeSchemas(ps, writeSchema).json)
-        }
-        val scols = parent.map(_.statsCols).getOrElse(Nil)
-        val bcols = parent.map(_.bloomCols).getOrElse(Nil)
-        commitManifest(fs, root, Manifest(next, ids.lastOption, "append", batchId,
-          added = Seq(name), live = parent.map(_.live).getOrElse(Nil) :+ name,
-          addedRows = rows, totalRows = parent.map(_.totalRows).getOrElse(0L) + rows,
-          batchCommits = ledger ++ batchId.map(_ -> next),
-          schemaJson = schemaNow,
-          statsCols = scols,
-          stats = parent.map(_.stats).getOrElse(Nil) ++
-            computeStats(spark, dataPath, name, scols),
-          bloomCols = bcols,
-          blooms = parent.map(_.blooms).getOrElse(Nil) ++
-            computeBlooms(spark, fs, root, dataPath, name, bcols,
-              rowsHint = rows),
-          deletes = parent.map(_.deletes).getOrElse(Nil)))
-        Commit(next, skippedExisting = false)
-    }
+    val c = commitChild(spark, fs, root, "append", batchId, writeSchema) { to =>
+      val name = f"snap-${to.next}%06d"
+      val dest = new Path(dataDir(root), name)
+      // an existing dir here is an uncommitted crash leftover (no manifest
+      // references it) — clearing it is the recovery path, like append's
+      // overwrite mode
+      if (fs.exists(dest)) fs.delete(dest, true)
+      fs.mkdirs(dest)
+      files.foreach { f =>
+        val p = new Path(f)
+        require(fs.rename(p, new Path(dest, p.getName)),
+          s"adopt: rename of staged file $f into $dest failed")
+      }
+      onDiskChild(spark, fs, root, name, rows, to)
+    }.get
+    if (c.skippedExisting) files.foreach(f => fs.delete(new Path(f), false))
+    c
   }
 
-  /** Batch-id → snapshot-id ledger as of the current head, reconstructing
-    * once from retained manifests on a pre-ledger legacy chain — the ONE
-    * copy of the exactly-once machinery shared by every committing path
-    * ([[append]], [[appendPartitioned]], [[publishStaged]]).
+  /** Batch-id → snapshot-id ledger as of the head `parent` of the chain in
+    * `chain` (main's `_manifests` or a branch dir) — the ONE copy of the
+    * exactly-once machinery, shared by every batch-id writer through
+    * [[commitChild]] and by the batch-id maintenance paths ([[deleteKeys]],
+    * [[applyChanges]], [[merge]]).
+    *
+    * Legacy migration: a chain written before the ledger existed carries
+    * per-snapshot batch_id but no cumulative ledger — when a batch-id commit
+    * lands on such a chain, the ledger is reconstructed ONCE from the
+    * retained manifests (exactly what the old full-chain replay scan read);
+    * the new manifest then carries it forward, so this costs O(chain) at
+    * most once per table. Batch ids of legacy snapshots that were ALREADY
+    * expired are unrecoverable (the old format never persisted them
+    * cumulatively).
     */
-  private def resolveLedger(spark: SparkSession, dir: String, ids: Seq[Long],
+  private def resolveLedger(fs: FileSystem, chain: Path, ids: Seq[Long],
                             parent: Option[Manifest],
                             batchId: Option[String]): Seq[(String, Long)] = {
     batchId.foreach { b =>
@@ -1007,7 +972,7 @@ object SnapshotTable {
     }
     parent.map(_.batchCommits).getOrElse(Nil) match {
       case Nil if batchId.nonEmpty && ids.nonEmpty =>
-        ids.map(manifest(spark, dir, _))
+        ids.map(id => readManifestFile(fs, new Path(chain, manifestName(id))))
           .flatMap(m => m.batchId.map(_ -> m.snapshotId))
       case l => l
     }
@@ -1606,7 +1571,7 @@ object SnapshotTable {
     * the latest retained snapshot committed at or before it (Iceberg's
     * `FOR SYSTEM_TIME AS OF`). Fails loudly when every retained snapshot
     * is newer — same contract as an expired-id read. Commit times are
-    * stamped by [[commitManifest]]; the scan is linear over retained
+    * stamped by [[claimManifest]]; the scan is linear over retained
     * manifests (no monotonicity assumption — clock skew between commits
     * cannot mis-resolve, the max qualifying id wins).
     */
@@ -1649,14 +1614,10 @@ object SnapshotTable {
     manifest(spark, dir, id) // fails loudly on a never-committed/expired id
     val p = new Path(refsDir(root), name)
     require(!fs.exists(p), s"ref '$name' already exists on $dir (drop it first)")
-    fs.mkdirs(refsDir(root))
-    // tmp-write + rename, same crash-safety stance as commitManifest: a
-    // truncated ref file would poison refs() — and expire(), which reads
-    // refs() for the pin set — until hand-deleted
-    val tmp = new Path(refsDir(root), s".$name.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(id.toString.getBytes("UTF-8")) finally out.close()
-    require(fs.rename(tmp, p), s"concurrent tag detected for '$name' on $dir")
+    // claimed like a manifest: a truncated ref file would poison refs() —
+    // and expire(), which reads refs() for the pin set — until hand-deleted
+    require(publishIfAbsent(fs, refsDir(root), name, id.toString.getBytes("UTF-8")),
+      s"concurrent tag detected for '$name' on $dir")
   }
 
   /** All refs on the table: name → snapshot id. */
@@ -1716,7 +1677,7 @@ object SnapshotTable {
   private def branchHead(fs: FileSystem, bd: Path): Manifest = {
     val ids = idsIn(fs, bd)
     require(ids.nonEmpty, s"branch dir $bd holds no manifests (corrupt branch)")
-    readManifestFile(fs, new Path(bd, f"manifest-${ids.last}%06d.json"))
+    readManifestFile(fs, new Path(bd, manifestName(ids.last)))
   }
 
   /** Every manifest of every live branch — the pin set expire/vacuum/bloom
@@ -1727,7 +1688,7 @@ object SnapshotTable {
     if (!fs.exists(bs)) Nil
     else fs.listStatus(bs).filter(_.isDirectory).toIndexedSeq.flatMap { st =>
       idsIn(fs, st.getPath).map(id =>
-        readManifestFile(fs, new Path(st.getPath, f"manifest-$id%06d.json")))
+        readManifestFile(fs, new Path(st.getPath, manifestName(id))))
     }
   }
 
@@ -1746,7 +1707,7 @@ object SnapshotTable {
     val m = manifest(spark, dir, fromId) // fails loudly on never-committed/expired
     // verbatim copy (restamp=false): the fork entry is main's commit, not a
     // new one — its wall-clock stamp and lineage are preserved
-    writeManifest(fs, bd, m, restamp = false)
+    commitManifestTo(fs, bd, m, restamp = false)
   }
 
   /** Live branches: name → (fork snapshot id, branch head snapshot id). */
@@ -1795,38 +1756,12 @@ object SnapshotTable {
     val (fs, root) = fsOf(spark, dir)
     val bd = branchDir(root, name)
     require(fs.exists(bd), s"branch '$name' does not exist on $dir")
-    batchId.foreach { b =>
-      require(b.matches("[A-Za-z0-9._:-]+"),
-        s"batch id '$b' must match [A-Za-z0-9._:-]+")
-    }
-    val parent = branchHead(fs, bd)
-    // branch chains are never pre-ledger (the fork copy carries main's
-    // cumulative ledger), so the replay check is one manifest read
-    batchId.flatMap(b => parent.batchCommits.find(_._1 == b)) match {
-      case Some((_, snap)) => Commit(snap, skippedExisting = true)
-      case None =>
-        val next = parent.snapshotId + 1
-        val dname = f"br-$name-$next%06d"
-        val dataPath = new Path(dataDir(root), dname).toString
-        // legacy fork (no stamped schema) stays in footer-inference mode,
-        // same rule as append
-        val schemaNow = parent.schema.map(ps => mergeSchemas(ps, df.schema).json)
-        val scols = (parent.statsCols ++ statsBy).distinct
-        val bcols = (parent.bloomCols ++ bloomBy).distinct
-        val (rows, stats, _) = writeMeasured(df, dataPath, dname, scols)
-        writeManifest(fs, bd, Manifest(next, Some(parent.snapshotId), "append", batchId,
-          added = Seq(dname), live = parent.live :+ dname,
-          addedRows = rows, totalRows = parent.totalRows + rows,
-          batchCommits = parent.batchCommits ++ batchId.map(_ -> next),
-          schemaJson = schemaNow,
-          statsCols = scols,
-          stats = parent.stats ++ stats,
-          bloomCols = bcols,
-          blooms = parent.blooms ++ computeBlooms(spark, fs, root, dataPath, dname, bcols,
-            rowsHint = rows),
-          deletes = parent.deletes), restamp = true)
-        Commit(next, skippedExisting = false)
-    }
+    // the fork copy carries main's cumulative ledger, so the replay check
+    // is one manifest read
+    commitChild(spark, fs, root, "append", batchId, df.schema, statsBy, bloomBy,
+        branch = Some(bd)) { to =>
+      writeChild(spark, fs, root, df, f"br-$name-${to.next}%06d", to)
+    }.get
   }
 
   /** Publish a branch onto main by FAST-FORWARD: every branch commit past
@@ -1846,27 +1781,21 @@ object SnapshotTable {
     val mainHead = manifestIds(fs, root).last
     def bytesOf(p: Path): Array[Byte] = {
       val in = fs.open(p)
-      try {
-        val bos = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](8192)
-        var n = in.read(buf)
-        while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
-        bos.toByteArray
-      } finally in.close()
+      try in.readAllBytes() finally in.close()
     }
     // resume-from-crash is only legal when main's head IS this branch's
     // commit (byte-equal — an id match alone could be main's own append)
     val resumable = mainHead > forkId && bids.contains(mainHead) &&
       java.util.Arrays.equals(
-        bytesOf(new Path(manifestDir(root), f"manifest-$mainHead%06d.json")),
-        bytesOf(new Path(bd, f"manifest-$mainHead%06d.json")))
+        bytesOf(new Path(manifestDir(root), manifestName(mainHead))),
+        bytesOf(new Path(bd, manifestName(mainHead))))
     require(mainHead == forkId || resumable,
       s"cannot fast-forward $dir to branch '$name': main head $mainHead is not " +
         s"the fork point $forkId — main diverged; re-create the branch from " +
         "the current head and re-apply its batches (their ids replay exactly-once)")
     bids.filter(_ > forkId).foreach { id =>
-      val src = new Path(bd, f"manifest-$id%06d.json")
-      val dst = new Path(manifestDir(root), f"manifest-$id%06d.json")
+      val src = new Path(bd, manifestName(id))
+      val dst = new Path(manifestDir(root), manifestName(id))
       val body = bytesOf(src)
       if (fs.exists(dst)) {
         // the resumable precondition pinned the head; every copied id below
@@ -1875,10 +1804,7 @@ object SnapshotTable {
           s"main snapshot $id differs from branch '$name' commit $id — " +
             "main diverged mid-fast-forward; resolve manually")
       } else {
-        val tmp = new Path(manifestDir(root), f".manifest-$id%06d.json.tmp")
-        val out = fs.create(tmp, true)
-        try out.write(body) finally out.close()
-        require(fs.rename(tmp, dst),
+        require(publishIfAbsent(fs, manifestDir(root), dst.getName, body),
           s"concurrent commit detected for snapshot $id of $root")
       }
     }
@@ -1936,11 +1862,8 @@ object SnapshotTable {
       s""""batch_id":${batchId.map(Json.quote).getOrElse("null")},""" +
       s""""rows":$rows,""" +
       s""""schema_b64":${Json.quote(b64(df.schema.json))}}"""
-    fs.mkdirs(manifestDir(root))
-    val tmp = new Path(manifestDir(root), s".staged-$token.json.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-    require(fs.rename(tmp, sm), s"concurrent stage detected for '$token' on $dir")
+    require(publishIfAbsent(fs, manifestDir(root), sm.getName, body.getBytes("UTF-8")),
+      s"concurrent stage detected for '$token' on $dir")
   }
 
   /** Tokens of all in-flight staged batches. */
@@ -2003,50 +1926,22 @@ object SnapshotTable {
       s"staged batch '$token' on $dir has a manifest but no data dir — a " +
         "previous publish crashed between its rename and its commit; vacuum " +
         "the orphaned dir, drop the staged manifest, and re-stage the batch")
-    val ids = manifestIds(fs, root)
-    val parent = ids.lastOption.map(manifest(spark, dir, _))
-    val ledger = resolveLedger(spark, dir, ids, parent, st.batchId)
-    st.batchId.flatMap(b => ledger.find(_._1 == b)) match {
-      case Some((_, snap)) =>
-        discardStaged(spark, dir, token) // replayed batch: rows already present
-        Commit(snap, skippedExisting = true)
-      case None =>
-        // validate BEFORE the destructive move: a schema conflict must
-        // leave the staged batch intact and re-publishable after a fix
-        val schemaNow: Option[String] = parent match {
-          case None => Some(st.schema.json)
-          case Some(p) => p.schema.map(ps => mergeSchemas(ps, st.schema).json)
-        }
-        val next = ids.lastOption.map(_ + 1).getOrElse(0L)
-        val name = f"snap-$next%06d"
-        val dataPath = new Path(dataDir(root), name)
-        // an existing dest is an UNCOMMITTED crash leftover (no manifest
-        // references snapshot `next` yet) — deleting it is the recovery
-        // path, and without this an HDFS-semantics rename would move the
-        // stage dir INSIDE it and commit the orphan's rows
-        if (fs.exists(dataPath)) fs.delete(dataPath, true)
-        require(fs.rename(stagePath, dataPath),
-          s"publish of '$token' on $dir could not move ${stagePath.getName} " +
-            s"to ${dataPath.getName}")
-        val scols = parent.map(_.statsCols).getOrElse(Nil)
-        val bcols = parent.map(_.bloomCols).getOrElse(Nil)
-        commitManifest(fs, root, Manifest(next, ids.lastOption, "append", st.batchId,
-          added = Seq(name), live = parent.map(_.live).getOrElse(Nil) :+ name,
-          addedRows = st.rows,
-          totalRows = parent.map(_.totalRows).getOrElse(0L) + st.rows,
-          batchCommits = ledger ++ st.batchId.map(_ -> next),
-          schemaJson = schemaNow,
-          statsCols = scols,
-          stats = parent.map(_.stats).getOrElse(Nil) ++
-            computeStats(spark, dataPath.toString, name, scols),
-          bloomCols = bcols,
-          blooms = parent.map(_.blooms).getOrElse(Nil) ++
-            computeBlooms(spark, fs, root, dataPath.toString, name, bcols,
-              rowsHint = st.rows),
-          deletes = parent.map(_.deletes).getOrElse(Nil)))
-        fs.delete(stagedManifestPath(root, token), false)
-        Commit(next, skippedExisting = false)
-    }
+    val c = commitChild(spark, fs, root, "append", st.batchId, st.schema) { to =>
+      val name = f"snap-${to.next}%06d"
+      val dataPath = new Path(dataDir(root), name)
+      // an existing dest is an UNCOMMITTED crash leftover (no manifest
+      // references snapshot `next` yet) — deleting it is the recovery
+      // path, and without this an HDFS-semantics rename would move the
+      // stage dir INSIDE it and commit the orphan's rows
+      if (fs.exists(dataPath)) fs.delete(dataPath, true)
+      require(fs.rename(stagePath, dataPath),
+        s"publish of '$token' on $dir could not move ${stagePath.getName} " +
+          s"to ${dataPath.getName}")
+      onDiskChild(spark, fs, root, name, st.rows, to)
+    }.get
+    if (c.skippedExisting) discardStaged(spark, dir, token) // replayed batch: rows already present
+    else fs.delete(stagedManifestPath(root, token), false)
+    c
   }
 
   /** Drop a staged batch that failed its audit — nothing was ever visible.
@@ -2693,7 +2588,7 @@ object SnapshotTable {
       s"delete key column name '$key' must match [A-Za-z0-9_.]+")
     val schema = m.schema.get
     require(schema.fieldNames.contains(key), s"table at $dir has no column '$key'")
-    val ledger = resolveLedger(spark, dir, ids, Some(m), batchId)
+    val ledger = resolveLedger(fs, manifestDir(root), ids, Some(m), batchId)
     batchId.flatMap(b => ledger.find(_._1 == b)) match {
       case Some((_, snap)) => return Commit(snap, skippedExisting = true)
       case None =>
@@ -2759,7 +2654,7 @@ object SnapshotTable {
       s"merge-on-read upsert requires a schema-stamped table (legacy chain at $dir)")
     require(key.matches("[A-Za-z0-9_.]+"),
       s"upsert key column name '$key' must match [A-Za-z0-9_.]+")
-    val ledger = resolveLedger(spark, dir, ids, Some(m), batchId)
+    val ledger = resolveLedger(fs, manifestDir(root), ids, Some(m), batchId)
     batchId.flatMap(b => ledger.find(_._1 == b)) match {
       case Some((_, snap)) => return Commit(snap, skippedExisting = true)
       case None =>
@@ -2879,7 +2774,7 @@ object SnapshotTable {
       s"merge update assignment targets unknown column '$c'")))
     require(source.columns.contains(key), s"merge source has no key column '$key'")
     // exactly-once precheck BEFORE any join work (applyChanges re-checks)
-    val ledger = resolveLedger(spark, dir, ids, Some(m), batchId)
+    val ledger = resolveLedger(fs, manifestDir(root), ids, Some(m), batchId)
     batchId.flatMap(b => ledger.find(_._1 == b)) match {
       case Some((_, snap)) =>
         return MergeStats(Commit(snap, skippedExisting = true), 0L, 0L, 0L)
@@ -3076,7 +2971,7 @@ object SnapshotTable {
       fs.delete(new Path(dataDir(root), n), true)
     }
     drop.foreach { id =>
-      fs.delete(new Path(manifestDir(root), f"manifest-$id%06d.json"), false)
+      fs.delete(new Path(manifestDir(root), manifestName(id)), false)
     }
     cleanBlooms(spark, fs, root, dir) // sketches follow their dirs' lifecycle
     dropDirs.toSeq.sorted
@@ -3106,10 +3001,9 @@ object SnapshotTable {
       .filterNot(referenced).sorted.toIndexedSeq
     orphans.foreach(n => fs.delete(new Path(dd, n), true))
     cleanBlooms(spark, fs, root, dir)
-    // contended-crash debris: a writer that died between its CAS and tmp
-    // cleanup leaves .manifest-NNNNNN.<token>.tmp (+ .crc sidecars) in the
-    // manifest dir forever — never referenced once a commit is decided
-    // (advice r05)
+    // crash debris: a writer that died between its claim and tmp cleanup
+    // leaves .<name>.<token>.tmp (+ .crc sidecars) in the manifest dir
+    // forever — never referenced once a commit is decided (advice r05)
     val md = manifestDir(root)
     if (fs.exists(md))
       fs.listStatus(md).map(_.getPath.getName)

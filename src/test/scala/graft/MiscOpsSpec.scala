@@ -48,17 +48,29 @@ class MiscOpsSpec extends SparkSpec {
       Route.SinkSpec("never_sink", Eq("severity", "NOPE")),
       Route.SinkSpec("teamA_too", InList("team", Seq("team-0", "team-1"))))
     val sinks = StandardPipeline.sinks ++ extra
+    // every sink dir of a run into `dir` holds exactly its per-sink frame
+    // (a bucketed run's read-back carries the _bucket partition column)
+    def assertPerSink(dir: String, sinks: Seq[Route.SinkSpec], r: Route.RunResult,
+                      bucketed: Boolean = false): Unit = {
+      val flagged = Route.withSinkFlags(pipe.trunk, sinks)
+      for (sp <- sinks) {
+        val want = Route.sinkFrame(flagged, sp)
+        // the bucketed writer's dynamic partition overwrite leaves an empty
+        // sink's dir with no file at all, so there is no schema to read
+        lazy val noFiles = new java.io.File(s"$dir/${sp.name}").list().isEmpty
+        if (bucketed && r.counts(sp.name) == 0 && noFiles) assert(want.isEmpty, sp.name)
+        else {
+          val got = spark.read.parquet(s"$dir/${sp.name}").drop("_bucket")
+          assert(got.columns.toSeq == want.columns.toSeq, s"${sp.name} columns")
+          assert(got.count() == r.counts(sp.name), s"${sp.name} count")
+          assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+            s"${sp.name} rows differ from the per-sink frame")
+        }
+      }
+    }
     val r = Route.run(spark, pipe.trunk, sinks, out)
     assert(r.resumedSinks.isEmpty)
-    val flagged = Route.withSinkFlags(pipe.trunk, sinks)
-    for (sp <- sinks) {
-      val got = spark.read.parquet(s"$out/${sp.name}")
-      val want = Route.sinkFrame(flagged, sp)
-      assert(got.columns.toSeq == want.columns.toSeq, s"${sp.name} columns")
-      assert(got.count() == r.counts(sp.name), s"${sp.name} count")
-      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
-        s"${sp.name} rows differ from the per-sink frame")
-    }
+    assertPerSink(out, sinks, r)
     // empty sink: directory still readable with the payload schema
     val empty = spark.read.parquet(s"$out/never_sink")
     assert(empty.count() == 0 && empty.columns.contains("doc_id"))
@@ -71,6 +83,41 @@ class MiscOpsSpec extends SparkSpec {
     val r2 = Route.run(spark, pipe.trunk, sinks, out)
     assert(sinks.map(_.name).toSet.subsetOf(r2.resumedSinks.toSet))
     assert(r2.counts == r.counts)
+    // the per-sink fallbacks keep the same contract: ordered and bucketed
+    // runs with several plain sinks, and a name needing path escaping
+    def fresh() = java.nio.file.Files.createTempDirectory("graft_combined").toString
+    val ordOut = fresh()
+    assertPerSink(ordOut, sinks, Route.run(spark, pipe.trunk, sinks, ordOut, ordered = true))
+    val bktOut = fresh()
+    assertPerSink(bktOut, sinks, Route.run(spark, pipe.trunk, sinks, bktOut, buckets = 3),
+      bucketed = true)
+    val escaped = sinks :+ Route.SinkSpec("a=b", InList("team", Seq("team-0")))
+    val escOut = fresh()
+    assertPerSink(escOut, escaped, Route.run(spark, pipe.trunk, escaped, escOut))
+  }
+
+  test("Route.run rejects sink names in the reserved '_' namespace") {
+    import graft.conditions.Eq
+    val pipe = StandardPipeline.fromDir(spark, sfDir)
+    for (name <- Seq("_default", "_lineage")) {
+      val out = java.nio.file.Files.createTempDirectory("graft_reserved").toString
+      val sinks = StandardPipeline.sinks :+ Route.SinkSpec(name, Eq("severity", "ERROR"))
+      val e = intercept[IllegalArgumentException](Route.run(spark, pipe.trunk, sinks, out))
+      assert(e.getMessage.contains(s"'$name'") && e.getMessage.contains("reserved"))
+    }
+  }
+
+  test("a fully resumed rerun reaps crashed combined-write staging dirs") {
+    val out = java.nio.file.Files.createTempDirectory("graft_reap").toString
+    val pipe = StandardPipeline.fromDir(spark, sfDir)
+    val sinks = StandardPipeline.sinks
+    Route.run(spark, pipe.trunk, sinks, out)
+    // debris of a combined write that crashed after staging
+    val debris = new java.io.File(s"$out/.sinkstage-x/_sink=sink_teamA")
+    assert(debris.mkdirs())
+    val r = Route.run(spark, pipe.trunk, sinks, out)
+    assert(sinks.map(_.name).toSet.subsetOf(r.resumedSinks.toSet))
+    assert(!new java.io.File(s"$out/.sinkstage-x").exists(), "staging debris survived")
   }
 
   test("flow-rate Aggregator matches hand-computed rate and merges across partitions") {
