@@ -125,15 +125,21 @@ object Route {
       .select(col("kv.sink").as("sink"), col("kv.n").as("n"))
   }
 
-  /** Per-partition lineage: (partition id, rows, per-sink matched rows) —
-    * persisted alongside sinks so a resumed job can prove per-partition
-    * completeness (the PQ-checkpoint analogue, SURVEY.md §2.7).
+  /** Writers that store [[sinkFrame]] as plain parquet (the streaming
+    * fan-out, snapshot-table sinks) have no index, codec, document-id,
+    * csv, action or line-format layout: a sink asking for one fails here,
+    * before anything is written, instead of silently landing as parquet.
     */
-  def lineage(flagged: DataFrame, sinks: Seq[SinkSpec]): DataFrame = {
-    val aggs = count(lit(1)).as("rows") +:
-      sinks.map(s => sum(col(flagCol(s.name)).cast("long")).as(s"n_${s.name}"))
-    flagged.groupBy(spark_partition_id().as("part")).agg(aggs.head, aggs.tail: _*)
-  }
+  private[graft] def requirePlainSinks(sinks: Seq[SinkSpec], writer: String): Unit =
+    sinks.foreach { s =>
+      val dropped = Seq("indexTemplate" -> s.indexTemplate.nonEmpty,
+          "codec" -> s.codec.nonEmpty, "documentId" -> s.documentId.nonEmpty,
+          "csvFields" -> s.csvFields.nonEmpty, "esAction" -> s.esAction.nonEmpty,
+          "lineFormat" -> s.lineFormat.nonEmpty).collect { case (field, true) => field }
+      require(dropped.isEmpty,
+        s"sink '${s.name}' sets ${dropped.mkString(", ")}, but $writer writes plain " +
+          "parquet and would drop it — write that sink with Route.run instead")
+    }
 
   final case class RunResult(counts: Map[String, Long], sinkPaths: Map[String, String],
                              resumedSinks: Seq[String], manifestPath: String = "")
@@ -155,16 +161,17 @@ object Route {
     val Id = "manifest-(\\d+)\\.json".r
     val prev = fs.listStatus(dir).map(_.getPath.getName).collect { case Id(n) => n.toLong }
     val next = if (prev.isEmpty) 0L else prev.max + 1
-    def jstr(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+    val jstr = graft.model.Json.quote _
     val json =
       s"""{"snapshot_id":$next,"parent_id":${if (next == 0) "null" else next - 1},
          |"counts":{${counts.toSeq.sortBy(_._1).map { case (k, v) => s"${jstr(k)}:$v" }.mkString(",")}},
          |"sinks":{${paths.toSeq.sortBy(_._1).map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString(",")}},
          |"resumed":[${resumed.sorted.map(jstr).mkString(",")}]}""".stripMargin
-    val p = new org.apache.hadoop.fs.Path(dir, f"manifest-$next%06d.json")
-    val out = fs.create(p, true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
-    p.toString
+    val name = f"manifest-$next%06d.json"
+    require(SnapshotTable.publishIfAbsent(fs, dir, name, json.getBytes("UTF-8")),
+      s"concurrent Route.run commit detected for $name under $outDir — " +
+        "concurrent runs into one outDir are not supported")
+    new org.apache.hadoop.fs.Path(dir, name).toString
   }
 
   /** Flow-metrics table (reference FlowMetric.java:31-50 analogue at job
@@ -199,7 +206,7 @@ object Route {
     * Driver-side reads of driver-sized tables only.
     */
   def nodeStats(spark: SparkSession, outDir: String): String = {
-    def jstr(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+    val jstr = graft.model.Json.quote _
     val counts = spark.read.parquet(s"$outDir/_counts")
       .collect().map(r => r.getString(0) -> r.getLong(1)).sortBy(_._1)
     val metrics: Seq[(String, Double)] =

@@ -253,9 +253,11 @@ object SnapshotTable {
     readManifestFile(fs, p)
   }
 
-  private def readManifestFile(fs: FileSystem, p: Path): Manifest = {
+  private def readManifestFile(fs: FileSystem, p: Path): Manifest = parse(readText(fs, p))
+
+  private def readText(fs: FileSystem, p: Path): String = {
     val in = fs.open(p)
-    try parse(scala.io.Source.fromInputStream(in, "UTF-8").mkString) finally in.close()
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
   }
 
   /** Publish `body` as `intoDir/name` only if no file holds that name yet.
@@ -322,95 +324,145 @@ object SnapshotTable {
       s"concurrent commit detected for snapshot ${m.snapshotId} of $intoDir — " +
         "SnapshotTable is single-writer per table (see scaladoc)")
 
-  private def commitManifest(fs: FileSystem, root: Path, m: Manifest): Unit =
-    commitManifestTo(fs, manifestDir(root), m)
+  /** The head of a manifest chain: its retained snapshot ids and its latest
+    * manifest (None on a virgin chain). `preLedger` marks a head written
+    * before the batch ledger existed — no `batch_commits` key at all, which
+    * an empty ledger is not (see [[resolveLedger]]).
+    */
+  private final case class Head(ids: Seq[Long], latest: Option[Manifest], preLedger: Boolean)
 
-  /** Parent side of a batch-id writer's commit: the child's snapshot id,
-    * the chain head it builds on (None on a virgin table), and the table's
-    * stats/bloom columns with this commit's own added.
+  /** The one read of a chain head: one listing, one manifest read. `upTo`
+    * reads the chain as it was at that retained snapshot.
+    */
+  private def readHead(fs: FileSystem, chain: Path, upTo: Long = Long.MaxValue): Head = {
+    val ids = idsIn(fs, chain).filter(_ <= upTo)
+    ids.lastOption.map(id => readText(fs, new Path(chain, manifestName(id)))) match {
+      case None => Head(ids, None, preLedger = false)
+      case Some(text) => Head(ids, Some(parse(text)), !text.contains("\"batch_commits\":"))
+    }
+  }
+
+  /** The head manifest of table `dir`, for an operation that needs one. */
+  private def requireHead(head: Head, dir: String, hint: String = ""): Manifest =
+    head.latest.getOrElse(sys.error(s"$dir has no committed snapshot$hint"))
+
+  /** Latest manifest of table `dir` — the read paths' head. */
+  private def latest(spark: SparkSession, dir: String, hint: String = ""): Manifest = {
+    val (fs, root) = fsOf(spark, dir)
+    requireHead(readHead(fs, manifestDir(root)), dir, hint)
+  }
+
+  /** Parent side of a commit: the child's snapshot id, the chain head it
+    * builds on (None on a virgin table), and the table's stats/bloom
+    * columns with this commit's own added.
     */
   private final case class ChildOf(next: Long, parent: Option[Manifest],
                                    statsCols: Seq[String], bloomCols: Seq[String])
 
-  /** What a batch-id writer adds on top of its parent: the data dirs it
-    * wrote with their rows, stats and Bloom sidecars, and the parent dirs it
-    * `replaced`, whose stats and sketches leave with them. `replacedRows` is
-    * their PHYSICAL row count (the Manifest `totalRows` contract).
+  /** What a commit changes on top of its parent: the data dirs it wrote with
+    * their rows, stats and Bloom sidecars, and the parent dirs it
+    * `replaced`, whose stats and sketches leave with them. `rows` and
+    * `replacedRows` are PHYSICAL row counts (the Manifest `totalRows`
+    * contract); `rows` is also the reported `addedRows` unless `edit` says
+    * otherwise. `edit` states the manifest fields the operation changes
+    * beyond that rule (a rewrite adds no rows, a merge-on-read commit adds a
+    * delete file, ...). `restore` makes the child's whole state — live set,
+    * totals, ledger, schema and properties — that of the chain's head as it
+    * was at an earlier snapshot ([[rollback]]).
     */
-  private final case class Child(added: Seq[String], rows: Long,
-                                 stats: Seq[DirStat], blooms: Seq[(String, String)],
-                                 replaced: Seq[String] = Nil, replacedRows: Long = 0L)
+  private final case class Child(added: Seq[String] = Nil, rows: Long = 0L,
+                                 stats: Seq[DirStat] = Nil,
+                                 blooms: Seq[(String, String)] = Nil,
+                                 replaced: Seq[String] = Nil, replacedRows: Long = 0L,
+                                 restore: Option[Head] = None,
+                                 edit: Manifest => Manifest = identity)
 
-  /** The one parent→child rule of every batch-id writer: [[append]],
-    * [[overwrite]], [[appendPartitioned]], [[overwritePartitions]],
-    * [[adoptFiles]], [[publishStaged]], [[appendToBranch]], and each attempt
-    * of [[appendConcurrent]]. It reads the chain head, resolves the batch
+  /** The empty table state a fresh table or a REPLACE starts from. */
+  private val EmptyState = Manifest(-1L, None, "empty", None, Nil, Nil, 0L, 0L)
+
+  /** The one parent→child rule of every commit. It reads the chain head
+    * (`needsHead` fails loudly on a virgin table), resolves the batch
     * ledger and skips a replayed batch id (returned as `skippedExisting`,
     * and `stage` never runs), numbers the child, merges the schema and the
-    * stats/bloom column properties, lets `stage` write the data, carries
-    * the parent's live dirs, totals, ledger, stats, sketches and pending
-    * merge-on-read deletes onto the child manifest, and claims its id.
+    * stats/bloom column properties, and lets `stage` do the operation's
+    * work. A stage that finds nothing to do returns None: no commit, the
+    * head returns as `skippedExisting`. Otherwise the child keeps the
+    * parent's live dirs, stats and sketches minus the ones it replaced plus
+    * the ones it added, its totals, ledger and pending merge-on-read
+    * deletes; the stage's `edit` then states what else changes, and the
+    * child's id is claimed.
     *
-    * `branch` commits on that branch chain dir instead of main's.
-    * `replaceAll` makes the child a new table state (the [[overwrite]]
-    * REPLACE): only the stats/bloom column properties carry over, the schema
-    * restamps to `schema`, and the ledger restarts with this batch — ledger
-    * invariant (the rollback precedent): batch id present == that batch's
-    * rows are present, and the replace removed every prior batch's rows.
+    * `schema` is the incoming frame's schema (None: the table keeps its
+    * schema). `branch` commits on that branch chain dir instead of main's.
+    * `replaceAll` makes the child a new table state (the [[overwrite]] /
+    * [[truncate]] REPLACE, and [[create]]): only the schema and the
+    * stats/bloom column properties carry over, an incoming schema restamps
+    * rather than merges, and the ledger restarts with this batch — ledger
+    * invariant: batch id present == that batch's rows are present, and the
+    * replace removed every prior batch's rows.
     *
     * A lost claim fails loudly, so the result is always defined for a
     * single writer; only a `contended` caller sees None, and rebases.
     */
-  private def commitChild(spark: SparkSession, fs: FileSystem, root: Path, op: String,
-                          batchId: Option[String],
-                          schema: org.apache.spark.sql.types.StructType,
+  private def commitChild(spark: SparkSession, dir: String, op: String,
+                          batchId: Option[String] = None,
+                          schema: Option[org.apache.spark.sql.types.StructType] = None,
                           statsBy: Seq[String] = Nil, bloomBy: Seq[String] = Nil,
                           branch: Option[Path] = None, replaceAll: Boolean = false,
-                          contended: Boolean = false)
-                         (stage: ChildOf => Child): Option[Commit] = {
+                          needsHead: Boolean = false, contended: Boolean = false)
+                         (stage: ChildOf => Option[Child]): Option[Commit] = {
+    val (fs, root) = fsOf(spark, dir)
     val chain = branch.getOrElse(manifestDir(root))
-    val ids = idsIn(fs, chain)
-    require(branch.isEmpty || ids.nonEmpty, s"branch dir $chain holds no manifests (corrupt branch)")
-    val parent = ids.lastOption.map(id => readManifestFile(fs, new Path(chain, manifestName(id))))
-    val ledger = resolveLedger(fs, chain, ids, parent, batchId)
+    val head = readHead(fs, chain)
+    require(branch.isEmpty || head.ids.nonEmpty,
+      s"branch dir $chain holds no manifests (corrupt branch)")
+    val parent = if (needsHead) Some(requireHead(head, dir)) else head.latest
+    val ledger = resolveLedger(fs, chain, head, batchId)
     batchId.flatMap(b => ledger.find(_._1 == b)) match {
       case Some((_, snap)) => Some(Commit(snap, skippedExisting = true))
       case None =>
-        val next = ids.lastOption.map(_ + 1).getOrElse(0L)
+        val next = parent.fold(0L)(_.snapshotId + 1)
         val base = if (replaceAll) None else parent
         // schema evolution: a fresh state stamps the incoming schema, a
         // child merges new columns in. A LEGACY chain (parent without a
         // stamped schema) stays in footer-inference mode — stamping only
         // the new columns would hide the older dirs' columns. Merged before
         // `stage`, so a conflict fails before any data moves.
-        val schemaNow = base match {
-          case None => Some(schema.json)
-          case Some(p) => p.schema.map(ps => mergeSchemas(ps, schema).json)
+        val schemaNow = (schema, base) match {
+          case (None, _) => parent.flatMap(_.schemaJson)
+          case (Some(s), None) => Some(s.json)
+          case (Some(s), Some(p)) => p.schema.map(ps => mergeSchemas(ps, s).json)
         }
         // stats/bloom columns are table properties: once requested they are
         // computed on every later commit too, so pruning stays complete
         val to = ChildOf(next, parent,
           (parent.map(_.statsCols).getOrElse(Nil) ++ statsBy).distinct,
           (parent.map(_.bloomCols).getOrElse(Nil) ++ bloomBy).distinct)
-        val c = stage(to)
-        val gone = c.replaced.toSet
-        // the state the child inherits: an empty one on a fresh table or a REPLACE
-        val b = base.getOrElse(Manifest(-1L, None, "empty", None, Nil, Nil, 0L, 0L))
-        val m = Manifest(next, ids.lastOption, op, batchId,
-          added = c.added, live = b.live.filterNot(gone) ++ c.added,
-          addedRows = c.rows, totalRows = b.totalRows - c.replacedRows + c.rows,
-          batchCommits = (if (replaceAll) Nil else ledger) ++ batchId.map(_ -> next),
-          schemaJson = schemaNow,
-          statsCols = to.statsCols,
-          stats = b.stats.filterNot(st => gone(st.dir)) ++ c.stats,
-          bloomCols = to.bloomCols,
-          blooms = b.blooms.filterNot(bl => gone(bl._1)) ++ c.blooms,
-          // pending MOR deletes carry forward; the child's dirs have a newer
-          // addSeq than every delete seq, so they provably never touch them
-          deletes = b.deletes)
-        val won = if (contended) claimManifest(fs, chain, m)
-                  else { commitManifestTo(fs, chain, m); true }
-        Option.when(won)(Commit(next, skippedExisting = false))
+        stage(to) match {
+          case None => parent.map(p => Commit(p.snapshotId, skippedExisting = true))
+          case Some(c) =>
+            val gone = c.replaced.toSet
+            val b = base.getOrElse(EmptyState)
+            // pending MOR deletes carry forward (the copy keeps them): the
+            // child's dirs have a newer addSeq than every delete seq, so they
+            // provably never touch them
+            val state = c.restore.map(r =>
+              r.latest.get.copy(batchCommits = resolveLedger(fs, chain, r, None))
+            ).getOrElse(b.copy(
+              live = b.live.filterNot(gone) ++ c.added,
+              totalRows = b.totalRows - c.replacedRows + c.rows,
+              batchCommits = (if (replaceAll) Nil else ledger) ++ batchId.map(_ -> next),
+              schemaJson = schemaNow,
+              statsCols = to.statsCols,
+              stats = b.stats.filterNot(st => gone(st.dir)) ++ c.stats,
+              bloomCols = to.bloomCols,
+              blooms = b.blooms.filterNot(bl => gone(bl._1)) ++ c.blooms))
+            val m = c.edit(state.copy(snapshotId = next, parentId = parent.map(_.snapshotId),
+              operation = op, batchId = batchId, added = c.added, addedRows = c.rows))
+            val won = if (contended) claimManifest(fs, chain, m)
+                      else { commitManifestTo(fs, chain, m); true }
+            Option.when(won)(Commit(next, skippedExisting = false))
+        }
     }
   }
 
@@ -456,8 +508,8 @@ object SnapshotTable {
              statsBy: Seq[String] = Nil,
              bloomBy: Seq[String] = Nil): Commit = {
     val (fs, root) = fsOf(spark, dir)
-    commitChild(spark, fs, root, "append", batchId, df.schema, statsBy, bloomBy) { to =>
-      writeChild(spark, fs, root, df, f"snap-${to.next}%06d", to)
+    commitChild(spark, dir, "append", batchId, Some(df.schema), statsBy, bloomBy) { to =>
+      Some(writeChild(spark, fs, root, df, f"snap-${to.next}%06d", to))
     }.get
   }
 
@@ -519,7 +571,7 @@ object SnapshotTable {
     // attempt only RELABEL / re-write sidecar files driver-side. A rival
     // commit that grows the table's stats/bloom column set under rebase
     // (rare) costs one extra job for just the missing columns.
-    val seedParent = manifestIds(fs, root).lastOption.map(manifest(spark, dir, _))
+    val seedParent = readHead(fs, manifestDir(root)).latest
     val seedScols = (seedParent.map(_.statsCols).getOrElse(Nil) ++ statsBy).distinct
     val (rows, seedStats, _) = writeMeasured(df,
       new Path(dataDir(root), name).toString, name, seedScols)
@@ -534,7 +586,7 @@ object SnapshotTable {
       fs.delete(new Path(bloomDir(root), bloomFileName(sidecarsFor._1, c)), false))
     var attempt = 0
     while (attempt <= maxRetries) {
-      commitChild(spark, fs, root, "append", batchId, df.schema, statsBy, bloomBy,
+      commitChild(spark, dir, "append", batchId, Some(df.schema), statsBy, bloomBy,
           contended = true) { to =>
         val newName = f"snap-${to.next}%06d-c$token"
         if (newName != name) {
@@ -566,7 +618,7 @@ object SnapshotTable {
         })
         sidecarsFor = (name, dirBlooms.map(_._2))
         beforeCommit()
-        Child(Seq(name), rows, dirStats, dirBlooms)
+        Some(Child(Seq(name), rows, dirStats, dirBlooms))
       } match {
         case Some(c) if c.skippedExisting =>
           // a rival committed this very batch: exactly-once wins over our
@@ -594,21 +646,19 @@ object SnapshotTable {
   def create(spark: SparkSession, dir: String,
              schema: org.apache.spark.sql.types.StructType,
              statsBy: Seq[String] = Nil, bloomBy: Seq[String] = Nil): Commit = {
-    val (fs, root) = fsOf(spark, dir)
-    require(manifestIds(fs, root).isEmpty,
-      s"$dir already has a committed snapshot — create() only makes virgin tables")
-    require(schema.fields.nonEmpty, "create() needs a non-empty schema")
-    (statsBy ++ bloomBy).foreach { c =>
-      val f = schema.fields.find(_.name == c).getOrElse(
-        sys.error(s"stats/bloom column '$c' is not in the table schema"))
-      statDomain(f.dataType) // fails loudly on non-comparable types
-    }
-    commitManifest(fs, root, Manifest(0L, None, "create", None,
-      added = Nil, live = Nil, addedRows = 0L, totalRows = 0L,
-      batchCommits = Nil, schemaJson = Some(schema.json),
-      statsCols = statsBy.distinct, stats = Nil,
-      bloomCols = bloomBy.distinct, blooms = Nil, deletes = Nil))
-    Commit(0L, skippedExisting = false)
+    // a fresh table state: the schema stamps as given, never merges
+    commitChild(spark, dir, "create", schema = Some(schema), statsBy = statsBy,
+        bloomBy = bloomBy, replaceAll = true) { to =>
+      require(to.parent.isEmpty,
+        s"$dir already has a committed snapshot — create() only makes virgin tables")
+      require(schema.fields.nonEmpty, "create() needs a non-empty schema")
+      (statsBy ++ bloomBy).foreach { c =>
+        val f = schema.fields.find(_.name == c).getOrElse(
+          sys.error(s"stats/bloom column '$c' is not in the table schema"))
+        statDomain(f.dataType) // fails loudly on non-comparable types
+      }
+      Some(Child())
+    }.get
   }
 
   /** Replace the table's contents with `df` in ONE commit (the INSERT
@@ -616,21 +666,22 @@ object SnapshotTable {
     * new dir, pending merge-on-read deletes clear (nothing they applied to
     * stays live), and the schema restamps to `df`'s — an overwrite is a
     * REPLACE, not an evolution. History stays append-only (prior snapshots
-    * remain time-travelable until expired) and the exactly-once batch
-    * ledger carries forward, so a replayed overwrite skips like a replayed
-    * append. Incremental/changelog reads across it fail loudly (row-
-    * removing, the [[incremental]] contract); [[changelogCdc]] recovers
-    * the row-level diff.
+    * remain time-travelable until expired). The exactly-once batch ledger
+    * RESTARTS with this commit's own batch id: every prior batch's rows are
+    * gone, so a replay of an older batch re-appends, while a replayed
+    * overwrite still skips. Incremental/changelog reads across it fail
+    * loudly (row-removing, the [[incremental]] contract); [[changelogCdc]]
+    * recovers the row-level diff.
     */
   def overwrite(spark: SparkSession, df: DataFrame, dir: String,
                 batchId: Option[String] = None,
                 statsBy: Seq[String] = Nil,
                 bloomBy: Seq[String] = Nil): Commit = {
     val (fs, root) = fsOf(spark, dir)
-    commitChild(spark, fs, root, "overwrite", batchId, df.schema, statsBy, bloomBy,
+    commitChild(spark, dir, "overwrite", batchId, Some(df.schema), statsBy, bloomBy,
         replaceAll = true) { to =>
       // empty overwrites are legal: the observed count is simply 0
-      writeChild(spark, fs, root, df, f"snap-${to.next}%06d", to)
+      Some(writeChild(spark, fs, root, df, f"snap-${to.next}%06d", to))
     }.get
   }
 
@@ -640,22 +691,13 @@ object SnapshotTable {
     * expiry). The schema stays stamped, so the empty state still reads and
     * the next append evolves from it normally.
     */
-  def truncate(spark: SparkSession, dir: String): Commit = {
-    val (fs, root) = fsOf(spark, dir)
-    val ids = manifestIds(fs, root)
-    val last = ids.lastOption.getOrElse(sys.error(s"$dir has no committed snapshot"))
-    val m = manifest(spark, dir, last)
-    val next = last + 1
-    commitManifest(fs, root, Manifest(next, Some(last), "overwrite", None,
-      added = Nil, live = Nil, addedRows = 0L, totalRows = 0L,
-      // ledger invariant (the rollback precedent): batch id present ==
-      // that batch's rows are present. Truncate removes every row, so
-      // every prior batch becomes re-appendable.
-      batchCommits = Nil, schemaJson = m.schemaJson,
-      statsCols = m.statsCols, stats = Nil,
-      bloomCols = m.bloomCols, blooms = Nil, deletes = Nil))
-    Commit(next, skippedExisting = false)
-  }
+  def truncate(spark: SparkSession, dir: String): Commit =
+    // ledger invariant (the rollback precedent): batch id present == that
+    // batch's rows are present. Truncate removes every row, so the ledger
+    // restarts and every prior batch becomes re-appendable.
+    commitChild(spark, dir, "overwrite", replaceAll = true, needsHead = true) { _ =>
+      Some(Child())
+    }.get
 
   /** Explicit schema change as ONE metadata-only commit (the ALTER TABLE
     * ADD/DROP COLUMNS analogue — appends also evolve schemas implicitly,
@@ -678,39 +720,35 @@ object SnapshotTable {
                   drop: Seq[String] = Nil): Commit = {
     require(add.nonEmpty || drop.nonEmpty, "alterSchema with no changes")
     val (fs, root) = fsOf(spark, dir)
-    val ids = manifestIds(fs, root)
-    val last = ids.lastOption.getOrElse(sys.error(s"$dir has no committed snapshot"))
-    val m = manifest(spark, dir, last)
-    val cur = m.schema.getOrElse(sys.error(
-      s"alterSchema requires a schema-stamped table (legacy chain at $dir)"))
-    val dropSet = drop.toSet
-    dropSet.foreach(c => require(cur.fieldNames.contains(c),
-      s"cannot drop '$c': not a column of $dir (has ${cur.fieldNames.mkString(", ")})"))
-    m.deletes.find(d => dropSet.contains(d.column)).foreach(d => sys.error(
-      s"cannot drop '${d.column}': pending merge-on-read delete file ${d.dir} " +
-        "is keyed on it — compact() first to materialize the deletes"))
-    val everStamped = ids.map(manifest(spark, dir, _))
-      .flatMap(_.schema).flatMap(_.fieldNames).toSet
-    add.foreach { f =>
-      require(f.nullable,
-        s"added column '${f.name}' must be nullable (existing rows have no value)")
-      require(!everStamped.contains(f.name),
-        s"column name '${f.name}' was stamped by a retained snapshot of $dir — " +
-          "re-adding it would read the old files' values back; expire the old " +
-          "snapshots (and compact) first, or pick a fresh name")
-    }
-    val kept = cur.fields.filterNot(f => dropSet.contains(f.name))
-    require(kept.nonEmpty || add.nonEmpty, "cannot drop every column")
-    val schemaNow = org.apache.spark.sql.types.StructType(kept ++ add)
-    val next = last + 1
-    commitManifest(fs, root, m.copy(snapshotId = next, parentId = Some(last),
-      operation = "alter", batchId = None, added = Nil, addedRows = 0L,
-      schemaJson = Some(schemaNow.json),
-      statsCols = m.statsCols.filterNot(dropSet),
-      stats = m.stats.filterNot(st => dropSet.contains(st.column)),
-      bloomCols = m.bloomCols.filterNot(dropSet),
-      blooms = m.blooms.filterNot(b => dropSet.contains(b._2))))
-    Commit(next, skippedExisting = false)
+    commitChild(spark, dir, "alter", needsHead = true) { to =>
+      val m = to.parent.get
+      val cur = m.schema.getOrElse(sys.error(
+        s"alterSchema requires a schema-stamped table (legacy chain at $dir)"))
+      val dropSet = drop.toSet
+      dropSet.foreach(c => require(cur.fieldNames.contains(c),
+        s"cannot drop '$c': not a column of $dir (has ${cur.fieldNames.mkString(", ")})"))
+      m.deletes.find(d => dropSet.contains(d.column)).foreach(d => sys.error(
+        s"cannot drop '${d.column}': pending merge-on-read delete file ${d.dir} " +
+          "is keyed on it — compact() first to materialize the deletes"))
+      val everStamped = manifestIds(fs, root).map(manifest(spark, dir, _))
+        .flatMap(_.schema).flatMap(_.fieldNames).toSet
+      add.foreach { f =>
+        require(f.nullable,
+          s"added column '${f.name}' must be nullable (existing rows have no value)")
+        require(!everStamped.contains(f.name),
+          s"column name '${f.name}' was stamped by a retained snapshot of $dir — " +
+            "re-adding it would read the old files' values back; expire the old " +
+            "snapshots (and compact) first, or pick a fresh name")
+      }
+      val kept = cur.fields.filterNot(f => dropSet.contains(f.name))
+      require(kept.nonEmpty || add.nonEmpty, "cannot drop every column")
+      val schemaNow = org.apache.spark.sql.types.StructType(kept ++ add)
+      Some(Child(edit = c => c.copy(schemaJson = Some(schemaNow.json),
+        statsCols = c.statsCols.filterNot(dropSet),
+        stats = c.stats.filterNot(st => dropSet.contains(st.column)),
+        bloomCols = c.bloomCols.filterNot(dropSet),
+        blooms = c.blooms.filterNot(b => dropSet.contains(b._2)))))
+    }.get
   }
 
   /** Merged read (merge-on-read deletes applied, schema-as-of-`m`)
@@ -842,10 +880,10 @@ object SnapshotTable {
                         statsBy: Seq[String] = Nil,
                         bloomBy: Seq[String] = Nil): Commit = {
     val (fs, root) = fsOf(spark, dir)
-    commitChild(spark, fs, root, "append", batchId, df.schema, statsBy, bloomBy) { to =>
+    commitChild(spark, dir, "append", batchId, Some(df.schema), statsBy, bloomBy) { to =>
       val (dirs, rows) = stagePartitioned(spark, fs, root, df, partition,
         f"snap-${to.next}%06d", "partitioned append")
-      partitionedChild(spark, fs, root, dirs, rows, df.schema, to)
+      Some(partitionedChild(spark, fs, root, dirs, rows, df.schema, to))
     }.get
   }
 
@@ -883,7 +921,7 @@ object SnapshotTable {
                           statsBy: Seq[String] = Nil,
                           bloomBy: Seq[String] = Nil): Commit = {
     val (fs, root) = fsOf(spark, dir)
-    commitChild(spark, fs, root, "dynoverwrite", batchId, df.schema, statsBy, bloomBy) { to =>
+    commitChild(spark, dir, "dynoverwrite", batchId, Some(df.schema), statsBy, bloomBy) { to =>
       val live = to.parent.toSeq.flatMap(_.live)
       // the layout gate sits AFTER the replay lookup: a batch committed
       // before a later compact() destroyed the layout must still SKIP
@@ -907,8 +945,8 @@ object SnapshotTable {
       val replacedRows =
         if (replaced.isEmpty) 0L
         else readDirs(spark, root, replaced, to.parent.flatMap(_.schema)).count()
-      partitionedChild(spark, fs, root, newDirs, rows, df.schema, to)
-        .copy(replaced = replaced, replacedRows = replacedRows)
+      Some(partitionedChild(spark, fs, root, newDirs, rows, df.schema, to)
+        .copy(replaced = replaced, replacedRows = replacedRows))
     }.get
   }
 
@@ -929,7 +967,7 @@ object SnapshotTable {
                                 writeSchema: org.apache.spark.sql.types.StructType): Commit = {
     require(files.nonEmpty, "adoptFiles with no files — skip the commit instead")
     val (fs, root) = fsOf(spark, dir)
-    val c = commitChild(spark, fs, root, "append", batchId, writeSchema) { to =>
+    val c = commitChild(spark, dir, "append", batchId, Some(writeSchema)) { to =>
       val name = f"snap-${to.next}%06d"
       val dest = new Path(dataDir(root), name)
       // an existing dir here is an uncommitted crash leftover (no manifest
@@ -942,40 +980,38 @@ object SnapshotTable {
         require(fs.rename(p, new Path(dest, p.getName)),
           s"adopt: rename of staged file $f into $dest failed")
       }
-      onDiskChild(spark, fs, root, name, rows, to)
+      Some(onDiskChild(spark, fs, root, name, rows, to))
     }.get
     if (c.skippedExisting) files.foreach(f => fs.delete(new Path(f), false))
     c
   }
 
-  /** Batch-id → snapshot-id ledger as of the head `parent` of the chain in
-    * `chain` (main's `_manifests` or a branch dir) — the ONE copy of the
-    * exactly-once machinery, shared by every batch-id writer through
-    * [[commitChild]] and by the batch-id maintenance paths ([[deleteKeys]],
-    * [[applyChanges]], [[merge]]).
+  /** Batch-id → snapshot-id ledger as of the chain head `head` of `chain`
+    * (main's `_manifests` or a branch dir) — the ONE copy of the
+    * exactly-once machinery: only [[commitChild]] calls it, so every commit
+    * (the batch-id writers, [[deleteKeys]], [[applyChanges]], [[merge]],
+    * and the maintenance operations) inherits the same ledger.
     *
     * Legacy migration: a chain written before the ledger existed carries
-    * per-snapshot batch_id but no cumulative ledger — when a batch-id commit
-    * lands on such a chain, the ledger is reconstructed ONCE from the
+    * per-snapshot batch_id but no cumulative ledger (no `batch_commits` key
+    * at all — an EMPTY ledger is a real state, e.g. after [[truncate]], and
+    * is never rebuilt). On such a head the ledger is reconstructed from the
     * retained manifests (exactly what the old full-chain replay scan read);
-    * the new manifest then carries it forward, so this costs O(chain) at
-    * most once per table. Batch ids of legacy snapshots that were ALREADY
-    * expired are unrecoverable (the old format never persisted them
-    * cumulatively).
+    * the child manifest, with or without a batch id, then carries it
+    * forward, so this costs O(chain) at most once per table. Batch ids of
+    * legacy snapshots that were ALREADY expired are unrecoverable (the old
+    * format never persisted them cumulatively).
     */
-  private def resolveLedger(fs: FileSystem, chain: Path, ids: Seq[Long],
-                            parent: Option[Manifest],
+  private def resolveLedger(fs: FileSystem, chain: Path, head: Head,
                             batchId: Option[String]): Seq[(String, Long)] = {
     batchId.foreach { b =>
       require(b.matches("[A-Za-z0-9._:-]+"),
         s"batch id '$b' must match [A-Za-z0-9._:-]+")
     }
-    parent.map(_.batchCommits).getOrElse(Nil) match {
-      case Nil if batchId.nonEmpty && ids.nonEmpty =>
-        ids.map(id => readManifestFile(fs, new Path(chain, manifestName(id))))
-          .flatMap(m => m.batchId.map(_ -> m.snapshotId))
-      case l => l
-    }
+    if (head.preLedger)
+      head.ids.map(id => readManifestFile(fs, new Path(chain, manifestName(id))))
+        .flatMap(m => m.batchId.map(_ -> m.snapshotId))
+    else head.latest.map(_.batchCommits).getOrElse(Nil)
   }
 
   private def readDirs(spark: SparkSession, root: Path, dirs: Seq[String],
@@ -1319,10 +1355,9 @@ object SnapshotTable {
     */
   def readWhere(spark: SparkSession, dir: String, range: KeyRange): DataFrame = {
     val (_, root) = fsOf(spark, dir)
-    val id = latestId(spark, dir).getOrElse(sys.error(s"$dir has no committed snapshot"))
-    val m = manifest(spark, dir, id)
+    val m = latest(spark, dir)
     val (kept, _) = planScan(m, range)
-    if (kept.isEmpty) read(spark, dir).limit(0)
+    if (kept.isEmpty) readMerged(spark, root, m, m.live).limit(0)
     else readMerged(spark, root, m, kept).filter(range.toColumn)
   }
 
@@ -1427,10 +1462,9 @@ object SnapshotTable {
     */
   def readWhereEq(spark: SparkSession, dir: String, column: String, value: Any): DataFrame = {
     val (_, root) = fsOf(spark, dir)
-    val id = latestId(spark, dir).getOrElse(sys.error(s"$dir has no committed snapshot"))
-    val m = manifest(spark, dir, id)
+    val m = latest(spark, dir)
     val (kept, _) = planScanEq(spark, dir, m, column, value)
-    if (kept.isEmpty) read(spark, dir).limit(0)
+    if (kept.isEmpty) readMerged(spark, root, m, m.live).limit(0)
     else readMerged(spark, root, m, kept).filter(col(column) === lit(value))
   }
 
@@ -1441,10 +1475,9 @@ object SnapshotTable {
   def readWhereIn(spark: SparkSession, dir: String,
                   column: String, values: Seq[Any]): DataFrame = {
     val (_, root) = fsOf(spark, dir)
-    val id = latestId(spark, dir).getOrElse(sys.error(s"$dir has no committed snapshot"))
-    val m = manifest(spark, dir, id)
+    val m = latest(spark, dir)
     val (kept, _) = planScanIn(spark, dir, m, column, values)
-    if (kept.isEmpty) read(spark, dir).limit(0)
+    if (kept.isEmpty) readMerged(spark, root, m, m.live).limit(0)
     else readMerged(spark, root, m, kept).filter(col(column).isin(values: _*))
   }
 
@@ -1487,9 +1520,9 @@ object SnapshotTable {
 
   /** Current table = latest snapshot. */
   def read(spark: SparkSession, dir: String): DataFrame = {
-    val id = latestId(spark, dir).getOrElse(
-      sys.error(s"$dir has no committed snapshot"))
-    asOf(spark, dir, id)
+    val (_, root) = fsOf(spark, dir)
+    val m = latest(spark, dir)
+    readMerged(spark, root, m, m.live)
   }
 
   /** Commit lineage + metrics as a queryable DataFrame — the persisted
@@ -1519,8 +1552,7 @@ object SnapshotTable {
     */
   def files(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val m = manifest(spark, dir, latestId(spark, dir).getOrElse(
-      sys.error(s"$dir has no committed snapshot")))
+    val m = latest(spark, dir)
     val statDirs = m.stats.map(_.dir).toSet
     val bloomKeys = m.blooms.toSet
     val liveSet = m.live.toSet
@@ -1545,8 +1577,7 @@ object SnapshotTable {
     */
   def partitions(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val m = manifest(spark, dir, latestId(spark, dir).getOrElse(
-      sys.error(s"$dir has no committed snapshot")))
+    val m = latest(spark, dir)
     def partOf(d: String): Option[String] =
       d.split('/').find(_.startsWith("_p=")).map(_.stripPrefix("_p="))
     val statsByDir = m.stats.groupBy(_.dir)
@@ -1674,11 +1705,9 @@ object SnapshotTable {
   private def branchesDir(root: Path) = new Path(manifestDir(root), "branches")
   private def branchDir(root: Path, name: String) = new Path(branchesDir(root), name)
 
-  private def branchHead(fs: FileSystem, bd: Path): Manifest = {
-    val ids = idsIn(fs, bd)
-    require(ids.nonEmpty, s"branch dir $bd holds no manifests (corrupt branch)")
-    readManifestFile(fs, new Path(bd, manifestName(ids.last)))
-  }
+  private def branchHead(fs: FileSystem, bd: Path): Manifest =
+    readHead(fs, bd).latest.getOrElse(
+      sys.error(s"branch dir $bd holds no manifests (corrupt branch)"))
 
   /** Every manifest of every live branch — the pin set expire/vacuum/bloom
     * hygiene must honor (driver-side metadata reads only).
@@ -1758,9 +1787,9 @@ object SnapshotTable {
     require(fs.exists(bd), s"branch '$name' does not exist on $dir")
     // the fork copy carries main's cumulative ledger, so the replay check
     // is one manifest read
-    commitChild(spark, fs, root, "append", batchId, df.schema, statsBy, bloomBy,
+    commitChild(spark, dir, "append", batchId, Some(df.schema), statsBy, bloomBy,
         branch = Some(bd)) { to =>
-      writeChild(spark, fs, root, df, f"br-$name-${to.next}%06d", to)
+      Some(writeChild(spark, fs, root, df, f"br-$name-${to.next}%06d", to))
     }.get
   }
 
@@ -1899,13 +1928,14 @@ object SnapshotTable {
     * gates run here; nothing is committed.
     */
   def auditStaged(spark: SparkSession, dir: String, token: String): DataFrame = {
-    val (_, root) = fsOf(spark, dir)
+    val (fs, root) = fsOf(spark, dir)
     val st = stagedMeta(spark, dir, token)
     val staged = spark.read.schema(st.schema)
       .parquet(new Path(dataDir(root), stageDirName(token)).toString)
-    latestId(spark, dir) match {
+    readHead(fs, manifestDir(root)).latest match {
       case None => staged
-      case Some(_) => read(spark, dir).unionByName(staged, allowMissingColumns = true)
+      case Some(m) =>
+        readMerged(spark, root, m, m.live).unionByName(staged, allowMissingColumns = true)
     }
   }
 
@@ -1926,7 +1956,7 @@ object SnapshotTable {
       s"staged batch '$token' on $dir has a manifest but no data dir — a " +
         "previous publish crashed between its rename and its commit; vacuum " +
         "the orphaned dir, drop the staged manifest, and re-stage the batch")
-    val c = commitChild(spark, fs, root, "append", st.batchId, st.schema) { to =>
+    val c = commitChild(spark, dir, "append", st.batchId, Some(st.schema)) { to =>
       val name = f"snap-${to.next}%06d"
       val dataPath = new Path(dataDir(root), name)
       // an existing dest is an UNCOMMITTED crash leftover (no manifest
@@ -1937,7 +1967,7 @@ object SnapshotTable {
       require(fs.rename(stagePath, dataPath),
         s"publish of '$token' on $dir could not move ${stagePath.getName} " +
           s"to ${dataPath.getName}")
-      onDiskChild(spark, fs, root, name, st.rows, to)
+      Some(onDiskChild(spark, fs, root, name, st.rows, to))
     }.get
     if (c.skippedExisting) discardStaged(spark, dir, token) // replayed batch: rows already present
     else fs.delete(stagedManifestPath(root, token), false)
@@ -2005,10 +2035,8 @@ object SnapshotTable {
     * stream's schema must come from metadata, not from scanning files.
     */
   def latestSchema(spark: SparkSession, dir: String): org.apache.spark.sql.types.StructType = {
-    val id = latestId(spark, dir).getOrElse(
-      sys.error(s"$dir has no committed snapshot — streaming reads need one " +
-        "(or pass an explicit schema)"))
-    manifest(spark, dir, id).schema.getOrElse(
+    latest(spark, dir,
+      " — streaming reads need one (or pass an explicit schema)").schema.getOrElse(
       sys.error(s"$dir is a legacy chain with no stamped schema — " +
         "append once post-upgrade, or pass an explicit schema"))
   }
@@ -2061,17 +2089,15 @@ object SnapshotTable {
     */
   def rollback(spark: SparkSession, dir: String, toId: Long): Commit = {
     val (fs, root) = fsOf(spark, dir)
-    val last = latestId(spark, dir).getOrElse(
-      sys.error(s"$dir has no committed snapshot"))
-    if (toId == last) return Commit(last, skippedExisting = true)
-    require(toId < last,
-      s"cannot roll $dir forward to $toId (latest is $last)")
-    val target = manifest(spark, dir, toId) // fails loudly if expired
-    val next = last + 1
-    commitManifest(fs, root, target.copy(snapshotId = next,
-      parentId = Some(last), operation = "rollback", batchId = None,
-      added = Nil, addedRows = 0L))
-    Commit(next, skippedExisting = false)
+    commitChild(spark, dir, "rollback", needsHead = true) { to =>
+      val last = to.parent.get.snapshotId
+      Option.when(toId != last) {
+        require(toId < last,
+          s"cannot roll $dir forward to $toId (latest is $last)")
+        manifest(spark, dir, toId) // fails loudly if expired
+        Child(restore = Some(readHead(fs, manifestDir(root), upTo = toId)))
+      }
+    }.get
   }
 
   /** Row-level CDC over ANY snapshot chain, including the row-removing
@@ -2230,65 +2256,60 @@ object SnapshotTable {
     require(zorderBy.isEmpty || zorderBy.size >= 2,
       "zorderBy needs >= 2 columns (one column is just sortBy)")
     val (fs, root) = fsOf(spark, dir)
-    val ids = manifestIds(fs, root)
-    val last = ids.lastOption.getOrElse(sys.error(s"$dir has no committed snapshot"))
-    val m = manifest(spark, dir, last)
-    if (m.live.size <= targetFiles && sortBy.isEmpty && zorderBy.isEmpty &&
-        m.deletes.isEmpty) // pending MOR deletes still need materializing
-      return Commit(last, skippedExisting = true)
-    val next = last + 1
-    val name = f"snap-$next%06d"
-    val dataPath = new Path(dataDir(root), name).toString
-    // compaction MATERIALIZES merge-on-read deletes: the rewrite reads the
-    // merged view, so the new files carry only surviving rows and the new
-    // manifest's delete list is empty (totalRows re-trues to the net count)
-    val base = readMerged(spark, root, m, m.live)
-    if (sortBy.nonEmpty || zorderBy.nonEmpty)
-      Seq("_b", "_z").foreach(c => require(!base.columns.contains(c),
-        s"clustered compaction reserves the column name '$c'"))
-    val scols = (m.statsCols ++ sortBy ++ zorderBy).distinct
-    // the rewritten row count is observed during the write itself — the
-    // former post-write footer count job (and, for pending-MOR-delete
-    // materialization, a whole extra pre-pass over the merged view) is gone
-    val (dirs, stats, rows, rowsByDir) =
-      if (sortBy.isEmpty && zorderBy.isEmpty) {
-        val (n, st, _) = writeMeasured(base.coalesce(targetFiles), dataPath,
-          name, scols)
-        (Seq(name), st, n, Map(name -> n))
-      } else {
-        val keyed = if (zorderBy.isEmpty) base
-          else base.withColumn("_z", zValue(base, zorderBy))
-        val rangeCols = if (zorderBy.isEmpty) sortBy.map(col) else Seq(col("_z"))
-        // observe ABOVE the range exchange, BELOW the final sort: the range
-        // partitioner SAMPLES its child to pick boundaries, so a metric
-        // below the exchange double-counts; one above the sort could hide
-        // the ordering from the writer and reinsert a sort
-        val obs = org.apache.spark.sql.Observation()
-        keyed.repartitionByRange(targetFiles, rangeCols: _*)
-          .observe(obs, count(lit(1)).as("_rows"))
-          .withColumn("_b", spark_partition_id())
-          .sortWithinPartitions(col("_b") +: rangeCols: _*)
-          .drop("_z")
-          .write.mode("overwrite").partitionBy("_b").parquet(dataPath)
-        val buckets = fs.listStatus(new Path(dataPath)).filter(_.isDirectory)
-          .map(_.getPath.getName).filter(_.startsWith("_b=")).sorted.toIndexedSeq
-        val (st, counts) = bucketStats(spark, dataPath, name, scols)
-        (buckets.map(b => s"$name/$b"), st,
-          obs.get("_rows").asInstanceOf[Long], counts)
+    commitChild(spark, dir, "replace", statsBy = sortBy ++ zorderBy, needsHead = true) { to =>
+      val m = to.parent.get
+      Option.when(m.live.size > targetFiles || sortBy.nonEmpty || zorderBy.nonEmpty ||
+          m.deletes.nonEmpty) { // pending MOR deletes still need materializing
+        val name = f"snap-${to.next}%06d"
+        val dataPath = new Path(dataDir(root), name).toString
+        // compaction MATERIALIZES merge-on-read deletes: the rewrite reads the
+        // merged view, so the new files carry only surviving rows and the new
+        // manifest's delete list is empty (totalRows re-trues to the net count)
+        val base = readMerged(spark, root, m, m.live)
+        if (sortBy.nonEmpty || zorderBy.nonEmpty)
+          Seq("_b", "_z").foreach(c => require(!base.columns.contains(c),
+            s"clustered compaction reserves the column name '$c'"))
+        // the rewritten row count is observed during the write itself — the
+        // former post-write footer count job (and, for pending-MOR-delete
+        // materialization, a whole extra pre-pass over the merged view) is gone
+        val (dirs, stats, rows, rowsByDir) =
+          if (sortBy.isEmpty && zorderBy.isEmpty) {
+            val (n, st, _) = writeMeasured(base.coalesce(targetFiles), dataPath,
+              name, to.statsCols)
+            (Seq(name), st, n, Map(name -> n))
+          } else {
+            val keyed = if (zorderBy.isEmpty) base
+              else base.withColumn("_z", zValue(base, zorderBy))
+            val rangeCols = if (zorderBy.isEmpty) sortBy.map(col) else Seq(col("_z"))
+            // observe ABOVE the range exchange, BELOW the final sort: the range
+            // partitioner SAMPLES its child to pick boundaries, so a metric
+            // below the exchange double-counts; one above the sort could hide
+            // the ordering from the writer and reinsert a sort
+            val obs = org.apache.spark.sql.Observation()
+            keyed.repartitionByRange(targetFiles, rangeCols: _*)
+              .observe(obs, count(lit(1)).as("_rows"))
+              .withColumn("_b", spark_partition_id())
+              .sortWithinPartitions(col("_b") +: rangeCols: _*)
+              .drop("_z")
+              .write.mode("overwrite").partitionBy("_b").parquet(dataPath)
+            val buckets = fs.listStatus(new Path(dataPath)).filter(_.isDirectory)
+              .map(_.getPath.getName).filter(_.startsWith("_b=")).sorted.toIndexedSeq
+            val (st, counts) = bucketStats(spark, dataPath, name, to.statsCols)
+            (buckets.map(b => s"$name/$b"), st,
+              obs.get("_rows").asInstanceOf[Long], counts)
+          }
+        if (m.deletes.isEmpty)
+          require(rows == m.totalRows,
+            s"compaction row mismatch: rewrote $rows rows, expected ${m.totalRows}")
+        // rebuild sidecar sketches per rewritten dir (clustered: one per bucket)
+        val blooms = dirs.flatMap(d => computeBlooms(spark, fs, root,
+          new Path(dataDir(root), d).toString, d, to.bloomCols,
+          rowsHint = rowsByDir.getOrElse(d, -1L)))
+        // every dir is rewritten: nothing of the parent's file state survives
+        Child(dirs, rows, stats, blooms, rewrittenAround(m, keep = Nil), m.totalRows,
+          edit = _.copy(addedRows = 0L, deletes = Nil))
       }
-    if (m.deletes.isEmpty)
-      require(rows == m.totalRows,
-        s"compaction row mismatch: rewrote $rows rows, expected ${m.totalRows}")
-    // rebuild sidecar sketches per rewritten dir (clustered: one per bucket)
-    val blooms = dirs.flatMap(d => computeBlooms(spark, fs, root,
-      new Path(dataDir(root), d).toString, d, m.bloomCols,
-      rowsHint = rowsByDir.getOrElse(d, -1L)))
-    commitManifest(fs, root, Manifest(next, Some(last), "replace", None,
-      added = dirs, live = dirs, addedRows = 0L, totalRows = rows,
-      batchCommits = m.batchCommits, schemaJson = m.schemaJson,
-      statsCols = scols, stats = stats,
-      bloomCols = m.bloomCols, blooms = blooms, deletes = Nil))
-    Commit(next, skippedExisting = false)
+    }.get
   }
 
   /** BINPACK (partial) compaction — Iceberg `rewrite_data_files`' small-file
@@ -2314,41 +2335,31 @@ object SnapshotTable {
       "compactSmall needs maxBytes > 0 and minInputDirs >= 2 " +
         "(rewriting a single dir into itself is churn, not compaction)")
     val (fs, root) = fsOf(spark, dir)
-    val ids = manifestIds(fs, root)
-    val last = ids.lastOption.getOrElse(sys.error(s"$dir has no committed snapshot"))
-    val m = manifest(spark, dir, last)
-    val small = m.live.filter(d =>
-      fs.getContentSummary(new Path(dataDir(root), d)).getLength < maxBytes)
-    if (small.size < minInputDirs) return Commit(last, skippedExisting = true)
-    val next = last + 1
-    val name = f"snap-$next%06d"
-    val dataPath = new Path(dataDir(root), name).toString
-    // merged view of the smalls: their applicable pending deletes
-    // materialize into the rewrite (and only theirs)
-    val base = readMerged(spark, root, m, small)
-    // rewritten count + stats bounds observed during the write job
-    val (rows, newStats, _) = writeMeasured(base.coalesce(targetFiles),
-      dataPath, name, m.statsCols)
-    val raw = readDirs(spark, root, small, m.schema).count()
-    val remaining = m.live.filterNot(small.contains)
-    val live = remaining :+ name
-    // a delete no remaining OLD dir can reach is dropped from the working
-    // set (the new dir's addSeq is newer than every delete seq); the file
-    // stays on disk for older snapshots' readers until expiry
-    val keepDeletes = m.deletes.filter(df => remaining.exists(d => df.seq > addSeq(d)))
-    val dropDirs = small.toSet
-    commitManifest(fs, root, Manifest(next, Some(last), "replace", None,
-      added = Seq(name), live = live, addedRows = 0L,
-      totalRows = m.totalRows - (raw - rows),
-      batchCommits = m.batchCommits, schemaJson = m.schemaJson,
-      statsCols = m.statsCols,
-      stats = m.stats.filterNot(s => dropDirs(s.dir)) ++ newStats,
-      bloomCols = m.bloomCols,
-      blooms = m.blooms.filterNot(b => dropDirs(b._1)) ++
-        computeBlooms(spark, fs, root, dataPath, name, m.bloomCols,
-          rowsHint = rows),
-      deletes = keepDeletes))
-    Commit(next, skippedExisting = false)
+    commitChild(spark, dir, "replace", needsHead = true) { to =>
+      val m = to.parent.get
+      val small = m.live.filter(d =>
+        fs.getContentSummary(new Path(dataDir(root), d)).getLength < maxBytes)
+      Option.when(small.size >= minInputDirs) {
+        val name = f"snap-${to.next}%06d"
+        val dataPath = new Path(dataDir(root), name).toString
+        // merged view of the smalls: their applicable pending deletes
+        // materialize into the rewrite (and only theirs)
+        val base = readMerged(spark, root, m, small)
+        // rewritten count + stats bounds observed during the write job
+        val (rows, newStats, _) = writeMeasured(base.coalesce(targetFiles),
+          dataPath, name, to.statsCols)
+        val raw = readDirs(spark, root, small, m.schema).count()
+        val remaining = m.live.filterNot(small.contains)
+        // a delete no remaining OLD dir can reach is dropped from the working
+        // set (the new dir's addSeq is newer than every delete seq); the file
+        // stays on disk for older snapshots' readers until expiry
+        val keepDeletes = m.deletes.filter(df => remaining.exists(d => df.seq > addSeq(d)))
+        Child(Seq(name), rows, newStats,
+          computeBlooms(spark, fs, root, dataPath, name, to.bloomCols, rowsHint = rows),
+          replaced = small, replacedRows = raw,
+          edit = _.copy(addedRows = 0L, deletes = keepDeletes))
+      }
+    }.get
   }
 
   /** Z-VALUE of `cols` (2+ numeric columns): each column is mapped to a
@@ -2428,12 +2439,8 @@ object SnapshotTable {
     * changelog reads across it fail loudly (not insert-only).
     */
   def delete(spark: SparkSession, dir: String, range: KeyRange,
-             exact: Option[org.apache.spark.sql.Column] = None): Commit = {
-    val last = latestId(spark, dir).getOrElse(sys.error(s"$dir has no committed snapshot"))
-    val m = manifest(spark, dir, last)
-    deleteWhere(spark, dir, exact.getOrElse(range.toColumn),
-      Some(planScan(m, range)._1))
-  }
+             exact: Option[org.apache.spark.sql.Column] = None): Commit =
+    deleteRows(spark, dir, exact.getOrElse(range.toColumn), m => Some(planScan(m, range)._1))
 
   /** Row-level DELETE by an ARBITRARY predicate, copy-on-write — the
     * [[delete]] generalization the SQL DML rule lowers `DELETE FROM ...
@@ -2447,53 +2454,68 @@ object SnapshotTable {
     */
   def deleteWhere(spark: SparkSession, dir: String,
                   cond: org.apache.spark.sql.Column,
-                  affectedHint: Option[Seq[String]] = None): Commit = {
+                  affectedHint: Option[Seq[String]] = None): Commit =
+    deleteRows(spark, dir, cond, _ => affectedHint)
+
+  /** [[delete]] / [[deleteWhere]] against the head `m`, with `hint(m)` the
+    * affected-dir superset. The predicate may be SHARPER than the hint's
+    * pruning hull (SQL strict bounds: DELETE WHERE k > 5 prunes on the hull
+    * k >= 5 but must remove only k > 5) — the caller guarantees every
+    * matching row is hint-contained, which pruning soundness requires.
+    */
+  private def deleteRows(spark: SparkSession, dir: String,
+                         cond: org.apache.spark.sql.Column,
+                         hint: Manifest => Option[Seq[String]]): Commit = {
     val (fs, root) = fsOf(spark, dir)
-    val last = latestId(spark, dir).getOrElse(sys.error(s"$dir has no committed snapshot"))
-    val m = manifest(spark, dir, last)
-    require(m.schema.nonEmpty,
-      s"row-level delete requires a schema-stamped table (legacy chain at $dir)")
-    val affected = affectedHint.getOrElse(m.live)
-    require(affected.forall(m.live.contains),
-      s"delete hint names dirs outside the live set of $dir@$last")
+    commitChild(spark, dir, "delete", needsHead = true) { to =>
+      val m = to.parent.get
+      require(m.schema.nonEmpty,
+        s"row-level delete requires a schema-stamped table (legacy chain at $dir)")
+      val affected = hint(m).getOrElse(m.live)
+      require(affected.forall(m.live.contains),
+        s"delete hint names dirs outside the live set of $dir@${m.snapshotId}")
+      // keep rows where the predicate is NOT TRUE (null-safe: null keys stay)
+      Option.when(affected.nonEmpty)(rewriteChild(spark, fs, root, to, affected)(
+        _.filter(!coalesce(cond, lit(false)))))
+    }.get
+  }
+
+  /** Every dir `m` records — its live dirs and the dirs its stats and
+    * sketches name (a delete file's key bounds among them) — except `keep`.
+    * A copy-on-write rewrite replaces exactly these: only the dirs it left
+    * untouched keep their entries.
+    */
+  private def rewrittenAround(m: Manifest, keep: Seq[String]): Seq[String] =
+    (m.live ++ m.stats.map(_.dir) ++ m.blooms.map(_._1)).distinct.filterNot(keep.toSet)
+
+  /** Child of a copy-on-write rewrite of the head's `affected` dirs into
+    * one dir `snap-N`: `rewrite` maps their MERGED view (pending MOR
+    * deletes applicable to them materialize, never resurrect) to the rows
+    * that stay. Count and stats bounds ride the write job. Untouched dirs
+    * carry over with their stats, Blooms and pending MOR deletes (their old
+    * addSeq; the rewritten dir's newer addSeq provably escapes them). An
+    * empty rewrite commits no dir unless nothing else stays live. A rewrite
+    * adds no rows.
+    */
+  private def rewriteChild(spark: SparkSession, fs: FileSystem, root: Path, to: ChildOf,
+                           affected: Seq[String])(rewrite: DataFrame => DataFrame): Child = {
+    val m = to.parent.get
     val untouched = m.live.filterNot(affected.toSet)
-    if (affected.isEmpty) return Commit(last, skippedExisting = true)
-    val next = last + 1
-    val name = f"snap-$next%06d"
+    val name = f"snap-${to.next}%06d"
     val dataPath = new Path(dataDir(root), name).toString
-    // keep rows where the predicate is NOT TRUE (null-safe: null keys stay);
-    // the rewrite reads the MERGED view so pending MOR deletes applicable to
-    // the affected dirs are materialized into the rewrite, never resurrected.
-    // The predicate may be SHARPER than the hint's pruning hull (SQL strict
-    // bounds: DELETE WHERE k > 5 prunes on the hull k >= 5 but must remove
-    // only k > 5) — the caller guarantees every matching row is
-    // hint-contained, which pruning soundness requires.
-    // count + stats bounds of the rewrite ride the write job (observed)
     val (keptRows, keptStats, _) = writeMeasured(
-      readMerged(spark, root, m, affected)
-        .filter(!coalesce(cond, lit(false))),
-      dataPath, name, m.statsCols)
-    val keepDir = keptRows > 0 || untouched.isEmpty
-    val live = untouched ++ (if (keepDir) Seq(name) else Nil)
+      rewrite(readMerged(spark, root, m, affected)), dataPath, name, to.statsCols)
     val untouchedRows =
       if (untouched.isEmpty) 0L
       else readDirs(spark, root, untouched, m.schema).count() // metadata-only
-    val carried = m.stats.filter(st => untouched.contains(st.dir))
-    val carriedBlooms = m.blooms.filter(b => untouched.contains(b._1))
-    commitManifest(fs, root, Manifest(next, Some(last), "delete", None,
-      added = if (keepDir) Seq(name) else Nil, live = live,
-      addedRows = 0L, totalRows = keptRows + untouchedRows,
-      batchCommits = m.batchCommits, schemaJson = m.schemaJson,
-      statsCols = m.statsCols,
-      stats = carried ++ (if (keptRows > 0) keptStats else Nil),
-      bloomCols = m.bloomCols,
-      blooms = carriedBlooms ++ (if (keptRows > 0)
-        computeBlooms(spark, fs, root, dataPath, name, m.bloomCols,
-          rowsHint = keptRows) else Nil),
-      // pending MOR deletes still apply to the untouched dirs (old addSeq);
-      // the rewritten dir's newer addSeq provably escapes them
-      deletes = m.deletes))
-    Commit(next, skippedExisting = false)
+    val kept = keptRows > 0
+    Child(added = if (kept || untouched.isEmpty) Seq(name) else Nil, rows = keptRows,
+      stats = if (kept) keptStats else Nil,
+      blooms = if (kept)
+        computeBlooms(spark, fs, root, dataPath, name, to.bloomCols, rowsHint = keptRows)
+      else Nil,
+      replaced = rewrittenAround(m, untouched), replacedRows = m.totalRows - untouchedRows,
+      edit = _.copy(addedRows = 0L))
   }
 
   /** Row-level UPDATE, copy-on-write: rows where `cond` IS TRUE get the
@@ -2515,51 +2537,23 @@ object SnapshotTable {
              assigns: Map[String, org.apache.spark.sql.Column],
              affectedHint: Option[Seq[String]] = None): Commit = {
     val (fs, root) = fsOf(spark, dir)
-    val last = latestId(spark, dir).getOrElse(sys.error(s"$dir has no committed snapshot"))
-    val m = manifest(spark, dir, last)
-    require(m.schema.nonEmpty,
-      s"row-level update requires a schema-stamped table (legacy chain at $dir)")
-    val schema = m.schema.get
-    require(assigns.nonEmpty, "update with no assignments is a no-op")
-    assigns.keys.foreach(c => require(schema.fieldNames.contains(c),
-      s"update assignment targets unknown column '$c'"))
-    val affected = affectedHint.getOrElse(m.live)
-    require(affected.forall(m.live.contains),
-      s"update hint names dirs outside the live set of $dir@$last")
-    if (affected.isEmpty) return Commit(last, skippedExisting = true)
-    val untouched = m.live.filterNot(affected.toSet)
-    val next = last + 1
-    val name = f"snap-$next%06d"
-    val dataPath = new Path(dataDir(root), name).toString
-    val hit = coalesce(cond, lit(false))
-    // count + stats bounds of the rewrite ride the write job (observed)
-    val (keptRows, keptStats, _) = writeMeasured(
-      readMerged(spark, root, m, affected)
-        .select(schema.fieldNames.map(f => assigns.get(f)
+    commitChild(spark, dir, "update", needsHead = true) { to =>
+      val m = to.parent.get
+      require(m.schema.nonEmpty,
+        s"row-level update requires a schema-stamped table (legacy chain at $dir)")
+      val schema = m.schema.get
+      require(assigns.nonEmpty, "update with no assignments is a no-op")
+      assigns.keys.foreach(c => require(schema.fieldNames.contains(c),
+        s"update assignment targets unknown column '$c'"))
+      val affected = affectedHint.getOrElse(m.live)
+      require(affected.forall(m.live.contains),
+        s"update hint names dirs outside the live set of $dir@${m.snapshotId}")
+      val hit = coalesce(cond, lit(false))
+      Option.when(affected.nonEmpty)(rewriteChild(spark, fs, root, to, affected)(
+        _.select(schema.fieldNames.map(f => assigns.get(f)
           .map(a => when(hit, a.cast(schema(f).dataType)).otherwise(col(f)).as(f))
-          .getOrElse(col(f))).toIndexedSeq: _*),
-      dataPath, name, m.statsCols)
-    val keepDir = keptRows > 0 || untouched.isEmpty
-    val live = untouched ++ (if (keepDir) Seq(name) else Nil)
-    val untouchedRows =
-      if (untouched.isEmpty) 0L
-      else readDirs(spark, root, untouched, m.schema).count() // metadata-only
-    commitManifest(fs, root, Manifest(next, Some(last), "update", None,
-      added = if (keepDir) Seq(name) else Nil, live = live,
-      addedRows = 0L, totalRows = keptRows + untouchedRows,
-      batchCommits = m.batchCommits, schemaJson = m.schemaJson,
-      statsCols = m.statsCols,
-      stats = m.stats.filter(st => untouched.contains(st.dir)) ++
-        (if (keptRows > 0) keptStats else Nil),
-      bloomCols = m.bloomCols,
-      blooms = m.blooms.filter(b => untouched.contains(b._1)) ++
-        (if (keptRows > 0)
-          computeBlooms(spark, fs, root, dataPath, name, m.bloomCols,
-            rowsHint = keptRows) else Nil),
-      // pending MOR deletes still apply to the untouched dirs (old addSeq);
-      // the rewritten dir's newer addSeq provably escapes them
-      deletes = m.deletes))
-    Commit(next, skippedExisting = false)
+          .getOrElse(col(f))).toIndexedSeq: _*)))
+    }.get
   }
 
   /** Row-level DELETE, merge-on-read (Iceberg v2 equality deletes): the
@@ -2579,40 +2573,30 @@ object SnapshotTable {
   def deleteKeys(spark: SparkSession, dir: String, keys: DataFrame, key: String,
                  batchId: Option[String] = None): Commit = {
     val (fs, root) = fsOf(spark, dir)
-    val ids = manifestIds(fs, root)
-    val last = ids.lastOption.getOrElse(sys.error(s"$dir has no committed snapshot"))
-    val m = manifest(spark, dir, last)
-    require(m.schema.nonEmpty,
-      s"merge-on-read delete requires a schema-stamped table (legacy chain at $dir)")
-    require(key.matches("[A-Za-z0-9_.]+"),
-      s"delete key column name '$key' must match [A-Za-z0-9_.]+")
-    val schema = m.schema.get
-    require(schema.fieldNames.contains(key), s"table at $dir has no column '$key'")
-    val ledger = resolveLedger(fs, manifestDir(root), ids, Some(m), batchId)
-    batchId.flatMap(b => ledger.find(_._1 == b)) match {
-      case Some((_, snap)) => return Commit(snap, skippedExisting = true)
-      case None =>
-    }
-    val next = last + 1
-    val name = f"snap-$next%06d-del"
-    val delPath = new Path(dataDir(root), name).toString
-    // key bounds of the delete file ride in the commit's manifest stats
-    // (keyed by the delete dir's name): changelogCdc prunes which data dirs
-    // it scans to recover the removed rows. Unsupported key domains just
-    // skip the entry — absent stats never prune. Count + bounds are
-    // observed during the write (one job for all three).
-    val delCols =
-      if (scala.util.Try(statDomain(schema(key).dataType)).isSuccess) Seq(key) else Nil
-    val (n, delStats, _) = writeMeasured(
-      keys.select(col(key).cast(schema(key).dataType)).na.drop().distinct(),
-      delPath, name, delCols)
-    if (n == 0L) { fs.delete(new Path(delPath), true); return Commit(last, skippedExisting = true) }
-    commitManifest(fs, root, m.copy(snapshotId = next, parentId = Some(last),
-      operation = "mor-delete", batchId = batchId, added = Nil, addedRows = 0L,
-      batchCommits = ledger ++ batchId.map(_ -> next),
-      stats = m.stats ++ delStats,
-      deletes = m.deletes :+ DeleteFile(name, key, next)))
-    Commit(next, skippedExisting = false)
+    commitChild(spark, dir, "mor-delete", batchId, needsHead = true) { to =>
+      val m = to.parent.get
+      require(m.schema.nonEmpty,
+        s"merge-on-read delete requires a schema-stamped table (legacy chain at $dir)")
+      require(key.matches("[A-Za-z0-9_.]+"),
+        s"delete key column name '$key' must match [A-Za-z0-9_.]+")
+      val schema = m.schema.get
+      require(schema.fieldNames.contains(key), s"table at $dir has no column '$key'")
+      val name = f"snap-${to.next}%06d-del"
+      val delPath = new Path(dataDir(root), name).toString
+      // key bounds of the delete file ride in the commit's manifest stats
+      // (keyed by the delete dir's name): changelogCdc prunes which data dirs
+      // it scans to recover the removed rows. Unsupported key domains just
+      // skip the entry — absent stats never prune. Count + bounds are
+      // observed during the write (one job for all three).
+      val delCols =
+        if (scala.util.Try(statDomain(schema(key).dataType)).isSuccess) Seq(key) else Nil
+      val (n, delStats, _) = writeMeasured(
+        keys.select(col(key).cast(schema(key).dataType)).na.drop().distinct(),
+        delPath, name, delCols)
+      if (n == 0L) fs.delete(new Path(delPath), true)
+      Option.when(n > 0L)(Child(stats = delStats,
+        edit = c => c.copy(deletes = c.deletes :+ DeleteFile(name, key, to.next))))
+    }.get
   }
 
   /** Row-level MERGE (upsert), merge-on-read: ONE commit writes the source
@@ -2645,28 +2629,30 @@ object SnapshotTable {
     */
   def applyChanges(spark: SparkSession, dir: String, ups: DataFrame,
                    extraDeleteKeys: Option[DataFrame], key: String,
-                   batchId: Option[String] = None): Commit = {
+                   batchId: Option[String] = None): Commit =
+    commitChild(spark, dir, "mor-upsert", batchId, needsHead = true) { to =>
+      changesChild(spark, dir, to, ups, extraDeleteKeys, key)
+    }.get
+
+  /** Child of [[applyChanges]] on the head: the upserted rows as a new data
+    * dir plus one delete file of their keys ∪ `extraDeleteKeys`. The
+    * upserted rows evolve the schema. None when both sides are empty.
+    */
+  private def changesChild(spark: SparkSession, dir: String, to: ChildOf, ups: DataFrame,
+                           extraDeleteKeys: Option[DataFrame], key: String): Option[Child] = {
     val (fs, root) = fsOf(spark, dir)
-    val ids = manifestIds(fs, root)
-    val last = ids.lastOption.getOrElse(sys.error(s"$dir has no committed snapshot"))
-    val m = manifest(spark, dir, last)
+    val m = to.parent.get
     require(m.schema.nonEmpty,
       s"merge-on-read upsert requires a schema-stamped table (legacy chain at $dir)")
     require(key.matches("[A-Za-z0-9_.]+"),
       s"upsert key column name '$key' must match [A-Za-z0-9_.]+")
-    val ledger = resolveLedger(fs, manifestDir(root), ids, Some(m), batchId)
-    batchId.flatMap(b => ledger.find(_._1 == b)) match {
-      case Some((_, snap)) => return Commit(snap, skippedExisting = true)
-      case None =>
-    }
-    val next = last + 1
-    val name = f"snap-$next%06d"
+    val name = f"snap-${to.next}%06d"
     val dataPath = new Path(dataDir(root), name).toString
     // ONE pass writes the delta and observes: row count, non-null key count
     // (null validation) and the table's stats bounds for the new dir —
     // the former write + validation agg + stats agg trio.
     val (srcRows, upsStats, upsObs) = writeMeasured(ups, dataPath, name,
-      m.statsCols, extra = Seq(count(col(key)).as("_nkey")))
+      to.statsCols, extra = Seq(count(col(key)).as("_nkey")))
     if (srcRows > 0L)
       require(upsObs("_nkey").asInstanceOf[Long] == srcRows,
         s"upsert source has null '$key' keys")
@@ -2695,26 +2681,17 @@ object SnapshotTable {
       require(distinctKeys == srcRows,
         s"upsert source has duplicate '$key' keys ($distinctKeys distinct of $srcRows)")
     }
-    if (srcRows == 0L && nDel == 0L) {
-      fs.delete(new Path(dataPath), true); fs.delete(new Path(delPath), true)
-      return Commit(last, skippedExisting = true)
-    }
-    if (srcRows == 0L) fs.delete(new Path(dataPath), true)
-    val op = if (srcRows > 0L) "mor-upsert" else "mor-delete"
-    commitManifest(fs, root, Manifest(next, Some(last), op, batchId,
-      added = if (srcRows > 0L) Seq(name) else Nil,
-      live = if (srcRows > 0L) m.live :+ name else m.live,
-      addedRows = srcRows, totalRows = m.totalRows + srcRows,
-      batchCommits = ledger ++ batchId.map(_ -> next),
-      schemaJson = Some(schemaNow.json),
-      statsCols = m.statsCols,
-      stats = m.stats ++ (if (srcRows > 0L) upsStats else Nil) ++ delStats,
-      bloomCols = m.bloomCols,
-      blooms = m.blooms ++ (if (srcRows > 0L)
-        computeBlooms(spark, fs, root, dataPath, name, m.bloomCols,
-          rowsHint = srcRows) else Nil),
-      deletes = m.deletes :+ DeleteFile(delName, key, next)))
-    Commit(next, skippedExisting = false)
+    val upserted = srcRows > 0L
+    if (!upserted) fs.delete(new Path(dataPath), true)
+    if (!upserted && nDel == 0L) { fs.delete(new Path(delPath), true); None }
+    else Some(Child(if (upserted) Seq(name) else Nil, srcRows,
+      (if (upserted) upsStats else Nil) ++ delStats,
+      if (upserted)
+        computeBlooms(spark, fs, root, dataPath, name, to.bloomCols, rowsHint = srcRows)
+      else Nil,
+      edit = c => c.copy(operation = if (upserted) "mor-upsert" else "mor-delete",
+        schemaJson = Some(schemaNow.json),
+        deletes = c.deletes :+ DeleteFile(delName, key, to.next))))
   }
 
   /** Per-clause row counts of a [[merge]], plus its commit. */
@@ -2760,107 +2737,102 @@ object SnapshotTable {
             insertIf: Option[org.apache.spark.sql.Column] = None,
             insertAssign: Option[Map[String, org.apache.spark.sql.Column]] = None,
             batchId: Option[String] = None): MergeStats = {
-    val (fs, root) = fsOf(spark, dir)
-    val ids = manifestIds(fs, root)
-    val last = ids.lastOption.getOrElse(sys.error(s"$dir has no committed snapshot"))
-    val m = manifest(spark, dir, last)
-    require(m.schema.nonEmpty,
-      s"merge requires a schema-stamped table (legacy chain at $dir)")
-    val schema = m.schema.get
-    require(schema.fieldNames.contains(key), s"table at $dir has no column '$key'")
-    require(update.nonEmpty || deleteIf.nonEmpty || insert,
-      "merge with no clauses (update=None, deleteIf=None, insert=false) is a no-op")
-    update.foreach(_.keys.foreach(c => require(schema.fieldNames.contains(c),
-      s"merge update assignment targets unknown column '$c'")))
-    require(source.columns.contains(key), s"merge source has no key column '$key'")
-    // exactly-once precheck BEFORE any join work (applyChanges re-checks)
-    val ledger = resolveLedger(fs, manifestDir(root), ids, Some(m), batchId)
-    batchId.flatMap(b => ledger.find(_._1 == b)) match {
-      case Some((_, snap)) =>
-        return MergeStats(Commit(snap, skippedExisting = true), 0L, 0L, 0L)
-      case None =>
-    }
-    val src = source.persist()
-    try {
-      val keyDt = schema(key).dataType
-      // ONE agg: emptiness check + key bounds (prune: every source key
-      // lies in [min,max], so every table row a clause can touch provably
-      // lives in a bounds-kept dir)
-      val b = src.agg(count(lit(1)),
-        min(col(key).cast(keyDt)), max(col(key).cast(keyDt))).collect()(0)
-      if (b.getLong(0) == 0L)
-        return MergeStats(Commit(last, skippedExisting = true), 0L, 0L, 0L)
-      val (kept, _) = planScan(m, KeyRange(key, Option(b.get(1)), Option(b.get(2))))
-      val target =
-        if (kept.isEmpty) readMerged(spark, root, m, m.live).limit(0)
-        else readMerged(spark, root, m, kept)
-      val tS = target.select(struct(target.columns.map(col): _*).as("tgt"))
-      val sS = src.select(struct(src.columns.map(col): _*).as("src"))
-      val matched = tS.join(broadcast(sS),
-        col("tgt")(key) === col("src")(key).cast(keyDt), "inner").persist()
+    val (_, root) = fsOf(spark, dir)
+    // (updated, deleted, inserted) rows of the committed merge
+    var counts = (0L, 0L, 0L)
+    // the builder's replay skip runs BEFORE any join work
+    val commit = commitChild(spark, dir, "mor-upsert", batchId, needsHead = true) { to =>
+      val m = to.parent.get
+      require(m.schema.nonEmpty,
+        s"merge requires a schema-stamped table (legacy chain at $dir)")
+      val schema = m.schema.get
+      require(schema.fieldNames.contains(key), s"table at $dir has no column '$key'")
+      require(update.nonEmpty || deleteIf.nonEmpty || insert,
+        "merge with no clauses (update=None, deleteIf=None, insert=false) is a no-op")
+      update.foreach(_.keys.foreach(c => require(schema.fieldNames.contains(c),
+        s"merge update assignment targets unknown column '$c'")))
+      require(source.columns.contains(key), s"merge source has no key column '$key'")
+      val src = source.persist()
       try {
-        val delCond = coalesce(deleteIf.getOrElse(lit(false)), lit(false))
-        val updCond = update.map(_ =>
-          coalesce(updateIf.getOrElse(lit(true)), lit(false))).getOrElse(lit(false))
-        val deletedKeys = matched.filter(delCond)
-          .select(col("tgt")(key).as(key)).distinct()
-        val updBase = matched.filter(!delCond && updCond)
-        val updatedRows = update match {
-          case Some(as) if as.isEmpty => // whole-row replace by source
-            updBase.select(src.columns.map(f => col("src")(f).as(f)): _*)
-          case Some(as) =>
-            updBase.select(schema.fieldNames.map(f =>
-              as.getOrElse(f, col("tgt")(f)).as(f)): _*)
-          case None =>
-            updBase.limit(0).select(schema.fieldNames.map(f =>
-              col("tgt")(f).as(f)): _*)
+        val keyDt = schema(key).dataType
+        // ONE agg: emptiness check + key bounds (prune: every source key
+        // lies in [min,max], so every table row a clause can touch provably
+        // lives in a bounds-kept dir)
+        val b = src.agg(count(lit(1)),
+          min(col(key).cast(keyDt)), max(col(key).cast(keyDt))).collect()(0)
+        if (b.getLong(0) == 0L) None else {
+          val (kept, _) = planScan(m, KeyRange(key, Option(b.get(1)), Option(b.get(2))))
+          val target =
+            if (kept.isEmpty) readMerged(spark, root, m, m.live).limit(0)
+            else readMerged(spark, root, m, kept)
+          val tS = target.select(struct(target.columns.map(col): _*).as("tgt"))
+          val sS = src.select(struct(src.columns.map(col): _*).as("src"))
+          val matched = tS.join(broadcast(sS),
+            col("tgt")(key) === col("src")(key).cast(keyDt), "inner").persist()
+          try {
+            val delCond = coalesce(deleteIf.getOrElse(lit(false)), lit(false))
+            val updCond = update.map(_ =>
+              coalesce(updateIf.getOrElse(lit(true)), lit(false))).getOrElse(lit(false))
+            val deletedKeys = matched.filter(delCond)
+              .select(col("tgt")(key).as(key)).distinct()
+            val updBase = matched.filter(!delCond && updCond)
+            val updatedRows = update match {
+              case Some(as) if as.isEmpty => // whole-row replace by source
+                updBase.select(src.columns.map(f => col("src")(f).as(f)): _*)
+              case Some(as) =>
+                updBase.select(schema.fieldNames.map(f =>
+                  as.getOrElse(f, col("tgt")(f)).as(f)): _*)
+              case None =>
+                updBase.limit(0).select(schema.fieldNames.map(f =>
+                  col("tgt")(f).as(f)): _*)
+            }
+            // not-matched = source minus the matched key set (delta-sized →
+            // broadcast); sound because pruning never drops a dir that could
+            // hold a source key
+            val matchedKeys = matched.select(col("src")(key).as(key)).distinct()
+            val insBase =
+              if (!insert) sS.limit(0)
+              else {
+                val anti = src.select(struct(src.columns.map(col): _*).as("src"),
+                    col("src")(key).as("_mk"))
+                  .join(broadcast(matchedKeys.withColumnRenamed(key, "_mk")),
+                    Seq("_mk"), "left_anti").select(col("src"))
+                insertIf.map(c => anti.filter(coalesce(c, lit(false)))).getOrElse(anti)
+              }
+            val insRows = (insertAssign, update) match {
+              case (Some(as), _) =>
+                // SQL INSERT (cols) VALUES (exprs): assignment expressions see
+                // the source row as `src`; unassigned table columns insert null
+                as.keys.foreach(c => require(schema.fieldNames.contains(c),
+                  s"merge insert assignment targets unknown column '$c'"))
+                insBase.select(schema.fields.map(f =>
+                  as.get(f.name).map(_.cast(f.dataType))
+                    .getOrElse(lit(null).cast(f.dataType)).as(f.name)).toIndexedSeq: _*)
+              case (None, Some(as)) if as.isEmpty =>
+                insBase.select(src.columns.map(f => col("src")(f).as(f)): _*)
+              case _ =>
+                // align to the TABLE schema: absent source columns insert null
+                val have = src.columns.toSet
+                insBase.select(schema.fields.map(f =>
+                  (if (have(f.name)) col("src")(f.name).cast(f.dataType)
+                   else lit(null).cast(f.dataType)).as(f.name)).toIndexedSeq: _*)
+            }
+            val ups = updatedRows.unionByName(insRows).persist()
+            try {
+              // nUpd derives from the commit: its added rows ARE the ups row
+              // count (observed during its write), so only the insert and
+              // delete clauses need their own (persisted-scan) counts
+              val nIns = insRows.count()
+              val nDel = deletedKeys.count()
+              val c = changesChild(spark, dir, to, ups, Some(deletedKeys), key)
+              c.foreach(c => counts = (c.rows - nIns, nDel, nIns))
+              c
+            } finally ups.unpersist(blocking = false)
+          } finally matched.unpersist(blocking = false)
         }
-        // not-matched = source minus the matched key set (delta-sized →
-        // broadcast); sound because pruning never drops a dir that could
-        // hold a source key
-        val matchedKeys = matched.select(col("src")(key).as(key)).distinct()
-        val insBase =
-          if (!insert) sS.limit(0)
-          else {
-            val anti = src.select(struct(src.columns.map(col): _*).as("src"),
-                col("src")(key).as("_mk"))
-              .join(broadcast(matchedKeys.withColumnRenamed(key, "_mk")),
-                Seq("_mk"), "left_anti").select(col("src"))
-            insertIf.map(c => anti.filter(coalesce(c, lit(false)))).getOrElse(anti)
-          }
-        val insRows = (insertAssign, update) match {
-          case (Some(as), _) =>
-            // SQL INSERT (cols) VALUES (exprs): assignment expressions see
-            // the source row as `src`; unassigned table columns insert null
-            as.keys.foreach(c => require(schema.fieldNames.contains(c),
-              s"merge insert assignment targets unknown column '$c'"))
-            insBase.select(schema.fields.map(f =>
-              as.get(f.name).map(_.cast(f.dataType))
-                .getOrElse(lit(null).cast(f.dataType)).as(f.name)).toIndexedSeq: _*)
-          case (None, Some(as)) if as.isEmpty =>
-            insBase.select(src.columns.map(f => col("src")(f).as(f)): _*)
-          case _ =>
-            // align to the TABLE schema: absent source columns insert null
-            val have = src.columns.toSet
-            insBase.select(schema.fields.map(f =>
-              (if (have(f.name)) col("src")(f.name).cast(f.dataType)
-               else lit(null).cast(f.dataType)).as(f.name)).toIndexedSeq: _*)
-        }
-        val ups = updatedRows.unionByName(insRows).persist()
-        try {
-          // nUpd derives from the commit: the manifest's addedRows IS the
-          // ups row count (observed during its write), so only the insert
-          // and delete clauses need their own (persisted-scan) counts
-          val nIns = insRows.count()
-          val nDel = deletedKeys.count()
-          val commit = applyChanges(spark, dir, ups, Some(deletedKeys), key, batchId)
-          val nUpd =
-            if (commit.skippedExisting) 0L
-            else manifest(spark, dir, commit.snapshotId).addedRows - nIns
-          MergeStats(commit, nUpd, nDel, nIns)
-        } finally ups.unpersist(blocking = false)
-      } finally matched.unpersist(blocking = false)
-    } finally src.unpersist(blocking = false)
+      } finally src.unpersist(blocking = false)
+    }.get
+    MergeStats(commit, counts._1, counts._2, counts._3)
   }
 
   /** Row-level MERGE (upsert), copy-on-write: every table row whose `key`
@@ -2875,66 +2847,60 @@ object SnapshotTable {
     */
   def upsert(spark: SparkSession, dir: String, source: DataFrame, key: String): Commit = {
     val (fs, root) = fsOf(spark, dir)
-    val last = latestId(spark, dir).getOrElse(sys.error(s"$dir has no committed snapshot"))
-    val m = manifest(spark, dir, last)
-    require(m.schema.nonEmpty,
-      s"upsert requires a schema-stamped table (legacy chain at $dir)")
-    val next = last + 1
-    val name = f"snap-$next%06d"
-    val srcPath = new Path(dataDir(root), s"$name-src").toString
-    // materialize the delta first: ONE scan of the source observes the row
-    // count, the null-key check, the key bounds AND the table's stats
-    // bounds for the new dir (the former separate validation agg + stats
-    // agg). Only the exact-distinct uniqueness check still needs its own
-    // narrow agg (distinct aggregates cannot ride observed metrics), over
-    // the tiny just-written delta.
-    val (srcRows, srcStats, srcObs) = writeMeasured(source, srcPath,
-      s"$name-src", m.statsCols,
-      extra = Seq(count(col(key)).as("_nkey"),
-        min(col(key)).as("_klo"), max(col(key)).as("_khi")))
-    if (srcRows == 0L) { fs.delete(new Path(srcPath), true); return Commit(last, skippedExisting = true) }
-    require(srcObs("_nkey").asInstanceOf[Long] == srcRows,
-      s"upsert source has null '$key' keys")
-    // explicit schema: an empty source writes zero part files to infer from
-    val src = spark.read.schema(source.schema).parquet(srcPath)
-    val distinctKeys = src.agg(count_distinct(col(key))).collect()(0).getLong(0)
-    require(distinctKeys == srcRows,
-      s"upsert source has duplicate '$key' keys ($distinctKeys distinct of $srcRows)")
-    val range = KeyRange(key, Option(srcObs("_klo")), Option(srcObs("_khi")))
-    val (affected, untouched) = planScan(m, range)
-    val rwPath = new Path(dataDir(root), s"$name-rw").toString
-    val (rwRows, rwStats) = if (affected.isEmpty) (0L, Nil) else {
-      // merged view: pending MOR deletes on the affected dirs materialize
-      // into the rewrite instead of resurrecting
-      val (n, st, _) = writeMeasured(
-        readMerged(spark, root, m, affected)
-          .join(src.select(col(key)), Seq(key), "left_anti"),
-        rwPath, s"$name-rw", m.statsCols)
-      (n, st)
-    }
-    val schemaNow = mergeSchemas(m.schema.get, src.schema)
-    val added = (if (rwRows > 0) Seq(s"$name-rw") else Nil) :+ s"$name-src"
-    val live = untouched ++ added
-    val untouchedRows =
-      if (untouched.isEmpty) 0L
-      else readDirs(spark, root, untouched, m.schema).count() // metadata-only
-    val carried = m.stats.filter(st => untouched.contains(st.dir))
-    val newStats = (if (rwRows > 0) rwStats else Nil) ++ srcStats
-    val newBlooms =
-      (if (rwRows > 0) computeBlooms(spark, fs, root, rwPath, s"$name-rw",
-        m.bloomCols, rowsHint = rwRows) else Nil) ++
-        computeBlooms(spark, fs, root, srcPath, s"$name-src", m.bloomCols,
-          rowsHint = srcRows)
-    if (rwRows == 0 && affected.nonEmpty) fs.delete(new Path(rwPath), true)
-    commitManifest(fs, root, Manifest(next, Some(last), "overwrite", None,
-      added = added, live = live,
-      addedRows = srcRows, totalRows = rwRows + untouchedRows + srcRows,
-      batchCommits = m.batchCommits, schemaJson = Some(schemaNow.json),
-      statsCols = m.statsCols, stats = carried ++ newStats,
-      bloomCols = m.bloomCols,
-      blooms = m.blooms.filter(b => untouched.contains(b._1)) ++ newBlooms,
-      deletes = m.deletes)) // still reach the untouched dirs' old addSeq
-    Commit(next, skippedExisting = false)
+    commitChild(spark, dir, "overwrite", schema = Some(source.schema), needsHead = true) { to =>
+      val m = to.parent.get
+      require(m.schema.nonEmpty,
+        s"upsert requires a schema-stamped table (legacy chain at $dir)")
+      val name = f"snap-${to.next}%06d"
+      val srcPath = new Path(dataDir(root), s"$name-src").toString
+      // materialize the delta first: ONE scan of the source observes the row
+      // count, the null-key check, the key bounds AND the table's stats
+      // bounds for the new dir (the former separate validation agg + stats
+      // agg). Only the exact-distinct uniqueness check still needs its own
+      // narrow agg (distinct aggregates cannot ride observed metrics), over
+      // the tiny just-written delta.
+      val (srcRows, srcStats, srcObs) = writeMeasured(source, srcPath,
+        s"$name-src", to.statsCols,
+        extra = Seq(count(col(key)).as("_nkey"),
+          min(col(key)).as("_klo"), max(col(key)).as("_khi")))
+      if (srcRows == 0L) fs.delete(new Path(srcPath), true)
+      Option.when(srcRows > 0L) {
+        require(srcObs("_nkey").asInstanceOf[Long] == srcRows,
+          s"upsert source has null '$key' keys")
+        // explicit schema: an empty source writes zero part files to infer from
+        val src = spark.read.schema(source.schema).parquet(srcPath)
+        val distinctKeys = src.agg(count_distinct(col(key))).collect()(0).getLong(0)
+        require(distinctKeys == srcRows,
+          s"upsert source has duplicate '$key' keys ($distinctKeys distinct of $srcRows)")
+        val range = KeyRange(key, Option(srcObs("_klo")), Option(srcObs("_khi")))
+        val (affected, untouched) = planScan(m, range)
+        val rwPath = new Path(dataDir(root), s"$name-rw").toString
+        val (rwRows, rwStats) = if (affected.isEmpty) (0L, Nil) else {
+          // merged view: pending MOR deletes on the affected dirs materialize
+          // into the rewrite instead of resurrecting
+          val (n, st, _) = writeMeasured(
+            readMerged(spark, root, m, affected)
+              .join(src.select(col(key)), Seq(key), "left_anti"),
+            rwPath, s"$name-rw", to.statsCols)
+          (n, st)
+        }
+        val untouchedRows =
+          if (untouched.isEmpty) 0L
+          else readDirs(spark, root, untouched, m.schema).count() // metadata-only
+        val rw = rwRows > 0
+        val blooms =
+          (if (rw) computeBlooms(spark, fs, root, rwPath, s"$name-rw",
+            to.bloomCols, rowsHint = rwRows) else Nil) ++
+            computeBlooms(spark, fs, root, srcPath, s"$name-src", to.bloomCols,
+              rowsHint = srcRows)
+        if (!rw && affected.nonEmpty) fs.delete(new Path(rwPath), true)
+        // pending MOR deletes still reach the untouched dirs' old addSeq
+        Child((if (rw) Seq(s"$name-rw") else Nil) :+ s"$name-src", rwRows + srcRows,
+          (if (rw) rwStats else Nil) ++ srcStats, blooms,
+          rewrittenAround(m, untouched), m.totalRows - untouchedRows,
+          edit = _.copy(addedRows = srcRows))
+      }
+    }.get
   }
 
   /** Expire all but the last `keepLast` snapshots: their manifest files are
@@ -3021,7 +2987,8 @@ object SnapshotTable {
     * so the fan-out costs one input scan (same stance as Route.run).
     */
   def appendSinks(spark: SparkSession, trunk: DataFrame, sinks: Seq[Route.SinkSpec],
-                  tableRoot: String, batchId: String): Map[String, Commit] =
+                  tableRoot: String, batchId: String): Map[String, Commit] = {
+    Route.requirePlainSinks(sinks, "SnapshotTable.appendSinks")
     graft.plans.CacheScope.scoped {
       // persist is eager (one populate job), so sink writes share the cache
       val flagged = graft.plans.CacheScope.persist(Route.withSinkFlags(trunk, sinks))
@@ -3030,4 +2997,5 @@ object SnapshotTable {
           Some(batchId))
       }.toMap
     }
+  }
 }

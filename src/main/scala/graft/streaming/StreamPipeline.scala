@@ -34,6 +34,7 @@ object StreamPipeline {
           sinks: Seq[Route.SinkSpec], outDir: String,
           checkpoint: String, trigger: Trigger = Trigger.AvailableNow(),
           perBatch: DataFrame => Unit = _ => ()): StreamingQuery = {
+    Route.requirePlainSinks(sinks, "StreamPipeline.run")
     source.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)

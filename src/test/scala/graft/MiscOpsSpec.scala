@@ -107,6 +107,20 @@ class MiscOpsSpec extends SparkSpec {
     }
   }
 
+  test("run manifest and nodeStats stay valid JSON for a sink name with a control character") {
+    import graft.conditions.Eq
+    val out = java.nio.file.Files.createTempDirectory("graft_json").toString
+    val pipe = StandardPipeline.fromDir(spark, sfDir)
+    val name = "tab\tsink"
+    Route.runWithMetrics(spark, pipe.trunk, Seq(Route.SinkSpec(name, Eq("severity", "ERROR"))), out)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val manifest = mapper.readTree(Route.latestManifest(spark, out).get)
+    assert(manifest.get("counts").has(name) && manifest.get("sinks").has(name))
+    val stats = mapper.readTree(Route.nodeStats(spark, out))
+    assert(stats.at("/pipelines/main/plugins/outputs").has(name))
+    assert(stats.at("/pipelines/main/flow").has(s"events_out_$name"))
+  }
+
   test("a fully resumed rerun reaps crashed combined-write staging dirs") {
     val out = java.nio.file.Files.createTempDirectory("graft_reap").toString
     val pipe = StandardPipeline.fromDir(spark, sfDir)

@@ -369,6 +369,20 @@ class SnapshotSpec extends SparkSpec {
     assert(ST.latestId(spark, s"$root/errs").contains(1L))
   }
 
+  test("appendSinks rejects sink fields its plain-parquet write would drop") {
+    import spark.implicits._
+    val root = tmp()
+    val trunk = Seq((1L, "ERROR"), (2L, "WARN")).toDF("doc_id", "severity")
+    val plain = Route.SinkSpec("errs", graft.conditions.Eq("severity", "ERROR"))
+    val daily = plain.copy(name = "daily", indexTemplate = Some("logstash-%{+yyyy.MM.dd}"))
+    val e = intercept[IllegalArgumentException](
+      ST.appendSinks(spark, trunk, Seq(plain, daily), root, "b1"))
+    assert(e.getMessage.contains("'daily'") && e.getMessage.contains("indexTemplate"),
+      e.getMessage)
+    // nothing was committed: the check runs before any sink write
+    assert(ST.latestId(spark, s"$root/errs").isEmpty)
+  }
+
   // ---- SnapshotPipe.runSinks: incremental multi-sink routed pipe ----
 
   private def sevBatch(ids: Range) = {

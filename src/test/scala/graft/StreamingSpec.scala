@@ -220,4 +220,15 @@ class StreamingSpec extends SparkSpec {
         ((if (r.isNullAt(1)) None else Some(r.getLong(1)), r.getBoolean(2)))).toMap
     assert(batch == r2, s"batch=$batch stream=$r2")
   }
+
+  test("StreamPipeline.run rejects sink fields its plain-parquet write would drop") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_reject").toString
+    val source = spark.readStream.format("rate").load()
+    val sinks = StandardPipeline.sinks.toIndexedSeq :+
+      graft.operators.Route.SinkSpec("lines", graft.conditions.Eq("severity", "ERROR"),
+        codec = Some("json_lines"))
+    val e = intercept[IllegalArgumentException](
+      StreamPipeline.run(spark, source, identity, sinks, s"$tmp/out", s"$tmp/chk"))
+    assert(e.getMessage.contains("'lines'") && e.getMessage.contains("codec"), e.getMessage)
+  }
 }
