@@ -1767,42 +1767,190 @@ object LsclRun {
 
   // ---------------- input lowering + end-to-end runner ----------------
 
-  private def codecPlugin(p: Plugin): Option[Plugin] =
-    p.attr("codec") match { case Some(VPlugin(c)) => Some(c); case _ => None }
-
   /** The logstash integration and the serverless forwarder default
     * `ssl_enabled` to TRUE in the reference; no TLS transport exists here,
     * so a config that expects TLS (explicitly or by omission) must fail
     * loudly rather than silently run plaintext. Credentials are accepted
     * but not enforced (the local listener has no auth check).
     */
-  /** Listener inputs' port: explicit, else the plugin's reference default
-    * (logstash 9800, elastic_serverless_forwarder 8080) — ONE mapping for
-    * the batch and streaming paths so they cannot drift.
-    */
-  private def listenerPort(p: Plugin): Int =
-    strAttr(p, "port").getOrElse(p.name match {
-      case "logstash" => "9800"
-      case "elastic_serverless_forwarder" => "8080"
-      case "gelf" => "12201"
-      case n => throw new IllegalArgumentException(s"$n input: port required")
-    }).toInt
-
   private def requirePlaintext(p: Plugin, half: String): Unit =
     require(strAttr(p, "ssl_enabled").contains("false"),
       s"${p.name} $half: the reference defaults ssl_enabled => true and no " +
         "TLS transport exists here — set ssl_enabled => false explicitly " +
         "to run plaintext")
 
-  /** Like [[codecPlugin]], but a bareword `codec => name` counts as an
-    * attributeless plugin — name-dispatched codec sites must see both forms.
+  /** Listener inputs' port: explicit, else the plugin's reference default
+    * (logstash 9800, elastic_serverless_forwarder 8080, gelf 12201,
+    * graphite 2003). Read only by [[transport]], so batch and stream share it.
     */
-  private def codecPluginOrName(p: Plugin): Option[Plugin] =
-    p.attr("codec") match {
+  private def listenerPort(p: Plugin): Int =
+    strAttr(p, "port").getOrElse(p.name match {
+      case "logstash" => "9800"
+      case "elastic_serverless_forwarder" => "8080"
+      case "gelf" => "12201"
+      case "graphite" => "2003"
+      case n => throw new IllegalArgumentException(s"$n input: port required")
+    }).toInt
+
+  /** The one codec resolver: the codec an input decodes with. Named inputs
+    * that are a transport plus a codec imply theirs (gelf, snmptrap and
+    * ganglia are udp; graphite is tcp; logstash and
+    * elastic_serverless_forwarder are http carrying ndjson events, with the
+    * input's own `schema`); every other input takes its `codec`, bareword
+    * (`codec => cef`) and block (`codec => cef { }`) alike.
+    */
+  private def codecOf(p: Plugin): Option[Plugin] = p.name match {
+    case "gelf" => Some(Plugin("gelf", p.attrs))
+    case "logstash" | "elastic_serverless_forwarder" => Some(Plugin("json", p.attrs))
+    case "snmptrap" | "ganglia" | "graphite" => Some(Plugin(p.name, Nil))
+    case _ => p.attr("codec") match {
       case Some(VPlugin(c)) => Some(c)
       case Some(VString(c)) => Some(Plugin(c, Nil))
       case _ => None
     }
+  }
+
+  /** One codec's decode over a line-framed source frame (`message`, plus
+    * `offset` where the source has one). `binary` decodes read one base64
+    * frame per line (compressed/chunked/packed frames are not text).
+    * `perBatch` decodes need the whole frame (windows over `offset`, gelf
+    * chunk grouping): a stream runs them once per micro-batch, each batch a
+    * flush boundary — the analogue of the reference codec's
+    * `auto_flush_interval` (AvailableNow over a complete journal is one
+    * batch, so batch and stream agree exactly). `batchOnly` says why a
+    * stream cannot run the decode at all.
+    */
+  private final case class LineCodec(decode: DataFrame => DataFrame,
+                                     binary: Boolean = false,
+                                     perBatch: Boolean = false,
+                                     batchOnly: Option[String] = None)
+
+  /** The codec table: every input's codec lowers here, attrs resolved
+    * eagerly so a bad codec fails before any query starts. None = not a
+    * line-framed codec (the file input's whole-file and lake reads).
+    */
+  private def lineCodec(cp: Plugin): Option[LineCodec] = {
+    def ddl = strAttr(cp, "schema").getOrElse(throw new IllegalArgumentException(
+      s"codec => ${cp.name} requires schema => \"<ddl>\""))
+    def binary(decode: DataFrame => DataFrame, perBatch: Boolean = false,
+               batchOnly: Option[String] = None) =
+      LineCodec(d => decode(d.select(unbase64(col("message")).as("frame"))),
+        binary = true, perBatch = perBatch, batchOnly = batchOnly)
+    val table: PartialFunction[String, LineCodec] = {
+      case "line" | "plain" => LineCodec(identity)
+      case "multiline" => LineCodec(applyMultiline(cp), perBatch = true)
+      case "es_bulk" =>
+        // action/source line pairing orders on the per-line offset
+        LineCodec(d => graft.operators.Codec.esBulk(d.withColumn("_stream", lit("es_bulk"))),
+          perBatch = true)
+      case "cef" => LineCodec(graft.operators.Codec.cefDecode(_, "message"))
+      case "graphite" => LineCodec(graft.operators.Codec.graphiteDecode(_, "message"))
+      case "json" | "json_lines" =>
+        // schema => DDL skips the inference scan (the 100 TB path)
+        val schema = strAttr(cp, "schema")
+        LineCodec(jsonParse(_, "message", None, lit(true), schema),
+          batchOnly = if (schema.isDefined) None else Some(
+            "a stream cannot scan ahead to infer — declare schema => \"<ddl>\""))
+      case "edn" | "edn_lines" =>
+        val schema = ddl
+        LineCodec(graft.operators.Codec.ednLines(_, "message", schema))
+      case "gelf" =>
+        // additional fields are named WITH the leading underscore in the DDL
+        val schema = ddl
+        val remap = !strAttr(cp, "remap").contains("false")
+        val strip = !strAttr(cp, "strip_leading_underscore").contains("false")
+        binary(graft.operators.Gelf.decode(_, "frame", schema, remap, strip), perBatch = true)
+      case "protobuf" =>
+        // field numbers declared in config (`fields` hash): no compiled classes
+        val schema = ddl
+        val nums = cp.attr("fields") match {
+          case Some(VHash(entries)) => entries.map { case (k, v) => k -> (v match {
+            case VNumber(d, _) => d.toInt
+            case VString(s) => s.toInt
+            case other => throw new IllegalArgumentException(
+              s"protobuf fields: bad number $other for $k")
+          }) }.toMap
+          case _ => throw new IllegalArgumentException(
+            "codec => protobuf requires fields => { \"<col>\" => <number> }")
+        }
+        binary(graft.operators.Protobuf.decode(_, "frame", schema, nums))
+      case "collectd" => binary(graft.operators.Collectd.decode(_, "frame"))
+      case "netflow" => binary(graft.operators.Netflow.decode(_, "frame"))
+      case "snmptrap" => binary(graft.operators.Snmp.decode(_, "frame"))
+      case "ganglia" =>
+        // value packets are annotated from metadata packets, which gmond
+        // sends rarely: a per-micro-batch decode would lose the metadata
+        // seen in earlier batches
+        binary(graft.operators.Ganglia.decode(_, "frame"), batchOnly = Some(
+          "metadata packets annotate value packets across the whole journal " +
+            "— replay the journal in batch mode"))
+    }
+    table.lift(cp.name)
+  }
+
+  /** One reader per transport: the source format and options of a listener,
+    * tail or generator input, resolved once — batch and stream differ only
+    * in `read` vs `readStream`. A `binary` codec switches the udp listener
+    * to base64 whole-frame journal lines; other listeners journal text.
+    */
+  private def transport(spark: org.apache.spark.sql.SparkSession, p: Plugin,
+                        binary: Boolean): (String, Map[String, String]) = {
+    val kind = p.name match {
+      case "gelf" | "snmptrap" | "ganglia" => "udp"
+      case "graphite" => "tcp"
+      case "logstash" | "elastic_serverless_forwarder" => "http"
+      // the syslog input listens on tcp (default) or udp, or replays `path`
+      case "syslog" => if (strAttr(p, "path").isDefined) "file"
+        else if (strAttr(p, "protocol").contains("udp")) "udp" else "tcp"
+      case "heartbeat" => "generator"
+      case n => n
+    }
+    require(!binary || kind == "udp" || kind == "file",
+      s"${p.name} input: codec => ${codecOf(p).map(_.name).orNull} decodes binary " +
+        "frames, which only udp datagrams and base64 file lines carry")
+    val opts: Map[String, String] = kind match {
+      case "file" =>
+        // admission control (backpressure analogue): a stream caps the bytes
+        // one micro-batch admits, so a backlog drains in bounded batches
+        Map("path" -> strAttr(p, "path").getOrElse(
+          throw new IllegalArgumentException(s"${p.name} input: path required"))) ++
+          strAttr(p, "max_bytes_per_trigger").map(v =>
+            "max_bytes_per_trigger" -> parseByteSize(v).toString)
+      case "generator" if p.name == "heartbeat" =>
+        // liveness ticks: message => "sequence"/"epoch" add a clock column
+        // (see lowerInput), the ticks themselves carry "ok"
+        Map("count" -> strAttr(p, "count").getOrElse("1"), "partitions" -> "1",
+          "lines" -> strAttr(p, "message").filterNot(Set("sequence", "epoch")).getOrElse("ok"))
+      case "generator" =>
+        Map("count" -> strAttr(p, "count").getOrElse("1000"),
+          "partitions" -> spark.sparkContext.defaultParallelism.toString,
+          "lines" -> p.attr("lines").map(strList)
+            .orElse(strAttr(p, "message").map(Seq(_))) // the single-message form
+            .getOrElse(Seq("Hello world!")).mkString("|"))
+      case "unix" =>
+        // server mode only: an AF_UNIX stream listener journals lines
+        strAttr(p, "mode").foreach(m => require(m == "server",
+          s"unix input: only mode => server is supported, got $m"))
+        Map("socket" -> strAttr(p, "path").getOrElse(
+          throw new IllegalArgumentException("unix input: path required")),
+          "force_unlink" -> strAttr(p, "force_unlink").getOrElse("false"))
+      case _ =>
+        Map("port" -> listenerPort(p).toString) ++
+          (if (binary) Map("frames" -> "base64") else Map.empty)
+    }
+    val fmt = kind match {
+      case "file" => "graft.sources.FileTailSource"
+      case "generator" => "graft.sources.GeneratorSource"
+      case "tcp" => "graft.sources.TcpSource"
+      case "udp" => "graft.sources.UdpSource"
+      case "unix" => "graft.sources.UnixSource"
+      case "http" => "graft.sources.HttpSource"
+      case "beats" => "graft.sources.BeatsSource"
+      case "relp" => "graft.sources.RelpSource"
+    }
+    // listeners journal what they receive; a read replays the journal so far
+    (fmt, opts ++ strAttr(p, "journal").map("journal" -> _))
+  }
 
   /** The syslog input's RFC 3164 parse chain over a line-framed frame —
     * narrow (one grok pass + PRI arithmetic), so it runs identically on
@@ -1822,9 +1970,9 @@ object LsclRun {
 
   /** Lower a `codec => multiline { pattern/negate/what }` block over a
     * line-framed source frame (offset BIGINT, message STRING): reassembled
-    * events come back as (event_group, message, n_lines).
+    * events come back as (event_group, message, n_lines, tags).
     */
-  private def applyMultiline(cp: Plugin, raw: DataFrame, stream: String): DataFrame = {
+  private def applyMultiline(cp: Plugin): DataFrame => DataFrame = {
     val pat = strAttr(cp, "pattern").getOrElse(
       throw new IllegalArgumentException("multiline codec: pattern required"))
     // reference buffer caps (multiline codec defaults: max_lines 500,
@@ -1833,13 +1981,14 @@ object LsclRun {
     // tcp frame size_limit. Size strings take the reference's unit forms.
     val maxLines = strAttr(cp, "max_lines").map(_.toInt).getOrElse(500)
     val maxBytes = strAttr(cp, "max_bytes").map(parseByteSize).getOrElse(10L << 20)
-    val out = graft.operators.Codec.multilineConfig(
-      raw.withColumn("_stream", lit(stream)), "message", "offset", "_stream",
-      pat, strAttr(cp, "negate").contains("true"),
-      strAttr(cp, "what").getOrElse("previous"), maxLines, maxBytes)
-    out.select(col("event_group"), col("msg").as("message"), col("n_lines"),
-      when(col("ml_capped"), array(lit("multiline_codec_max_lines_reached")))
-        .otherwise(array().cast("array<string>")).as("tags"))
+    val negate = strAttr(cp, "negate").contains("true")
+    val what = strAttr(cp, "what").getOrElse("previous")
+    raw => graft.operators.Codec.multilineConfig(
+        raw.withColumn("_stream", lit("multiline")), "message", "offset", "_stream",
+        pat, negate, what, maxLines, maxBytes)
+      .select(col("event_group"), col("msg").as("message"), col("n_lines"),
+        when(col("ml_capped"), array(lit("multiline_codec_max_lines_reached")))
+          .otherwise(array().cast("array<string>")).as("tags"))
   }
 
   /** Parse a reference-style byte-size string: "10 MiB", "512kb", "1048576". */
@@ -1853,71 +2002,6 @@ object LsclRun {
       case "kb" | "kib" => n << 10
       case "mb" | "mib" => n << 20
       case _ => n << 30
-    }
-  }
-
-  /** Per-micro-batch codec transform for streaming inputs whose codec needs
-    * whole-batch context (multiline reassembly): window functions are not
-    * available on an unbounded stream, so the codec runs inside foreachBatch
-    * — each micro-batch is a flush boundary, the batch analogue of the
-    * reference codec's `auto_flush_interval` (incomplete groups flush when
-    * the batch ends). Batch mode applies the same codec in [[source]], so
-    * batch and stream agree whenever no group spans a micro-batch boundary
-    * (AvailableNow over a complete file = one batch = exact equality).
-    */
-  def inputBatchCodec(items: Seq[Item]): DataFrame => DataFrame = {
-    val codecs = items.collect {
-      case PluginItem(p) if Set("file", "tcp", "udp")(p.name) =>
-        // bareword `codec => snmptrap` and block `codec => snmptrap { }`
-        // both count — the batch path dispatches on the name, so the
-        // streaming path must too (else the codec silently drops)
-        codecPluginOrName(p).filter(c => c.name == "multiline" ||
-          Set("gelf", "collectd", "netflow", "snmptrap", "ganglia")(c.name))
-      // the named snmptrap/ganglia inputs ARE their codecs (udp + decode)
-      case PluginItem(p) if p.name == "snmptrap" =>
-        Some(Plugin("snmptrap", Nil))
-      case PluginItem(p) if p.name == "ganglia" =>
-        Some(Plugin("ganglia", Nil))
-      // the named gelf input IS its codec too; its attrs carry the schema
-      case PluginItem(p) if p.name == "gelf" =>
-        Some(Plugin("gelf", p.attrs))
-    }.flatten
-    require(codecs.size <= 1,
-      "multiple inputs with batch codecs: streaming applies ONE batch " +
-        "codec over the unioned stream — give each input its own pipeline")
-    codecs.headOption match {
-      case Some(cp) if cp.name == "ganglia" =>
-        // NOT per-micro-batch-safe: value packets are annotated from
-        // metadata packets, which gmond sends RARELY (once + tmax resends).
-        // A per-batch decode loses the metadata cache across batches and
-        // batch==stream silently breaks — refuse loudly (replay the journal
-        // in batch mode instead), the same rule as stateful filter configs.
-        throw new UnsupportedOperationException(
-          "the ganglia input/codec is batch-only under streaming: metadata " +
-            "packets annotate value packets across the whole journal; a " +
-            "per-micro-batch decode would drop annotations for metadata " +
-            "seen in earlier batches. Replay the journal in batch mode.")
-      case Some(cp) if cp.name == "multiline" =>
-        b => applyMultiline(cp, b, "stream")
-      case Some(cp) =>
-        // binary datagram codecs per micro-batch: whole frames decode
-        // statelessly; a gelf CHUNK GROUP split across micro-batches drops
-        // (same auto_flush-style per-batch boundary as multiline — the
-        // reference's chunk reaper is likewise time-bounded at 5 s)
-        val ddl = strAttr(cp, "schema")
-        b => {
-          val bin = b.select(unbase64(col("message")).as("frame"))
-          cp.name match {
-            case "gelf" => graft.operators.Gelf.decode(bin, "frame",
-              ddl.getOrElse(throw new IllegalArgumentException(
-                "codec => gelf requires schema => \"<ddl>\"")))
-            case "collectd" => graft.operators.Collectd.decode(bin, "frame")
-            case "snmptrap" => graft.operators.Snmp.decode(bin, "frame")
-            case "ganglia" => graft.operators.Ganglia.decode(bin, "frame")
-            case _ => graft.operators.Netflow.decode(bin, "frame")
-          }
-        }
-      case None => identity
     }
   }
 
@@ -2054,643 +2138,318 @@ object LsclRun {
       col("timestamp").as("@timestamp"))
   }
 
-  /** Lower the `input` section to a source frame. Supported inputs:
-    *  - `generator { count => N lines => [...] }` — the native DataSourceV2
-    *    generator ([[graft.sources.GeneratorSource]]); lines become the
-    *    cycled `message`, `seq` is the sequence number;
-    *  - `file { path => ... codec => json/parquet }` — lake reads (parquet
-    *    default; `codec => line`/text reads one line per event).
-    * Multiple inputs union (the reference runs them concurrently into one
-    * queue; order within the union is not part of the contract).
+  /** The `input` section lowered once. `perBatch` is a stream's one decode
+    * that needs whole-micro-batch context, with what it decodes (for error
+    * messages); batch lowering applies every decode inline.
     */
-  def source(spark: org.apache.spark.sql.SparkSession, items: Seq[Item],
-             bus: Option[PipelineBus] = None): DataFrame = {
-    val frames = items.collect {
-      case PluginItem(p) if p.name == "pipeline" =>
-        // the address-bus input: resolve the upstream's registered frame
-        val addr = strAttr(p, "address").getOrElse(
-          throw new IllegalArgumentException("pipeline input: address required"))
-        bus.getOrElse(throw new IllegalStateException(
-          "pipeline input used but no PipelineBus supplied")).resolve(addr)
-      case PluginItem(p) if p.name == "generator" =>
-        val count = strAttr(p, "count").map(_.toLong).getOrElse(1000L)
-        val lines = p.attr("lines").map(strList)
-          .orElse(strAttr(p, "message").map(Seq(_))) // generator's single-message form
-          .getOrElse(Seq("Hello world!"))
-        val gen = spark.read.format("graft.sources.GeneratorSource")
-          .option("count", count)
-          .option("partitions", spark.sparkContext.defaultParallelism)
-          .option("lines", lines.mkString("|"))
-          .load()
-        p.attr("codec") match { // codec => "json": parse message at the source
-          case Some(VString("json")) =>
-            jsonParse(gen, "message", None, lit(true))
-          case Some(VPlugin(c @ Plugin("json", _))) =>
-            // codec => json { schema => "a STRING, b BIGINT" } skips inference
-            jsonParse(gen, "message", None, lit(true), strAttr(c, "schema"))
-          case _ => gen
-        }
-      case PluginItem(p) if p.name == "kafka" =>
-        kafkaFrame(spark, p, streaming = false)
-      case PluginItem(p) if p.name == "jdbc" =>
-        jdbcInputFrame(spark, p)
-      case PluginItem(p) if p.name == "heartbeat" =>
-        // logstash-input-heartbeat: periodic liveness events. Batch = `count`
-        // ticks through the generator source; message => "sequence" adds the
-        // incrementing `clock`, "epoch" the epoch second (pinned by `now`
-        // for deterministic replay — the reference reads the wall clock)
-        val count = strAttr(p, "count").map(_.toLong).getOrElse(1L)
-        val msg = strAttr(p, "message").getOrElse("ok")
-        val gen = spark.read.format("graft.sources.GeneratorSource")
-          .option("count", count).option("partitions", 1)
-          .option("lines", if (msg == "sequence" || msg == "epoch") "ok" else msg)
-          .load()
-        msg match {
-          case "sequence" => gen.withColumn("clock", col("seq") + 1)
-          case "epoch" =>
+  private final case class Lowered(frame: DataFrame,
+                                   perBatch: Option[(String, DataFrame => DataFrame)] = None)
+
+  /** Lower the `input` section to a source frame (batch or stream). Multiple
+    * inputs union (the reference runs them concurrently into one queue;
+    * order within the union is not part of the contract). A stream runs a
+    * `perBatch` decode over the whole micro-batch, so that input must be
+    * the pipeline's only one.
+    */
+  private def lowerInputs(spark: org.apache.spark.sql.SparkSession, items: Seq[Item],
+                          streaming: Boolean, bus: Option[PipelineBus]): Lowered = {
+    val inputs = items.collect { case PluginItem(p) => lowerInput(spark, p, streaming, bus) }
+    require(inputs.nonEmpty, "config has no input")
+    val perBatch = inputs.flatMap(_.perBatch)
+    require(perBatch.isEmpty || inputs.size == 1,
+      s"streaming runs the ${perBatch.map(_._1).mkString(", ")} over whole micro-batches " +
+        "of the unioned inputs — give that input its own pipeline")
+    Lowered(inputs.map(_.frame).reduce(_.unionByName(_, allowMissingColumns = true)),
+      perBatch.headOption)
+  }
+
+  /** Lower one input. Listener, tail and generator inputs read through
+    * [[transport]] and decode through [[lineCodec]]: every (input, codec)
+    * pair either streams the decode batch applies or fails here, before a
+    * query starts, naming the input and the codec. The other inputs are
+    * batch-only.
+    */
+  private def lowerInput(spark: org.apache.spark.sql.SparkSession, p: Plugin,
+                         streaming: Boolean, bus: Option[PipelineBus]): Lowered = {
+    def batchOnly[A](lowered: => A): A =
+      if (streaming) throw new UnsupportedOperationException(
+        s"input plugin `${p.name}` is not streamable (batch-only)")
+      else lowered
+    val cp = codecOf(p)
+    lazy val table = cp.fold(Option(LineCodec(identity)))(lineCodec)
+    lazy val codec = table.getOrElse(throw new IllegalArgumentException(
+      s"${p.name} input: codec `${cp.get.name}` is not supported on this input"))
+    def decoded(raw: DataFrame, post: DataFrame => DataFrame = identity): Lowered = {
+      val what = s"${p.name} input's ${cp.fold("line")(_.name)} codec"
+      if (streaming) codec.batchOnly.foreach(why =>
+        throw new IllegalArgumentException(s"$what cannot stream: $why"))
+      if (streaming && codec.perBatch) Lowered(raw, Some(what -> codec.decode.andThen(post)))
+      else Lowered(post(codec.decode(raw)))
+    }
+    def listen(): DataFrame = {
+      val (fmt, opts) = transport(spark, p, codec.binary)
+      if (streaming) spark.readStream.format(fmt).options(opts).load()
+      else spark.read.format(fmt).options(opts).load()
+    }
+    p.name match {
+      case "tcp" | "udp" | "unix" | "http" | "beats" | "relp" | "gelf" | "snmptrap" |
+           "ganglia" | "graphite" | "generator" => decoded(listen())
+      case "logstash" | "elastic_serverless_forwarder" =>
+        // ssl/auth attrs are transport concerns the local listener doesn't
+        // model: TLS is rejected loudly, credentials accepted, not enforced
+        requirePlaintext(p, "input")
+        decoded(listen())
+      case "syslog" => decoded(listen(), syslogParse)
+      case "heartbeat" =>
+        // logstash-input-heartbeat: `count` ticks; message => "sequence" adds
+        // the incrementing `clock`, "epoch" the epoch second (pinned by
+        // `now` for deterministic replay — the reference reads the wall clock)
+        val gen = listen()
+        decoded(strAttr(p, "message") match {
+          case Some("sequence") => gen.withColumn("clock", col("seq") + 1)
+          case Some("epoch") =>
             val now = strAttr(p, "now").map(s => to_timestamp(lit(s)))
               .getOrElse(current_timestamp())
             gen.withColumn("clock", unix_timestamp(now))
           case _ => gen
-        }
-      case PluginItem(p) if p.name == "http_poller" =>
-        // logstash-input-http_poller: poll each NAMED url once per schedule
-        // tick; batch = one tick (like exec). The url map is config-sized,
-        // so the fetches are driver-side like the reference's single poller
-        // thread; body -> message, the poll identity rides along the way
-        // [http_poller_metadata][name] does
-        val urls = p.attr("urls") match {
-          case Some(VHash(es)) => es.map { case (n, v) => v match {
-            case VString(u) => n -> u
-            // the nested { url => ... method => get } request-spec form
-            case VPlugin(spec) => n -> strAttr(spec, "url").getOrElse(
-              throw new IllegalArgumentException(s"http_poller url `$n`: url required"))
-            case other => throw new IllegalArgumentException(
-              s"http_poller url `$n`: expected url string or request spec, got $other")
-          }}
-          case _ => throw new IllegalArgumentException("http_poller input: urls hash required")
-        }
-        val rows = urls.map { case (n, u) =>
-          val (status, body) = Enrich.fetchUrl(u)
-          (n, u, status, Option(body).getOrElse(""), body == null)
-        }
-        import spark.implicits._
-        rows.toSeq.toDF("poller_name", "url", "status", "message", "_failed")
-          .withColumn("tags", when(col("_failed"),
-            array(lit("_http_request_failure"))).otherwise(array().cast("array<string>")))
-          .drop("_failed")
-      case PluginItem(p) if p.name == "dead_letter_queue" =>
-        // the DLQ input: replay a persisted DLQ side-channel table
-        // (graft.operators.Dlq.entries shape), oldest-first by entry_time
+        })
+      case "kafka" => decoded(kafkaFrame(spark, p, streaming))
+      // the offset-tracked tail source (byte-offset sincedb contract)
+      case "file" if strAttr(p, "mode").contains("tail") => decoded(listen())
+      case "file" => batchOnly {
         val path = strAttr(p, "path").getOrElse(
-          throw new IllegalArgumentException("dead_letter_queue input: path required"))
-        spark.read.parquet(path)
-      case PluginItem(p) if p.name == "stdin" || p.name == "java_stdin" =>
+          throw new IllegalArgumentException("file input: path required"))
+        cp.map(_.name) match {
+          // these codecs order lines on the tail source's byte offsets
+          case Some("multiline" | "es_bulk") => decoded(listen())
+          case Some(n) if table.isDefined && n != "json" && n != "json_lines" =>
+            decoded(spark.read.text(path).withColumnRenamed("value", "message"))
+          case _ => Lowered(fileRead(spark, path, cp))
+        }
+      }
+      case "stdin" | "java_stdin" => batchOnly {
         // the reference's default input (java_stdin is the same plugin's
         // java-execution name, mixed_codec_spec.yml): stdin is inherently
         // driver-local, so drain it to a spill file once (bounded by EOF in
-        // batch mode) and scan that — one line per event, like the stdin
-        // plugin's line codec
+        // batch mode) and scan that — one line per event (charset decodes
+        // leniently)
         val tmp = java.nio.file.Files.createTempFile("graft_stdin", ".log")
         java.nio.file.Files.copy(System.in, tmp,
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        val raw = spark.read.text(tmp.toString).withColumnRenamed("value", "message")
-        val cdc = codecPlugin(p).orElse(p.attr("codec") match {
-          case Some(VString(c)) => Some(Plugin(c, Nil)); case _ => None
-        })
-        cdc match {
-          case Some(c) if c.name == "json" =>
-            jsonParse(raw, "message", None, lit(true), strAttr(c, "schema"))
-          // plain/line are the identity read (charset decodes leniently)
-          case _ => raw
-        }
-      case PluginItem(p) if p.name == "tcp" =>
-        // tcp input: listener journals received lines; batch reads the
-        // journal so far (streaming deltas via sourceStream)
-        val port = strAttr(p, "port").getOrElse(
-          throw new IllegalArgumentException("tcp input: port required")).toInt
-        val rd = spark.read.format("graft.sources.TcpSource").option("port", port)
-        val loaded = strAttr(p, "journal").fold(rd)(j => rd.option("journal", j)).load()
-        codecPlugin(p) match {
-          case Some(cp) if cp.name == "multiline" =>
-            applyMultiline(cp, loaded, s"tcp:$port")
-          case Some(cp) if cp.name == "cef" =>
-            graft.operators.Codec.cefDecode(loaded, "message")
-          case Some(cp) if cp.name == "graphite" =>
-            graft.operators.Codec.graphiteDecode(loaded, "message")
-          case _ => loaded
-        }
-      case PluginItem(p) if p.name == "graphite" =>
-        // graphite input (logstash-input-graphite = tcp input + graphite
-        // codec): line-framed listener journal -> metric/value/@timestamp
-        val port = strAttr(p, "port").map(_.toInt).getOrElse(2003)
-        val rd = spark.read.format("graft.sources.TcpSource").option("port", port)
-        val loaded = strAttr(p, "journal").fold(rd)(j => rd.option("journal", j)).load()
-        graft.operators.Codec.graphiteDecode(loaded, "message")
-      case PluginItem(p) if p.name == "unix" =>
-        // unix input (logstash-input-unix server mode): AF_UNIX stream
-        // listener journals received lines; batch reads the journal so far
-        val sock = strAttr(p, "path").getOrElse(
-          throw new IllegalArgumentException("unix input: path required"))
-        strAttr(p, "mode").foreach(m => require(m == "server",
-          s"unix input: only mode => server is supported, got $m"))
-        val rd = spark.read.format("graft.sources.UnixSource")
-          .option("socket", sock)
-          .option("force_unlink", strAttr(p, "force_unlink").getOrElse("false"))
-        val loaded = strAttr(p, "journal").fold(rd)(j => rd.option("journal", j)).load()
-        codecPlugin(p).filter(_.name == "multiline")
-          .fold(loaded)(cp => applyMultiline(cp, loaded, s"unix:$sock"))
-      case PluginItem(p) if p.name == "udp" =>
-        // udp input: datagram listener journals lines (one event per
-        // datagram, embedded newlines split); batch reads the journal so far
-        val port = strAttr(p, "port").getOrElse(
-          throw new IllegalArgumentException("udp input: port required")).toInt
-        val rd = spark.read.format("graft.sources.UdpSource").option("port", port)
-        codecPlugin(p) match {
-          case Some(cp) if Set("gelf", "collectd", "netflow", "snmptrap",
-              "ganglia")(cp.name) =>
-            // binary datagram codecs: the listener journals WHOLE datagrams
-            // base64-line-framed (compressed/chunked/packed frames are
-            // binary); each codec's decode reassembles + parses
-            val loaded = strAttr(p, "journal").fold(rd)(j => rd.option("journal", j))
-              .option("frames", "base64").load()
-            val bin = loaded.select(unbase64(col("message")).as("frame"))
-            cp.name match {
-              case "gelf" =>
-                val ddl = strAttr(cp, "schema").getOrElse(
-                  throw new IllegalArgumentException(
-                    "codec => gelf requires schema => \"<ddl>\" (JSON field names, " +
-                      "additional fields WITH the leading underscore)"))
-                graft.operators.Gelf.decode(bin, "frame", ddl,
-                  remap = !strAttr(cp, "remap").contains("false"),
-                  stripLeadingUnderscore =
-                    !strAttr(cp, "strip_leading_underscore").contains("false"))
-              case "collectd" => graft.operators.Collectd.decode(bin, "frame")
-              case "snmptrap" => graft.operators.Snmp.decode(bin, "frame")
-              case "ganglia" => graft.operators.Ganglia.decode(bin, "frame")
-              case _ => graft.operators.Netflow.decode(bin, "frame")
-            }
-          case other =>
-            val loaded = strAttr(p, "journal").fold(rd)(j => rd.option("journal", j)).load()
-            other.filter(_.name == "multiline")
-              .fold(loaded)(cp => applyMultiline(cp, loaded, s"udp:$port"))
-        }
-      case PluginItem(p) if p.name == "snmptrap" =>
-        // snmptrap input (logstash-input-snmptrap): a udp listener in
-        // base64 whole-frame mode + the BER trap decode — one event per
-        // datagram, v1 and v2c PDUs
-        val port = strAttr(p, "port").getOrElse(
-          throw new IllegalArgumentException("snmptrap input: port required")).toInt
-        val rd = spark.read.format("graft.sources.UdpSource").option("port", port)
-          .option("frames", "base64")
-        val loaded = strAttr(p, "journal").fold(rd)(j => rd.option("journal", j)).load()
-        graft.operators.Snmp.decode(
-          loaded.select(unbase64(col("message")).as("frame")), "frame")
-      case PluginItem(p) if p.name == "ganglia" =>
-        // ganglia input (logstash-input-ganglia): a udp listener in base64
-        // whole-frame mode + the XDR gmond decode — one event per value
-        // packet, metadata packets annotate via broadcast join
-        val port = strAttr(p, "port").getOrElse(
-          throw new IllegalArgumentException("ganglia input: port required")).toInt
-        val rd = spark.read.format("graft.sources.UdpSource").option("port", port)
-          .option("frames", "base64")
-        val loaded = strAttr(p, "journal").fold(rd)(j => rd.option("journal", j)).load()
-        graft.operators.Ganglia.decode(
-          loaded.select(unbase64(col("message")).as("frame")), "frame")
-      case PluginItem(p) if p.name == "couchdb_changes" =>
-        // couchdb_changes input (logstash-input-couchdb_changes): consumes
-        // the CouchDB `_changes` feed — PUBLIC ndjson, one change per line:
-        // {"seq":..,"id":..,"changes":[{"rev":..}],"doc":{..},"deleted":..}.
-        // The live long-poll is an external service; the supported form is
-        // archive replay of a saved feed (`path =>`) — the same boundary as
-        // the syslog/dlq archive inputs. `schema` declares the doc fields
-        // (the schema'd-json contract, no inference double-scan). Emits the
-        // doc columns plus the reference's @metadata as _meta_id/_meta_rev/
-        // _meta_action ("update"/"delete" — deleted changes carry null doc
-        // columns) and _meta_seq.
-        val path = strAttr(p, "path").getOrElse(
-          throw new IllegalArgumentException(
-            "couchdb_changes input: path required (a saved _changes feed; " +
-              "the live long-poll is an external service)"))
-        val ddl = strAttr(p, "schema").getOrElse(
-          throw new IllegalArgumentException(
-            "couchdb_changes input: schema => \"<ddl>\" required (doc fields)"))
-        val docT = org.apache.spark.sql.types.StructType.fromDDL(ddl)
-        val envT = new org.apache.spark.sql.types.StructType()
-          .add("seq", org.apache.spark.sql.types.StringType)
-          .add("id", org.apache.spark.sql.types.StringType)
-          .add("deleted", org.apache.spark.sql.types.BooleanType)
-          .add("changes", org.apache.spark.sql.types.ArrayType(
-            new org.apache.spark.sql.types.StructType()
-              .add("rev", org.apache.spark.sql.types.StringType)))
-          .add("doc", docT)
-        spark.read.text(path)
-          .select(from_json(col("value"), envT).as("_c"))
-          .select(docT.fieldNames.toSeq.map(f => col(s"_c.doc.`$f`").as(f)) ++ Seq(
-            col("_c.id").as("_meta_id"),
-            try_element_at(col("_c.changes"), lit(1)).getField("rev").as("_meta_rev"),
-            when(coalesce(col("_c.deleted"), lit(false)), lit("delete"))
-              .otherwise(lit("update")).as("_meta_action"),
-            col("_c.seq").as("_meta_seq")): _*)
-      case PluginItem(p) if p.name == "gelf" =>
-        // gelf input (logstash-input-gelf): a udp listener (default port
-        // 12201) with the gelf codec built in — the same lowering as
-        // `udp { codec => gelf }`; schema => DDL required (codec contract)
-        val port = listenerPort(p)
-        val rd = spark.read.format("graft.sources.UdpSource").option("port", port)
-          .option("frames", "base64")
-        val loaded = strAttr(p, "journal").fold(rd)(j => rd.option("journal", j)).load()
-        val ddl = strAttr(p, "schema").getOrElse(
-          throw new IllegalArgumentException(
-            "gelf input requires schema => \"<ddl>\" (JSON field names, " +
-              "additional fields WITH the leading underscore)"))
-        graft.operators.Gelf.decode(
-          loaded.select(unbase64(col("message")).as("frame")), "frame", ddl,
-          remap = !strAttr(p, "remap").contains("false"),
-          stripLeadingUnderscore =
-            !strAttr(p, "strip_leading_underscore").contains("false"))
-      case PluginItem(p) if Set("http", "logstash",
-          "elastic_serverless_forwarder")(p.name) =>
-        // http input (webhook front door): POST bodies journal line-framed;
-        // batch reads the journal so far, stream reads offset deltas.
-        // `logstash` input (logstash-integration-logstash INPUT half) is the
-        // same machinery: it receives the output half's ndjson POSTs — one
-        // journal line per event (default port 9800). So is
-        // `elastic_serverless_forwarder` (its public contract is likewise
-        // ndjson events POSTed over HTTP; default port 8080).
-        val port = listenerPort(p)
-        val rd = spark.read.format("graft.sources.HttpSource").option("port", port)
-        val loaded = strAttr(p, "journal").fold(rd)(j => rd.option("journal", j)).load()
-        if (p.name == "http") loaded
-        else {
-          // the journal lines ARE json event documents (the sender encodes
-          // ndjson) — decode them into event fields. `schema => "<ddl>"`
-          // skips the inference scan (the 100 TB path); ssl/auth attrs are
-          // transport concerns the local listener doesn't model — TLS is
-          // rejected loudly, credentials are accepted but not enforced.
-          requirePlaintext(p, "input")
-          jsonParse(loaded, "message", None, lit(true), strAttr(p, "schema"))
-        }
-      case PluginItem(p) if p.name == "beats" =>
-        // beats input: lumberjack v2 listener journals one JSON line per
-        // event, acking after the durable append; a downstream json filter
-        // (with schema) recovers the event fields
-        val port = strAttr(p, "port").getOrElse(
-          throw new IllegalArgumentException("beats input: port required")).toInt
-        val rd = spark.read.format("graft.sources.BeatsSource").option("port", port)
-        strAttr(p, "journal").fold(rd)(j => rd.option("journal", j)).load()
-      case PluginItem(p) if p.name == "relp" =>
-        // relp input (logstash-input-relp): RELP listener journals one line
-        // per syslog command, acking only AFTER the durable append — the
-        // protocol's reliability contract; grok/syslog_pri decompose
-        // downstream like the syslog input
-        val port = strAttr(p, "port").getOrElse(
-          throw new IllegalArgumentException("relp input: port required")).toInt
-        val rd = spark.read.format("graft.sources.RelpSource").option("port", port)
-        strAttr(p, "journal").fold(rd)(j => rd.option("journal", j)).load()
-      case PluginItem(p) if p.name == "exec" || p.name == "pipe" =>
-        // exec input (logstash-input-exec): run `command`, one event per
-        // stdout line with the command recorded — batch = one tick of the
-        // reference's interval loop, driver-side like the reference's
-        // single plugin thread. The `pipe` input (logstash-input-pipe) is
-        // the same shape minus the interval: a long-running command whose
-        // stdout lines are events — batch drains what the command emits.
-        val cmd = strAttr(p, "command").getOrElse(
-          throw new IllegalArgumentException(s"${p.name} input: command required"))
-        val proc = new ProcessBuilder("/bin/sh", "-c", cmd)
-          .redirectErrorStream(true).start()
-        val outBytes = proc.getInputStream.readAllBytes()
-        proc.waitFor()
-        val lines = new String(outBytes, java.nio.charset.StandardCharsets.UTF_8)
-          .split("\n").filter(_.nonEmpty).toSeq
-        import spark.implicits._
-        lines.toDF("message").withColumn("command", lit(cmd))
-      case PluginItem(p) if p.name == "syslog" =>
-        // the reference syslog input (logstash-input-syslog) = a tcp/udp
-        // listener + RFC 3164 grok parse + PRI decompose, with failures
-        // tagged _grokparsefailure_sysloginput and a default priority of 13.
-        // Composed from the same pieces here: the tcp journal listener (or
-        // `path` for batch replay of an archived syslog file) -> the grok
-        // library's SYSLOG patterns -> Net.syslogSeverity/Facility.
-        val raw = (strAttr(p, "path"), strAttr(p, "port")) match {
-          case (Some(path), _) =>
-            spark.read.format("graft.sources.FileTailSource").option("path", path).load()
-          case (_, Some(port)) =>
-            // protocol => tcp (default) | udp — the reference listens on both
-            val fmt = if (strAttr(p, "protocol").contains("udp"))
-              "graft.sources.UdpSource" else "graft.sources.TcpSource"
-            val rd = spark.read.format(fmt).option("port", port.toInt)
-            strAttr(p, "journal").fold(rd)(j => rd.option("journal", j)).load()
-          case _ => throw new IllegalArgumentException("syslog input: port or path required")
-        }
-        syslogParse(raw)
-      case PluginItem(p) if p.name == "elasticsearch" =>
-        // logstash-input-elasticsearch over the LOCAL index model (the live
-        // cluster is external — same boundary as the elasticsearch filter):
-        // `index_path` is the exported index root (what the elasticsearch
-        // OUTPUT writes, partitioned by `_index`), `index` an ES wildcard
-        // over index names (lowered onto the `_index` partition column —
-        // partition-pruned scan, never a full read), `query` the DSL subset
-        // lowered to native predicates (EsQuery — pushed to the scan).
-        // `docinfo => true` keeps _index/_docid as [@metadata] fields like
-        // the reference's docinfo_target.
-        val idxPath = strAttr(p, "index_path").getOrElse(
-          throw new IllegalArgumentException(
-            "elasticsearch input: index_path required (the local index root " +
-              "— the live-cluster half is external; see COVERAGE.md)"))
-        val raw = spark.read.parquet(idxPath)
-        val byIndex = strAttr(p, "index") match {
-          case Some(pat) if raw.columns.contains("_index") =>
-            raw.filter(col("_index").rlike(
-              graft.operators.EsQuery.wildcardRegex(pat)))
-          case Some(pat) if pat != "*" => throw new IllegalArgumentException(
-            s"elasticsearch input: index => `$pat` but the export at " +
-              s"$idxPath has no _index partition column")
-          case _ => raw
-        }
-        val queried = strAttr(p, "query") match {
-          case Some(q) => byIndex.filter(graft.operators.EsQuery.predicate(q))
-          case None => byIndex
-        }
-        if (strAttr(p, "docinfo").exists(_.toBoolean)) {
-          val d1 = if (queried.columns.contains("_index"))
-            queried.withColumnRenamed("_index", "_meta__index") else queried
-          if (d1.columns.contains("_docid"))
-            d1.withColumnRenamed("_docid", "_meta__id") else d1
-        } else queried.drop("_index", "_docid")
-
-      case PluginItem(p) if p.name == "file" =>
-        val path = strAttr(p, "path").getOrElse(
-          throw new IllegalArgumentException("file input: path required"))
-        val codec = p.attr("codec") match {
-          case Some(VPlugin(c)) => c.name
-          case Some(VString(c)) => c
-          case _ => "parquet"
-        }
-        def tailRead = spark.read.format("graft.sources.FileTailSource")
-          .option("path", path).load()
-        (strAttr(p, "mode"), codec) match {
-          case (_, "multiline") =>
-            // multiline needs a per-line order key for reassembly — the
-            // offset-tracked tail source provides exactly that (byte
-            // offsets), in either mode
-            applyMultiline(codecPlugin(p).getOrElse(throw new IllegalArgumentException(
-              "codec => multiline requires a block with pattern/what")), tailRead, path)
-          case (_, "es_bulk") =>
-            // es_bulk codec: action/source line pairing needs the per-line
-            // order key, like multiline — the offset-tracked tail source
-            graft.operators.Codec.esBulk(
-              tailRead.withColumn("_stream", lit(path)))
-          case (Some("tail"), _) =>
-            // the file input's TAIL mode: the offset-tracked DSv2 source
-            // (byte-offset sincedb contract; streaming-capable)
-            tailRead
-          case (_, "line" | "plain") => spark.read.text(path).withColumnRenamed("value", "message")
-          case (_, "cef") =>
-            // CEF codec: one ArcSight CEF line per event -> decoded header
-            // fields + extension map (Codec.cefDecode sentinel parse)
-            graft.operators.Codec.cefDecode(
-              spark.read.text(path).withColumnRenamed("value", "message"), "message")
-          case (_, "graphite") =>
-            // graphite codec: `metric value timestamp` lines -> metric/
-            // value/@timestamp (Ruby to_f/to_i prefix-parse semantics)
-            graft.operators.Codec.graphiteDecode(
-              spark.read.text(path).withColumnRenamed("value", "message"), "message")
-          case (_, "edn" | "edn_lines") =>
-            // EDN codec: one EDN value per line, transcoded to JSON at the
-            // boundary, typed via the required schema (no inference)
-            val ddl = codecPlugin(p).flatMap(c => strAttr(c, "schema")).getOrElse(
-              throw new IllegalArgumentException(
-                s"codec => $codec requires schema => \"<ddl>\""))
-            graft.operators.Codec.ednLines(
-              spark.read.text(path).withColumnRenamed("value", "message"),
-              "message", ddl)
-          case (_, "avro") =>
-            // avro codec: consecutive raw binary datums; schema => the avro
-            // schema JSON (the Spark schema derives from it)
-            val avsc = codecPlugin(p).flatMap(c => strAttr(c, "schema")).getOrElse(
-              throw new IllegalArgumentException(
-                "codec => avro requires schema => '<avro schema json>'"))
-            graft.operators.Codec.avroDecode(
-              spark.read.format("binaryFile").load(path).select(col("content")),
-              "content", avsc)
-          case (_, "gelf") =>
-            // gelf archive form: one base64 frame per line (the udp
-            // listener's binary journal format) — chunked/compressed frames
-            // replay byte-exactly through the same decode
-            val ddl = codecPlugin(p).flatMap(c => strAttr(c, "schema")).getOrElse(
-              throw new IllegalArgumentException(
-                "codec => gelf requires schema => \"<ddl>\""))
-            graft.operators.Gelf.decode(
-              spark.read.text(path).select(unbase64(col("value")).as("frame")),
-              "frame", ddl)
-          case (_, "protobuf") =>
-            // protobuf codec: one message per base64 line, field numbers
-            // declared in config (`fields` hash) — no compiled classes
-            val cp = codecPlugin(p).getOrElse(throw new IllegalArgumentException(
-              "codec => protobuf requires a block with schema + fields"))
-            val ddl = strAttr(cp, "schema").getOrElse(
-              throw new IllegalArgumentException(
-                "codec => protobuf requires schema => \"<ddl>\""))
-            val nums = cp.attr("fields") match {
-              case Some(VHash(entries)) => entries.map { case (k, v) => k -> (v match {
-                case VNumber(d, _) => d.toInt
-                case VString(s) => s.toInt
-                case other => throw new IllegalArgumentException(
-                  s"protobuf fields: bad number $other for $k")
-              }) }.toMap
-              case _ => throw new IllegalArgumentException(
-                "codec => protobuf requires fields => { \"<col>\" => <number> }")
-            }
-            graft.operators.Protobuf.decode(
-              spark.read.text(path).select(unbase64(col("value")).as("frame")),
-              "frame", ddl, nums)
-          case (_, "collectd") =>
-            // collectd binary protocol, base64-frame archive form: one
-            // packet per line, one event per VALUES part
-            graft.operators.Collectd.decode(
-              spark.read.text(path).select(unbase64(col("value")).as("frame")),
-              "frame")
-          case (_, "netflow") =>
-            // NetFlow v5 export packets, base64-frame archive form: one
-            // packet per line, one event per 48-byte flow record
-            graft.operators.Netflow.decode(
-              spark.read.text(path).select(unbase64(col("value")).as("frame")),
-              "frame")
-          case (_, "snmptrap") =>
-            // SNMP trap datagrams, base64-frame archive form: one BER
-            // message per line, one trap event per datagram (v1 + v2c)
-            graft.operators.Snmp.decode(
-              spark.read.text(path).select(unbase64(col("value")).as("frame")),
-              "frame")
-          case (_, "ganglia") =>
-            // ganglia gmond XDR datagrams, base64-frame archive form: one
-            // event per value packet, metadata-annotated by broadcast join
-            graft.operators.Ganglia.decode(
-              spark.read.text(path).select(unbase64(col("value")).as("frame")),
-              "frame")
-          case (_, "msgpack" | "fluent") =>
-            // binary codecs: a file is a byte stream of consecutive
-            // self-delimiting packed objects; schema => DDL is required
-            // (same contract as the schema'd json codec — no inference)
-            val ddl = codecPlugin(p).flatMap(c => strAttr(c, "schema")).getOrElse(
-              throw new IllegalArgumentException(
-                s"codec => $codec requires schema => \"<ddl>\""))
-            val bin = spark.read.format("binaryFile").load(path)
-              .select(col("content"))
-            if (codec == "msgpack")
-              graft.operators.Codec.msgpackDecode(bin, "content", ddl)
-            else graft.operators.Codec.fluentDecode(bin, "content", ddl)
-          case (_, "json" | "json_lines") =>
-            // codec json_lines { schema => "a STRING, n BIGINT" } skips the
-            // inference scan — the 100 TB path (schemaless inference reads
-            // the corpus twice)
-            codecPlugin(p).flatMap(c => strAttr(c, "schema")) match {
-              case Some(ddl) => spark.read.schema(
-                org.apache.spark.sql.types.StructType.fromDDL(ddl)).json(path)
-              case None => spark.read.json(path)
-            }
-          case (_, "csv") =>
-            // csv codec (logstash-codec-csv): columns => header names (else
-            // autodetect_column_names reads them from the first line),
-            // separator, skip_header implied by explicit columns=false
-            val cp = codecPlugin(p)
-            val sep = cp.flatMap(c => strAttr(c, "separator")).getOrElse(",")
-            val rd = spark.read.option("sep", sep)
-            cp.flatMap(c => c.attr("columns")).map(strList) match {
-              case Some(cols) =>
-                val named = rd.option("header", "false").csv(path)
-                require(named.columns.length == cols.length,
-                  s"csv codec: file has ${named.columns.length} columns, " +
-                    s"config names ${cols.length}")
-                named.toDF(cols: _*)
-              case None => rd.option("header", "true").csv(path)
-            }
-          case _ => spark.read.parquet(path)
-        }
-      case PluginItem(p) if Set("redis", "rabbitmq", "jms", "twitter",
-          "azure_event_hubs", "elasticsearch_eql", "snmp")(p.name) =>
-        throw new UnsupportedOperationException(
-          s"input `${p.name}` polls an external service/broker with no " +
-            "local model" + (if (p.name == "snmp")
-              " — received TRAPS are supported via the snmptrap input" else "") +
-            "; land the data as files/tcp/http/beats and ingest from there")
-      case PluginItem(p) =>
-        throw new UnsupportedOperationException(s"unsupported input plugin `${p.name}`")
+        decoded(spark.read.text(tmp.toString).withColumnRenamed("value", "message"))
+      }
+      case _ => Lowered(batchOnly(batchInput(spark, p, bus)))
     }
-    require(frames.nonEmpty, "config has no supported input")
-    frames.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
-  /** Streaming form of [[source]]: the same `input` section lowered onto
-    * `readStream` micro-batch sources. Supported: `file { mode => tail }`
-    * (byte-offset-tracked [[graft.sources.FileTailSource]] — the sincedb
-    * contract) and `generator` (bounded sequence-offset micro-batches).
-    * Other inputs are batch-only — fail loudly rather than silently
-    * rescanning a lake path per trigger.
+  /** Lower the `input` section to a batch source frame. Supported inputs:
+    *  - listener inputs (tcp, udp, unix, http, beats, relp, syslog, gelf,
+    *    snmptrap, ganglia, graphite, logstash, elastic_serverless_forwarder)
+    *    read their journal so far; `file { mode => tail }` reads the
+    *    offset-tracked tail source; `generator`/`heartbeat` the native
+    *    DataSourceV2 generator; each decodes through its codec;
+    *  - `file { path => ... codec => ... }` — lake reads (parquet default;
+    *    `codec => line`/text reads one line per event);
+    *  - the batch-only pollers and archive replays (pipeline, jdbc,
+    *    http_poller, dead_letter_queue, stdin, couchdb_changes, exec, pipe,
+    *    elasticsearch) and `kafka`.
+    * [[runConfigStream]] lowers the same section onto `readStream`.
     */
-  def sourceStream(spark: org.apache.spark.sql.SparkSession,
-                   items: Seq[Item]): DataFrame = {
-    val frames = items.collect {
-      case PluginItem(p) if p.name == "file" && strAttr(p, "mode").contains("tail") =>
-        val path = strAttr(p, "path").getOrElse(
-          throw new IllegalArgumentException("file input: path required"))
-        val rd = spark.readStream.format("graft.sources.FileTailSource")
-          .option("path", path)
-        // admission control (backpressure analogue): cap the bytes one
-        // micro-batch admits, so a backlog drains in bounded batches
-        strAttr(p, "max_bytes_per_trigger")
-          .fold(rd)(v => rd.option("max_bytes_per_trigger", parseByteSize(v)))
-          .load()
-      case PluginItem(p) if Set("tcp", "udp", "http", "beats", "relp",
-          "snmptrap", "ganglia", "gelf", "logstash",
-          "elastic_serverless_forwarder")(p.name) =>
-        val port = listenerPort(p)
-        val fmt = p.name match {
-          case "udp" | "snmptrap" | "ganglia" | "gelf" => "graft.sources.UdpSource"
-          case "http" | "logstash" | "elastic_serverless_forwarder" =>
-            "graft.sources.HttpSource"
-          case "beats" => "graft.sources.BeatsSource"
-          case "relp" => "graft.sources.RelpSource"
-          case _ => "graft.sources.TcpSource"
+  def source(spark: org.apache.spark.sql.SparkSession, items: Seq[Item],
+             bus: Option[PipelineBus] = None): DataFrame =
+    lowerInputs(spark, items, streaming = false, bus).frame
+
+
+  /** The batch-only inputs that are neither a listener nor a tail: pollers
+    * (one schedule tick), archive replays and the pipeline address bus.
+    */
+  private def batchInput(spark: org.apache.spark.sql.SparkSession, p: Plugin,
+                         bus: Option[PipelineBus]): DataFrame = p.name match {
+    case "pipeline" =>
+      // the address-bus input: resolve the upstream's registered frame
+      val addr = strAttr(p, "address").getOrElse(
+        throw new IllegalArgumentException("pipeline input: address required"))
+      bus.getOrElse(throw new IllegalStateException(
+        "pipeline input used but no PipelineBus supplied")).resolve(addr)
+    case "jdbc" => jdbcInputFrame(spark, p)
+    case "http_poller" =>
+      // logstash-input-http_poller: poll each NAMED url once per schedule
+      // tick; batch = one tick (like exec). The url map is config-sized,
+      // so the fetches are driver-side like the reference's single poller
+      // thread; body -> message, the poll identity rides along the way
+      // [http_poller_metadata][name] does
+      val urls = p.attr("urls") match {
+        case Some(VHash(es)) => es.map { case (n, v) => v match {
+          case VString(u) => n -> u
+          // the nested { url => ... method => get } request-spec form
+          case VPlugin(spec) => n -> strAttr(spec, "url").getOrElse(
+            throw new IllegalArgumentException(s"http_poller url `$n`: url required"))
+          case other => throw new IllegalArgumentException(
+            s"http_poller url `$n`: expected url string or request spec, got $other")
+        }}
+        case _ => throw new IllegalArgumentException("http_poller input: urls hash required")
+      }
+      val rows = urls.map { case (n, u) =>
+        val (status, body) = Enrich.fetchUrl(u)
+        (n, u, status, Option(body).getOrElse(""), body == null)
+      }
+      import spark.implicits._
+      rows.toSeq.toDF("poller_name", "url", "status", "message", "_failed")
+        .withColumn("tags", when(col("_failed"),
+          array(lit("_http_request_failure"))).otherwise(array().cast("array<string>")))
+        .drop("_failed")
+    case "dead_letter_queue" =>
+      // the DLQ input: replay a persisted DLQ side-channel table
+      // (graft.operators.Dlq.entries shape), oldest-first by entry_time
+      val path = strAttr(p, "path").getOrElse(
+        throw new IllegalArgumentException("dead_letter_queue input: path required"))
+      spark.read.parquet(path)
+    case "couchdb_changes" =>
+      // couchdb_changes input (logstash-input-couchdb_changes): consumes
+      // the CouchDB `_changes` feed — PUBLIC ndjson, one change per line:
+      // {"seq":..,"id":..,"changes":[{"rev":..}],"doc":{..},"deleted":..}.
+      // The live long-poll is an external service; the supported form is
+      // archive replay of a saved feed (`path =>`) — the same boundary as
+      // the syslog/dlq archive inputs. `schema` declares the doc fields
+      // (the schema'd-json contract, no inference double-scan). Emits the
+      // doc columns plus the reference's @metadata as _meta_id/_meta_rev/
+      // _meta_action ("update"/"delete" — deleted changes carry null doc
+      // columns) and _meta_seq.
+      val path = strAttr(p, "path").getOrElse(
+        throw new IllegalArgumentException(
+          "couchdb_changes input: path required (a saved _changes feed; " +
+            "the live long-poll is an external service)"))
+      val ddl = strAttr(p, "schema").getOrElse(
+        throw new IllegalArgumentException(
+          "couchdb_changes input: schema => \"<ddl>\" required (doc fields)"))
+      val docT = org.apache.spark.sql.types.StructType.fromDDL(ddl)
+      val envT = new org.apache.spark.sql.types.StructType()
+        .add("seq", org.apache.spark.sql.types.StringType)
+        .add("id", org.apache.spark.sql.types.StringType)
+        .add("deleted", org.apache.spark.sql.types.BooleanType)
+        .add("changes", org.apache.spark.sql.types.ArrayType(
+          new org.apache.spark.sql.types.StructType()
+            .add("rev", org.apache.spark.sql.types.StringType)))
+        .add("doc", docT)
+      spark.read.text(path)
+        .select(from_json(col("value"), envT).as("_c"))
+        .select(docT.fieldNames.toSeq.map(f => col(s"_c.doc.`$f`").as(f)) ++ Seq(
+          col("_c.id").as("_meta_id"),
+          try_element_at(col("_c.changes"), lit(1)).getField("rev").as("_meta_rev"),
+          when(coalesce(col("_c.deleted"), lit(false)), lit("delete"))
+            .otherwise(lit("update")).as("_meta_action"),
+          col("_c.seq").as("_meta_seq")): _*)
+    case "exec" | "pipe" =>
+      // exec input (logstash-input-exec): run `command`, one event per
+      // stdout line with the command recorded — batch = one tick of the
+      // reference's interval loop, driver-side like the reference's
+      // single plugin thread. The `pipe` input (logstash-input-pipe) is
+      // the same shape minus the interval: a long-running command whose
+      // stdout lines are events — batch drains what the command emits.
+      val cmd = strAttr(p, "command").getOrElse(
+        throw new IllegalArgumentException(s"${p.name} input: command required"))
+      val proc = new ProcessBuilder("/bin/sh", "-c", cmd)
+        .redirectErrorStream(true).start()
+      val outBytes = proc.getInputStream.readAllBytes()
+      proc.waitFor()
+      val lines = new String(outBytes, java.nio.charset.StandardCharsets.UTF_8)
+        .split("\n").filter(_.nonEmpty).toSeq
+      import spark.implicits._
+      lines.toDF("message").withColumn("command", lit(cmd))
+    case "elasticsearch" =>
+      // logstash-input-elasticsearch over the LOCAL index model (the live
+      // cluster is external — same boundary as the elasticsearch filter):
+      // `index_path` is the exported index root (what the elasticsearch
+      // OUTPUT writes, partitioned by `_index`), `index` an ES wildcard
+      // over index names (lowered onto the `_index` partition column —
+      // partition-pruned scan, never a full read), `query` the DSL subset
+      // lowered to native predicates (EsQuery — pushed to the scan).
+      // `docinfo => true` keeps _index/_docid as [@metadata] fields like
+      // the reference's docinfo_target.
+      val idxPath = strAttr(p, "index_path").getOrElse(
+        throw new IllegalArgumentException(
+          "elasticsearch input: index_path required (the local index root " +
+            "— the live-cluster half is external; see COVERAGE.md)"))
+      val raw = spark.read.parquet(idxPath)
+      val byIndex = strAttr(p, "index") match {
+        case Some(pat) if raw.columns.contains("_index") =>
+          raw.filter(col("_index").rlike(
+            graft.operators.EsQuery.wildcardRegex(pat)))
+        case Some(pat) if pat != "*" => throw new IllegalArgumentException(
+          s"elasticsearch input: index => `$pat` but the export at " +
+            s"$idxPath has no _index partition column")
+        case _ => raw
+      }
+      val queried = strAttr(p, "query") match {
+        case Some(q) => byIndex.filter(graft.operators.EsQuery.predicate(q))
+        case None => byIndex
+      }
+      if (strAttr(p, "docinfo").exists(_.toBoolean)) {
+        val d1 = if (queried.columns.contains("_index"))
+          queried.withColumnRenamed("_index", "_meta__index") else queried
+        if (d1.columns.contains("_docid"))
+          d1.withColumnRenamed("_docid", "_meta__id") else d1
+      } else queried.drop("_index", "_docid")
+    case "redis" | "rabbitmq" | "jms" | "twitter" | "azure_event_hubs" |
+         "elasticsearch_eql" | "snmp" =>
+      throw new UnsupportedOperationException(
+        s"input `${p.name}` polls an external service/broker with no " +
+          "local model" + (if (p.name == "snmp")
+            " — received TRAPS are supported via the snmptrap input" else "") +
+          "; land the data as files/tcp/http/beats and ingest from there")
+    case _ =>
+      throw new UnsupportedOperationException(s"unsupported input plugin `${p.name}`")
+  }
+
+  /** The file input's whole-file binary codecs and lake reads: avro,
+    * msgpack/fluent, json/json_lines, csv, and parquet (the default).
+    */
+  private def fileRead(spark: org.apache.spark.sql.SparkSession, path: String,
+                       cp: Option[Plugin]): DataFrame = {
+    def ddl = cp.flatMap(c => strAttr(c, "schema")).getOrElse(
+      throw new IllegalArgumentException(
+        s"codec => ${cp.get.name} requires schema => \"<ddl>\""))
+    cp.fold("parquet")(_.name) match {
+      case "avro" =>
+        // avro codec: consecutive raw binary datums; schema => the avro
+        // schema JSON (the Spark schema derives from it)
+        graft.operators.Codec.avroDecode(
+          spark.read.format("binaryFile").load(path).select(col("content")),
+          "content", ddl)
+      case n @ ("msgpack" | "fluent") =>
+        // binary codecs: a file is a byte stream of consecutive
+        // self-delimiting packed objects; schema => DDL is required
+        // (same contract as the schema'd json codec — no inference)
+        val schema = ddl
+        val bin = spark.read.format("binaryFile").load(path).select(col("content"))
+        if (n == "msgpack") graft.operators.Codec.msgpackDecode(bin, "content", schema)
+        else graft.operators.Codec.fluentDecode(bin, "content", schema)
+      case "json" | "json_lines" =>
+        // codec json_lines { schema => "a STRING, n BIGINT" } skips the
+        // inference scan — the 100 TB path (schemaless inference reads
+        // the corpus twice)
+        cp.flatMap(c => strAttr(c, "schema")) match {
+          case Some(s) => spark.read.schema(
+            org.apache.spark.sql.types.StructType.fromDDL(s)).json(path)
+          case None => spark.read.json(path)
         }
-        val rd0 = spark.readStream.format(fmt).option("port", port)
-        // binary datagram codecs need the base64 whole-frame journal mode
-        val rd = if ((p.name == "udp" && codecPlugin(p).exists(c =>
-            Set("gelf", "collectd", "netflow", "snmptrap", "ganglia")(c.name))) ||
-            Set("snmptrap", "ganglia", "gelf")(p.name))
-          rd0.option("frames", "base64") else rd0
-        val loadedS = strAttr(p, "journal").fold(rd)(j => rd.option("journal", j)).load()
-        if (Set("logstash", "elastic_serverless_forwarder")(p.name)) {
-          // same ndjson decode as the batch path, but a stream cannot scan
-          // ahead to infer — the schema must be declared (batch==stream
-          // parity: jsonParse with an explicit DDL is a stateless projection)
-          requirePlaintext(p, "input")
-          val ddl = strAttr(p, "schema").getOrElse(
-            throw new IllegalArgumentException(
-              s"${p.name} input under streaming: schema => \"<ddl>\" " +
-                "required (the batch path may infer; a stream cannot scan ahead)"))
-          jsonParse(loadedS, "message", None, lit(true), Some(ddl))
-        } else loadedS
-      case PluginItem(p) if p.name == "unix" =>
-        val sock = strAttr(p, "path").getOrElse(
-          throw new IllegalArgumentException("unix input: path required"))
-        val rd = spark.readStream.format("graft.sources.UnixSource")
-          .option("socket", sock)
-          .option("force_unlink", strAttr(p, "force_unlink").getOrElse("false"))
-        strAttr(p, "journal").fold(rd)(j => rd.option("journal", j)).load()
-      case PluginItem(p) if p.name == "syslog" =>
-        // listener/tail front door + the narrow RFC 3164 parse chain — all
-        // streaming-safe (no windows)
-        val raw = (strAttr(p, "path"), strAttr(p, "port")) match {
-          case (Some(path), _) =>
-            spark.readStream.format("graft.sources.FileTailSource")
-              .option("path", path).load()
-          case (_, Some(port)) =>
-            val fmt = if (strAttr(p, "protocol").contains("udp"))
-              "graft.sources.UdpSource" else "graft.sources.TcpSource"
-            val rd = spark.readStream.format(fmt).option("port", port.toInt)
-            strAttr(p, "journal").fold(rd)(j => rd.option("journal", j)).load()
-          case _ => throw new IllegalArgumentException("syslog input: port or path required")
+      case "csv" =>
+        // csv codec (logstash-codec-csv): columns => header names (else
+        // autodetect_column_names reads them from the first line),
+        // separator, skip_header implied by explicit columns=false
+        val sep = cp.flatMap(c => strAttr(c, "separator")).getOrElse(",")
+        val rd = spark.read.option("sep", sep)
+        cp.flatMap(c => c.attr("columns")).map(strList) match {
+          case Some(cols) =>
+            val named = rd.option("header", "false").csv(path)
+            require(named.columns.length == cols.length,
+              s"csv codec: file has ${named.columns.length} columns, " +
+                s"config names ${cols.length}")
+            named.toDF(cols: _*)
+          case None => rd.option("header", "true").csv(path)
         }
-        syslogParse(raw)
-      case PluginItem(p) if p.name == "kafka" =>
-        kafkaFrame(spark, p, streaming = true)
-      case PluginItem(p) if p.name == "heartbeat" =>
-        // liveness ticks stream through the generator MicroBatchStream;
-        // message => "sequence"/"epoch" mirror the batch lowering exactly
-        // (same clock column, epoch pinned by `now`) — batch/stream schema
-        // parity is a contract
-        val count = strAttr(p, "count").map(_.toLong).getOrElse(1000L)
-        val msg = strAttr(p, "message").getOrElse("ok")
-        val gen = spark.readStream.format("graft.sources.GeneratorSource")
-          .option("count", count).option("partitions", 1)
-          .option("lines", if (msg == "sequence" || msg == "epoch") "ok" else msg)
-          .load()
-        msg match {
-          case "sequence" => gen.withColumn("clock", col("seq") + 1)
-          case "epoch" =>
-            val now = strAttr(p, "now").map(s => to_timestamp(lit(s)))
-              .getOrElse(current_timestamp())
-            gen.withColumn("clock", unix_timestamp(now))
-          case _ => gen
-        }
-      case PluginItem(p) if p.name == "generator" =>
-        val count = strAttr(p, "count").map(_.toLong).getOrElse(1000L)
-        val lines = p.attr("lines").map(strList)
-          .orElse(strAttr(p, "message").map(Seq(_)))
-          .getOrElse(Seq("Hello world!"))
-        spark.readStream.format("graft.sources.GeneratorSource")
-          .option("count", count)
-          .option("partitions", spark.sparkContext.defaultParallelism)
-          .option("lines", lines.mkString("|"))
-          .load()
-      case PluginItem(p) =>
-        throw new UnsupportedOperationException(
-          s"input plugin `${p.name}` is not streamable (batch-only)")
+      case _ => spark.read.parquet(path)
     }
-    require(frames.nonEmpty, "config has no streamable input")
-    frames.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
   /** Run a complete config text as a STRUCTURED STREAMING job: streaming
@@ -2724,8 +2483,8 @@ object LsclRun {
     // diverge silently; the keyed-state streaming forms live API-side
     // (StreamPipeline.throttleStream / windowedMetrics /
     // aggregateWithTimeout), and batch mode runs these configs exactly.
-    // (multiline is different by design: per-batch reassembly is the
-    // documented auto_flush_interval analogue, LsclStreamSpec.)
+    // (per-batch input decodes such as multiline are different by design:
+    // the batch is the documented auto_flush_interval analogue, LineCodec.)
     val statefulNames = Set("throttle", "metrics", "aggregate", "elapsed")
     def statefulIn(items: Seq[Item]): Seq[String] = items.flatMap {
       case PluginItem(p) if statefulNames(p.name) => Seq(p.name)
@@ -2747,15 +2506,14 @@ object LsclRun {
       val (pre, rest) = cfg.filters.splitAt(topStatefulIdx)
       val tp = rest.head.asInstanceOf[PluginItem].plugin
       val post = rest.tail
-      require(!cfg.inputs.exists {
-          case PluginItem(p) => codecPlugin(p).exists(_.name == "multiline")
-          case _ => false
-        },
-        s"streamed ${tp.name} cannot combine with a multiline input codec " +
-          "(per-batch reassembly would reorder events under the counter)")
+      // a per-micro-batch input decode would run after the keyed state
+      val in = lowerInputs(spark, cfg.inputs, streaming = true, None)
+      require(in.perBatch.isEmpty,
+        s"streamed ${tp.name} cannot combine with the ${in.perBatch.map(_._1).orNull}: " +
+          "it decodes per micro-batch, after the keyed state would have counted the raw lines")
       // pre-stateful filters must be row-wise projections (they stream as-is;
       // window-based parses fail loudly in analysis at stream start)
-      val preApplied = applyFilters(sourceStream(spark, cfg.inputs), pre)
+      val preApplied = applyFilters(in.frame, pre)
       val stated = tp.name match {
         case "throttle"  => streamThrottle(preApplied, tp)
         case "metrics"   => streamMetrics(preApplied, tp)
@@ -2773,9 +2531,10 @@ object LsclRun {
           "elapsed is the exception — it lowers onto keyed state). Run the config in " +
           "batch mode (runConfig), " +
           "or use the keyed-state streaming operators in graft.streaming.StreamPipeline")
-      val batchCodec = inputBatchCodec(cfg.inputs)
-      graft.streaming.StreamPipeline.run(spark, sourceStream(spark, cfg.inputs),
-        b => applyFilters(batchCodec(b), cfg.filters), sinkSpecs(cfg.outputs), outDir,
+      val in = lowerInputs(spark, cfg.inputs, streaming = true, None)
+      val decode = in.perBatch.fold[DataFrame => DataFrame](identity)(_._2)
+      graft.streaming.StreamPipeline.run(spark, in.frame,
+        b => applyFilters(decode(b), cfg.filters), sinkSpecs(cfg.outputs), outDir,
         checkpoint, trigger, perBatch)
     }
   }

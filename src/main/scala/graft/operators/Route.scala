@@ -21,17 +21,19 @@ import graft.conditions.Cond
   */
 object Route {
 
-  /** `indexTemplate`: the elasticsearch output's per-event sprintf'd index
+  /** One routed output.
+    *
+    * `indexTemplate`: the elasticsearch output's per-event sprintf'd index
     * name (e.g. `logs-%{+YYYY.MM.dd}` daily indices). When set, the sink is
     * written `partitionBy(_index)` with the evaluated template — each index
     * value becomes one partition directory of the sink, the lake analogue
     * of per-day indices, and stays partition-prunable by date.
-    */
-  /** `codec`: sink serialization — None = parquet (the lake-native default);
+    *
+    * `codec`: sink serialization — None = parquet (the lake-native default);
     * `json_lines` = one JSON document per line in text files (the reference
     * file output's DEFAULT codec), encoded executor-side via toJSON.
-    */
-  /** `documentId`: the elasticsearch output's `document_id => "%{...}"` —
+    *
+    * `documentId`: the elasticsearch output's `document_id => "%{...}"` —
     * indexing twice under one id upserts, making replays and duplicate
     * events idempotent. Batch analogue: the sink keeps ONE row per rendered
     * id (per index when the index is also templated, matching ES identity =
@@ -41,13 +43,13 @@ object Route {
     * groupBy(min(struct)) so the exchange gets map-side combine and keys on
     * the id hash — the exact analogue of ES routing documents to shards by
     * _id hash.
-    */
-  /** `csvFields`/`csvSep`: the csv output plugin (logstash-output-csv) —
+    *
+    * `csvFields`/`csvSep`: the csv output plugin (logstash-output-csv) —
     * codec "csv" writes the selected event fields joined by the separator,
     * one line per event (no quoting: the token world's values are
     * separator-free; a quoting writer would slot in here).
-    */
-  /** `esAction`: the elasticsearch output's `action` — a sprintf template
+    *
+    * `esAction`: the elasticsearch output's `action` — a sprintf template
     * (static string = constant action) rendering per event to
     * index|create|update|delete. Batch reduction per (index, id) over the
     * same grouped machinery as `documentId`, in the deterministic
@@ -60,6 +62,8 @@ object Route {
     *    ES version-conflicts the rest); mixed groups prefer the last
     *    index/update (it would overwrite whatever the create put there).
     * Absent => the documentId default (deterministic min-struct upsert).
+    *
+    * `lineFormat`: the line codec's sprintf'd `format` (default `%{message}`).
     */
   final case class SinkSpec(name: String, cond: Cond,
                             decorator: Mutate.Decorator = Mutate.Decorator(),
@@ -242,22 +246,21 @@ object Route {
     * lineage + counts to `outDir`. Idempotent/resumable: a sink directory
     * with a `_SUCCESS` marker is skipped on re-run (counts are recomputed
     * from the trunk, so resumed runs still report exact totals).
-    */
-  /** Execute the fan-out. `ordered = true` reproduces the reference's
-    * `pipeline.ordered` mode (CompiledPipeline.java:317-352): sink files are
-    * range-partitioned and sorted by doc_id, so output order is deterministic
-    * — at the cost of one extra range shuffle, exactly like the reference
-    * pays single-worker serialization. Default is unordered (like the
-    * reference default).
-    */
-  /** `buckets > 0` adds partition-level idempotent overwrite: every sink is
+    *
+    * `ordered = true` reproduces the reference's `pipeline.ordered` mode
+    * (CompiledPipeline.java:317-352): sink files are range-partitioned and
+    * sorted by doc_id, so output order is deterministic — at the cost of one
+    * extra range shuffle, exactly like the reference pays single-worker
+    * serialization. Default is unordered (like the reference default).
+    *
+    * `buckets > 0` adds partition-level idempotent overwrite: every sink is
     * written `partitionBy(_bucket)` (deterministic hash of doc_id) with
     * dynamic partition overwrite, so a retried run after a partial failure
     * rewrites exactly the bucket directories it produces — never appends
     * duplicates — while untouched buckets of other sinks survive. This is
     * the per-partition idempotence the reference gets from PQ acked-batch
     * checkpoints (ackedqueue/Queue.java:200-335), on top of the sink-level
-    * `_SUCCESS` skip.
+    * `_SUCCESS` skip. An empty sink still reads back with its payload schema.
     */
   def run(spark: SparkSession, trunk: DataFrame, sinks: Seq[SinkSpec], outDir: String,
           writeDefault: Boolean = true, ordered: Boolean = false,
@@ -461,6 +464,11 @@ object Route {
             clustered(db).write.mode("overwrite")
               .option("partitionOverwriteMode", "dynamic")
               .partitionBy(parts: _*).parquet(path)
+            // a dynamic-partition write of zero rows leaves no file at all:
+            // write the payload schema, as an unpartitioned write does
+            val dir = new org.apache.hadoop.fs.Path(path)
+            if (!fs.exists(dir) || fs.listStatus(dir).isEmpty)
+              db.drop(parts: _*).limit(0).write.mode("overwrite").parquet(path)
           } else db.write.mode("overwrite").parquet(path)
         }
         path

@@ -49,23 +49,17 @@ class MiscOpsSpec extends SparkSpec {
       Route.SinkSpec("teamA_too", InList("team", Seq("team-0", "team-1"))))
     val sinks = StandardPipeline.sinks ++ extra
     // every sink dir of a run into `dir` holds exactly its per-sink frame
-    // (a bucketed run's read-back carries the _bucket partition column)
-    def assertPerSink(dir: String, sinks: Seq[Route.SinkSpec], r: Route.RunResult,
-                      bucketed: Boolean = false): Unit = {
+    // (a bucketed run's read-back carries the _bucket partition column;
+    // an empty sink's dir reads back with the payload schema either way)
+    def assertPerSink(dir: String, sinks: Seq[Route.SinkSpec], r: Route.RunResult): Unit = {
       val flagged = Route.withSinkFlags(pipe.trunk, sinks)
       for (sp <- sinks) {
         val want = Route.sinkFrame(flagged, sp)
-        // the bucketed writer's dynamic partition overwrite leaves an empty
-        // sink's dir with no file at all, so there is no schema to read
-        lazy val noFiles = new java.io.File(s"$dir/${sp.name}").list().isEmpty
-        if (bucketed && r.counts(sp.name) == 0 && noFiles) assert(want.isEmpty, sp.name)
-        else {
-          val got = spark.read.parquet(s"$dir/${sp.name}").drop("_bucket")
-          assert(got.columns.toSeq == want.columns.toSeq, s"${sp.name} columns")
-          assert(got.count() == r.counts(sp.name), s"${sp.name} count")
-          assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
-            s"${sp.name} rows differ from the per-sink frame")
-        }
+        val got = spark.read.parquet(s"$dir/${sp.name}").drop("_bucket")
+        assert(got.columns.toSeq == want.columns.toSeq, s"${sp.name} columns")
+        assert(got.count() == r.counts(sp.name), s"${sp.name} count")
+        assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+          s"${sp.name} rows differ from the per-sink frame")
       }
     }
     val r = Route.run(spark, pipe.trunk, sinks, out)
@@ -89,8 +83,7 @@ class MiscOpsSpec extends SparkSpec {
     val ordOut = fresh()
     assertPerSink(ordOut, sinks, Route.run(spark, pipe.trunk, sinks, ordOut, ordered = true))
     val bktOut = fresh()
-    assertPerSink(bktOut, sinks, Route.run(spark, pipe.trunk, sinks, bktOut, buckets = 3),
-      bucketed = true)
+    assertPerSink(bktOut, sinks, Route.run(spark, pipe.trunk, sinks, bktOut, buckets = 3))
     val escaped = sinks :+ Route.SinkSpec("a=b", InList("team", Seq("team-0")))
     val escOut = fresh()
     assertPerSink(escOut, escaped, Route.run(spark, pipe.trunk, escaped, escOut))
