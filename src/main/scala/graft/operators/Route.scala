@@ -90,12 +90,12 @@ object Route {
   def flagCol(sink: String): String = s"_m_$sink"
 
   /** Per-sink routed frame (decorated, metadata dropped) from a flagged trunk. */
-  def sinkFrame(flagged: DataFrame, spec: SinkSpec): DataFrame = {
-    val matched = flagged.filter(col(flagCol(spec.name)))
-    val decorated = spec.decorator(matched)
-    val dropCols = decorated.columns.filter(c => c.startsWith("_m_") || c.startsWith(MetaPrefix))
-    decorated.drop(dropCols.toIndexedSeq: _*)
-  }
+  def sinkFrame(flagged: DataFrame, spec: SinkSpec): DataFrame =
+    payload(spec.decorator(flagged.filter(col(flagCol(spec.name)))))
+
+  /** `df` without the match flags and `@metadata` columns: what a sink stores. */
+  private def payload(df: DataFrame): DataFrame =
+    df.drop(df.columns.filter(c => c.startsWith("_m_") || c.startsWith(MetaPrefix)).toIndexedSeq: _*)
 
   /** Rows matching no sink (the implicit else branch). With zero sinks
     * (e.g. a config whose only outputs are network sinks) every row is
@@ -104,8 +104,7 @@ object Route {
   def defaultFrame(flagged: DataFrame, sinks: Seq[SinkSpec]): DataFrame = {
     val none = sinks.map(s => !col(flagCol(s.name)))
       .reduceOption(_ && _).getOrElse(lit(true))
-    val d = flagged.filter(none)
-    d.drop(d.columns.filter(c => c.startsWith("_m_") || c.startsWith(MetaPrefix)).toIndexedSeq: _*)
+    payload(flagged.filter(none))
   }
 
   /** Single-pass per-sink aggregate counts (the north-rule invariant —
@@ -144,6 +143,112 @@ object Route {
         s"sink '${s.name}' sets ${dropped.mkString(", ")}, but $writer writes plain " +
           "parquet and would drop it — write that sink with Route.run instead")
     }
+
+  /** One output of [[fanOut]]: the flagged rows `matched` selects, through
+    * `decorator`.
+    */
+  private[graft] final case class FanTarget(matched: Column,
+                                            decorator: Mutate.Decorator = Mutate.Decorator())
+
+  /** `targets` over `flagged`, analysed once for [[fanOut]]. `schemas` holds
+    * each target's payload schema (what it stores, as [[sinkFrame]] builds
+    * it), so a caller can check them before anything is written. `groups`
+    * holds the target ordinals of each write pass: the targets that share
+    * one decorator and one payload schema.
+    */
+  private[graft] final class FanPlan(val flagged: DataFrame, val targets: Seq[FanTarget]) {
+    val schemas: Seq[org.apache.spark.sql.types.StructType] =
+      targets.map(t => payload(t.decorator(flagged)).schema)
+    private val keys = targets.map(_.decorator).zip(schemas)
+    val groups: Seq[Seq[Int]] = keys.distinct.map(k => targets.indices.filter(keys(_) == k))
+  }
+
+  /** What [[fanOut]] staged for one target: its dir (a schema-only dir when
+    * it got no rows), its row count, and column -> (min, max) for each of
+    * its `bounds` columns (nulls when it holds no non-null value).
+    */
+  private[graft] final case class Fanned(dir: org.apache.hadoop.fs.Path, rows: Long,
+                                         bounds: Map[String, (Any, Any)])
+
+  /** The one fan-out writer (Logstash's compiled output DAG: each batch goes
+    * through once, and every output leaf takes its own subset). Each row
+    * explodes into the ordinals of the targets it matches, and one
+    * `partitionBy(ordinal)` write stages every target of a group (see
+    * [[FanPlan]]) in ONE pass, so no name needs partition-path escaping.
+    * The decorator runs on its group's rows unconditionally, exactly as
+    * [[sinkFrame]] runs it (run conditionally on one target's rows it would
+    * also touch the others': `add_tag` turns a null `tags` into an empty
+    * array). With one group (every plain sink) nothing is persisted. With
+    * more, `flagged` is persisted for the call, so the trunk is computed
+    * once and every target reads the same rows: a nondeterministic column
+    * (LSCL's `uuid`, a random UDF) then agrees across targets. Row counts
+    * and the min/max of each target's `bounds(i)` columns ride the write
+    * job (observed metrics). Every plan is built before the first write, so
+    * an analysis error writes nothing.
+    *
+    * `publish` gets each target's staged dir, in target order, and must
+    * move it out; `staging` is deleted afterwards, whether it succeeds or
+    * fails.
+    */
+  private[graft] def fanOut[T](plan: FanPlan, staging: org.apache.hadoop.fs.Path,
+                               bounds: Int => Seq[String] = _ => Nil)
+                              (publish: Seq[Fanned] => T): T = {
+    val flagged = plan.flagged
+    val targets = plan.targets
+    val spark = flagged.sparkSession
+    val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val label = Iterator.iterate("_t")(_ + "_").find(n => !flagged.columns.contains(n)).get
+    val cache = plan.groups.size > 1
+    if (cache) flagged.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val passes = plan.groups.zipWithIndex.map { case (ords, g) =>
+        val rows = payload(targets(ords.head).decorator(flagged.withColumn(label, explode(filter(
+          array(ords.map(i => when(targets(i).matched, lit(i))): _*), _.isNotNull)))))
+        def of(i: Int, c: Column) = when(col(label) === i, c)
+        val aggs = ords.flatMap(i => count(of(i, lit(1))).as(s"n$i") +:
+          bounds(i).zipWithIndex.flatMap { case (c, j) =>
+            Seq(min(of(i, col(c))).as(s"lo${i}_$j"), max(of(i, col(c))).as(s"hi${i}_$j")) })
+        val obs = org.apache.spark.sql.Observation()
+        (new org.apache.hadoop.fs.Path(staging, s"g$g"), ords, obs,
+          rows.observe(obs, aggs.head, aggs.tail: _*))
+      }
+      val staged = passes.flatMap { case (dir, ords, obs, rows) =>
+        rows.write.mode("overwrite").partitionBy(label).parquet(dir.toString)
+        val m = obs.get
+        ords.map { i =>
+          val d = new org.apache.hadoop.fs.Path(dir, s"$label=$i")
+          // a target with no rows gets no partition dir: stage its schema
+          if (!fs.exists(d)) writeSchemaOnly(spark, new org.apache.hadoop.fs.Path(d, "part-00000.parquet"),
+            org.apache.spark.sql.types.StructType(rows.schema.filter(_.name != label)))
+          i -> Fanned(d, m(s"n$i").asInstanceOf[Long], bounds(i).zipWithIndex.map {
+            case (c, j) => c -> (m(s"lo${i}_$j"), m(s"hi${i}_$j")) }.toMap)
+        }
+      }.sortBy(_._1).map(_._2)
+      publish(staged)
+    } finally {
+      fs.delete(staging, true)
+      if (cache) flagged.unpersist(blocking = false)
+      ()
+    }
+  }
+
+  /** A parquet file at `file` holding `schema` and no rows, written on the
+    * driver: the file Spark writes for an empty frame (no row group, the
+    * schema in the footer), without a Spark job.
+    */
+  private def writeSchemaOnly(spark: SparkSession, file: org.apache.hadoop.fs.Path,
+                              schema: org.apache.spark.sql.types.StructType): Unit = {
+    import org.apache.parquet.hadoop.{ParquetFileWriter, ParquetWriter}
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport,
+      SparkToParquetSchemaConverter}
+    val w = new ParquetFileWriter(
+      org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(file, spark.sessionState.newHadoopConf()),
+      new SparkToParquetSchemaConverter(spark.sessionState.conf).convert(schema),
+      ParquetFileWriter.Mode.CREATE, ParquetWriter.DEFAULT_BLOCK_SIZE, ParquetWriter.MAX_PADDING_SIZE_DEFAULT,
+      null, org.apache.parquet.column.ParquetProperties.builder().build())
+    w.start()
+    w.end(java.util.Map.of(ParquetReadSupport.SPARK_METADATA_KEY, schema.json))
+  }
 
   final case class RunResult(counts: Map[String, Long], sinkPaths: Map[String, String],
                              resumedSinks: Seq[String], manifestPath: String = "")
@@ -213,13 +318,9 @@ object Route {
     val jstr = graft.model.Json.quote _
     val counts = spark.read.parquet(s"$outDir/_counts")
       .collect().map(r => r.getString(0) -> r.getLong(1)).sortBy(_._1)
-    val metrics: Seq[(String, Double)] =
-      try spark.read.parquet(s"$outDir/_metrics")
-        .collect().map(r => r.getString(0) -> r.getDouble(1)).toSeq.sortBy(_._1)
-      catch { case _: Throwable => Nil }
-    val lineageParts =
-      try spark.read.parquet(s"$outDir/_lineage").count()
-      catch { case _: Throwable => 0L }
+    val metrics: Seq[(String, Double)] = readIfPresent(spark, s"$outDir/_metrics")(
+      _.collect().map(r => r.getString(0) -> r.getDouble(1)).toSeq.sortBy(_._1)).getOrElse(Nil)
+    val lineageParts = readIfPresent(spark, s"$outDir/_lineage")(_.count()).getOrElse(0L)
     val snapshot = latestManifest(spark, outDir)
       .flatMap("\"snapshot_id\":(\\d+)".r.findFirstMatchIn(_)).map(_.group(1)).getOrElse("null")
     val total = counts.toMap.getOrElse("_total", 0L)
@@ -229,6 +330,18 @@ object Route {
       s""""pipelines":{"main":{"plugins":{"outputs":{$out}},""" +
       s""""flow":{${metrics.map { case (k, v) => s"${jstr(k)}:$v" }.mkString(",")}},""" +
       s""""lineage_partitions":$lineageParts,"snapshot_id":$snapshot}}}"""
+  }
+
+  /** `f` over the parquet table at `path`; None when no such path exists.
+    * Any other failure (a corrupt or unreadable table) fails naming the path:
+    * a broken table must not read as an absent one.
+    */
+  private def readIfPresent[T](spark: SparkSession, path: String)(f: DataFrame => T): Option[T] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) None
+    else try Some(f(spark.read.parquet(path))) catch {
+      case e: Exception => throw new IllegalStateException(s"cannot read $path: ${e.getMessage}", e)
+    }
   }
 
   /** Latest committed manifest JSON for an output dir, if any run completed. */
@@ -271,6 +384,7 @@ object Route {
     sinks.foreach(sp => require(!sp.name.startsWith("_"),
       s"sink name '${sp.name}' starts with '_', which is reserved for Route.run's " +
         "own outputs (_default, _lineage, _counts, _metrics, _manifests) — rename the sink"))
+    sinks.foreach(sp => require(sp.name.nonEmpty, "a sink name is empty: its dir would be outDir itself"))
     val trunk1 =
       if (ordered) trunk.repartitionByRange(col("doc_id")).sortWithinPartitions("doc_id")
       else trunk
@@ -283,17 +397,15 @@ object Route {
       // identity decorator) writes exactly filter(flag) + drop(internal
       // columns) — the same payload columns as every other plain sink and
       // as the default branch. Writing N of them separately re-reads the
-      // persisted trunk N times: N write jobs and, at scale, N full passes
-      // over the routed data. One partitionBy(_sink) write produces all of
-      // them in ONE pass (a row explodes only into the sinks it matches —
-      // exactly the rows the N separate writes hold), then each partition
-      // dir is renamed to the sink's contract path and given its _SUCCESS
-      // marker, so the read-back layout and resume semantics are unchanged.
-      // Falls back to the per-sink writer for: zero-row sinks (preserving
-      // the empty-dir-with-schema layout), `ordered` runs (the dynamic-
-      // partition writer's internal sort on the partition key need not be
-      // stable, and ordered mode's contract is within-file order), bucketed
-      // runs (two-level layout), and names needing partition-path escaping.
+      // persisted trunk N times. [[fanOut]] stages all of them in ONE pass
+      // (a row explodes only into the sinks it matches — exactly the rows
+      // the N separate writes hold, a sink with no rows gets a schema-only
+      // dir), then each staged dir is renamed to the sink's contract path
+      // and given its _SUCCESS marker, so the read-back layout and resume
+      // semantics are unchanged. Decorated and non-plain sinks, `ordered`
+      // runs (the dynamic-partition writer's internal sort on the partition
+      // key need not be stable, and ordered mode's contract is within-file
+      // order) and bucketed runs (two-level layout) use the per-sink writer.
       val outFs = new org.apache.hadoop.fs.Path(outDir).getFileSystem(hadoopConf)
       // reap staging debris of a crashed earlier combined write, whatever
       // this run writes (a fully resumed rerun stages nothing)
@@ -304,15 +416,13 @@ object Route {
       def hasSuccess(name: String): Boolean =
         outFs.exists(new org.apache.hadoop.fs.Path(s"$outDir/$name", "_SUCCESS"))
       val combineEligible: Seq[SinkSpec] =
-        if (ordered || buckets > 0 || trunk1.columns.contains("_sink")) Nil
+        if (ordered || buckets > 0) Nil
         else sinks.filter(sp =>
           sp.indexTemplate.isEmpty && sp.codec.isEmpty && sp.documentId.isEmpty &&
             sp.csvFields.isEmpty && sp.esAction.isEmpty && sp.lineFormat.isEmpty &&
-            sp.decorator == Mutate.Decorator() &&
-            sp.name.nonEmpty && sp.name.forall(c => c.isLetterOrDigit || c == '_' || c == '-'))
+            sp.decorator == Mutate.Decorator())
       val combineSinks = combineEligible.filterNot(sp => hasSuccess(sp.name))
-      val combineDefault = writeDefault && !ordered && buckets == 0 &&
-        !trunk1.columns.contains("_sink") && !hasSuccess("_default")
+      val combineDefault = writeDefault && !ordered && buckets == 0 && !hasSuccess("_default")
       val combineTargets = combineSinks.map(_.name) ++
         (if (combineDefault) Seq("_default") else Nil)
       val combinedDone: Set[String] =
@@ -320,31 +430,21 @@ object Route {
         else {
           val anyMatch = sinks.map(s => col(flagCol(s.name)))
             .reduceOption(_ || _).getOrElse(lit(false))
-          val labels = combineSinks.map(sp => when(col(flagCol(sp.name)), lit(sp.name))) ++
-            (if (combineDefault) Seq(when(!anyMatch, lit("_default"))) else Nil)
-          val dropCols = flagged.columns
-            .filter(c => c.startsWith("_m_") || c.startsWith(MetaPrefix))
-          val combined = flagged
-            .withColumn("_sink",
-              explode(filter(array(labels.toIndexedSeq: _*), v => v.isNotNull)))
-            .drop(dropCols.toIndexedSeq: _*)
+          val targets = combineSinks.map(sp => FanTarget(col(flagCol(sp.name)))) ++
+            (if (combineDefault) Seq(FanTarget(!anyMatch)) else Nil)
           val staging = new org.apache.hadoop.fs.Path(
             outDir, s".sinkstage-${java.util.UUID.randomUUID().toString.take(8)}")
-          try {
-            combined.write.mode("overwrite").partitionBy("_sink").parquet(staging.toString)
-            combineTargets.flatMap { name =>
-              val src = new org.apache.hadoop.fs.Path(staging, s"_sink=$name")
-              if (!outFs.exists(src)) None // zero rows: per-sink fallback keeps the empty layout
-              else {
-                val dst = new org.apache.hadoop.fs.Path(s"$outDir/$name")
-                if (outFs.exists(dst)) outFs.delete(dst, true)
-                require(outFs.rename(src, dst),
-                  s"combined sink write: rename $src -> $dst failed")
-                outFs.create(new org.apache.hadoop.fs.Path(dst, "_SUCCESS"), true).close()
-                Some(name)
-              }
+          fanOut(new FanPlan(flagged, targets), staging) { staged =>
+            combineTargets.zip(staged).map { case (name, f) =>
+              val dst = new org.apache.hadoop.fs.Path(s"$outDir/$name")
+              if (outFs.exists(dst)) outFs.delete(dst, true)
+              outFs.mkdirs(dst.getParent)
+              require(outFs.rename(f.dir, dst),
+                s"combined sink write: rename ${f.dir} -> $dst failed")
+              outFs.create(new org.apache.hadoop.fs.Path(dst, "_SUCCESS"), true).close()
+              name
             }.toSet
-          } finally { outFs.delete(staging, true); () }
+          }
         }
       def writeIfNeeded(name: String, df: => DataFrame,
                         indexTemplate: Option[String] = None,

@@ -480,13 +480,15 @@ object SnapshotTable {
   }
 
   /** Child of one data dir `name` already on disk (adopted streaming files,
-    * a published staged batch) holding `rows` rows: one stats job, then the
+    * a published staged batch, a fanned-out sink) holding `rows` rows: its
+    * `stats` when the writer observed them, else one stats job; then the
     * sketches.
     */
   private def onDiskChild(spark: SparkSession, fs: FileSystem, root: Path,
-                          name: String, rows: Long, to: ChildOf): Child = {
+                          name: String, rows: Long, to: ChildOf,
+                          stats: Option[Seq[DirStat]] = None): Child = {
     val dataPath = new Path(dataDir(root), name).toString
-    Child(Seq(name), rows, computeStats(spark, dataPath, name, to.statsCols),
+    Child(Seq(name), rows, stats.getOrElse(computeStats(spark, dataPath, name, to.statsCols)),
       computeBlooms(spark, fs, root, dataPath, name, to.bloomCols, rowsHint = rows))
   }
 
@@ -1148,25 +1150,35 @@ object SnapshotTable {
                             cols: Seq[String],
                             extra: Seq[org.apache.spark.sql.Column] = Nil)
       : (Long, Seq[DirStat], Map[String, Any]) = {
-    cols.foreach(c => require(c.matches("[A-Za-z0-9_.]+"),
-      s"stats column name '$c' must match [A-Za-z0-9_.]+"))
-    val present = cols.filter(df.columns.contains)
-    val domains = present.map(c => c -> statDomain(df.schema(c).dataType)).toMap
+    val present = statColumns(df.schema, cols)
     val obs = org.apache.spark.sql.Observation()
     val aggs = (count(lit(1)).as("_rows") +: present.zipWithIndex.flatMap {
-      case (c, i) => Seq(min(col(c)).as(s"_lo_$i"), max(col(c)).as(s"_hi_$i")) }) ++ extra
+      case ((c, _), i) => Seq(min(col(c)).as(s"_lo_$i"), max(col(c)).as(s"_hi_$i")) }) ++ extra
     df.observe(obs, aggs.head, aggs.tail: _*)
       .write.mode("overwrite").parquet(dataPath)
     val row = obs.get
-    val stats = present.zipWithIndex.flatMap { case (c, i) =>
-      (Option(row(s"_lo_$i")), Option(row(s"_hi_$i"))) match {
-        case (Some(lo), Some(hi)) =>
-          Some(DirStat(dirName, c, domains(c), lo.toString, hi.toString))
-        case _ => None
-      }
+    val stats = present.zipWithIndex.flatMap { case ((c, tpe), i) =>
+      dirStat(dirName, c, tpe, row(s"_lo_$i"), row(s"_hi_$i"))
     }
     (row("_rows").asInstanceOf[Long], stats, row)
   }
+
+  /** The `cols` that `schema` holds, each with its stats domain. A malformed
+    * name or a non-comparable type fails here, before anything is written.
+    */
+  private def statColumns(schema: org.apache.spark.sql.types.StructType,
+                          cols: Seq[String]): Seq[(String, String)] = {
+    cols.foreach(c => require(c.matches("[A-Za-z0-9_.]+"),
+      s"stats column name '$c' must match [A-Za-z0-9_.]+"))
+    cols.filter(schema.fieldNames.contains).map(c => c -> statDomain(schema(c).dataType))
+  }
+
+  /** Stats entry of column `c` of dir `dirName` from its min/max; none when
+    * the column holds no non-null value (absent stats never prune).
+    */
+  private def dirStat(dirName: String, c: String, tpe: String,
+                      lo: Any, hi: Any): Option[DirStat] =
+    for (l <- Option(lo); h <- Option(hi)) yield DirStat(dirName, c, tpe, l.toString, h.toString)
 
   /** Min/max bounds of `cols` over one just-written data dir — a single
     * narrow agg job over files that are already hot (at production scale
@@ -1179,20 +1191,13 @@ object SnapshotTable {
   private def computeStats(spark: SparkSession, dataPath: String, dirName: String,
                            cols: Seq[String]): Seq[DirStat] = {
     if (cols.isEmpty) return Nil
-    cols.foreach(c => require(c.matches("[A-Za-z0-9_.]+"),
-      s"stats column name '$c' must match [A-Za-z0-9_.]+"))
     val df = spark.read.parquet(dataPath)
-    val present = cols.filter(c => df.columns.contains(c))
+    val present = statColumns(df.schema, cols)
     if (present.isEmpty) return Nil
-    val domains = present.map(c => c -> statDomain(df.schema(c).dataType)).toMap
-    val aggs = present.flatMap(c => Seq(min(col(c)), max(col(c))))
+    val aggs = present.flatMap { case (c, _) => Seq(min(col(c)), max(col(c))) }
     val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-    present.zipWithIndex.flatMap { case (c, i) =>
-      (Option(row.get(2 * i)), Option(row.get(2 * i + 1))) match {
-        case (Some(lo), Some(hi)) =>
-          Some(DirStat(dirName, c, domains(c), lo.toString, hi.toString))
-        case _ => None
-      }
+    present.zipWithIndex.flatMap { case ((c, tpe), i) =>
+      dirStat(dirName, c, tpe, row.get(2 * i), row.get(2 * i + 1))
     }
   }
 
@@ -2978,24 +2983,70 @@ object SnapshotTable {
     orphans
   }
 
-  /** Route integration: append every sink's routed frame to its own
-    * snapshot table under `tableRoot/<sink>`, all sharing one batch id —
-    * the north star's "conditional fan-out routing to multiple Iceberg sink
-    * tables", resumable: a retried run re-appends only the sinks whose
-    * (sink, batch) commit is missing, so a crash between sink commits
-    * resumes exactly-once per sink. The trunk is flagged once and persisted
-    * so the fan-out costs one input scan (same stance as Route.run).
+  /** Route integration: append every sink's routed frame
+    * ([[Route.sinkFrame]]) to its own snapshot table under
+    * `tableRoot/<sink>`, all under one batch id — the north star's
+    * "conditional fan-out routing to multiple Iceberg sink tables",
+    * exactly-once per sink.
+    *
+    * Every sink table's head and ledger are read on the driver first. A sink
+    * that already holds `batchId` returns that commit as `skippedExisting`
+    * and costs no Spark job, so a replayed batch starts none, and a retry
+    * after a crash between sink commits appends only the missing sinks.
+    * Each pending sink's schema is merged with its table's before anything
+    * is written, so a type conflict in any sink fails the whole call with
+    * nothing committed. The pending sinks are then written by
+    * [[Route.fanOut]]: one pass over the trunk per decorator and payload
+    * schema, each sink's row count and its table's stats bounds observed in
+    * that same job. When every pending sink shares one pass (plain sinks)
+    * nothing is persisted; with more passes the flagged trunk is persisted
+    * for the call, so every sink reads the same rows. Each staged dir is
+    * then committed through [[commitChild]] as its table's next `snap-N`,
+    * with Bloom sketches as the table asks for them. The staging dir sits
+    * under the first pending sink table's `data/`, unreferenced, so
+    * [[vacuum]] reaps it after a killed JVM; a failed call removes it itself.
     */
   def appendSinks(spark: SparkSession, trunk: DataFrame, sinks: Seq[Route.SinkSpec],
                   tableRoot: String, batchId: String): Map[String, Commit] = {
     Route.requirePlainSinks(sinks, "SnapshotTable.appendSinks")
-    graft.plans.CacheScope.scoped {
-      // persist is eager (one populate job), so sink writes share the cache
-      val flagged = graft.plans.CacheScope.persist(Route.withSinkFlags(trunk, sinks))
-      sinks.map { s =>
-        s.name -> append(spark, Route.sinkFrame(flagged, s), s"$tableRoot/${s.name}",
-          Some(batchId))
-      }.toMap
+    final case class Sink(spec: Route.SinkSpec, dir: String, fs: FileSystem, root: Path,
+                          head: Head, held: Option[Long])
+    val tables = sinks.map { s =>
+      val dir = s"$tableRoot/${s.name}"
+      val (fs, root) = fsOf(spark, dir)
+      val head = readHead(fs, manifestDir(root))
+      Sink(s, dir, fs, root, head, resolveLedger(fs, manifestDir(root), head, Some(batchId))
+        .collectFirst { case (`batchId`, snap) => snap })
+    }
+    val done = tables.collect { case Sink(s, _, _, _, _, Some(snap)) =>
+      s.name -> Commit(snap, skippedExisting = true) }.toMap
+    val pending = tables.filter(_.held.isEmpty)
+    if (pending.isEmpty) return done
+    val plan = new Route.FanPlan(Route.withSinkFlags(trunk, pending.map(_.spec)),
+      pending.map(t => Route.FanTarget(col(Route.flagCol(t.spec.name)), t.spec.decorator)))
+    val schemas = plan.schemas
+    pending.zip(schemas).foreach { case (t, schema) =>
+      t.head.latest.flatMap(_.schema).foreach(mergeSchemas(_, schema)) }
+    val stats = pending.zip(schemas).map { case (t, schema) =>
+      statColumns(schema, t.head.latest.map(_.statsCols).getOrElse(Nil)) }
+    val staging = new Path(dataDir(pending.head.root),
+      s"fanstage-${java.util.UUID.randomUUID().toString.replace("-", "").take(8)}")
+    Route.fanOut(plan, staging, stats.map(_.map(_._1))) { staged =>
+      done ++ pending.indices.map { k =>
+        val t = pending(k)
+        val f = staged(k)
+        t.spec.name -> commitChild(spark, t.dir, "append", Some(batchId), Some(schemas(k))) { to =>
+          val name = f"snap-${to.next}%06d"
+          val dest = new Path(dataDir(t.root), name)
+          // an existing dest is an uncommitted crash leftover (see publishStaged)
+          if (t.fs.exists(dest)) t.fs.delete(dest, true)
+          t.fs.mkdirs(dataDir(t.root))
+          require(t.fs.rename(f.dir, dest), s"appendSinks could not move ${f.dir} to $dest")
+          val observed = stats(k).flatMap { case (c, tpe) =>
+            dirStat(name, c, tpe, f.bounds(c)._1, f.bounds(c)._2) }
+          Some(onDiskChild(spark, t.fs, t.root, name, f.rows, to, Some(observed)))
+        }.get
+      }
     }
   }
 }

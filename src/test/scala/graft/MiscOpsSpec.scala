@@ -42,7 +42,7 @@ class MiscOpsSpec extends SparkSpec {
     import graft.conditions.{Eq, InList}
     val out = java.nio.file.Files.createTempDirectory("graft_combined").toString
     val pipe = StandardPipeline.fromDir(spark, sfDir)
-    // never-matching plain sink (empty-dir fallback) + a sink overlapping
+    // never-matching plain sink (a schema-only dir) + a sink overlapping
     // teamA (a row must land in BOTH dirs via the explode)
     val extra = Seq(
       Route.SinkSpec("never_sink", Eq("severity", "NOPE")),
@@ -77,14 +77,17 @@ class MiscOpsSpec extends SparkSpec {
     val r2 = Route.run(spark, pipe.trunk, sinks, out)
     assert(sinks.map(_.name).toSet.subsetOf(r2.resumedSinks.toSet))
     assert(r2.counts == r.counts)
-    // the per-sink fallbacks keep the same contract: ordered and bucketed
-    // runs with several plain sinks, and a name needing path escaping
+    // the per-sink writer keeps the same contract (ordered and bucketed
+    // runs with several plain sinks), and so do names that a partition
+    // path would have to escape
     def fresh() = java.nio.file.Files.createTempDirectory("graft_combined").toString
     val ordOut = fresh()
     assertPerSink(ordOut, sinks, Route.run(spark, pipe.trunk, sinks, ordOut, ordered = true))
     val bktOut = fresh()
     assertPerSink(bktOut, sinks, Route.run(spark, pipe.trunk, sinks, bktOut, buckets = 3))
-    val escaped = sinks :+ Route.SinkSpec("a=b", InList("team", Seq("team-0")))
+    val escaped = sinks ++ Seq(Route.SinkSpec("a=b", InList("team", Seq("team-0"))),
+      Route.SinkSpec("x y", InList("team", Seq("team-1"))),
+      Route.SinkSpec("p/q", InList("team", Seq("team-2"))))
     val escOut = fresh()
     assertPerSink(escOut, escaped, Route.run(spark, pipe.trunk, escaped, escOut))
   }
@@ -98,6 +101,12 @@ class MiscOpsSpec extends SparkSpec {
       val e = intercept[IllegalArgumentException](Route.run(spark, pipe.trunk, sinks, out))
       assert(e.getMessage.contains(s"'$name'") && e.getMessage.contains("reserved"))
     }
+    // an empty name would make the sink's dir outDir itself
+    val out = java.nio.file.Files.createTempDirectory("graft_reserved").toString
+    val e = intercept[IllegalArgumentException](Route.run(spark, pipe.trunk,
+      StandardPipeline.sinks :+ Route.SinkSpec("", Eq("severity", "ERROR")), out))
+    assert(e.getMessage.contains("empty"), e.getMessage)
+    assert(new java.io.File(out).list().isEmpty)
   }
 
   test("run manifest and nodeStats stay valid JSON for a sink name with a control character") {
@@ -112,6 +121,22 @@ class MiscOpsSpec extends SparkSpec {
     val stats = mapper.readTree(Route.nodeStats(spark, out))
     assert(stats.at("/pipelines/main/plugins/outputs").has(name))
     assert(stats.at("/pipelines/main/flow").has(s"events_out_$name"))
+  }
+
+  test("nodeStats fails naming the table when _lineage is corrupt, and reads absent tables as absent") {
+    import graft.conditions.Eq
+    val out = java.nio.file.Files.createTempDirectory("graft_stats").toString
+    val pipe = StandardPipeline.fromDir(spark, sfDir)
+    Route.run(spark, pipe.trunk, Seq(Route.SinkSpec("errs", Eq("severity", "ERROR"))), out)
+    // no _metrics (run, not runWithMetrics): an absent table, no flow entries
+    assert(Route.nodeStats(spark, out).contains("\"flow\":{}"))
+    val part = new java.io.File(s"$out/_lineage").listFiles()
+      .filter(_.getName.endsWith(".parquet")).head.toPath
+    val bytes = java.nio.file.Files.readAllBytes(part)
+    java.nio.file.Files.write(part, bytes.take(bytes.length / 2))
+    java.nio.file.Files.deleteIfExists(part.resolveSibling(s".${part.getFileName}.crc"))
+    val e = intercept[IllegalStateException](Route.nodeStats(spark, out))
+    assert(e.getMessage.contains(s"$out/_lineage"), e.getMessage)
   }
 
   test("a fully resumed rerun reaps crashed combined-write staging dirs") {

@@ -140,6 +140,36 @@ class SnapshotCommitSpec extends SparkSpec {
     assert(got.size == GoldenManifests.maintenance.size)
   }
 
+  test("appendSinks: every sink table's manifests equal their golden bytes") {
+    import spark.implicits._
+    import graft.conditions.{Eq, Gte, Lt}
+    import graft.operators.{Mutate, Route}
+    val root = tmp()
+    def batch(ids: Range) = ids.map(i =>
+      (i.toLong, s"v$i", if (i % 3 == 0) "ERROR" else "INFO")).toDF("id", "v", "sev")
+    // sink tables whose stats/bloom properties come from an earlier append
+    ST.append(spark, batch(100 until 102), s"$root/errs", Some("pre"),
+      statsBy = Seq("id"), bloomBy = Seq("v"))
+    ST.append(spark, batch(200 until 201), s"$root/empty", Some("pre"),
+      statsBy = Seq("v"), bloomBy = Seq("id"))
+    val sinks = Seq(
+      Route.SinkSpec("errs", Eq("sev", "ERROR")),
+      Route.SinkSpec("high", Gte("id", 4L)),       // overlaps errs
+      Route.SinkSpec("empty", Eq("sev", "FATAL")),  // never gets a row
+      Route.SinkSpec("noted", Lt("id", 3L),         // a second payload schema
+        Mutate.Decorator(addField = Seq("note" -> "n%{id}"))))
+    ST.appendSinks(spark, batch(0 until 8), sinks, root, "b1")
+    assert(ST.appendSinks(spark, batch(0 until 8), sinks, root, "b1")
+      .values.forall(_.skippedExisting))
+    ST.appendSinks(spark, batch(8 until 12), sinks, root, "b2")
+    val got = sinks.map(s => s"$root/${s.name}")
+      .flatMap(t => manifests(t, 0L to ST.latestId(spark, t).get))
+    got.zip(GoldenManifests.sinks).zipWithIndex.foreach { case ((g, w), i) =>
+      assert(g == w, s"manifest $i")
+    }
+    assert(got.size == GoldenManifests.sinks.size)
+  }
+
   test("a reset ledger never skips a replayed batch whose rows were removed") {
     // truncate removes every row: the batch re-appends
     val t1 = tmp()
@@ -213,6 +243,18 @@ object GoldenManifests {
     """{"snapshot_id":12,"parent_id":11,"operation":"replace","batch_id":null,"added_rows":0,"total_rows":14,"added":["snap-000012/_b=0","snap-000012/_b=1"],"live":["snap-000012/_b=0","snap-000012/_b=1"],"batch_commits":["b0|1","b1|2","k1|6","k2|7","b2|10"],"schema_b64":"eyJ0eXBlIjoic3RydWN0IiwiZmllbGRzIjpbeyJuYW1lIjoiaWQiLCJ0eXBlIjoibG9uZyIsIm51bGxhYmxlIjp0cnVlLCJtZXRhZGF0YSI6e319LHsibmFtZSI6InYiLCJ0eXBlIjoic3RyaW5nIiwibnVsbGFibGUiOnRydWUsIm1ldGFkYXRhIjp7fX0seyJuYW1lIjoibm90ZSIsInR5cGUiOiJzdHJpbmciLCJudWxsYWJsZSI6dHJ1ZSwibWV0YWRhdGEiOnt9fV19","stats_cols":["id"],"stats":["snap-000012/_b=1|id|long|OQ==|NTAy","snap-000012/_b=0|id|long|MA==|OA=="],"bloom_cols":["v"],"blooms":["snap-000012/_b=0|v","snap-000012/_b=1|v"],"deletes":[],"commit_time_ms":0}""",
     """{"snapshot_id":13,"parent_id":12,"operation":"rollback","batch_id":null,"added_rows":0,"total_rows":13,"added":[],"live":["snap-000009","snap-000010"],"batch_commits":["b0|1","b1|2","k1|6","k2|7","b2|10"],"schema_b64":"eyJ0eXBlIjoic3RydWN0IiwiZmllbGRzIjpbeyJuYW1lIjoiaWQiLCJ0eXBlIjoibG9uZyIsIm51bGxhYmxlIjp0cnVlLCJtZXRhZGF0YSI6e319LHsibmFtZSI6InYiLCJ0eXBlIjoic3RyaW5nIiwibnVsbGFibGUiOnRydWUsIm1ldGFkYXRhIjp7fX0seyJuYW1lIjoibm90ZSIsInR5cGUiOiJzdHJpbmciLCJudWxsYWJsZSI6dHJ1ZSwibWV0YWRhdGEiOnt9fV19","stats_cols":["id"],"stats":["snap-000006-del|id|long|NA==|NA==","snap-000007-del|id|long|NQ==|MTAw","snap-000008-del|id|long|Ng==|MjAw","snap-000009|id|long|MA==|MjAw","snap-000010|id|long|NTAw|NTAy"],"bloom_cols":["v"],"blooms":["snap-000009|v","snap-000010|v"],"deletes":[],"commit_time_ms":0}""",
     """{"snapshot_id":14,"parent_id":13,"operation":"overwrite","batch_id":null,"added_rows":0,"total_rows":0,"added":[],"live":[],"batch_commits":[],"schema_b64":"eyJ0eXBlIjoic3RydWN0IiwiZmllbGRzIjpbeyJuYW1lIjoiaWQiLCJ0eXBlIjoibG9uZyIsIm51bGxhYmxlIjp0cnVlLCJtZXRhZGF0YSI6e319LHsibmFtZSI6InYiLCJ0eXBlIjoic3RyaW5nIiwibnVsbGFibGUiOnRydWUsIm1ldGFkYXRhIjp7fX0seyJuYW1lIjoibm90ZSIsInR5cGUiOiJzdHJpbmciLCJudWxsYWJsZSI6dHJ1ZSwibWV0YWRhdGEiOnt9fV19","stats_cols":["id"],"stats":[],"bloom_cols":["v"],"blooms":[],"deletes":[],"commit_time_ms":0}"""
+  )
+  val sinks: Seq[String] = Seq(
+    """{"snapshot_id":0,"parent_id":null,"operation":"append","batch_id":"pre","added_rows":2,"total_rows":2,"added":["snap-000000"],"live":["snap-000000"],"batch_commits":["pre|0"],"schema_b64":"eyJ0eXBlIjoic3RydWN0IiwiZmllbGRzIjpbeyJuYW1lIjoiaWQiLCJ0eXBlIjoibG9uZyIsIm51bGxhYmxlIjpmYWxzZSwibWV0YWRhdGEiOnt9fSx7Im5hbWUiOiJ2IiwidHlwZSI6InN0cmluZyIsIm51bGxhYmxlIjp0cnVlLCJtZXRhZGF0YSI6e319LHsibmFtZSI6InNldiIsInR5cGUiOiJzdHJpbmciLCJudWxsYWJsZSI6dHJ1ZSwibWV0YWRhdGEiOnt9fV19","stats_cols":["id"],"stats":["snap-000000|id|long|MTAw|MTAx"],"bloom_cols":["v"],"blooms":["snap-000000|v"],"deletes":[],"commit_time_ms":0}""",
+    """{"snapshot_id":1,"parent_id":0,"operation":"append","batch_id":"b1","added_rows":3,"total_rows":5,"added":["snap-000001"],"live":["snap-000000","snap-000001"],"batch_commits":["pre|0","b1|1"],"schema_b64":"eyJ0eXBlIjoic3RydWN0IiwiZmllbGRzIjpbeyJuYW1lIjoiaWQiLCJ0eXBlIjoibG9uZyIsIm51bGxhYmxlIjp0cnVlLCJtZXRhZGF0YSI6e319LHsibmFtZSI6InYiLCJ0eXBlIjoic3RyaW5nIiwibnVsbGFibGUiOnRydWUsIm1ldGFkYXRhIjp7fX0seyJuYW1lIjoic2V2IiwidHlwZSI6InN0cmluZyIsIm51bGxhYmxlIjp0cnVlLCJtZXRhZGF0YSI6e319XX0=","stats_cols":["id"],"stats":["snap-000000|id|long|MTAw|MTAx","snap-000001|id|long|MA==|Ng=="],"bloom_cols":["v"],"blooms":["snap-000000|v","snap-000001|v"],"deletes":[],"commit_time_ms":0}""",
+    """{"snapshot_id":2,"parent_id":1,"operation":"append","batch_id":"b2","added_rows":1,"total_rows":6,"added":["snap-000002"],"live":["snap-000000","snap-000001","snap-000002"],"batch_commits":["pre|0","b1|1","b2|2"],"schema_b64":"eyJ0eXBlIjoic3RydWN0IiwiZmllbGRzIjpbeyJuYW1lIjoiaWQiLCJ0eXBlIjoibG9uZyIsIm51bGxhYmxlIjp0cnVlLCJtZXRhZGF0YSI6e319LHsibmFtZSI6InYiLCJ0eXBlIjoic3RyaW5nIiwibnVsbGFibGUiOnRydWUsIm1ldGFkYXRhIjp7fX0seyJuYW1lIjoic2V2IiwidHlwZSI6InN0cmluZyIsIm51bGxhYmxlIjp0cnVlLCJtZXRhZGF0YSI6e319XX0=","stats_cols":["id"],"stats":["snap-000000|id|long|MTAw|MTAx","snap-000001|id|long|MA==|Ng==","snap-000002|id|long|OQ==|OQ=="],"bloom_cols":["v"],"blooms":["snap-000000|v","snap-000001|v","snap-000002|v"],"deletes":[],"commit_time_ms":0}""",
+    """{"snapshot_id":0,"parent_id":null,"operation":"append","batch_id":"b1","added_rows":4,"total_rows":4,"added":["snap-000000"],"live":["snap-000000"],"batch_commits":["b1|0"],"schema_b64":"eyJ0eXBlIjoic3RydWN0IiwiZmllbGRzIjpbeyJuYW1lIjoiaWQiLCJ0eXBlIjoibG9uZyIsIm51bGxhYmxlIjpmYWxzZSwibWV0YWRhdGEiOnt9fSx7Im5hbWUiOiJ2IiwidHlwZSI6InN0cmluZyIsIm51bGxhYmxlIjp0cnVlLCJtZXRhZGF0YSI6e319LHsibmFtZSI6InNldiIsInR5cGUiOiJzdHJpbmciLCJudWxsYWJsZSI6dHJ1ZSwibWV0YWRhdGEiOnt9fV19","stats_cols":[],"stats":[],"bloom_cols":[],"blooms":[],"deletes":[],"commit_time_ms":0}""",
+    """{"snapshot_id":1,"parent_id":0,"operation":"append","batch_id":"b2","added_rows":4,"total_rows":8,"added":["snap-000001"],"live":["snap-000000","snap-000001"],"batch_commits":["b1|0","b2|1"],"schema_b64":"eyJ0eXBlIjoic3RydWN0IiwiZmllbGRzIjpbeyJuYW1lIjoiaWQiLCJ0eXBlIjoibG9uZyIsIm51bGxhYmxlIjp0cnVlLCJtZXRhZGF0YSI6e319LHsibmFtZSI6InYiLCJ0eXBlIjoic3RyaW5nIiwibnVsbGFibGUiOnRydWUsIm1ldGFkYXRhIjp7fX0seyJuYW1lIjoic2V2IiwidHlwZSI6InN0cmluZyIsIm51bGxhYmxlIjp0cnVlLCJtZXRhZGF0YSI6e319XX0=","stats_cols":[],"stats":[],"bloom_cols":[],"blooms":[],"deletes":[],"commit_time_ms":0}""",
+    """{"snapshot_id":0,"parent_id":null,"operation":"append","batch_id":"pre","added_rows":1,"total_rows":1,"added":["snap-000000"],"live":["snap-000000"],"batch_commits":["pre|0"],"schema_b64":"eyJ0eXBlIjoic3RydWN0IiwiZmllbGRzIjpbeyJuYW1lIjoiaWQiLCJ0eXBlIjoibG9uZyIsIm51bGxhYmxlIjpmYWxzZSwibWV0YWRhdGEiOnt9fSx7Im5hbWUiOiJ2IiwidHlwZSI6InN0cmluZyIsIm51bGxhYmxlIjp0cnVlLCJtZXRhZGF0YSI6e319LHsibmFtZSI6InNldiIsInR5cGUiOiJzdHJpbmciLCJudWxsYWJsZSI6dHJ1ZSwibWV0YWRhdGEiOnt9fV19","stats_cols":["v"],"stats":["snap-000000|v|string|djIwMA==|djIwMA=="],"bloom_cols":["id"],"blooms":["snap-000000|id"],"deletes":[],"commit_time_ms":0}""",
+    """{"snapshot_id":1,"parent_id":0,"operation":"append","batch_id":"b1","added_rows":0,"total_rows":1,"added":["snap-000001"],"live":["snap-000000","snap-000001"],"batch_commits":["pre|0","b1|1"],"schema_b64":"eyJ0eXBlIjoic3RydWN0IiwiZmllbGRzIjpbeyJuYW1lIjoiaWQiLCJ0eXBlIjoibG9uZyIsIm51bGxhYmxlIjp0cnVlLCJtZXRhZGF0YSI6e319LHsibmFtZSI6InYiLCJ0eXBlIjoic3RyaW5nIiwibnVsbGFibGUiOnRydWUsIm1ldGFkYXRhIjp7fX0seyJuYW1lIjoic2V2IiwidHlwZSI6InN0cmluZyIsIm51bGxhYmxlIjp0cnVlLCJtZXRhZGF0YSI6e319XX0=","stats_cols":["v"],"stats":["snap-000000|v|string|djIwMA==|djIwMA=="],"bloom_cols":["id"],"blooms":["snap-000000|id","snap-000001|id"],"deletes":[],"commit_time_ms":0}""",
+    """{"snapshot_id":2,"parent_id":1,"operation":"append","batch_id":"b2","added_rows":0,"total_rows":1,"added":["snap-000002"],"live":["snap-000000","snap-000001","snap-000002"],"batch_commits":["pre|0","b1|1","b2|2"],"schema_b64":"eyJ0eXBlIjoic3RydWN0IiwiZmllbGRzIjpbeyJuYW1lIjoiaWQiLCJ0eXBlIjoibG9uZyIsIm51bGxhYmxlIjp0cnVlLCJtZXRhZGF0YSI6e319LHsibmFtZSI6InYiLCJ0eXBlIjoic3RyaW5nIiwibnVsbGFibGUiOnRydWUsIm1ldGFkYXRhIjp7fX0seyJuYW1lIjoic2V2IiwidHlwZSI6InN0cmluZyIsIm51bGxhYmxlIjp0cnVlLCJtZXRhZGF0YSI6e319XX0=","stats_cols":["v"],"stats":["snap-000000|v|string|djIwMA==|djIwMA=="],"bloom_cols":["id"],"blooms":["snap-000000|id","snap-000001|id","snap-000002|id"],"deletes":[],"commit_time_ms":0}""",
+    """{"snapshot_id":0,"parent_id":null,"operation":"append","batch_id":"b1","added_rows":3,"total_rows":3,"added":["snap-000000"],"live":["snap-000000"],"batch_commits":["b1|0"],"schema_b64":"eyJ0eXBlIjoic3RydWN0IiwiZmllbGRzIjpbeyJuYW1lIjoiaWQiLCJ0eXBlIjoibG9uZyIsIm51bGxhYmxlIjpmYWxzZSwibWV0YWRhdGEiOnt9fSx7Im5hbWUiOiJ2IiwidHlwZSI6InN0cmluZyIsIm51bGxhYmxlIjp0cnVlLCJtZXRhZGF0YSI6e319LHsibmFtZSI6InNldiIsInR5cGUiOiJzdHJpbmciLCJudWxsYWJsZSI6dHJ1ZSwibWV0YWRhdGEiOnt9fSx7Im5hbWUiOiJub3RlIiwidHlwZSI6InN0cmluZyIsIm51bGxhYmxlIjpmYWxzZSwibWV0YWRhdGEiOnt9fV19","stats_cols":[],"stats":[],"bloom_cols":[],"blooms":[],"deletes":[],"commit_time_ms":0}""",
+    """{"snapshot_id":1,"parent_id":0,"operation":"append","batch_id":"b2","added_rows":0,"total_rows":3,"added":["snap-000001"],"live":["snap-000000","snap-000001"],"batch_commits":["b1|0","b2|1"],"schema_b64":"eyJ0eXBlIjoic3RydWN0IiwiZmllbGRzIjpbeyJuYW1lIjoiaWQiLCJ0eXBlIjoibG9uZyIsIm51bGxhYmxlIjp0cnVlLCJtZXRhZGF0YSI6e319LHsibmFtZSI6InYiLCJ0eXBlIjoic3RyaW5nIiwibnVsbGFibGUiOnRydWUsIm1ldGFkYXRhIjp7fX0seyJuYW1lIjoic2V2IiwidHlwZSI6InN0cmluZyIsIm51bGxhYmxlIjp0cnVlLCJtZXRhZGF0YSI6e319LHsibmFtZSI6Im5vdGUiLCJ0eXBlIjoic3RyaW5nIiwibnVsbGFibGUiOnRydWUsIm1ldGFkYXRhIjp7fX1dfQ==","stats_cols":[],"stats":[],"bloom_cols":[],"blooms":[],"deletes":[],"commit_time_ms":0}"""
   )
   val partitioned: Seq[String] = Seq(
     """{"snapshot_id":0,"parent_id":null,"operation":"append","batch_id":"p0","added_rows":6,"total_rows":6,"added":["snap-000000/_p=d0","snap-000000/_p=d1"],"live":["snap-000000/_p=d0","snap-000000/_p=d1"],"batch_commits":["p0|0"],"schema_b64":"eyJ0eXBlIjoic3RydWN0IiwiZmllbGRzIjpbeyJuYW1lIjoiaWQiLCJ0eXBlIjoibG9uZyIsIm51bGxhYmxlIjpmYWxzZSwibWV0YWRhdGEiOnt9fSx7Im5hbWUiOiJ2IiwidHlwZSI6InN0cmluZyIsIm51bGxhYmxlIjp0cnVlLCJtZXRhZGF0YSI6e319LHsibmFtZSI6ImRheSIsInR5cGUiOiJzdHJpbmciLCJudWxsYWJsZSI6dHJ1ZSwibWV0YWRhdGEiOnt9fV19","stats_cols":["id"],"stats":["snap-000000/_p=d0|id|long|MA==|NA==","snap-000000/_p=d1|id|long|MQ==|NQ=="],"bloom_cols":["v"],"blooms":["snap-000000/_p=d0|v","snap-000000/_p=d1|v"],"deletes":[],"commit_time_ms":0}""",
