@@ -2453,12 +2453,13 @@ object LsclRun {
   }
 
   /** Run a complete config text as a STRUCTURED STREAMING job: streaming
-    * input -> filters applied per micro-batch -> persist-once sink fan-out
-    * with per-batch counts (graft.streaming.StreamPipeline.run). This is the
+    * input -> filters applied per micro-batch -> one-pass sink fan-out with
+    * per-batch counts (graft.streaming.StreamPipeline.run). This is the
     * reference's actual execution model — the micro-batch worker loop over
     * the queue (JavaPipeline worker threads) — so a config that runs in
-    * batch runs here unchanged, with checkpointed offsets giving
-    * exactly-once restart (the PQ contract).
+    * batch runs here unchanged. Checkpointed offsets schedule the batches;
+    * file sinks and `_counts` are exactly-once per epoch, and network sinks
+    * at-least-once (the PQ contract).
     */
   def runConfigStream(spark: org.apache.spark.sql.SparkSession, configText: String,
                       outDir: String, checkpoint: String,
@@ -2471,11 +2472,12 @@ object LsclRun {
       "pipeline { send_to } outputs are batch-only (the address bus resolves " +
         "at converge time); run this config via Pipelines.Registry")
     // net/debug sinks apply PER MICRO-BATCH over the transformed frame
-    // (StreamPipeline.run perBatch hook) — at-least-once on replay, the
-    // reference's PQ-replay output contract; file sinks stay exactly-once
-    val perBatch: DataFrame => Unit =
-      if (netSinkSpecs(cfg.outputs).isEmpty) _ => ()
-      else b => runNetSinks(b, cfg.outputs)
+    // (StreamPipeline.run perBatch hook), after the file sinks commit —
+    // at-least-once on replay, the reference's PQ-replay output contract;
+    // file sinks and _counts are exactly-once per epoch
+    val perBatch: Option[DataFrame => Unit] =
+      if (netSinkSpecs(cfg.outputs).isEmpty) None
+      else Some(b => runNetSinks(b, cfg.outputs))
     // stateful filters carry counters that must SPAN the period — inside
     // foreachBatch each micro-batch would get its own window, silently
     // resetting counts at every batch boundary (the reference's counters

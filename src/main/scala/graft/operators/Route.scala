@@ -181,7 +181,8 @@ object Route {
     * array). With one group (every plain sink) nothing is persisted. With
     * more, `flagged` is persisted for the call, so the trunk is computed
     * once and every target reads the same rows: a nondeterministic column
-    * (LSCL's `uuid`, a random UDF) then agrees across targets. Row counts
+    * (LSCL's `uuid`, a random UDF) then agrees across targets. A `flagged`
+    * the caller persisted is used as it is, and left persisted. Row counts
     * and the min/max of each target's `bounds(i)` columns ride the write
     * job (observed metrics). Every plan is built before the first write, so
     * an analysis error writes nothing.
@@ -198,7 +199,7 @@ object Route {
     val spark = flagged.sparkSession
     val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val label = Iterator.iterate("_t")(_ + "_").find(n => !flagged.columns.contains(n)).get
-    val cache = plan.groups.size > 1
+    val cache = plan.groups.size > 1 && flagged.storageLevel == StorageLevel.NONE
     if (cache) flagged.persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val passes = plan.groups.zipWithIndex.map { case (ords, g) =>
@@ -218,7 +219,7 @@ object Route {
         ords.map { i =>
           val d = new org.apache.hadoop.fs.Path(dir, s"$label=$i")
           // a target with no rows gets no partition dir: stage its schema
-          if (!fs.exists(d)) writeSchemaOnly(spark, new org.apache.hadoop.fs.Path(d, "part-00000.parquet"),
+          if (!fs.exists(d)) writeTable(spark, new org.apache.hadoop.fs.Path(d, "part-00000.parquet"),
             org.apache.spark.sql.types.StructType(rows.schema.filter(_.name != label)))
           i -> Fanned(d, m(s"n$i").asInstanceOf[Long], bounds(i).zipWithIndex.map {
             case (c, j) => c -> (m(s"lo${i}_$j"), m(s"hi${i}_$j")) }.toMap)
@@ -232,22 +233,40 @@ object Route {
     }
   }
 
-  /** A parquet file at `file` holding `schema` and no rows, written on the
-    * driver: the file Spark writes for an empty frame (no row group, the
-    * schema in the footer), without a Spark job.
+  /** A parquet file at `file` holding `schema` and `rows`, written on the
+    * driver without a Spark job, by the writer a Spark write task uses (the
+    * session's codec, type mapping and footer). With no rows it is the file
+    * Spark writes for an empty frame: the schema in the footer, no row group.
+    * For tiny tables only: every row passes through the driver.
     */
-  private def writeSchemaOnly(spark: SparkSession, file: org.apache.hadoop.fs.Path,
-                              schema: org.apache.spark.sql.types.StructType): Unit = {
-    import org.apache.parquet.hadoop.{ParquetFileWriter, ParquetWriter}
-    import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport,
-      SparkToParquetSchemaConverter}
-    val w = new ParquetFileWriter(
-      org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(file, spark.sessionState.newHadoopConf()),
-      new SparkToParquetSchemaConverter(spark.sessionState.conf).convert(schema),
-      ParquetFileWriter.Mode.CREATE, ParquetWriter.DEFAULT_BLOCK_SIZE, ParquetWriter.MAX_PADDING_SIZE_DEFAULT,
-      null, org.apache.parquet.column.ParquetProperties.builder().build())
-    w.start()
-    w.end(java.util.Map.of(ParquetReadSupport.SPARK_METADATA_KEY, schema.json))
+  private[graft] def writeTable(spark: SparkSession, file: org.apache.hadoop.fs.Path,
+                                schema: org.apache.spark.sql.types.StructType,
+                                rows: Seq[org.apache.spark.sql.Row] = Nil): Unit = {
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils}
+    val conf = spark.sessionState.conf
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(spark.sessionState.newHadoopConf())
+    val writer = ParquetUtils.prepareWrite(conf, job, schema, new ParquetOptions(Map.empty[String, String], conf))
+      .newInstance(file.toString, schema, new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+        job.getConfiguration, new org.apache.hadoop.mapreduce.TaskAttemptID()))
+    val toInternal = org.apache.spark.sql.catalyst.CatalystTypeConverters.createToCatalystConverter(schema)
+    try rows.foreach(r => writer.write(toInternal(r).asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]))
+    finally writer.close()
+  }
+
+  /** A fresh staging dir name under `outDir` for one [[fanOut]] call. */
+  private[graft] def newStaging(outDir: String): org.apache.hadoop.fs.Path =
+    new org.apache.hadoop.fs.Path(outDir, s".sinkstage-${java.util.UUID.randomUUID().toString.take(8)}")
+
+  /** Deletes every staging dir under `outDir`: what a writer killed before
+    * its `fanOut` cleanup left behind. One writer per `outDir` is the
+    * contract, so no live staging is touched.
+    */
+  private[graft] def reapStaging(spark: SparkSession, outDir: String): Unit = {
+    val dir = new org.apache.hadoop.fs.Path(outDir)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(dir))
+      fs.listStatus(dir).filter(_.getPath.getName.startsWith(".sinkstage-"))
+        .foreach(st => fs.delete(st.getPath, true))
   }
 
   final case class RunResult(counts: Map[String, Long], sinkPaths: Map[String, String],
@@ -407,12 +426,9 @@ object Route {
       // key need not be stable, and ordered mode's contract is within-file
       // order) and bucketed runs (two-level layout) use the per-sink writer.
       val outFs = new org.apache.hadoop.fs.Path(outDir).getFileSystem(hadoopConf)
-      // reap staging debris of a crashed earlier combined write, whatever
-      // this run writes (a fully resumed rerun stages nothing)
-      if (outFs.exists(new org.apache.hadoop.fs.Path(outDir)))
-        outFs.listStatus(new org.apache.hadoop.fs.Path(outDir))
-          .filter(_.getPath.getName.startsWith(".sinkstage-"))
-          .foreach(st => outFs.delete(st.getPath, true))
+      // a crashed earlier write's staging goes, whatever this run writes (a
+      // fully resumed rerun stages nothing)
+      reapStaging(spark, outDir)
       def hasSuccess(name: String): Boolean =
         outFs.exists(new org.apache.hadoop.fs.Path(s"$outDir/$name", "_SUCCESS"))
       val combineEligible: Seq[SinkSpec] =
@@ -432,9 +448,7 @@ object Route {
             .reduceOption(_ || _).getOrElse(lit(false))
           val targets = combineSinks.map(sp => FanTarget(col(flagCol(sp.name)))) ++
             (if (combineDefault) Seq(FanTarget(!anyMatch)) else Nil)
-          val staging = new org.apache.hadoop.fs.Path(
-            outDir, s".sinkstage-${java.util.UUID.randomUUID().toString.take(8)}")
-          fanOut(new FanPlan(flagged, targets), staging) { staged =>
+          fanOut(new FanPlan(flagged, targets), newStaging(outDir)) { staged =>
             combineTargets.zip(staged).map { case (name, f) =>
               val dst = new org.apache.hadoop.fs.Path(s"$outDir/$name")
               if (outFs.exists(dst)) outFs.delete(dst, true)
@@ -609,8 +623,11 @@ object Route {
           Array("_default" -> colSum(lineRows.headOption.map(_.length - 1).getOrElse(2)),
                 "_total" -> lineRows.map(_.getLong(1)).sum)
       val withExtra = collected ++ extraCounts.toSeq.sortBy(_._1)
-      spark.createDataFrame(withExtra.toIndexedSeq).toDF("sink", "n")
-        .coalesce(1).write.mode("overwrite").parquet(s"$outDir/_counts")
+      val countsDir = new org.apache.hadoop.fs.Path(outDir, "_counts")
+      outFs.delete(countsDir, true)
+      writeTable(spark, new org.apache.hadoop.fs.Path(countsDir, "part-00000.parquet"),
+        org.apache.spark.sql.types.StructType.fromDDL("sink STRING, n BIGINT NOT NULL"),
+        withExtra.toIndexedSeq.map { case (k, n) => org.apache.spark.sql.Row(k, n) })
       val counts = collected.toMap ++ extraCounts
       val manifest = writeManifest(spark, outDir, counts, paths, resumed.result())
       RunResult(counts, paths, resumed.result(), manifest)

@@ -1,85 +1,89 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
-import graft.operators.Route
+import graft.operators.{Route, SnapshotTable}
 
 /** Streaming execution of the same pipeline plans — Logstash's micro-batch
-  * worker loop maps 1:1 onto Structured Streaming (SURVEY.md §2.7):
-  * queue read -> readStream, worker batch -> trigger micro-batch, output
-  * fan-out -> foreachBatch multi-sink writes, aggregate-filter timeout
-  * flush -> flatMapGroupsWithState with ProcessingTimeTimeout.
-  *
-  * Scale stance: foreachBatch persists each micro-batch once and writes all
-  * sinks from it (same single-materialization policy as the batch Route.run);
-  * per-sink counts accumulate via the streaming metrics table rather than
-  * per-sink count() jobs.
+  * worker loop as Structured Streaming (SURVEY.md §2.7): readStream batches,
+  * fanned out by [[Route.fanOut]] in foreachBatch, keyed state for the
+  * aggregate and throttle filters, windows for metrics. As Logstash
+  * acks a batch only after every output took it, file sinks and `_counts`
+  * are exactly-once per epoch; `perBatch` network sinks are at-least-once.
   */
 object StreamPipeline {
 
-  /** Run a transform + fan-out over a file-source stream; each micro-batch is
-    * persisted once, every sink appended, per-batch counts appended to a
-    * `_counts` table (sink, n, batch_id). Returns the running query.
-    */
-  /** `perBatch` runs once per micro-batch over the transformed (flag-free)
-    * frame AFTER the file sinks commit — the hook the config frontend uses
-    * for network outputs. Delivery through it is AT-LEAST-ONCE: a replayed
-    * micro-batch after a crash re-sends its events (exactly the reference's
-    * PQ-replay output contract; the file sinks stay exactly-once via the
-    * checkpoint).
+  /** Run a transform + fan-out over a stream; returns the running query.
+    * Micro-batch `batchId` of query `<qid>` (the id its checkpoint keeps
+    * across restarts) is an epoch: one [[Route.fanOut]] pass (one job for
+    * plain sinks) writes every sink into `outDir/<sink>` as
+    * `epoch-<qid>-<batchId>-<file>`, and its counts, `_default` and `_total`
+    * into `outDir/_counts` the same way, replacing what an earlier attempt
+    * of the epoch published. `perBatch` then gets the flag-free batch; with
+    * a hook the batch is persisted, so it sees the sinks' rows.
     */
   def run(spark: SparkSession, source: DataFrame,
           transform: DataFrame => DataFrame,
           sinks: Seq[Route.SinkSpec], outDir: String,
           checkpoint: String, trigger: Trigger = Trigger.AvailableNow(),
-          perBatch: DataFrame => Unit = _ => ()): StreamingQuery = {
+          perBatch: Option[DataFrame => Unit] = None): StreamingQuery = {
     Route.requirePlainSinks(sinks, "StreamPipeline.run")
-    source.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val flagged = Route.withSinkFlags(transform(batch), sinks)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          sinks.foreach { s =>
-            Route.sinkFrame(flagged, s).write.mode("append").parquet(s"$outDir/${s.name}")
+    eachBatch(source, checkpoint, trigger) { (batch, batchId) =>
+      Route.reapStaging(spark, outDir) // what a JVM killed mid-batch left
+      val epoch = s"epoch-${spark.sparkContext.getLocalProperty("sql.streaming.queryId")}-$batchId"
+      val flagged = Route.withSinkFlags(transform(batch), sinks)
+      if (perBatch.nonEmpty) flagged.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        val fs = new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val obs = Observation() // the trunk's counts ride the first write pass
+        val anyMatch = sinks.map(s => col(Route.flagCol(s.name))).reduceOption(_ || _).getOrElse(lit(false))
+        val trunk = flagged.observe(obs, count(lit(1)).as("_total"), count(when(!anyMatch, 1)).as("_default"))
+        if (sinks.isEmpty) trunk.write.format("noop").mode("overwrite").save() // no pass runs it
+        val staging = Route.newStaging(outDir)
+        Route.fanOut(new Route.FanPlan(trunk, sinks.map(s =>
+            Route.FanTarget(col(Route.flagCol(s.name)), s.decorator))), staging) { staged =>
+          val counts = new Path(staging, "_counts")
+          val n = sinks.map(_.name).zip(staged.map(_.rows)) ++
+            Seq("_default", "_total").map(k => k -> obs.get(k).asInstanceOf[Long])
+          Route.writeTable(spark, new Path(counts, "part-00000.parquet"), CountsSchema,
+            n.map { case (k, v) => Row(k, v, batchId) })
+          for ((dir, src) <- sinks.map(_.name).zip(staged.map(_.dir)) :+ ("_counts" -> counts)) {
+            val dst = new Path(outDir, dir) // first delete what an earlier attempt published
+            fs.mkdirs(dst)
+            fs.listStatus(dst).map(_.getPath).filter(_.getName.startsWith(s"$epoch-")).foreach(fs.delete(_, false))
+            for (f <- fs.listStatus(src).map(_.getPath))
+              require(fs.rename(f, new Path(dst, s"$epoch-${f.getName}")),
+                s"StreamPipeline.run: cannot move $f to $dst")
           }
-          Route.sinkCounts(flagged, sinks)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(s"$outDir/_counts")
-          perBatch(flagged.drop(
-            flagged.columns.filter(_.startsWith("_m_")).toIndexedSeq: _*))
-          ()
-        } finally { flagged.unpersist(); () }
-      }
-      .start()
+        }
+        perBatch.foreach(_(flagged.drop(flagged.columns.filter(_.startsWith("_m_")).toIndexedSeq: _*)))
+      } finally { if (perBatch.nonEmpty) flagged.unpersist(); () }
+    }
   }
 
-  /** Snapshot-table variant of [[run]]: every sink is an Iceberg-style
-    * [[graft.operators.SnapshotTable]] under `tableRoot/<sink>`, and each
-    * micro-batch commits with batch id `epoch-<batchId>`. A REPLAYED
-    * micro-batch — a crash between a sink write and the stream checkpoint
-    * commit, or a whole re-run after a lost checkpoint — is recognized by
-    * the manifest chain and skipped, upgrading [[run]]'s blind
-    * `mode("append")` file writes (at-least-once on replay) to exactly-once
-    * END TO END. Two ledgers, like real Iceberg streaming sinks: the stream
-    * checkpoint schedules batches; the snapshot chain commits data.
+  private val CountsSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "sink STRING NOT NULL, n BIGINT NOT NULL, batch_id BIGINT NOT NULL")
+
+  /** Snapshot-table variant of [[run]]: each sink is a [[SnapshotTable]]
+    * under `tableRoot/<sink>`, appended through `appendSinks` as batch
+    * `epoch-<batchId>`, so each sink's ledger skips a replayed epoch.
     */
   def runSnapshots(spark: SparkSession, source: DataFrame,
                    transform: DataFrame => DataFrame,
                    sinks: Seq[Route.SinkSpec], tableRoot: String,
                    checkpoint: String,
                    trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.SnapshotTable.appendSinks(
-          spark, transform(batch), sinks, tableRoot, s"epoch-$batchId")
-        ()
-      }
-      .start()
+    eachBatch(source, checkpoint, trigger) { (batch, batchId) =>
+      SnapshotTable.appendSinks(spark, transform(batch), sinks, tableRoot, s"epoch-$batchId")
+    }
+
+  /** `source` started with `f` over each micro-batch and its id. */
+  private def eachBatch(source: DataFrame, checkpoint: String, trigger: Trigger)
+                       (f: (DataFrame, Long) => Unit): StreamingQuery =
+    source.writeStream.option("checkpointLocation", checkpoint).trigger(trigger)
+      .foreachBatch { (batch: DataFrame, batchId: Long) => f(batch, batchId) }.start()
 
   /** aggregate-filter analogue with timeout flush: correlate events per key,
     * emit one summary row when the key goes quiet for `timeoutMs` (reference:

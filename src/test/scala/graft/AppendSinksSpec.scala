@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.conditions.{Eq, Gte, Lte}
@@ -16,22 +15,6 @@ import scala.jdk.CollectionConverters._
 class AppendSinksSpec extends SparkSpec {
 
   private def tmp() = java.nio.file.Files.createTempDirectory("graft_sinks").toString
-
-  /** `body`'s result and the number of Spark jobs it started. */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    org.apache.spark.ListenerDrain(sc)
-    val n = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { n.incrementAndGet(); () }
-    }
-    sc.addSparkListener(l)
-    try {
-      val r = body
-      org.apache.spark.ListenerDrain(sc)
-      (r, n.get)
-    } finally sc.removeSparkListener(l)
-  }
 
   private def trunk(ids: Range): DataFrame = {
     val sev = Seq("ERROR", "WARN", "INFO")

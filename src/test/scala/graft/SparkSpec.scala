@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -23,4 +24,24 @@ object TestSpark {
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val sfDir = "/root/testdata/sf0.001"
+
+  /** `body`'s result and the number of Spark jobs it started that `counted`
+    * accepts. The listener bus is drained before and after `body`, so no
+    * job of an earlier test is counted and none of `body`'s is missed.
+    */
+  def jobsOf[T](body: => T, counted: SparkListenerJobStart => Boolean = _ => true): (T, Int) = {
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerDrain(sc)
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (counted(e)) { n.incrementAndGet(); () }
+    }
+    sc.addSparkListener(l)
+    try {
+      val r = body
+      org.apache.spark.ListenerDrain(sc)
+      (r, n.get)
+    } finally sc.removeSparkListener(l)
+  }
 }

@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import graft.conditions.{Gte, Lt}
 import graft.model.Tok
+import graft.operators.Route
 import graft.streaming.StreamPipeline
 
 /** Streaming-mode specs: the same pipeline over a file-source stream must
@@ -230,5 +232,120 @@ class StreamingSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException](
       StreamPipeline.run(spark, source, identity, sinks, s"$tmp/out", s"$tmp/chk"))
     assert(e.getMessage.contains("'lines'") && e.getMessage.contains("codec"), e.getMessage)
+  }
+
+  private val loHi = Seq(Route.SinkSpec("lo", Lt("v", 50)), Route.SinkSpec("hi", Gte("v", 50)))
+
+  /** Streams `tmp/in` through `loHi` into `tmp/out`, with a `perBatch` hook. */
+  private def streamLoHi(tmp: String, hook: Option[org.apache.spark.sql.DataFrame => Unit])
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    StreamPipeline.run(spark, spark.readStream.schema("id BIGINT, v BIGINT").parquet(s"$tmp/in"),
+      identity, loHi, s"$tmp/out", s"$tmp/chk", Trigger.AvailableNow(), hook)
+
+  private def writeIds(tmp: String, ids: Range): Unit = {
+    import spark.implicits._
+    ids.map(i => (i.toLong, (i % 100).toLong)).toDF("id", "v")
+      .coalesce(1).write.mode("append").parquet(s"$tmp/in")
+  }
+
+  private def files(dir: String): Set[String] =
+    Option(new java.io.File(dir).list()).map(_.toSet).getOrElse(Set.empty)
+
+  /** Batch 0 commits; batch 1's hook throws once after its file sinks are
+    * written; `afterCrash` then edits what the crash left (given the file
+    * names each of `lo`, `hi` and `_counts` held before batch 1); a restart
+    * replays batch 1. Every sink row and `_counts` row must be there once.
+    */
+  private def crashAndReplay(afterCrash: (String, Map[String, Set[String]]) => Unit): Unit = {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_crash").toString
+    val out = s"$tmp/out"
+    val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val hook = Some((b: org.apache.spark.sql.DataFrame) =>
+      if (armed.getAndSet(false)) throw new IllegalStateException(s"crash after ${b.count()} rows"))
+    writeIds(tmp, 0 until 100)
+    streamLoHi(tmp, hook).awaitTermination(120000)
+    val before = Seq("lo", "hi", "_counts").map(d => d -> files(s"$out/$d")).toMap
+    writeIds(tmp, 100 until 200)
+    armed.set(true)
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      streamLoHi(tmp, hook).awaitTermination(120000))
+    assert(e.getMessage.contains("crash after 100 rows"), e.getMessage)
+    afterCrash(out, before)
+    streamLoHi(tmp, hook).awaitTermination(120000)
+
+    def ids(sink: String): Seq[Long] =
+      spark.read.parquet(s"$out/$sink").collect().map(_.getLong(0)).toSeq.sorted
+    assert(ids("lo") == ((0 until 50) ++ (100 until 150)).map(_.toLong))
+    assert(ids("hi") == ((50 until 100) ++ (150 until 200)).map(_.toLong))
+    val counts = spark.read.parquet(s"$out/_counts").collect()
+      .map(r => (r.getAs[String]("sink"), r.getAs[Long]("batch_id"), r.getAs[Long]("n"))).toSeq
+    val want = for (b <- Seq(0L, 1L); (k, n) <- Seq("lo" -> 50L, "hi" -> 50L, "_default" -> 0L,
+      "_total" -> 100L)) yield (k, b, n)
+    assert(counts.sorted == want.sorted)
+    assert(!files(out).exists(_.startsWith(".sinkstage-")), files(out))
+  }
+
+  test("a micro-batch replayed after its perBatch hook failed writes no sink or _counts row twice") {
+    crashAndReplay((_, _) => ())
+  }
+
+  test("a replay after a crash mid-publish completes the batch once, and reaps dead staging") {
+    // the crash left lo's files renamed, hi's and _counts' not yet, and the
+    // staging dir of a JVM killed mid-write
+    crashAndReplay { (out, before) =>
+      Seq("hi", "_counts").foreach { d =>
+        (files(s"$out/$d") -- before(d)).foreach(f => new java.io.File(s"$out/$d/$f").delete())
+      }
+      assert(new java.io.File(s"$out/.sinkstage-dead/g0/_t=0").mkdirs())
+    }
+  }
+
+  test("a stream with no file sink finishes, counts every row as _default and runs its hook") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_nosink").toString
+    writeIds(tmp, 0 until 100)
+    val seen = new java.util.concurrent.atomic.AtomicLong()
+    val q = StreamPipeline.run(spark, spark.readStream.schema("id BIGINT, v BIGINT").parquet(s"$tmp/in"),
+      identity, Nil, s"$tmp/out", s"$tmp/chk", Trigger.AvailableNow(),
+      Some(b => { seen.addAndGet(b.count()); () }))
+    try assert(q.awaitTermination(120000), "the stream did not finish")
+    finally q.stop()
+    val counts = spark.read.parquet(s"$tmp/out/_counts").collect()
+      .map(r => (r.getAs[String]("sink"), r.getAs[Long]("n"), r.getAs[Long]("batch_id"))).toSeq
+    assert(counts.sorted == Seq(("_default", 100L, 0L), ("_total", 100L, 0L)))
+    assert(seen.get == 100)
+  }
+
+  test("two queries with different checkpoints on one outDir keep each other's rows") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_two").toString
+    writeIds(tmp, 0 until 100)
+    streamLoHi(tmp, None).awaitTermination(120000)
+    // a second query (new checkpoint, so its batches count from 0 again)
+    // over new input into the same outDir
+    writeIds(s"$tmp/q2", 100 until 200)
+    StreamPipeline.run(spark, spark.readStream.schema("id BIGINT, v BIGINT").parquet(s"$tmp/q2/in"),
+      identity, loHi, s"$tmp/out", s"$tmp/chk2").awaitTermination(120000)
+    def ids(sink: String): Seq[Long] =
+      spark.read.parquet(s"$tmp/out/$sink").collect().map(_.getLong(0)).toSeq.sorted
+    assert(ids("lo") == ((0 until 50) ++ (100 until 150)).map(_.toLong))
+    assert(ids("hi") == ((50 until 100) ++ (150 until 200)).map(_.toLong))
+    val totals = spark.read.parquet(s"$tmp/out/_counts").filter(col("sink") === "_total")
+      .collect().map(r => (r.getAs[Long]("batch_id"), r.getAs[Long]("n"))).toSeq
+    assert(totals == Seq((0L, 100L), (0L, 100L)))
+  }
+
+  test("a plain two-sink micro-batch with no hook starts exactly one Spark job") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_jobs").toString
+    writeIds(tmp, 0 until 100)
+    // the count covers every streaming job of the session: stop queries other
+    // tests left running (a throttle's processing-time timeouts keep an
+    // AvailableNow query scheduling no-data batches)
+    spark.streams.active.foreach(_.stop())
+    val (_, jobs) = jobsOf(streamLoHi(tmp, None).awaitTermination(120000),
+      e => Option(e.properties).exists(_.getProperty("streaming.sql.batchId") != null))
+    val batches = spark.read.parquet(s"$tmp/out/_counts").select("batch_id").distinct().count()
+    assert(batches == 1)
+    assert(jobs == 1)
+    assert(spark.read.parquet(s"$tmp/out/lo").count() == 50)
+    assert(spark.read.parquet(s"$tmp/out/hi").count() == 50)
   }
 }
