@@ -531,7 +531,7 @@ object Dedup {
       // ~1.3 s SLOWER per round — Observation.get after an eager
       // localCheckpoint waits on a listener-bus event that is not
       // delivered promptly for checkpoint executions (observe pays off on
-      // write actions only; measured r6, BenchExtra A/B).
+      // write actions only; measured in an A/B of the two variants).
       val next = stepped.join(
           stepped.select(col("node").as("jn"), col("comp").as("jc")),
           stepped("comp") === col("jn"), "left")

@@ -334,12 +334,6 @@ object Text {
     bits.reduce(_ + _).cast("int")
   }
 
-  /** Hamming distance between two simhash ints (for near-dup thresholds). */
-  def hamming16(a: Column, b: Column): Column = {
-    val x = a.bitwiseXOR(b)
-    (0 until 16).map(j => shiftright(x, j) % 2).reduce(_ + _).cast("int")
-  }
-
   /** Sequence PACKING for LLM training: documents are concatenated in id
     * order and chunked every `seqLen` tokens (the standard concat-and-chunk
     * packing), so a document's pack assignment is a pure function of the

@@ -15,17 +15,6 @@ import org.apache.spark.sql.functions._
   */
 object Enrich {
 
-  /** In-memory dictionary -> broadcastable dimension frame. */
-  def dictFrame(spark: SparkSession, on: String, dict: Map[String, Map[String, String]]): DataFrame = {
-    val valueCols = dict.values.flatMap(_.keys).toSeq.distinct.sorted
-    val rows = dict.toSeq.sortBy(_._1).map { case (k, vs) =>
-      org.apache.spark.sql.Row.fromSeq(k +: valueCols.map(c => vs.getOrElse(c, null)))
-    }
-    val schema = org.apache.spark.sql.types.StructType(
-      (on +: valueCols).map(c => org.apache.spark.sql.types.StructField(c, org.apache.spark.sql.types.StringType)))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-  }
-
   /** translate's file-backed dictionary forms (reference: dictionary_path =>
     * CSV/JSON/YAML): load the dimension table from a file. CSV expects a
     * header row; JSON expects one object per line (json_lines). YAML is out

@@ -209,8 +209,6 @@ object Mutate {
     df.withColumn(field, split(col(field), java.util.regex.Pattern.quote(sep)))
   def joinField(df: DataFrame, field: String, sep: String): DataFrame =
     df.withColumn(field, array_join(col(field), sep))
-  def mergeField(df: DataFrame, dst: String, src: String): DataFrame =
-    df.withColumn(dst, array_union(coalesce(col(dst), array()), coalesce(col(src), array())))
 
   /** Event `append` deep map-merge (Event.java:363-407 -> Util.mapMerge):
     * missing key takes the added value; colliding values merge as an
@@ -235,8 +233,6 @@ object Mutate {
       when(col(field).isNotNull, sprintfFor(df, tpl)).otherwise(col(field)))
   def replace(df: DataFrame, field: String, tpl: String): DataFrame =
     df.withColumn(field, sprintfFor(df, tpl))
-  def coalesceField(df: DataFrame, field: String, fallbacks: Seq[String]): DataFrame =
-    df.withColumn(field, coalesce((field +: fallbacks).map(col): _*))
 
   /** prune filter: whitelist/blacklist columns by regex. */
   def prune(df: DataFrame, whitelist: Option[String] = None, blacklist: Option[String] = None): DataFrame = {

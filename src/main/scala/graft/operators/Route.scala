@@ -253,6 +253,19 @@ object Route {
     finally writer.close()
   }
 
+  /** The table dir `dir`, replaced by one [[writeTable]] file and the
+    * `_SUCCESS` marker a Spark write leaves.
+    */
+  private def replaceTable(spark: SparkSession, dir: String,
+                           schema: org.apache.spark.sql.types.StructType,
+                           rows: Seq[org.apache.spark.sql.Row]): Unit = {
+    val d = new org.apache.hadoop.fs.Path(dir)
+    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(d, true)
+    writeTable(spark, new org.apache.hadoop.fs.Path(d, "part-00000.parquet"), schema, rows)
+    fs.create(new org.apache.hadoop.fs.Path(d, "_SUCCESS"), true).close()
+  }
+
   /** A fresh staging dir name under `outDir` for one [[fanOut]] call. */
   private[graft] def newStaging(outDir: String): org.apache.hadoop.fs.Path =
     new org.apache.hadoop.fs.Path(outDir, s".sinkstage-${java.util.UUID.randomUUID().toString.take(8)}")
@@ -315,14 +328,14 @@ object Route {
     val r = run(spark, trunk, sinks, outDir, writeDefault, ordered, buckets)
     val durSec = (System.nanoTime() - t0) / 1e9
     val total = r.counts.getOrElse("_total", 0L)
-    import spark.implicits._
     val rows = Seq(
       "events_in" -> total.toDouble,
       "duration_sec" -> durSec,
       "input_throughput_eps" -> (if (durSec > 0) total / durSec else 0.0)) ++
       r.counts.toSeq.sortBy(_._1).map { case (k, v) => s"events_out_$k" -> v.toDouble }
-    rows.toDF("metric", "value").coalesce(1)
-      .write.mode("overwrite").parquet(s"$outDir/_metrics")
+    replaceTable(spark, s"$outDir/_metrics",
+      org.apache.spark.sql.types.StructType.fromDDL("metric STRING, value DOUBLE NOT NULL"),
+      rows.map { case (k, v) => org.apache.spark.sql.Row(k, v) })
     r
   }
 
@@ -598,12 +611,13 @@ object Route {
       // per-sink counts are their exact integer column sums — the former
       // separate global-counts aggregate and the distributed _lineage
       // write collapse into this single collect (two full trunk passes
-      // -> one; both tiny tables are then written driver-side). The
-      // aggregation carries one extra unmatched-rows column for
-      // `_default`; it is dropped before the _lineage rows are persisted,
-      // so that table's schema is unchanged. Callers may ride extra
-      // run-level counters along (runConfig records the SOURCE event
-      // count as `_in` — the monitoring API's events.in).
+      // -> one; both tiny tables are then written on the driver, without
+      // a job). The aggregation carries one extra unmatched-rows column
+      // for `_default`; it is dropped before the _lineage rows are
+      // persisted, in partition order, so that table's schema is
+      // unchanged. Callers may ride extra run-level counters along
+      // (runConfig records the SOURCE event count as `_in` — the
+      // monitoring API's events.in).
       val anyMatchAll = sinks.map(s => col(flagCol(s.name)))
         .reduceOption(_ || _).getOrElse(lit(false))
       val lineAgg = flagged.groupBy(spark_partition_id().as("part"))
@@ -611,10 +625,11 @@ object Route {
           (sinks.map(s => sum(col(flagCol(s.name)).cast("long")).as(s"n_${s.name}")) :+
             sum((!anyMatchAll).cast("long")).as("_n_default")): _*)
       val lineRows = lineAgg.collect()
-      val lineSchema = org.apache.spark.sql.types.StructType(lineAgg.schema.dropRight(1))
-      writeIfNeeded("_lineage", spark.createDataFrame(
-        java.util.Arrays.asList(lineRows.map(r =>
-          org.apache.spark.sql.Row.fromSeq(r.toSeq.dropRight(1))): _*), lineSchema))
+      if (hasSuccess("_lineage")) resumed += "_lineage"
+      else replaceTable(spark, s"$outDir/_lineage",
+        org.apache.spark.sql.types.StructType(lineAgg.schema.dropRight(1)),
+        lineRows.sortBy(_.getInt(0)).toIndexedSeq
+          .map(r => org.apache.spark.sql.Row.fromSeq(r.toSeq.dropRight(1))))
       // same names, order and zero-on-empty semantics as sinkCounts():
       // per-partition sums of two-valued flags total to the global sums
       def colSum(i: Int): Long = lineRows.map(_.getLong(i)).sum
@@ -623,9 +638,7 @@ object Route {
           Array("_default" -> colSum(lineRows.headOption.map(_.length - 1).getOrElse(2)),
                 "_total" -> lineRows.map(_.getLong(1)).sum)
       val withExtra = collected ++ extraCounts.toSeq.sortBy(_._1)
-      val countsDir = new org.apache.hadoop.fs.Path(outDir, "_counts")
-      outFs.delete(countsDir, true)
-      writeTable(spark, new org.apache.hadoop.fs.Path(countsDir, "part-00000.parquet"),
+      replaceTable(spark, s"$outDir/_counts",
         org.apache.spark.sql.types.StructType.fromDDL("sink STRING, n BIGINT NOT NULL"),
         withExtra.toIndexedSeq.map { case (k, n) => org.apache.spark.sql.Row(k, n) })
       val counts = collected.toMap ++ extraCounts

@@ -1128,9 +1128,9 @@ object SnapshotTable {
   // Every committing path used to re-read its just-written dir up to three
   // times: a footer row count, a min/max stats agg, and a bloom-sizing
   // count. At gate scale each of those is a fixed-latency Spark action
-  // (~40 ms of job plus ~40 ms of driver-side planning, measured with
-  // graft.tools.JobProfile — pipe_snap_mirror ran 86 jobs, half of its wall
-  // in inter-job driver gaps); at 100 TB they are extra full passes over
+  // (~40 ms of job plus ~40 ms of driver-side planning, measured with a
+  // job listener — pipe_snap_mirror ran 86 jobs, half of its wall in
+  // inter-job driver gaps); at 100 TB they are extra full passes over
   // freshly written data. The write pass itself can compute the row count
   // and the min/max bounds via CollectMetrics (`Dataset.observe`) — the
   // SAME Spark aggregates over the SAME rows, so the recorded values are

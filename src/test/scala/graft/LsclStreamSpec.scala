@@ -165,13 +165,13 @@ class LsclStreamSpec extends SparkSpec {
          |""".stripMargin
     // phase 1: first 20 events stream (ranks 1..10 per key accumulate)
     append(f, (0 until 20).map(line).mkString)
-    graft.lscl.LsclRun.runConfigStream(spark, cfg, s"$tmp/out", s"$tmp/ck", Map.empty)
-      .awaitTermination(120000)
+    val q1 = graft.lscl.LsclRun.runConfigStream(spark, cfg, s"$tmp/out", s"$tmp/ck", Map.empty)
+    try q1.awaitTermination(120000) finally q1.stop()
     // phase 2: 20 MORE events after a full stop — the restored state must
     // continue the per-key counters (ranks 11..20), not restart at 1
     append(f, (20 until 40).map(line).mkString)
-    graft.lscl.LsclRun.runConfigStream(spark, cfg, s"$tmp/out", s"$tmp/ck", Map.empty)
-      .awaitTermination(120000)
+    val q2 = graft.lscl.LsclRun.runConfigStream(spark, cfg, s"$tmp/out", s"$tmp/ck", Map.empty)
+    try q2.awaitTermination(120000) finally q2.stop()
     val res = graft.lscl.LsclRun.runConfig(spark, cfg, s"$tmp/batch", Map.empty)
     assert(res.counts("_total") == 40L)
     def rows(dir: String) = spark.read.parquet(s"$tmp/$dir/s")
@@ -307,15 +307,15 @@ class LsclStreamSpec extends SparkSpec {
     val p1 = (0 until 10).map(i => line(i, s"id$i", "start")) ++
       (0 until 5).map(i => line(20 + i, s"id$i", "end"))
     append(f, p1.mkString)
-    graft.lscl.LsclRun.runConfigStream(spark, cfg, s"$tmp/out", s"$tmp/ck", Map.empty)
-      .awaitTermination(120000)
+    val q1 = graft.lscl.LsclRun.runConfigStream(spark, cfg, s"$tmp/out", s"$tmp/ck", Map.empty)
+    try q1.awaitTermination(120000) finally q1.stop()
     // phase 2 after a full stop: ends for ids 5..9 — they match ONLY if the
     // recorded starts survived the restart — plus an end with no start ever
     val p2 = (5 until 10).map(i => line(40 + i, s"id$i", "end")) :+
       line(55, "zz", "end")
     append(f, p2.mkString)
-    graft.lscl.LsclRun.runConfigStream(spark, cfg, s"$tmp/out", s"$tmp/ck", Map.empty)
-      .awaitTermination(120000)
+    val q2 = graft.lscl.LsclRun.runConfigStream(spark, cfg, s"$tmp/out", s"$tmp/ck", Map.empty)
+    try q2.awaitTermination(120000) finally q2.stop()
     graft.lscl.LsclRun.runConfig(spark, cfg, s"$tmp/batch", Map.empty)
     def rows(dir: String) = spark.read.parquet(s"$tmp/$dir/s")
       .select(col("id"), col("w"), col("elapsed_time"),

@@ -616,6 +616,18 @@ class MiscOpsSpec extends SparkSpec {
     assert(m("duration_sec") > 0 && m("input_throughput_eps") > 0)
   }
 
+  test("Dlq.ageRetained keeps the entries at most maxAgeSeconds older than now") {
+    import spark.implicits._
+    val ts = java.sql.Timestamp.valueOf(_: String)
+    val entries = Seq(1 -> "2024-01-01 00:00:00", 2 -> "2024-01-01 00:59:59",
+      3 -> "2024-01-01 01:00:00", 4 -> "2024-01-01 02:00:00")
+      .map { case (i, t) => (i, ts(t)) }.toDF("id", "entry_time")
+    val kept = graft.operators.Dlq.ageRetained(entries, lit(ts("2024-01-01 02:00:00")), 3600)
+    // an entry exactly the retained age old stays; one a second older goes
+    assert(kept.select("id").as[Int].collect().sorted.toSeq == Seq(3, 4))
+    assert(kept.columns.toSeq == entries.columns.toSeq)
+  }
+
   test("property: dissectString round-trips random joined values") {
     import spark.implicits._
     val rnd = new scala.util.Random(7)

@@ -5,8 +5,9 @@ import org.apache.spark.sql.types.StructType
 import graft.operators.Route
 
 /** `Route.writeTable`, the driver-side writer of tiny tables, and the
-  * `_counts` table `Route.run` writes with it: each reads back exactly as
-  * the Spark-job write it replaces, and costs no Spark job.
+  * `_counts`, `_lineage` and `_metrics` tables `Route.run` and
+  * `runWithMetrics` write with it: each reads back as the Spark-job write
+  * it replaces, and costs no Spark job.
   */
 class RouteCountsSpec extends SparkSpec {
 
@@ -29,10 +30,8 @@ class RouteCountsSpec extends SparkSpec {
       Row("c", Long.MaxValue, Double.NaN, Seq.empty[String], null))
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
       .coalesce(1).write.parquet(s"$dir/spark")
-    // a streaming query another suite left running is not this call's
     val (_, jobs) = jobsOf(Route.writeTable(spark,
-      new org.apache.hadoop.fs.Path(s"$dir/tiny/part-00000.parquet"), schema, rows),
-      e => Option(e.properties).forall(_.getProperty("streaming.sql.batchId") == null))
+      new org.apache.hadoop.fs.Path(s"$dir/tiny/part-00000.parquet"), schema, rows))
     assert(jobs == 0)
     same(s"$dir/tiny", s"$dir/spark")
     // no rows: the schema alone
@@ -56,5 +55,56 @@ class RouteCountsSpec extends SparkSpec {
       .coalesce(1).write.parquet(s"$legacy/_counts")
     same(s"$out/_counts", s"$legacy/_counts")
     assert(Route.nodeStats(spark, out) == Route.nodeStats(spark, legacy))
+  }
+
+  test("Route.run's _lineage and runWithMetrics' _metrics read back as the Spark-job writes they replaced") {
+    import org.apache.spark.sql.functions._
+    val pipe = StandardPipeline.fromDir(spark, sfDir)
+    val sinks = StandardPipeline.sinks
+    // one input partition (one _lineage row) and four
+    for (trunk <- Seq(pipe.trunk, pipe.trunk.repartition(4, col("doc_id")))) {
+      val out = tmp()
+      val r = Route.runWithMetrics(spark, trunk, sinks, out)
+      Seq("_lineage", "_metrics").foreach(d => assert(new java.io.File(s"$out/$d/_SUCCESS").exists, d))
+      // the tables as the earlier writer stored them: _lineage as a Spark
+      // write of the per-partition rows, _metrics as a one-file Spark write
+      val legacy = s"${tmp()}/out"
+      new java.io.File(legacy).mkdirs()
+      Seq("_manifests", "_counts").foreach(d => org.apache.commons.io.FileUtils.copyDirectory(
+        new java.io.File(s"$out/$d"), new java.io.File(s"$legacy/$d")))
+      val lineRows = Route.withSinkFlags(trunk, sinks).groupBy(spark_partition_id().as("part"))
+        .agg(count(lit(1)).as("rows"),
+          sinks.map(s => sum(col(Route.flagCol(s.name)).cast("long")).as(s"n_${s.name}")): _*)
+        .collect()
+      spark.createDataFrame(java.util.Arrays.asList(lineRows: _*), StructType.fromDDL(
+        "part INT NOT NULL, rows BIGINT NOT NULL, " + sinks.map(s => s"n_${s.name} BIGINT").mkString(", ")))
+        .write.parquet(s"$legacy/_lineage")
+      val metrics = spark.read.parquet(s"$out/_metrics").collect()
+        .map(m => m.getString(0) -> m.getDouble(1)).toSeq
+      assert(metrics.map(_._1) == Seq("events_in", "duration_sec", "input_throughput_eps") ++
+        r.counts.keys.toSeq.sorted.map(k => s"events_out_$k"))
+      spark.createDataFrame(metrics).toDF("metric", "value").coalesce(1).write.parquet(s"$legacy/_metrics")
+      same(s"$out/_metrics", s"$legacy/_metrics")
+      // the Spark write's row order followed its file listing; the driver
+      // writes the rows in partition order
+      val (got, want) = (spark.read.parquet(s"$out/_lineage"), spark.read.parquet(s"$legacy/_lineage"))
+      assert(got.schema == want.schema && got.schema.map(_.nullable) == want.schema.map(_.nullable))
+      assert(got.collect().toSeq == want.collect().toSeq.sortBy(_.getInt(0)))
+      assert(got.count() == trunk.rdd.getNumPartitions)
+      assert(Route.nodeStats(spark, out) == Route.nodeStats(spark, legacy))
+      // a rerun resumes _lineage as before
+      assert(Route.run(spark, trunk, sinks, out).resumedSinks ==
+        sinks.map(_.name) ++ Seq("_default", "_lineage"))
+      assert(spark.read.parquet(s"$out/_lineage").collect().toSeq == got.collect().toSeq)
+    }
+  }
+
+  test("Route.run writes _lineage without a Spark job, and runWithMetrics adds none") {
+    val pipe = StandardPipeline.fromDir(spark, sfDir)
+    val (_, run) = jobsOf(Route.run(spark, pipe.trunk, StandardPipeline.sinks, tmp()))
+    val (_, withMetrics) = jobsOf(Route.runWithMetrics(spark, pipe.trunk, StandardPipeline.sinks, tmp()))
+    // a Spark write of _lineage made it 7
+    assert(run == 6)
+    assert(withMetrics == run)
   }
 }

@@ -25,6 +25,19 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val sfDir = "/root/testdata/sf0.001"
 
+  /** After each test: a streaming query the test left running is stopped,
+    * and the test fails naming it. The session is shared by every suite, so
+    * such a query would run its batches under later tests.
+    */
+  override def withFixture(test: NoArgTest): org.scalatest.Outcome = {
+    val outcome = super.withFixture(test)
+    val left = SparkSession.getDefaultSession.toSeq.flatMap(_.streams.active.toSeq)
+    left.foreach(_.stop())
+    if (left.isEmpty || !outcome.isSucceeded) outcome
+    else org.scalatest.Failed("streaming queries still active after the test, now stopped: " +
+      left.map(q => Option(q.name).getOrElse(q.id.toString)).mkString(", "))
+  }
+
   /** `body`'s result and the number of Spark jobs it started that `counted`
     * accepts. The listener bus is drained before and after `body`, so no
     * job of an earlier test is counted and none of `body`'s is missed.

@@ -111,9 +111,11 @@ class StreamingSpec extends SparkSpec {
     val out = StreamPipeline.throttleStream(spark, src, "key", periodMs = 60000, maxPerPeriod = 2)
     val q = out.writeStream.outputMode("append").format("memory").queryName("thr_out")
       .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(120000)
-    val got = spark.table("thr_out").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(got == Map("hot" -> 2L, "cold" -> 1L))
+    try {
+      q.awaitTermination(120000)
+      val got = spark.table("thr_out").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(got == Map("hot" -> 2L, "cold" -> 1L))
+    } finally q.stop()
   }
 
   test("windowed metrics with watermark compile and aggregate in streaming mode") {
@@ -336,10 +338,8 @@ class StreamingSpec extends SparkSpec {
   test("a plain two-sink micro-batch with no hook starts exactly one Spark job") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_stream_jobs").toString
     writeIds(tmp, 0 until 100)
-    // the count covers every streaming job of the session: stop queries other
-    // tests left running (a throttle's processing-time timeouts keep an
-    // AvailableNow query scheduling no-data batches)
-    spark.streams.active.foreach(_.stop())
+    // the count covers every streaming job of the session; SparkSpec stops
+    // any query an earlier test left running, so only this stream's count
     val (_, jobs) = jobsOf(streamLoHi(tmp, None).awaitTermination(120000),
       e => Option(e.properties).exists(_.getProperty("streaming.sql.batchId") != null))
     val batches = spark.read.parquet(s"$tmp/out/_counts").select("batch_id").distinct().count()
