@@ -13,7 +13,7 @@ import graft.operators.{Enrich, Mutate, Parse, Route}
   *   .parse()                                   // dissect-over-tokens + severity
   *   .enrich(dictDf, on = "source")             // translate: broadcast left join
   *   .route(Route.SinkSpec("errors", cond), …)  // conditional fan-out
-  *   .run(spark, outDir)                        // persist trunk once, write sinks+counts+lineage
+  *   .run(spark, outDir)                        // one write job: sinks, counts, lineage
   * }}}
   */
 final case class LogPipeline(

@@ -2827,7 +2827,7 @@ object LsclRun {
   }
 
   /** Execute a complete config text: input -> filter -> routed outputs
-    * (persist-once fan-out via [[Route.run]]). The full reference entry
+    * (one-pass fan-out via [[Route.run]]). The full reference entry
     * path — `bin/logstash -f pipeline.conf` — as one call.
     */
   def runConfig(spark: org.apache.spark.sql.SparkSession, configText: String,

@@ -167,7 +167,9 @@ object Mutate {
     def apply(df: DataFrame): DataFrame = applyWhen(df, lit(true))
 
     /** Conditional application (filter-matched rows only), preserving the
-      * fixed reference order.
+      * fixed reference order. A row `matched` skips keeps every field as it
+      * was: a null or absent `tags` stays null, as Logstash leaves the
+      * field absent (Event.java:472-537).
       */
     def applyWhen(df0: DataFrame, matched: Column): DataFrame = {
       val afterAdd = addField.foldLeft(df0) { case (d, (name, tpl)) =>
@@ -185,7 +187,11 @@ object Mutate {
         if (d.columns.contains(f)) d.withColumn(f, when(matched, lit(null)).otherwise(col(f)))
         else d
       }
-      val afterTagAdd = addTag.foldLeft(afterRemove)((d, t) => addTagWhen(d, matched, t))
+      val afterTagAdd = addTag.foldLeft(afterRemove) { (d, t) =>
+        val cur = if (d.columns.contains("tags")) col("tags") else lit(null).cast("array<string>")
+        d.withColumn("tags", when(matched,
+          array_union(coalesce(cur, array().cast("array<string>")), array(lit(t)))).otherwise(cur))
+      }
       removeTag.foldLeft(afterTagAdd) { (d, t) =>
         if (!d.columns.contains("tags")) d
         else d.withColumn("tags",

@@ -9,12 +9,15 @@ import graft.conditions.Cond
   * if/else-gated outputs (SURVEY.md §2.6/§3), Spark-first.
   *
   * Physical plan stance (the one real physical decision, SURVEY.md §4):
-  * the parsed+enriched trunk is materialized ONCE (persist MEMORY_AND_DISK),
-  * then each sink is a filter+write over the cached trunk and all per-sink
-  * counts come from a SINGLE aggregate pass over boolean match flags — never
-  * one `count()` job per sink. At 100 TB this means one scan of the input,
-  * one pass for aggregates, and per-sink writes that each read the cache,
-  * instead of N+1 input scans.
+  * like Logstash's compiled output DAG, a batch goes through the routing
+  * once. [[run]] writes every parquet sink and the default branch in ONE
+  * write job over the unpersisted trunk ([[fanOut]]), and the per-sink
+  * counts and per-partition `_lineage` rows are counted in that same job
+  * ([[Tally]]) — never one `count()` job per sink, never a cached trunk
+  * re-read per sink. Only surfaces that change the row set or the file
+  * format (index, codec, document id/action, csv, line format, ordered
+  * mode, buckets) take a write of their own, over a trunk persisted for
+  * the call.
   *
   * Logstash outputs are independently gated (an event can match several
   * sinks); `default` catches rows matching none — both supported.
@@ -128,6 +131,15 @@ object Route {
       .select(col("kv.sink").as("sink"), col("kv.n").as("n"))
   }
 
+  /** The fields of `s` that ask for a layout other than plain parquet:
+    * index, codec, document id, csv, action or line format.
+    */
+  private def layouts(s: SinkSpec): Seq[String] =
+    Seq("indexTemplate" -> s.indexTemplate.nonEmpty,
+      "codec" -> s.codec.nonEmpty, "documentId" -> s.documentId.nonEmpty,
+      "csvFields" -> s.csvFields.nonEmpty, "esAction" -> s.esAction.nonEmpty,
+      "lineFormat" -> s.lineFormat.nonEmpty).collect { case (field, true) => field }
+
   /** Writers that store [[sinkFrame]] as plain parquet (the streaming
     * fan-out, snapshot-table sinks) have no index, codec, document-id,
     * csv, action or line-format layout: a sink asking for one fails here,
@@ -135,10 +147,7 @@ object Route {
     */
   private[graft] def requirePlainSinks(sinks: Seq[SinkSpec], writer: String): Unit =
     sinks.foreach { s =>
-      val dropped = Seq("indexTemplate" -> s.indexTemplate.nonEmpty,
-          "codec" -> s.codec.nonEmpty, "documentId" -> s.documentId.nonEmpty,
-          "csvFields" -> s.csvFields.nonEmpty, "esAction" -> s.esAction.nonEmpty,
-          "lineFormat" -> s.lineFormat.nonEmpty).collect { case (field, true) => field }
+      val dropped = layouts(s)
       require(dropped.isEmpty,
         s"sink '${s.name}' sets ${dropped.mkString(", ")}, but $writer writes plain " +
           "parquet and would drop it — write that sink with Route.run instead")
@@ -153,13 +162,18 @@ object Route {
   /** `targets` over `flagged`, analysed once for [[fanOut]]. `schemas` holds
     * each target's payload schema (what it stores, as [[sinkFrame]] builds
     * it), so a caller can check them before anything is written. `groups`
-    * holds the target ordinals of each write pass: the targets that share
-    * one decorator and one payload schema.
+    * holds the target ordinals of each write pass: the targets whose
+    * payload schemas agree up to nullability (every file column is written
+    * nullable). A decorator that adds a column so gets a pass of its own;
+    * so does one with a nested `add_field`, which rebuilds its parent
+    * struct on every row it runs over.
     */
   private[graft] final class FanPlan(val flagged: DataFrame, val targets: Seq[FanTarget]) {
     val schemas: Seq[org.apache.spark.sql.types.StructType] =
       targets.map(t => payload(t.decorator(flagged)).schema)
-    private val keys = targets.map(_.decorator).zip(schemas)
+    // catalogString spells the names and types, not the nullability
+    private val keys = targets.indices.map(i => schemas(i).catalogString ->
+      (if (targets(i).decorator.addField.exists(_._1.startsWith("["))) i else -1))
     val groups: Seq[Seq[Int]] = keys.distinct.map(k => targets.indices.filter(keys(_) == k))
   }
 
@@ -175,36 +189,42 @@ object Route {
     * explodes into the ordinals of the targets it matches, and one
     * `partitionBy(ordinal)` write stages every target of a group (see
     * [[FanPlan]]) in ONE pass, so no name needs partition-path escaping.
-    * The decorator runs on its group's rows unconditionally, exactly as
-    * [[sinkFrame]] runs it (run conditionally on one target's rows it would
-    * also touch the others': `add_tag` turns a null `tags` into an empty
-    * array). With one group (every plain sink) nothing is persisted. With
-    * more, `flagged` is persisted for the call, so the trunk is computed
-    * once and every target reads the same rows: a nondeterministic column
-    * (LSCL's `uuid`, a random UDF) then agrees across targets. A `flagged`
-    * the caller persisted is used as it is, and left persisted. Row counts
-    * and the min/max of each target's `bounds(i)` columns ride the write
-    * job (observed metrics). Every plan is built before the first write, so
-    * an analysis error writes nothing.
+    * Each target's decorator runs in that pass on the rows of its own
+    * ordinal only (`applyWhen`), which leave every other row as it is. With
+    * one group nothing is persisted. With more, `flagged` is persisted for
+    * the call, so the trunk is computed once and every target reads the
+    * same rows: a nondeterministic column (LSCL's `uuid`, a random UDF)
+    * then agrees across targets. A `flagged` the caller persisted is used
+    * as it is, and left persisted. Row counts and the min/max of each
+    * target's `bounds(i)` columns ride the write job (observed metrics).
+    * `tally` counts the trunk in the first pass, above any persisted frame,
+    * so a later pass that recomputes an evicted cache counts nothing twice;
+    * with no target it counts in one `noop` write. Every plan is built
+    * before the first write, so an analysis error writes nothing.
     *
     * `publish` gets each target's staged dir, in target order, and must
     * move it out; `staging` is deleted afterwards, whether it succeeds or
     * fails.
     */
   private[graft] def fanOut[T](plan: FanPlan, staging: org.apache.hadoop.fs.Path,
-                               bounds: Int => Seq[String] = _ => Nil)
+                               bounds: Int => Seq[String] = _ => Nil,
+                               tally: Option[Tally] = None)
                               (publish: Seq[Fanned] => T): T = {
     val flagged = plan.flagged
     val targets = plan.targets
     val spark = flagged.sparkSession
     val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val label = Iterator.iterate("_t")(_ + "_").find(n => !flagged.columns.contains(n)).get
+    val taken = flagged.columns.toSet ++ plan.schemas.flatMap(_.fieldNames)
+    val label = Iterator.iterate("_t")(_ + "_").find(n => !taken(n)).get
     val cache = plan.groups.size > 1 && flagged.storageLevel == StorageLevel.NONE
     if (cache) flagged.persist(StorageLevel.MEMORY_AND_DISK)
     try {
+      val counted = tally.fold(flagged)(_.on(flagged))
       val passes = plan.groups.zipWithIndex.map { case (ords, g) =>
-        val rows = payload(targets(ords.head).decorator(flagged.withColumn(label, explode(filter(
-          array(ords.map(i => when(targets(i).matched, lit(i))): _*), _.isNotNull)))))
+        val exploded = (if (g == 0) counted else flagged).withColumn(label, explode(filter(
+          array(ords.map(i => when(targets(i).matched, lit(i))): _*), _.isNotNull)))
+        val rows = payload(ords.foldLeft(exploded)((d, i) =>
+          targets(i).decorator.applyWhen(d, col(label) === i)))
         def of(i: Int, c: Column) = when(col(label) === i, c)
         val aggs = ords.flatMap(i => count(of(i, lit(1))).as(s"n$i") +:
           bounds(i).zipWithIndex.flatMap { case (c, j) =>
@@ -213,6 +233,7 @@ object Route {
         (new org.apache.hadoop.fs.Path(staging, s"g$g"), ords, obs,
           rows.observe(obs, aggs.head, aggs.tail: _*))
       }
+      if (passes.isEmpty && tally.nonEmpty) counted.write.format("noop").mode("overwrite").save()
       val staged = passes.flatMap { case (dir, ords, obs, rows) =>
         rows.write.mode("overwrite").partitionBy(label).parquet(dir.toString)
         val m = obs.get
@@ -231,6 +252,48 @@ object Route {
       if (cache) flagged.unpersist(blocking = false)
       ()
     }
+  }
+
+  /** The row counts of a flagged trunk, per partition, taken by [[fanOut]]
+    * in the pass it writes (Logstash's per-output `events.out` counters,
+    * gathered at job end): for each partition id that holds rows, its rows,
+    * its rows per column of `flags` (in that order) and its rows matching
+    * none of them. An accumulator fed by a filter that passes every row, so
+    * the counts cost no job of their own. Read them once the pass is done.
+    */
+  private[graft] final class Tally(flags: Seq[String])
+      extends org.apache.spark.util.AccumulatorV2[(Int, Seq[Boolean]), Map[Int, Array[Long]]] {
+    private val parts = scala.collection.mutable.Map.empty[Int, Array[Long]]
+    private def of(part: Int) = parts.getOrElseUpdate(part, new Array[Long](flags.size + 2))
+
+    /** `df`, counted as it passes. */
+    private[Route] def on(df: DataFrame): DataFrame = {
+      if (!isRegistered) df.sparkSession.sparkContext.register(this)
+      val tally = this
+      val seen = udf { (part: Int, hits: Seq[Boolean]) => tally.add(part -> hits); true }
+      df.filter(seen.asNondeterministic()(spark_partition_id(),
+        array(flags.map(col): _*).cast("array<boolean>")))
+    }
+
+    /** (partition id, counts) in partition order. */
+    def partitions: Seq[(Int, Array[Long])] = parts.toSeq.sortBy(_._1)
+
+    /** The counts summed over every partition. */
+    def totals: Array[Long] = Array.tabulate(flags.size + 2)(i => parts.values.map(_(i)).sum)
+
+    def add(v: (Int, Seq[Boolean])): Unit = {
+      val n = of(v._1)
+      n(0) += 1
+      var i = 0
+      v._2.foreach { hit => i += 1; if (hit) n(i) += 1 }
+      if (!v._2.contains(true)) n(flags.size + 1) += 1
+    }
+    def merge(other: org.apache.spark.util.AccumulatorV2[(Int, Seq[Boolean]), Map[Int, Array[Long]]]): Unit =
+      other.value.foreach { case (part, m) => val n = of(part); m.indices.foreach(i => n(i) += m(i)) }
+    def isZero: Boolean = parts.isEmpty
+    def reset(): Unit = parts.clear()
+    def copy(): Tally = { val c = new Tally(flags); c.merge(this); c }
+    def value: Map[Int, Array[Long]] = parts.toMap
   }
 
   /** A parquet file at `file` holding `schema` and `rows`, written on the
@@ -387,10 +450,19 @@ object Route {
     }
   }
 
-  /** Execute the fan-out: persist trunk, write every sink + default + dlq +
-    * lineage + counts to `outDir`. Idempotent/resumable: a sink directory
-    * with a `_SUCCESS` marker is skipped on re-run (counts are recomputed
-    * from the trunk, so resumed runs still report exact totals).
+  /** Execute the fan-out: write every sink and the default branch to
+    * `outDir/<name>`, then the per-partition `_lineage` rows, `_counts` and
+    * a manifest. Every parquet sink and the default branch, decorated or
+    * not, are written by ONE [[fanOut]] job over the trunk, which is not
+    * persisted, and every count and `_lineage` row is taken in that same
+    * job ([[Tally]]), resumed sinks included. Only a sink whose surface
+    * changes the row set or the file format (index, codec, document
+    * id/action, csv, line format) and every sink of an `ordered` or
+    * bucketed run take a write of their own, over a trunk persisted for the
+    * call. Idempotent/resumable: a sink directory with a `_SUCCESS` marker
+    * is skipped on re-run (its rows are still counted, so resumed runs
+    * report exact totals; a run with nothing to write counts in one `noop`
+    * pass).
     *
     * `ordered = true` reproduces the reference's `pipeline.ordered` mode
     * (CompiledPipeline.java:317-352): sink files are range-partitioned and
@@ -420,231 +492,143 @@ object Route {
     val trunk1 =
       if (ordered) trunk.repartitionByRange(col("doc_id")).sortWithinPartitions("doc_id")
       else trunk
-    val flagged = withSinkFlags(trunk1, sinks).persist(StorageLevel.MEMORY_AND_DISK)
+    val outFs = new org.apache.hadoop.fs.Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a crashed earlier write's staging goes, whatever this run writes (a
+    // fully resumed rerun stages nothing)
+    reapStaging(spark, outDir)
+    def hasSuccess(name: String): Boolean =
+      outFs.exists(new org.apache.hadoop.fs.Path(s"$outDir/$name", "_SUCCESS"))
+    // the default branch is a sink with no surface, over the rows no sink took
+    val outputs = sinks ++ (if (writeDefault) Seq(SinkSpec("_default", graft.conditions.True)) else Nil)
+    val (done, pending) = outputs.partition(s => hasSuccess(s.name))
+    val resumed = done.map(_.name) ++ (if (hasSuccess("_lineage")) Seq("_lineage") else Nil)
+    // ordered runs (the dynamic-partition writer's internal sort on the
+    // partition key need not be stable, and ordered mode's contract is
+    // within-file order) and bucketed runs (two-level layout) keep the
+    // per-sink writer
+    val (fanned, own) = pending.partition(s => !ordered && buckets == 0 && layouts(s).isEmpty)
+    val flagged0 = withSinkFlags(trunk1, sinks)
+    val flagged = if (own.nonEmpty) flagged0.persist(StorageLevel.MEMORY_AND_DISK) else flagged0
     try {
-      val hadoopConf = spark.sparkContext.hadoopConfiguration
-      val resumed = Seq.newBuilder[String]
-      // --- combined single-pass write for PLAIN sinks (r6, guide §2.4/§6) ---
-      // A plain sink (no index/codec/document_id/action/csv/line surface,
-      // identity decorator) writes exactly filter(flag) + drop(internal
-      // columns) — the same payload columns as every other plain sink and
-      // as the default branch. Writing N of them separately re-reads the
-      // persisted trunk N times. [[fanOut]] stages all of them in ONE pass
-      // (a row explodes only into the sinks it matches — exactly the rows
-      // the N separate writes hold, a sink with no rows gets a schema-only
-      // dir), then each staged dir is renamed to the sink's contract path
-      // and given its _SUCCESS marker, so the read-back layout and resume
-      // semantics are unchanged. Decorated and non-plain sinks, `ordered`
-      // runs (the dynamic-partition writer's internal sort on the partition
-      // key need not be stable, and ordered mode's contract is within-file
-      // order) and bucketed runs (two-level layout) use the per-sink writer.
-      val outFs = new org.apache.hadoop.fs.Path(outDir).getFileSystem(hadoopConf)
-      // a crashed earlier write's staging goes, whatever this run writes (a
-      // fully resumed rerun stages nothing)
-      reapStaging(spark, outDir)
-      def hasSuccess(name: String): Boolean =
-        outFs.exists(new org.apache.hadoop.fs.Path(s"$outDir/$name", "_SUCCESS"))
-      val combineEligible: Seq[SinkSpec] =
-        if (ordered || buckets > 0) Nil
-        else sinks.filter(sp =>
-          sp.indexTemplate.isEmpty && sp.codec.isEmpty && sp.documentId.isEmpty &&
-            sp.csvFields.isEmpty && sp.esAction.isEmpty && sp.lineFormat.isEmpty &&
-            sp.decorator == Mutate.Decorator())
-      val combineSinks = combineEligible.filterNot(sp => hasSuccess(sp.name))
-      val combineDefault = writeDefault && !ordered && buckets == 0 && !hasSuccess("_default")
-      val combineTargets = combineSinks.map(_.name) ++
-        (if (combineDefault) Seq("_default") else Nil)
-      val combinedDone: Set[String] =
-        if (combineTargets.size < 2) Set.empty
-        else {
-          val anyMatch = sinks.map(s => col(flagCol(s.name)))
-            .reduceOption(_ || _).getOrElse(lit(false))
-          val targets = combineSinks.map(sp => FanTarget(col(flagCol(sp.name)))) ++
-            (if (combineDefault) Seq(FanTarget(!anyMatch)) else Nil)
-          fanOut(new FanPlan(flagged, targets), newStaging(outDir)) { staged =>
-            combineTargets.zip(staged).map { case (name, f) =>
-              val dst = new org.apache.hadoop.fs.Path(s"$outDir/$name")
-              if (outFs.exists(dst)) outFs.delete(dst, true)
-              outFs.mkdirs(dst.getParent)
-              require(outFs.rename(f.dir, dst),
-                s"combined sink write: rename ${f.dir} -> $dst failed")
-              outFs.create(new org.apache.hadoop.fs.Path(dst, "_SUCCESS"), true).close()
-              name
-            }.toSet
-          }
+      val tally = new Tally(sinks.map(s => flagCol(s.name)))
+      val unmatched = !sinks.map(s => col(flagCol(s.name))).reduceOption(_ || _).getOrElse(lit(false))
+      val targets = fanned.map(s =>
+        if (s.name == "_default") FanTarget(unmatched) else FanTarget(col(flagCol(s.name)), s.decorator))
+      // each staged dir is renamed to the sink's contract path and given its
+      // _SUCCESS marker, so the read-back layout and resume are the per-sink
+      // writer's
+      fanOut(new FanPlan(flagged, targets), newStaging(outDir), tally = Some(tally)) { staged =>
+        fanned.zip(staged).foreach { case (s, f) =>
+          val dst = new org.apache.hadoop.fs.Path(s"$outDir/${s.name}")
+          if (outFs.exists(dst)) outFs.delete(dst, true)
+          outFs.mkdirs(dst.getParent)
+          require(outFs.rename(f.dir, dst), s"combined sink write: rename ${f.dir} -> $dst failed")
+          outFs.create(new org.apache.hadoop.fs.Path(dst, "_SUCCESS"), true).close()
         }
-      def writeIfNeeded(name: String, df: => DataFrame,
-                        indexTemplate: Option[String] = None,
-                        codec: Option[String] = None,
-                        documentId: Option[String] = None,
-                        csvFields: Seq[String] = Nil,
-                        csvSep: String = ",",
-                        esAction: Option[String] = None,
-                        lineFormat: Option[String] = None): String = {
-        val path = s"$outDir/$name"
-        val success = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-        val fs = success.getFileSystem(hadoopConf)
-        if (combinedDone(name)) () // written this run by the combined single-pass job
-        else if (fs.exists(success)) { resumed += name }
-        else {
-          val d00 = df
-          val dIdx = indexTemplate.fold(d00)(tpl =>
-            d00.withColumn("_index", Mutate.sprintfFor(d00, tpl)))
-          // document_id upsert semantics: one row per (index, id); see
-          // SinkSpec scaladoc for the deterministic-winner contract
-          val d = documentId.fold(dIdx) { tpl =>
-            val keyed0 = dIdx.withColumn("_docid", Mutate.sprintfFor(dIdx, tpl))
-            val keys = (if (indexTemplate.isDefined) Seq("_index") else Nil) :+ "_docid"
-            esAction match {
-              case None =>
-                val payload = keyed0.columns.filterNot(keys.contains)
-                keyed0.groupBy(keys.map(col).toIndexedSeq: _*)
-                  .agg(min(struct(payload.map(col).toIndexedSeq: _*)).as("_row"))
-                  .select((keys.map(col) ++
-                    payload.map(c => col(s"_row.$c").as(c))).toIndexedSeq: _*)
-              case Some(actTpl) =>
-                // action variants (SinkSpec scaladoc): delete tombstones the
-                // id; create keeps first, index/update keep last. One grouped
-                // agg — map-side combined, exchange keyed on the id hash,
-                // exactly like the documentId default.
-                val keyed = keyed0.withColumn("_esact", Mutate.sprintfFor(keyed0, actTpl))
-                val payload = keyed.columns.filterNot(c => keys.contains(c) || c == "_esact")
-                val pay = struct(payload.map(col).toIndexedSeq: _*)
-                val isCreate = col("_esact") === "create"
-                val isDelete = col("_esact") === "delete"
-                keyed.groupBy(keys.map(col).toIndexedSeq: _*)
-                  .agg(
-                    max(when(isDelete, 1).otherwise(0)).as("_del"),
-                    min(when(isCreate, pay)).as("_cfirst"),
-                    max(when(!isDelete && !isCreate, pay)).as("_ulast"))
-                  .filter(col("_del") === 0)
-                  .withColumn("_row",
-                    when(col("_ulast").isNotNull, col("_ulast")).otherwise(col("_cfirst")))
-                  .filter(col("_row").isNotNull) // an id of only-create-less rows can't occur; guard anyway
-                  .select((keys.map(col) ++
-                    payload.map(c => col(s"_row.$c").as(c))).toIndexedSeq: _*)
-            }
-          }
-          val parts = (if (indexTemplate.isDefined) Seq("_index") else Nil) ++
-            (if (buckets > 0 && d.columns.contains("doc_id")) Seq("_bucket") else Nil)
-          val db = if (parts.contains("_bucket"))
-            d.withColumn("_bucket", pmod(xxhash64(col("doc_id")), lit(buckets)))
-          else d
-          // cluster dynamic-partitioned sinks by their partition values
-          // before the write (r6; guide 6: Iceberg hash distribution-mode
-          // analogue): without it ONE writer task holds rows of EVERY
-          // partition value — it sorts and writes all the dirs serially
-          // (measured 0.8 s single-task writes in pipe_es_daily) and at
-          // scale emits tasks x values small files. The exchange keys on
-          // the rendered value, so each value lands in one task = one
-          // right-sized file per dir; spark.sql.files.maxRecordsPerFile
-          // re-splits a pathologically hot value's file at scale. The
-          // partition count is pinned (defaultParallelism, scale-adaptive)
-          // because a bare keyed repartition is an AQE-coalescible
-          // exchange: byte-based coalescing folds a small sink back onto
-          // one writer task, exactly the serial write this removes.
-          def clustered(body: DataFrame): DataFrame =
-            if (parts.isEmpty) body
-            else body.repartition(
-              body.sparkSession.sparkContext.defaultParallelism,
-              parts.map(col): _*)
-          if (codec.contains("line")) {
-            // line output codec (logstash-codec-line): one sprintf'd line
-            // per event (`format => "%{message} %{tags}"`); default renders
-            // the message field. Partition layout rides beside the value.
-            val tpl = lineFormat.getOrElse("%{message}")
-            val body = db.select(
-              coalesce(Mutate.sprintfFor(db, tpl).cast("string"), lit(""))
-                .as("value") +: parts.map(col): _*)
-            if (parts.nonEmpty)
-              clustered(body).write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(parts: _*).text(path)
-            else body.write.mode("overwrite").text(path)
-          } else if (codec.contains("csv")) {
-            // csv output plugin: selected fields joined per line; partition
-            // layout (index/bucket) rides beside the text value column
-            val body = db.select(
-              concat_ws(csvSep,
-                csvFields.map(c => coalesce(col(c).cast("string"), lit(""))): _*)
-                .as("value") +: parts.map(col): _*)
-            if (parts.nonEmpty)
-              clustered(body).write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(parts: _*).text(path)
-            else body.write.mode("overwrite").text(path)
-          } else if (codec.exists(c => c == "json_lines" || c == "json")) {
-            // reference file-output default codec: one JSON doc per line.
-            // A sprintf'd index/bucket layout still applies: partition
-            // columns ride beside the single text value column, so
-            // codec => json_lines + a dynamic index loses nothing.
-            val payload = db.columns.filterNot(parts.contains)
-            val body = db.select(
-              to_json(struct(payload.map(col).toIndexedSeq: _*)).as("value") +:
-                parts.map(col): _*)
-            if (parts.nonEmpty)
-              clustered(body).write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(parts: _*).text(path)
-            else body.write.mode("overwrite").text(path)
-          } else if (parts.nonEmpty) {
-            clustered(db).write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy(parts: _*).parquet(path)
-            // a dynamic-partition write of zero rows leaves no file at all:
-            // write the payload schema, as an unpartitioned write does
-            val dir = new org.apache.hadoop.fs.Path(path)
-            if (!fs.exists(dir) || fs.listStatus(dir).isEmpty)
-              db.drop(parts: _*).limit(0).write.mode("overwrite").parquet(path)
-          } else db.write.mode("overwrite").parquet(path)
-        }
-        path
       }
-      val paths = sinks.map { s =>
-        s.name -> writeIfNeeded(s.name, sinkFrame(flagged, s), s.indexTemplate,
-          s.codec, s.documentId, s.csvFields, s.csvSep, s.esAction, s.lineFormat)
-      }.toMap ++
-        (if (writeDefault) Map("_default" -> writeIfNeeded("_default", defaultFrame(flagged, sinks)))
-         else Map.empty[String, String])
-      // ONE per-partition aggregation produces BOTH epilogue surfaces
-      // (r6, guide §2.4): the _lineage rows are its output, and the
-      // per-sink counts are their exact integer column sums — the former
-      // separate global-counts aggregate and the distributed _lineage
-      // write collapse into this single collect (two full trunk passes
-      // -> one; both tiny tables are then written on the driver, without
-      // a job). The aggregation carries one extra unmatched-rows column
-      // for `_default`; it is dropped before the _lineage rows are
-      // persisted, in partition order, so that table's schema is
-      // unchanged. Callers may ride extra run-level counters along
-      // (runConfig records the SOURCE event count as `_in` — the
-      // monitoring API's events.in).
-      val anyMatchAll = sinks.map(s => col(flagCol(s.name)))
-        .reduceOption(_ || _).getOrElse(lit(false))
-      val lineAgg = flagged.groupBy(spark_partition_id().as("part"))
-        .agg(count(lit(1)).as("rows"),
-          (sinks.map(s => sum(col(flagCol(s.name)).cast("long")).as(s"n_${s.name}")) :+
-            sum((!anyMatchAll).cast("long")).as("_n_default")): _*)
-      val lineRows = lineAgg.collect()
-      if (hasSuccess("_lineage")) resumed += "_lineage"
-      else replaceTable(spark, s"$outDir/_lineage",
-        org.apache.spark.sql.types.StructType(lineAgg.schema.dropRight(1)),
-        lineRows.sortBy(_.getInt(0)).toIndexedSeq
-          .map(r => org.apache.spark.sql.Row.fromSeq(r.toSeq.dropRight(1))))
-      // same names, order and zero-on-empty semantics as sinkCounts():
-      // per-partition sums of two-valued flags total to the global sums
-      def colSum(i: Int): Long = lineRows.map(_.getLong(i)).sum
-      val collected: Array[(String, Long)] =
-        sinks.zipWithIndex.map { case (s, i) => s.name -> colSum(i + 2) }.toArray ++
-          Array("_default" -> colSum(lineRows.headOption.map(_.length - 1).getOrElse(2)),
-                "_total" -> lineRows.map(_.getLong(1)).sum)
-      val withExtra = collected ++ extraCounts.toSeq.sortBy(_._1)
+      own.foreach(s => writeSink(s"$outDir/${s.name}",
+        if (s.name == "_default") defaultFrame(flagged, sinks) else sinkFrame(flagged, s), s, buckets))
+      // _lineage keeps the schema of the per-partition aggregate it came
+      // from: part and rows NOT NULL, the per-sink sums nullable
+      import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+      if (!resumed.contains("_lineage")) replaceTable(spark, s"$outDir/_lineage",
+        StructType(StructField("part", IntegerType, nullable = false) +:
+          StructField("rows", LongType, nullable = false) +:
+          sinks.map(s => StructField(s"n_${s.name}", LongType))),
+        tally.partitions.map { case (part, n) => org.apache.spark.sql.Row.fromSeq(part +: n.init.toSeq) })
+      val n = tally.totals
+      val collected = sinks.map(_.name).zip(n.slice(1, sinks.size + 1)) ++
+        Seq("_default" -> n.last, "_total" -> n.head)
       replaceTable(spark, s"$outDir/_counts",
-        org.apache.spark.sql.types.StructType.fromDDL("sink STRING, n BIGINT NOT NULL"),
-        withExtra.toIndexedSeq.map { case (k, n) => org.apache.spark.sql.Row(k, n) })
+        StructType.fromDDL("sink STRING, n BIGINT NOT NULL"),
+        (collected ++ extraCounts.toSeq.sortBy(_._1)).map { case (k, v) => org.apache.spark.sql.Row(k, v) })
       val counts = collected.toMap ++ extraCounts
-      val manifest = writeManifest(spark, outDir, counts, paths, resumed.result())
-      RunResult(counts, paths, resumed.result(), manifest)
-    } finally flagged.unpersist()
+      val paths = outputs.map(s => s.name -> s"$outDir/${s.name}").toMap
+      RunResult(counts, paths, resumed, writeManifest(spark, outDir, counts, paths, resumed))
+    } finally if (own.nonEmpty) { flagged.unpersist(); () }
+  }
+
+  /** The per-sink writer: `df`, the rows of sink `s`, written to `path`
+    * with the index, codec, document id/action, csv or line layout `s`
+    * asks for, and `_bucket` partitions when `buckets > 0`.
+    */
+  private def writeSink(path: String, df: DataFrame, s: SinkSpec, buckets: Int): Unit = {
+    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val dIdx = s.indexTemplate.fold(df)(tpl => df.withColumn("_index", Mutate.sprintfFor(df, tpl)))
+    // document_id upsert semantics: one row per (index, id); see
+    // SinkSpec scaladoc for the deterministic-winner contract
+    val d = s.documentId.fold(dIdx) { tpl =>
+      val keyed0 = dIdx.withColumn("_docid", Mutate.sprintfFor(dIdx, tpl))
+      val keys = (if (s.indexTemplate.isDefined) Seq("_index") else Nil) :+ "_docid"
+      s.esAction match {
+        case None =>
+          val payload = keyed0.columns.filterNot(keys.contains)
+          keyed0.groupBy(keys.map(col).toIndexedSeq: _*)
+            .agg(min(struct(payload.map(col).toIndexedSeq: _*)).as("_row"))
+            .select((keys.map(col) ++
+              payload.map(c => col(s"_row.$c").as(c))).toIndexedSeq: _*)
+        case Some(actTpl) =>
+          // action variants (SinkSpec scaladoc): delete tombstones the
+          // id; create keeps first, index/update keep last. One grouped
+          // agg — map-side combined, exchange keyed on the id hash,
+          // exactly like the documentId default.
+          val keyed = keyed0.withColumn("_esact", Mutate.sprintfFor(keyed0, actTpl))
+          val payload = keyed.columns.filterNot(c => keys.contains(c) || c == "_esact")
+          val pay = struct(payload.map(col).toIndexedSeq: _*)
+          val isCreate = col("_esact") === "create"
+          val isDelete = col("_esact") === "delete"
+          keyed.groupBy(keys.map(col).toIndexedSeq: _*)
+            .agg(
+              max(when(isDelete, 1).otherwise(0)).as("_del"),
+              min(when(isCreate, pay)).as("_cfirst"),
+              max(when(!isDelete && !isCreate, pay)).as("_ulast"))
+            .filter(col("_del") === 0)
+            .withColumn("_row",
+              when(col("_ulast").isNotNull, col("_ulast")).otherwise(col("_cfirst")))
+            .filter(col("_row").isNotNull) // an id of only-create-less rows can't occur; guard anyway
+            .select((keys.map(col) ++
+              payload.map(c => col(s"_row.$c").as(c))).toIndexedSeq: _*)
+      }
+    }
+    val parts = (if (s.indexTemplate.isDefined) Seq("_index") else Nil) ++
+      (if (buckets > 0 && d.columns.contains("doc_id")) Seq("_bucket") else Nil)
+    val db = if (parts.contains("_bucket"))
+      d.withColumn("_bucket", pmod(xxhash64(col("doc_id")), lit(buckets)))
+    else d
+    // a text codec writes one `value` line per event; a sprintf'd index or
+    // bucket layout rides beside it, so codec + a dynamic index loses nothing
+    val line: Option[Column] =
+      if (s.codec.contains("line")) // logstash-codec-line: `format`, default %{message}
+        Some(coalesce(Mutate.sprintfFor(db, s.lineFormat.getOrElse("%{message}")).cast("string"), lit("")))
+      else if (s.codec.contains("csv")) // logstash-output-csv: the selected fields joined
+        Some(concat_ws(s.csvSep, s.csvFields.map(c => coalesce(col(c).cast("string"), lit(""))): _*))
+      else if (s.codec.exists(c => c == "json_lines" || c == "json")) // the file output's default
+        Some(to_json(struct(db.columns.filterNot(parts.contains).map(col).toIndexedSeq: _*)))
+      else None
+    val body = line.fold(db)(v => db.select(v.as("value") +: parts.map(col): _*))
+    // cluster dynamic-partitioned sinks by their partition values
+    // before the write (r6; guide 6: Iceberg hash distribution-mode
+    // analogue): without it ONE writer task holds rows of EVERY
+    // partition value — it sorts and writes all the dirs serially
+    // (measured 0.8 s single-task writes in pipe_es_daily) and at
+    // scale emits tasks x values small files. The exchange keys on
+    // the rendered value, so each value lands in one task = one
+    // right-sized file per dir; spark.sql.files.maxRecordsPerFile
+    // re-splits a pathologically hot value's file at scale. The
+    // partition count is pinned (defaultParallelism, scale-adaptive)
+    // because a bare keyed repartition is an AQE-coalescible
+    // exchange: byte-based coalescing folds a small sink back onto
+    // one writer task, exactly the serial write this removes.
+    val writer =
+      if (parts.isEmpty) body.write.mode("overwrite")
+      else body.repartition(body.sparkSession.sparkContext.defaultParallelism, parts.map(col): _*)
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(parts: _*)
+    if (line.nonEmpty) writer.text(path) else writer.parquet(path)
+    // a dynamic-partition parquet write of zero rows leaves no file at
+    // all: write the payload schema, as an unpartitioned write does
+    val dir = new org.apache.hadoop.fs.Path(path)
+    if (line.isEmpty && parts.nonEmpty && (!fs.exists(dir) || fs.listStatus(dir).isEmpty))
+      db.drop(parts: _*).limit(0).write.mode("overwrite").parquet(path)
   }
 
   /** The default network-sink payload: every non-internal column as one

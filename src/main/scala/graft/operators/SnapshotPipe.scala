@@ -228,7 +228,7 @@ object SnapshotPipe {
     * snapshot tables — the north star's "conditional fan-out routing to
     * multiple Iceberg sink tables", resumable, exactly-once PER SINK.
     * Each chunk `(a, b]` of source snapshots is transformed once into a
-    * trunk, flagged once ([[Route.withSinkFlags]], one persisted scan), and
+    * trunk, written by [[SnapshotTable.appendSinks]] in one fan-out pass, and
     * appended to every sink whose condition-matched subset it carries,
     * under the shared batch id `incr-<src>-<b>` in each sink's own ledger.
     *

@@ -2996,11 +2996,12 @@ object SnapshotTable {
     * Each pending sink's schema is merged with its table's before anything
     * is written, so a type conflict in any sink fails the whole call with
     * nothing committed. The pending sinks are then written by
-    * [[Route.fanOut]]: one pass over the trunk per decorator and payload
-    * schema, each sink's row count and its table's stats bounds observed in
-    * that same job. When every pending sink shares one pass (plain sinks)
-    * nothing is persisted; with more passes the flagged trunk is persisted
-    * for the call, so every sink reads the same rows. Each staged dir is
+    * [[Route.fanOut]]: one pass over the trunk per payload schema, each
+    * sink's decorator run inside its pass, and each sink's row count and its
+    * table's stats bounds observed in that same job. When every pending
+    * sink shares one pass (no decorator adds a column) nothing is
+    * persisted; with more passes the flagged trunk is persisted for the
+    * call, so every sink reads the same rows. Each staged dir is
     * then committed through [[commitChild]] as its table's next `snap-N`,
     * with Bloom sketches as the table asks for them. The staging dir sits
     * under the first pending sink table's `data/`, unreferenced, so

@@ -60,8 +60,7 @@ object Stateful {
     // branch, earliest-proven aggregate) — without this the scan + salt
     // window shuffle would run three times. Eager count populates the cache
     // BEFORE the union job materializes both branches (cache population is
-    // not synchronized across branches of one job). Same one-real-
-    // materialization policy as Route.run's trunk persist.
+    // not synchronized across branches of one job).
     val marked = graft.plans.CacheScope.persist(
       base.withColumn("_rk1", row_number().over(w1)))
     val proven = marked.filter(col("_rk1") > maxPerPeriod) // throttled for sure

@@ -2962,12 +2962,14 @@ object OpsQueries {
         |       CASE WHEN event_id % 5 = 0 THEN '_yamlparsefailure' ELSE '' END AS tag_str
         |FROM events ORDER BY event_id""".stripMargin,
 
+    // an event the cidr decorator skips keeps no tags field (Event.java:
+    // 472-537 appends a tag only where it is added), so its tag_str is NULL
     "lscl_net" ->
       """SELECT event_id,
         |       CAST(user_id % 192 % 8 AS INTEGER) AS syslog_severity_code,
         |       CAST((user_id % 192) // 8 AS INTEGER) AS syslog_facility_code,
         |       CASE WHEN event_id % 3 = 0 AND user_id % 256 < 128
-        |            THEN 'internal' ELSE '' END AS tag_str,
+        |            THEN 'internal' END AS tag_str,
         |       sha256('salt' || 's-' || user_id) AS secret
         |FROM events ORDER BY event_id""".stripMargin,
 
@@ -3055,6 +3057,8 @@ object OpsQueries {
         |            ELSE '_grokparsefailure' END AS tag_str
         |FROM events ORDER BY event_id""".stripMargin,
 
+    // an event the throttle lets through keeps no tags field (Event.java:
+    // 472-537), so its tag_str is NULL
     "lscl_throttle" ->
       """WITH r AS (
         |  SELECT event_id,
@@ -3063,7 +3067,7 @@ object OpsQueries {
         |                            ORDER BY ts, event_id) AS rk
         |  FROM events)
         |SELECT event_id,
-        |       CASE WHEN rk < 3 OR rk > 5 THEN 'throttled' ELSE '' END AS tag_str
+        |       CASE WHEN rk < 3 OR rk > 5 THEN 'throttled' END AS tag_str
         |FROM r ORDER BY event_id""".stripMargin,
 
     "lscl_metrics" ->

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import graft.operators.{Route, SnapshotTable}
@@ -17,10 +17,11 @@ object StreamPipeline {
 
   /** Run a transform + fan-out over a stream; returns the running query.
     * Micro-batch `batchId` of query `<qid>` (the id its checkpoint keeps
-    * across restarts) is an epoch: one [[Route.fanOut]] pass (one job for
-    * plain sinks) writes every sink into `outDir/<sink>` as
-    * `epoch-<qid>-<batchId>-<file>`, and its counts, `_default` and `_total`
-    * into `outDir/_counts` the same way, replacing what an earlier attempt
+    * across restarts) is an epoch: one [[Route.fanOut]] pass (one job
+    * unless a decorator adds a column) writes every sink into
+    * `outDir/<sink>` as `epoch-<qid>-<batchId>-<file>`, and its counts,
+    * `_default` and `_total`, taken in that pass, into `outDir/_counts` the
+    * same way, replacing what an earlier attempt
     * of the epoch published. `perBatch` then gets the flag-free batch; with
     * a hook the batch is persisted, so it sees the sinks' rows.
     */
@@ -37,16 +38,13 @@ object StreamPipeline {
       if (perBatch.nonEmpty) flagged.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         val fs = new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val obs = Observation() // the trunk's counts ride the first write pass
-        val anyMatch = sinks.map(s => col(Route.flagCol(s.name))).reduceOption(_ || _).getOrElse(lit(false))
-        val trunk = flagged.observe(obs, count(lit(1)).as("_total"), count(when(!anyMatch, 1)).as("_default"))
-        if (sinks.isEmpty) trunk.write.format("noop").mode("overwrite").save() // no pass runs it
+        val tally = new Route.Tally(sinks.map(s => Route.flagCol(s.name)))
         val staging = Route.newStaging(outDir)
-        Route.fanOut(new Route.FanPlan(trunk, sinks.map(s =>
-            Route.FanTarget(col(Route.flagCol(s.name)), s.decorator))), staging) { staged =>
+        Route.fanOut(new Route.FanPlan(flagged, sinks.map(s =>
+            Route.FanTarget(col(Route.flagCol(s.name)), s.decorator))), staging, tally = Some(tally)) { staged =>
           val counts = new Path(staging, "_counts")
           val n = sinks.map(_.name).zip(staged.map(_.rows)) ++
-            Seq("_default", "_total").map(k => k -> obs.get(k).asInstanceOf[Long])
+            Seq("_default" -> tally.totals.last, "_total" -> tally.totals.head)
           Route.writeTable(spark, new Path(counts, "part-00000.parquet"), CountsSchema,
             n.map { case (k, v) => Row(k, v, batchId) })
           for ((dir, src) <- sinks.map(_.name).zip(staged.map(_.dir)) :+ ("_counts" -> counts)) {

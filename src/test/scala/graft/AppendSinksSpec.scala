@@ -84,22 +84,88 @@ class AppendSinksSpec extends SparkSpec {
     assert(ST.read(spark, s"$root/none").schema == ST.read(spark, s"$root/hi").schema)
   }
 
-  test("sinks written in separate passes read the same trunk rows") {
+  // the LSCL uuid filter's expression, and a random UDF no seed pins
+  private def random(t: DataFrame): DataFrame = {
+    val rnd = udf(() => java.util.UUID.randomUUID().toString).asNondeterministic()
+    t.withColumn("uuid", expr("uuid()")).withColumn("rid", rnd())
+  }
+
+  private def ids(root: String, name: String) =
+    ST.read(spark, s"$root/$name").select("doc_id", "uuid", "rid")
+      .collect().map(r => r.getLong(0) -> (r.getString(1), r.getString(2))).toMap
+
+  test("a plain and an add_tag sink are written in one pass") {
     val root = tmp()
     spark.catalog.clearCache()
-    // the LSCL uuid filter's expression, and a random UDF no seed pins
-    val rnd = udf(() => java.util.UUID.randomUUID().toString).asNondeterministic()
-    val t = trunk(0 until 10).withColumn("uuid", expr("uuid()")).withColumn("rid", rnd())
     val two = Seq(
       Route.SinkSpec("plain", Eq("sev", "ERROR")),
       Route.SinkSpec("decorated", Eq("sev", "ERROR"), Mutate.Decorator(addTag = Seq("e"))))
-    val (_, jobs) = jobsOf(ST.appendSinks(spark, t, two, root, "b1"))
+    val (_, jobs) = jobsOf(ST.appendSinks(spark, random(trunk(0 until 10)), two, root, "b1"))
+    assert(jobs == 1, s"$jobs jobs for one pass")
+    assert(ids(root, "plain").size == 4)
+    assert(ids(root, "plain") == ids(root, "decorated"))
+    assert(spark.sharedState.cacheManager.isEmpty, "a cache outlived the call")
+  }
+
+  test("sinks written in separate passes read the same trunk rows") {
+    val root = tmp()
+    spark.catalog.clearCache()
+    val two = Seq(
+      Route.SinkSpec("plain", Eq("sev", "ERROR")),
+      Route.SinkSpec("noted", Eq("sev", "ERROR"), Mutate.Decorator(addField = Seq("note" -> "n%{doc_id}"))))
+    val (_, jobs) = jobsOf(ST.appendSinks(spark, random(trunk(0 until 10)), two, root, "b1"))
     assert(jobs == 2, s"$jobs jobs for two passes")
-    def ids(name: String) = ST.read(spark, s"$root/$name").select("doc_id", "uuid", "rid")
-      .collect().map(r => r.getLong(0) -> (r.getString(1), r.getString(2))).toMap
-    assert(ids("plain").size == 4)
-    assert(ids("plain") == ids("decorated"))
+    assert(ids(root, "plain").size == 4)
+    assert(ids(root, "plain") == ids(root, "noted"))
     assert(spark.sharedState.cacheManager.isEmpty, "the trunk's cache outlived the call")
+  }
+
+  test("Route.run and appendSinks store each sink's sinkFrame rows, decorators in the pass") {
+    // tags are null on even ids; a sink that adds a column takes a second
+    // pass; doc_id 4 matches no sink
+    val four = Seq(
+      Route.SinkSpec("plain", Eq("sev", "ERROR")),
+      Route.SinkSpec("tagged", Gte("doc_id", 7L), Mutate.Decorator(addTag = Seq("hit"))),
+      Route.SinkSpec("edited", Eq("sev", "INFO"), Mutate.Decorator(
+        addField = Seq("sev" -> "s-%{sev}"), removeTag = Seq("t5"))),
+      Route.SinkSpec("noted", Lte("doc_id", 1L), Mutate.Decorator(addField = Seq("note" -> "n%{doc_id}"))))
+    val t = trunk(0 until 12)
+    val flagged = Route.withSinkFlags(t, four)
+    val (out, root) = (tmp(), tmp())
+    val (run, runJobs) = jobsOf(Route.run(spark, t, four, out))
+    val (_, sinkJobs) = jobsOf(ST.appendSinks(spark, t, four, root, "b1"))
+    assert(runJobs == 2 && sinkJobs == 2, s"Route.run $runJobs jobs, appendSinks $sinkJobs")
+    def typed(df: DataFrame) = df.schema.map(f => f.name -> f.dataType)
+    four.foreach { s =>
+      val want = Route.sinkFrame(flagged, s)
+      Seq(spark.read.parquet(run.sinkPaths(s.name)), ST.read(spark, s"$root/${s.name}")).foreach { got =>
+        assert(typed(got) == typed(want), s.name)
+        assert(sorted(got) == sorted(want), s.name)
+      }
+    }
+    val default = spark.read.parquet(run.sinkPaths("_default"))
+    assert(sorted(default) == sorted(Route.defaultFrame(flagged, four)))
+    // rows no decorator ran on keep their null tags
+    assert(default.filter(col("tags").isNull).count() == 1)
+    Seq(spark.read.parquet(run.sinkPaths("plain")), ST.read(spark, s"$root/plain"))
+      .foreach(p => assert(p.filter(col("tags").isNull).count() == 2))
+    assert(run.counts == Map("plain" -> 4L, "tagged" -> 5L, "edited" -> 4L, "noted" -> 2L,
+      "_default" -> 1L, "_total" -> 12L))
+  }
+
+  test("a nested add_field sink takes a pass of its own, so no other sink's null struct changes") {
+    // add_field [ctx][k] rebuilds a null ctx as a struct on every row it runs over
+    val t = trunk(0 until 6).withColumn("ctx",
+      when(col("doc_id") % 2 === 0, struct(lit("k0").as("k"))))
+    val two = Seq(
+      Route.SinkSpec("plain", Gte("doc_id", 0L)),
+      Route.SinkSpec("nested", Eq("sev", "ERROR"), Mutate.Decorator(addField = Seq("[ctx][k]" -> "e%{doc_id}"))))
+    val (run, jobs) = jobsOf(Route.run(spark, t, two, tmp()))
+    assert(jobs == 2, s"$jobs jobs")
+    val flagged = Route.withSinkFlags(t, two)
+    two.foreach(s => assert(sorted(spark.read.parquet(run.sinkPaths(s.name))) ==
+      sorted(Route.sinkFrame(flagged, s)), s.name))
+    assert(spark.read.parquet(run.sinkPaths("plain")).filter(col("ctx").isNull).count() == 3)
   }
 
   private def debris(root: String): Seq[String] = {

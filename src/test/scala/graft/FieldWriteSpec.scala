@@ -67,6 +67,20 @@ class FieldWriteSpec extends SparkSpec {
     assert(out == Map("A" -> "A!", "B" -> null))
   }
 
+  test("decorator add_tag leaves the tags of rows its condition skips as they were") {
+    import spark.implicits._
+    val df = Seq(("a", Seq("x")), ("b", null), ("c", Seq("y"))).toDF("w", "tags")
+    def tags(d: org.apache.spark.sql.DataFrame) =
+      d.select("w", "tags").collect().map(r => r.getString(0) -> Option(r.getSeq[String](1))).toMap
+    val dec = graft.operators.Mutate.Decorator(addTag = Seq("hit"))
+    assert(tags(dec.applyWhen(df, col("w") === "a")) ==
+      Map("a" -> Some(Seq("x", "hit")), "b" -> None, "c" -> Some(Seq("y"))))
+    assert(tags(dec.applyWhen(df, col("w") === "b"))("b") == Some(Seq("hit")))
+    // no tags column: the skipped rows get none
+    assert(tags(dec.applyWhen(df.drop("tags"), col("w") === "a")) ==
+      Map("a" -> Some(Seq("hit")), "b" -> None, "c" -> None))
+  }
+
   test("field-reference escape styles: percent and ampersand (EscapeHandler semantics)") {
     import FieldRef.EscapeStyle
     // percent: %5B/%5D decode; bare % (not followed by 2 hex digits) literal

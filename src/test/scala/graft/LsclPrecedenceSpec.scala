@@ -134,8 +134,9 @@ class LsclPrecedenceSpec extends SparkSpec {
     val out2 = LsclRun.applyFilters(df2, cfg2.filters)
       .select(col("n"), col("lvl"), array_join(col("tags"), ",").as("tags"))
       .orderBy("n").collect().map(r => (r.getInt(0), r.getString(1), r.getString(2)))
-    // row 1: arm1 fires (lvl A->B), arm2 must NOT also fire; row 2: arm2 fires
-    assert(out2.toSeq == Seq((1, "B", ""), (2, "B", "armB")))
+    // row 1: arm1 fires (lvl A->B), arm2 must NOT also fire, so it gets no
+    // tags at all (Event.java:472-537); row 2: arm2 fires
+    assert(out2.toSeq == Seq((1, "B", null), (2, "B", "armB")))
     // no residue of the materialized predicate columns
     assert(!LsclRun.applyFilters(df2, cfg2.filters).columns.exists(_.startsWith("__lscl_")))
   }

@@ -59,10 +59,13 @@ class RouteCountsSpec extends SparkSpec {
 
   test("Route.run's _lineage and runWithMetrics' _metrics read back as the Spark-job writes they replaced") {
     import org.apache.spark.sql.functions._
+    spark.catalog.clearCache() // a suite that cached the flagged trunk would save its jobs
     val pipe = StandardPipeline.fromDir(spark, sfDir)
     val sinks = StandardPipeline.sinks
-    // one input partition (one _lineage row) and four
-    for (trunk <- Seq(pipe.trunk, pipe.trunk.repartition(4, col("doc_id")))) {
+    // one input partition (one _lineage row), four, and four of which at
+    // least one is empty (three severities hashed into four partitions)
+    val empty = pipe.trunk.repartition(4, col("severity"))
+    for (trunk <- Seq(pipe.trunk, pipe.trunk.repartition(4, col("doc_id")), empty)) {
       val out = tmp()
       val r = Route.runWithMetrics(spark, trunk, sinks, out)
       Seq("_lineage", "_metrics").foreach(d => assert(new java.io.File(s"$out/$d/_SUCCESS").exists, d))
@@ -90,21 +93,30 @@ class RouteCountsSpec extends SparkSpec {
       val (got, want) = (spark.read.parquet(s"$out/_lineage"), spark.read.parquet(s"$legacy/_lineage"))
       assert(got.schema == want.schema && got.schema.map(_.nullable) == want.schema.map(_.nullable))
       assert(got.collect().toSeq == want.collect().toSeq.sortBy(_.getInt(0)))
-      assert(got.count() == trunk.rdd.getNumPartitions)
+      // an empty partition has no row, as in the per-partition aggregate
+      val parts = trunk.rdd.mapPartitions(it => Iterator(it.nonEmpty)).collect()
+      assert(got.count() == parts.count(identity))
+      if (trunk eq empty) assert(parts.contains(false), "the trunk has no empty partition")
       assert(Route.nodeStats(spark, out) == Route.nodeStats(spark, legacy))
-      // a rerun resumes _lineage as before
-      assert(Route.run(spark, trunk, sinks, out).resumedSinks ==
-        sinks.map(_.name) ++ Seq("_default", "_lineage"))
+      // a fully resumed rerun resumes _lineage as before, and counts in one
+      // pass: the jobs of a noop write of the flagged trunk
+      val (_, noop) = jobsOf(Route.withSinkFlags(trunk, sinks).write.format("noop").mode("overwrite").save())
+      val (rerun, jobs) = jobsOf(Route.run(spark, trunk, sinks, out))
+      assert(rerun.resumedSinks == sinks.map(_.name) ++ Seq("_default", "_lineage"))
+      assert(rerun.counts == r.counts)
+      assert(jobs == noop, s"$jobs jobs for a fully resumed rerun, a noop write takes $noop")
       assert(spark.read.parquet(s"$out/_lineage").collect().toSeq == got.collect().toSeq)
     }
   }
 
   test("Route.run writes _lineage without a Spark job, and runWithMetrics adds none") {
+    spark.catalog.clearCache()
     val pipe = StandardPipeline.fromDir(spark, sfDir)
     val (_, run) = jobsOf(Route.run(spark, pipe.trunk, StandardPipeline.sinks, tmp()))
     val (_, withMetrics) = jobsOf(Route.runWithMetrics(spark, pipe.trunk, StandardPipeline.sinks, tmp()))
-    // a Spark write of _lineage made it 7
-    assert(run == 6)
+    // the dictionary's broadcast and the one fan-out write
+    assert(run == 2)
     assert(withMetrics == run)
+    assert(spark.sharedState.cacheManager.isEmpty, "Route.run left a cached frame")
   }
 }
