@@ -305,16 +305,35 @@ object Route {
   private[graft] def writeTable(spark: SparkSession, file: org.apache.hadoop.fs.Path,
                                 schema: org.apache.spark.sql.types.StructType,
                                 rows: Seq[org.apache.spark.sql.Row] = Nil): Unit = {
-    import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils}
-    val conf = spark.sessionState.conf
-    val job = org.apache.hadoop.mapreduce.Job.getInstance(spark.sessionState.newHadoopConf())
-    val writer = ParquetUtils.prepareWrite(conf, job, schema, new ParquetOptions(Map.empty[String, String], conf))
-      .newInstance(file.toString, schema, new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
-        job.getConfiguration, new org.apache.hadoop.mapreduce.TaskAttemptID()))
+    val (factory, conf) = parquetWriterFactory(spark, schema)
+    val writer = openParquet(factory, conf, file.toString, schema)
     val toInternal = org.apache.spark.sql.catalyst.CatalystTypeConverters.createToCatalystConverter(schema)
     try rows.foreach(r => writer.write(toInternal(r).asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]))
     finally writer.close()
   }
+
+  /** The session's parquet writer for `schema` (codec, type mapping, footer
+    * and `spark.hadoop.*` settings), set up on the driver. Both halves are
+    * serializable: ship them to executors and open files there with
+    * [[openParquet]].
+    */
+  private[graft] def parquetWriterFactory(spark: SparkSession, schema: org.apache.spark.sql.types.StructType)
+      : (org.apache.spark.sql.execution.datasources.OutputWriterFactory,
+         org.apache.spark.util.SerializableConfiguration) = {
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils}
+    val conf = spark.sessionState.conf
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(spark.sessionState.newHadoopConf())
+    val factory = ParquetUtils.prepareWrite(conf, job, schema, new ParquetOptions(Map.empty[String, String], conf))
+    (factory, new org.apache.spark.util.SerializableConfiguration(job.getConfiguration))
+  }
+
+  /** A parquet file at `file` opened by a [[parquetWriterFactory]] writer. */
+  private[graft] def openParquet(factory: org.apache.spark.sql.execution.datasources.OutputWriterFactory,
+                                 conf: org.apache.spark.util.SerializableConfiguration, file: String,
+                                 schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.execution.datasources.OutputWriter =
+    factory.newInstance(file, schema, new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+      conf.value, new org.apache.hadoop.mapreduce.TaskAttemptID()))
 
   /** The table dir `dir`, replaced by one [[writeTable]] file and the
     * `_SUCCESS` marker a Spark write leaves.

@@ -955,13 +955,15 @@ object SnapshotTable {
   /** ADOPT already-written parquet files as a new append snapshot — the
     * commit half of the DSv2 streaming sink
     * ([[graft.sources.SnapshotStreamSource]]): executors wrote the files
-    * into a staging area, the driver renames exactly the COMMITTED tasks'
-    * files into `data/snap-NNNNNN/` and commits one manifest (speculative /
-    * aborted task files are never listed, so they never enter the table).
-    * Same exactly-once batch ledger, schema evolution, and table-property
+    * into a staging area with Spark's own parquet writer
+    * ([[Route.parquetWriterFactory]], the writer [[append]]'s files come
+    * from), the driver renames exactly the COMMITTED tasks' files into
+    * `data/snap-NNNNNN/` and commits one manifest (speculative / aborted
+    * task files are never listed, so they never enter the table). Same
+    * exactly-once batch ledger, schema evolution, and table-property
     * stats/bloom computation as [[append]]; a replayed batch id deletes the
-    * staged files and skips. `rows` is the writers' own count (they counted
-    * what they wrote — no re-scan job at commit). `files` must be non-empty.
+    * staged files and skips. `rows` is the writers' own count of the rows
+    * they wrote (no re-scan job at commit). `files` must be non-empty.
     */
   private[graft] def adoptFiles(spark: SparkSession, dir: String,
                                 files: Seq[String], rows: Long,
@@ -2013,21 +2015,22 @@ object SnapshotTable {
   }
 
   /** Streaming-read planning (used by [[graft.sources.SnapshotStreamSource]]):
-    * the parquet FILES appended in (from, to], flat-listed from the range's
-    * `added` dirs — driver-side metadata + one listing per new dir, cost ∝
-    * delta. Same insert-only contract as [[incremental]] (row-removing
-    * snapshots in range fail loudly). Files are returned per committing
-    * snapshot so admission control can cut on commit boundaries.
+    * the parquet FILES appended in (from, to], with their lengths,
+    * flat-listed from the range's `added` dirs — driver-side metadata + one
+    * listing per new dir, cost ∝ delta. Same insert-only contract as
+    * [[incremental]] (row-removing snapshots in range fail loudly). Files are
+    * returned per committing snapshot so admission control can cut on commit
+    * boundaries.
     */
   def incrementalFiles(spark: SparkSession, dir: String,
                        fromExclusive: Long, toInclusive: Long)
-      : Seq[(Long, Seq[String])] = {
+      : Seq[(Long, Seq[(String, Long)])] = {
     val (fs, root) = fsOf(spark, dir)
-    def parquetFiles(p: Path): Seq[String] =
+    def parquetFiles(p: Path): Seq[(String, Long)] =
       if (!fs.exists(p)) Nil
       else fs.listStatus(p).toIndexedSeq.flatMap { st =>
         if (st.isDirectory) parquetFiles(st.getPath)
-        else if (st.getPath.getName.endsWith(".parquet")) Seq(st.getPath.toString)
+        else if (st.getPath.getName.endsWith(".parquet")) Seq(st.getPath.toString -> st.getLen)
         else Nil
       }
     appendedIn(spark, dir, fromExclusive, toInclusive).map { m =>

@@ -2,22 +2,17 @@ package graft.sources
 
 import java.util.UUID
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.simple.SimpleGroup
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type => PType, Types}
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-import org.apache.parquet.schema.Type.Repetition
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
+import org.apache.spark.sql.execution.datasources.{DataSourceUtils, OutputWriter, OutputWriterFactory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 
-import graft.operators.SnapshotTable
+import graft.operators.{Route, SnapshotTable}
 
 /** Structured Streaming WRITE into a [[graft.operators.SnapshotTable]] chain —
   * the sink half of [[SnapshotStreamSource]] (`df.writeStream.format(...)
@@ -38,16 +33,19 @@ import graft.operators.SnapshotTable
   * table is an append+retract log, Complete-mode truncation is not a thing
   * it does.
   *
-  * Supported column types: the same matrix as the read side
-  * ([[SnapshotStreamSource.validate]]); the first epoch of a virgin table
-  * stamps the write schema, later epochs evolve it like [[SnapshotTable.append]].
+  * Executors write with Spark's own parquet writer, set up on the driver
+  * with the session's codec, type mapping and `spark.hadoop.*` settings
+  * ([[Route.parquetWriterFactory]]), so the files are the ones a batch write
+  * leaves. A column that writer cannot store fails at plan time, before any
+  * file is staged. The first epoch of a virgin table stamps the write
+  * schema, later epochs evolve it like [[SnapshotTable.append]].
   */
 private[sources] class SnapshotStreamWriteBuilder(info: LogicalWriteInfo)
   extends WriteBuilder {
 
   override def build(): Write = new Write {
     override def toStreaming: StreamingWrite = {
-      SnapshotStreamSource.validate(info.schema())
+      DataSourceUtils.verifySchema(new ParquetFileFormat(), info.schema())
       val dir = SnapshotStreamSource.pathOf(info.options())
       val sinkId = Option(info.options().get("sink_id")).getOrElse(info.queryId())
       require(sinkId.matches("[A-Za-z0-9._-]+"),
@@ -65,8 +63,10 @@ private class SnapshotStreamingWrite(dir: String, sinkId: String, schema: Struct
 
   private def stagingRoot = s"$dir/_streaming/$sinkId"
 
-  override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    new SnapshotStreamWriterFactory(stagingRoot, schema)
+  override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory = {
+    val (factory, conf) = Route.parquetWriterFactory(SparkSession.active, schema)
+    new SnapshotStreamWriterFactory(stagingRoot, schema, factory, conf)
+  }
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
@@ -96,7 +96,9 @@ private class SnapshotStreamingWrite(dir: String, sinkId: String, schema: Struct
   }
 }
 
-private class SnapshotStreamWriterFactory(stagingRoot: String, schema: StructType)
+private class SnapshotStreamWriterFactory(stagingRoot: String, schema: StructType,
+                                          factory: OutputWriterFactory,
+                                          conf: SerializableConfiguration)
   extends StreamingDataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
@@ -104,28 +106,19 @@ private class SnapshotStreamWriterFactory(stagingRoot: String, schema: StructTyp
     // uuid-unique name: retried/speculative attempts of the same partition
     // never collide, and only the committed attempt's name reaches the driver
     val file = f"$stagingRoot/epoch-$epochId/part-$partitionId%05d-$taskId-${UUID.randomUUID()}.parquet"
-    new SnapshotFileDataWriter(file, schema)
+    new SnapshotFileDataWriter(file, Route.openParquet(factory, conf, file, schema), conf)
   }
 }
 
-private class SnapshotFileDataWriter(file: String, schema: StructType)
+private class SnapshotFileDataWriter(file: String, writer: OutputWriter,
+                                     conf: SerializableConfiguration)
   extends DataWriter[InternalRow] {
 
-  private val mt = SnapshotParquetEncode.messageType(schema)
-  private val conf = new Configuration()
-  private val writer = {
-    org.apache.parquet.hadoop.example.GroupWriteSupport.setSchema(mt, conf)
-    ExampleParquetWriter.builder(new Path(file))
-      .withConf(conf)
-      .withType(mt)
-      .withCompressionCodec(CompressionCodecName.SNAPPY)
-      .build()
-  }
   private var rows = 0L
   private var closed = false
 
   override def write(row: InternalRow): Unit = {
-    writer.write(SnapshotParquetEncode.toGroup(mt, schema, row))
+    writer.write(row)
     rows += 1L
   }
 
@@ -137,102 +130,8 @@ private class SnapshotFileDataWriter(file: String, schema: StructType)
   override def abort(): Unit = {
     close()
     val p = new Path(file)
-    p.getFileSystem(conf).delete(p, false)
+    p.getFileSystem(conf.value).delete(p, false)
   }
 
   override def close(): Unit = if (!closed) { closed = true; writer.close() }
-}
-
-/** StructType → parquet MessageType and InternalRow → Group record encode —
-  * the exact mirror of [[SnapshotParquetDecode]]'s type matrix (primitives +
-  * one-level arrays of primitives). Timestamps write as INT64
-  * TIMESTAMP(MICROS) (adjusted-to-UTC for TimestampType, not for NTZ),
-  * dates as INT32 DATE, strings as UTF8 BINARY, arrays in the standard
-  * 3-level LIST shape — all of which Spark's vectorized batch reader (the
-  * [[SnapshotTable.read]] path) reads natively.
-  */
-private[sources] object SnapshotParquetEncode {
-
-  def messageType(schema: StructType): MessageType = {
-    val b = Types.buildMessage()
-    schema.fields.foreach(f => b.addField(fieldType(f)))
-    b.named("spark_schema")
-  }
-
-  private def fieldType(f: StructField): PType = f.dataType match {
-    case ArrayType(et, _) =>
-      Types.optionalList()
-        .setElementType(primType(et, "element", Repetition.OPTIONAL))
-        .named(f.name)
-    case dt => primType(dt, f.name, Repetition.OPTIONAL)
-  }
-
-  private def primType(dt: DataType, name: String, rep: Repetition): PType = dt match {
-    case BooleanType => Types.primitive(BOOLEAN, rep).named(name)
-    case IntegerType => Types.primitive(INT32, rep).named(name)
-    case LongType    => Types.primitive(INT64, rep).named(name)
-    case FloatType   => Types.primitive(FLOAT, rep).named(name)
-    case DoubleType  => Types.primitive(DOUBLE, rep).named(name)
-    case StringType  => Types.primitive(BINARY, rep)
-      .as(LogicalTypeAnnotation.stringType()).named(name)
-    case BinaryType  => Types.primitive(BINARY, rep).named(name)
-    case DateType    => Types.primitive(INT32, rep)
-      .as(LogicalTypeAnnotation.dateType()).named(name)
-    case TimestampType => Types.primitive(INT64, rep)
-      .as(LogicalTypeAnnotation.timestampType(true, LogicalTypeAnnotation.TimeUnit.MICROS))
-      .named(name)
-    case TimestampNTZType => Types.primitive(INT64, rep)
-      .as(LogicalTypeAnnotation.timestampType(false, LogicalTypeAnnotation.TimeUnit.MICROS))
-      .named(name)
-    case other => sys.error(s"unsupported encode type ${other.catalogString} for '$name'")
-  }
-
-  def toGroup(mt: MessageType, schema: StructType, row: InternalRow): SimpleGroup = {
-    val g = new SimpleGroup(mt)
-    var i = 0
-    while (i < schema.fields.length) {
-      if (!row.isNullAt(i)) {
-        schema.fields(i).dataType match {
-          case ArrayType(et, _) =>
-            val listG = g.addGroup(i)
-            val arr = row.getArray(i)
-            var j = 0
-            while (j < arr.numElements()) {
-              val el = listG.addGroup(0)
-              if (!arr.isNullAt(j)) addPrim(el, 0, et, arr, j)
-              j += 1
-            }
-          case dt => addTop(g, i, dt, row)
-        }
-      }
-      i += 1
-    }
-    g
-  }
-
-  private def addTop(g: SimpleGroup, i: Int, dt: DataType, row: InternalRow): Unit =
-    dt match {
-      case BooleanType => g.add(i, row.getBoolean(i))
-      case IntegerType | DateType => g.add(i, row.getInt(i))
-      case LongType | TimestampType | TimestampNTZType => g.add(i, row.getLong(i))
-      case FloatType => g.add(i, row.getFloat(i))
-      case DoubleType => g.add(i, row.getDouble(i))
-      case StringType => g.add(i, Binary.fromString(row.getUTF8String(i).toString))
-      case BinaryType => g.add(i, Binary.fromConstantByteArray(row.getBinary(i)))
-      case other => sys.error(s"unsupported encode type ${other.catalogString}")
-    }
-
-  private def addPrim(g: org.apache.parquet.example.data.Group, idx: Int,
-                      dt: DataType,
-                      arr: org.apache.spark.sql.catalyst.util.ArrayData,
-                      j: Int): Unit = dt match {
-    case BooleanType => g.add(idx, arr.getBoolean(j))
-    case IntegerType | DateType => g.add(idx, arr.getInt(j))
-    case LongType | TimestampType | TimestampNTZType => g.add(idx, arr.getLong(j))
-    case FloatType => g.add(idx, arr.getFloat(j))
-    case DoubleType => g.add(idx, arr.getDouble(j))
-    case StringType => g.add(idx, Binary.fromString(arr.getUTF8String(j).toString))
-    case BinaryType => g.add(idx, Binary.fromConstantByteArray(arr.getBinary(j)))
-    case other => sys.error(s"unsupported encode element type ${other.catalogString}")
-  }
 }

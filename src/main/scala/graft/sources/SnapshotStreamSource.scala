@@ -1,17 +1,19 @@
 package graft.sources
 
 import java.util
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.connector.write.LogicalWriteInfo
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.v2.PartitionReaderFromIterator
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.operators.SnapshotTable
 
@@ -43,14 +45,9 @@ import graft.operators.SnapshotTable
   * Compaction (`replace`) commits pass through silently: same rows, new
   * files, nothing re-emitted.
   *
-  * Readers decode parquet row-by-row on the executor (parquet-hadoop's
-  * column-assembled record API — one partition per appended FILE, so a big
-  * commit fans out). That trades the vectorized reader's raw scan rate for
-  * zero coupling to Spark internals; streaming deltas are commit-sized, and
-  * the batch path ([[SnapshotTable.read]]) keeps the vectorized scan.
-  * Supported column types: boolean/int/long/float/double/string/binary/
-  * date/timestamp + one-level arrays of primitives (the token-sequence
-  * shape); anything else fails loudly at plan time.
+  * Readers are Spark's own parquet reader, set up once per micro-batch on
+  * the driver, one partition per appended FILE (a big commit fans out).
+  * Columns resolve by name, as in the batch read ([[SnapshotTable.read]]).
   */
 class SnapshotStreamSource extends TableProvider {
   // a VIRGIN table (no committed snapshot yet) infers empty: the streaming
@@ -71,25 +68,6 @@ object SnapshotStreamSource {
   private[sources] def pathOf(options: CaseInsensitiveStringMap): String =
     Option(options.get("path")).getOrElse(
       throw new IllegalArgumentException("SnapshotStreamSource: path option required"))
-
-  /** Fail at PLAN time on any column the executor-side decoder cannot
-    * produce — a reader-side error would surface mid-batch instead.
-    */
-  private[sources] def validate(schema: StructType): Unit = {
-    def primitive(dt: DataType): Boolean = dt match {
-      case BooleanType | IntegerType | LongType | FloatType | DoubleType |
-           StringType | BinaryType | DateType | TimestampType | TimestampNTZType => true
-      case _ => false
-    }
-    schema.fields.foreach { f =>
-      val ok = primitive(f.dataType) || (f.dataType match {
-        case ArrayType(et, _) => primitive(et)
-        case _ => false
-      })
-      require(ok, s"SnapshotStreamSource cannot decode column '${f.name}' of type " +
-        s"${f.dataType.catalogString} — supported: primitive types and arrays of them")
-    }
-  }
 }
 
 private class SnapshotStreamTable(tschema: StructType, options: CaseInsensitiveStringMap)
@@ -131,7 +109,6 @@ private class SnapshotStreamScan(tschema: StructType, options: CaseInsensitiveSt
     require(tschema.fields.nonEmpty,
       "streaming read of a table with no committed snapshot — append once " +
         "first (a virgin table has no schema to plan with)")
-    SnapshotStreamSource.validate(tschema)
     new SnapshotMicroBatch(SnapshotStreamSource.pathOf(options), tschema,
       Option(options.get("starting")).getOrElse("earliest"),
       Option(options.get("start_snapshot_id")).map(_.toLong),
@@ -194,138 +171,28 @@ private class SnapshotMicroBatch(dir: String, schema: StructType, starting: Stri
     // the range crosses a row-removing snapshot
     SnapshotTable.incrementalFiles(spark, dir, s, e)
       .flatMap(_._2)
-      .map(f => SnapshotFilePartition(f): InputPartition)
+      .map { case (f, length) => SnapshotFilePartition(f, length): InputPartition }
       .toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new SnapshotFileReaderFactory(schema)
+    new SnapshotFileReaderFactory(new ParquetFileFormat().buildReaderWithPartitionValues(
+      spark, schema, new StructType(), schema, Nil,
+      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), spark.sessionState.newHadoopConf()))
 
   override def commit(end: Offset): Unit = () // the table's manifests are the retention
   override def stop(): Unit = ()
 }
 
-private case class SnapshotFilePartition(file: String) extends InputPartition
+private case class SnapshotFilePartition(file: String, length: Long) extends InputPartition
 
-private class SnapshotFileReaderFactory(schema: StructType)
+private class SnapshotFileReaderFactory(read: PartitionedFile => Iterator[InternalRow])
   extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val file = partition.asInstanceOf[SnapshotFilePartition].file
-    new PartitionReader[InternalRow] {
-      private val reader = org.apache.parquet.hadoop.ParquetReader
-        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-          new org.apache.hadoop.fs.Path(file))
-        .withConf(new org.apache.hadoop.conf.Configuration())
-        .build()
-      private var current: org.apache.parquet.example.data.Group = _
-
-      override def next(): Boolean = {
-        current = reader.read()
-        current != null
-      }
-
-      override def get(): InternalRow =
-        InternalRow.fromSeq(schema.fields.map(f =>
-          SnapshotParquetDecode.field(current, f)).toIndexedSeq)
-
-      override def close(): Unit = reader.close()
-    }
-  }
-}
-
-/** Group-record → Catalyst value decode for the supported type matrix.
-  * Column resolution is BY NAME against the file's own schema (schema
-  * evolution: files written before an ADD COLUMN read it as null, extra
-  * file columns are ignored — the same rule as the manifest-schema batch
-  * read). Timestamps decode from INT64 MILLIS/MICROS/NANOS annotations and
-  * from legacy INT96; arrays from both the standard 3-level and legacy
-  * 2-level parquet list shapes.
-  */
-private object SnapshotParquetDecode {
-  import org.apache.parquet.example.data.Group
-  import org.apache.parquet.schema.{GroupType, LogicalTypeAnnotation, Type => PType}
-
-  def field(g: Group, f: StructField): Any = {
-    val gt = g.getType
-    if (!gt.containsField(f.name)) return null
-    val idx = gt.getFieldIndex(f.name)
-    if (g.getFieldRepetitionCount(idx) == 0) return null
-    f.dataType match {
-      case ArrayType(et, _) => array(g.getGroup(idx, 0), et, f.name)
-      case dt => primitive(g, gt.getType(idx), idx, 0, dt, f.name)
-    }
-  }
-
-  private def primitive(g: Group, pt: PType, idx: Int, rep: Int,
-                        dt: DataType, name: String): Any = dt match {
-    case BooleanType => g.getBoolean(idx, rep)
-    case IntegerType => g.getInteger(idx, rep)
-    case LongType => g.getLong(idx, rep)
-    case FloatType => g.getFloat(idx, rep)
-    case DoubleType => g.getDouble(idx, rep)
-    case DateType => g.getInteger(idx, rep)
-    case StringType => UTF8String.fromBytes(g.getBinary(idx, rep).getBytes)
-    case BinaryType => g.getBinary(idx, rep).getBytes
-    case TimestampType | TimestampNTZType => timestampMicros(g, pt, idx, rep, name)
-    case other => sys.error(s"unsupported decode type ${other.catalogString} for '$name'")
-  }
-
-  private def timestampMicros(g: Group, pt: PType, idx: Int, rep: Int,
-                              name: String): Long = {
-    val prim = pt.asPrimitiveType().getPrimitiveTypeName
-    prim match {
-      case org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT96 =>
-        // legacy INT96: 8 bytes little-endian nanos-of-day + 4 bytes
-        // little-endian julian day
-        val b = g.getInt96(idx, rep).getBytes
-        val bb = java.nio.ByteBuffer.wrap(b).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-        val nanos = bb.getLong
-        val julian = bb.getInt
-        (julian - 2440588L) * 86400L * 1000000L + nanos / 1000L
-      case org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64 =>
-        val raw = g.getLong(idx, rep)
-        pt.getLogicalTypeAnnotation match {
-          case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-            ts.getUnit match {
-              case LogicalTypeAnnotation.TimeUnit.MILLIS => raw * 1000L
-              case LogicalTypeAnnotation.TimeUnit.MICROS => raw
-              case LogicalTypeAnnotation.TimeUnit.NANOS => raw / 1000L
-            }
-          case _ => raw // unannotated int64: assume micros (Spark's own default)
-        }
-      case other => sys.error(s"cannot decode timestamp '$name' from parquet $other")
-    }
-  }
-
-  private def array(listGroup: Group, et: DataType, name: String): GenericArrayData = {
-    val lt = listGroup.getType.asInstanceOf[GroupType]
-    require(lt.getFieldCount == 1,
-      s"unexpected parquet list shape for '$name' (${lt.getFieldCount} fields)")
-    val repType = lt.getType(0)
-    val n = listGroup.getFieldRepetitionCount(0)
-    val out = new Array[Any](n)
-    if (repType.isPrimitive) {
-      // legacy 2-level list: elements repeat directly
-      var i = 0
-      while (i < n) {
-        out(i) = primitive(listGroup, repType, 0, i, et, name)
-        i += 1
-      }
-    } else {
-      // standard 3-level list: repeated group wrapping one element field
-      var i = 0
-      while (i < n) {
-        val eg = listGroup.getGroup(0, i)
-        val egt = eg.getType
-        require(egt.getFieldCount == 1,
-          s"unexpected parquet list element shape for '$name'")
-        out(i) =
-          if (eg.getFieldRepetitionCount(0) == 0) null
-          else primitive(eg, egt.getType(0), 0, 0, et, name)
-        i += 1
-      }
-    }
-    new GenericArrayData(out)
+    val p = partition.asInstanceOf[SnapshotFilePartition]
+    // the parquet reader closes its file when the task completes
+    new PartitionReaderFromIterator(read(PartitionedFile(InternalRow.empty,
+      SparkPath.fromPathString(p.file), 0L, p.length, Array.empty[String], 0L, p.length)))
   }
 }

@@ -9,10 +9,14 @@ import graft.operators.{Mutate, Parse, Route}
   * (mirrors the reference's qa/integration env_variables_condition_spec
   * golden-output strategy, re-expressed over the token table).
   */
-class PipelineSpec extends SparkSpec {
+class PipelineSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
   private lazy val pipe = StandardPipeline.fromDir(spark, sfDir)
   private lazy val flagged = pipe.flagged.cache()
+
+  // the session is shared by every suite: a trunk left cached here would
+  // spare a later suite the jobs it counts
+  override def afterAll(): Unit = try flagged.unpersist() finally super.afterAll()
 
   test("tokenize: ids are vocabulary positions, n_tok invariant holds") {
     val raw = Tok.rawSequences(spark.read.parquet(s"$sfDir/documents.parquet"))

@@ -49,6 +49,40 @@ class SnapshotStreamSpec extends SparkSpec {
     assert(spark.read.parquet(out).count() == 15)
     assert(spark.read.parquet(out).select(sum("id")).collect()(0).getLong(0) ==
       (0 until 15).map(_.toLong).sum)
+
+    // the encodings a session's writer can leave stream back the same values:
+    // each timestamp type, and the legacy 2-level list shape with a null row
+    import spark.implicits._
+    def streamed(conf: (String, String), df: org.apache.spark.sql.DataFrame) = {
+      val t2 = tmp(); val out2 = tmp(); val chk2 = tmp()
+      val was = spark.conf.getOption(conf._1)
+      spark.conf.set(conf._1, conf._2)
+      try ST.append(spark, df, t2)
+      finally was.fold(spark.conf.unset(conf._1))(spark.conf.set(conf._1, _))
+      spark.readStream.format(Fmt).option("path", t2).load()
+        .writeStream.format("parquet")
+        .option("path", out2).option("checkpointLocation", chk2)
+        .trigger(Trigger.AvailableNow()).start().awaitTermination(120000)
+      val file = new java.io.File(s"$t2/data/snap-000000").listFiles().filter(_.getName.endsWith(".parquet")).head
+      val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(file.toString), new org.apache.hadoop.conf.Configuration()))
+      try (footer.getFooter.getFileMetaData.getSchema.toString,
+        spark.read.parquet(out2).orderBy("id").collect().toSeq)
+      finally footer.close()
+    }
+    val at = java.sql.Timestamp.valueOf("2024-03-01 10:20:30.123")
+    val stamps = Seq((0L, at), (1L, null.asInstanceOf[java.sql.Timestamp])).toDF("id", "ts")
+    for ((unit, shape) <- Seq("TIMESTAMP_MILLIS" -> "int64 ts (TIMESTAMP(MILLIS,true))",
+        "TIMESTAMP_MICROS" -> "int64 ts (TIMESTAMP(MICROS,true))", "INT96" -> "int96 ts")) {
+      val (schema, got) = streamed("spark.sql.parquet.outputTimestampType" -> unit, stamps)
+      assert(schema.contains(shape), schema)
+      assert(got == stamps.collect().toSeq, unit)
+    }
+    val lists = Seq((0L, Seq(1, 2)), (1L, null.asInstanceOf[Seq[Int]])).toDF("id", "arr")
+    val (legacy, listed) = streamed("spark.sql.parquet.writeLegacyFormat" -> "true", lists)
+    assert(legacy.contains("repeated int32 array"), legacy)
+    assert(listed == lists.collect().toSeq)
   }
 
   test("max_snapshots_per_trigger drains a backlog on commit boundaries") {
@@ -164,7 +198,14 @@ class SnapshotStreamSpec extends SparkSpec {
       (1L, "a", 1.5, 2.5f, true, ts, day, Array[Byte](1, 2), Seq("x", "y")),
       (2L, null.asInstanceOf[String], 0.0, 0f, false, null.asInstanceOf[java.sql.Timestamp],
         null.asInstanceOf[java.sql.Date], null.asInstanceOf[Array[Byte]], null.asInstanceOf[Seq[String]])
-    ).toDF("id", "s", "d", "f", "b", "ts", "day", "bin", "arr"), src)
+    ).toDF("id", "s", "d", "f", "b", "ts", "day", "bin", "arr")
+      // nested and decimal columns; row 2 holds the null and empty shapes
+      .withColumn("st", struct(when(col("id") === 1L, lit(7)).as("n"), col("s").as("w")))
+      .withColumn("m", when(col("id") === 1L, map(lit("k"), lit(3L), lit("z"), lit(null).cast("bigint")))
+        .otherwise(map().cast("map<string,bigint>")))
+      .withColumn("dec", when(col("id") === 1L, lit("12.34").cast("decimal(10,2)")))
+      .withColumn("nested", when(col("id") === 1L, array(array(lit(1L), lit(2L)), array(lit(3L))))
+        .otherwise(array(array().cast("array<bigint>"), lit(null).cast("array<bigint>")))), src)
     val q = spark.readStream.format(Fmt).option("path", src).load()
       .writeStream.format(Fmt)
       .option("path", dst).option("checkpointLocation", chk)
@@ -178,8 +219,33 @@ class SnapshotStreamSpec extends SparkSpec {
       r(0).getTimestamp(5) == ts && r(0).getDate(6) == day &&
       r(0).getAs[Array[Byte]](7).toSeq == Seq[Byte](1, 2) &&
       r(0).getSeq[String](8) == Seq("x", "y"))
-    assert(Seq(1, 5, 6, 7, 8).forall(r(1).isNullAt))
+    assert(Seq(1, 5, 6, 7, 8, 11).forall(r(1).isNullAt))
     assert(r(1).getDouble(2) == 0.0 && !r(1).getBoolean(4))
+    // every column, the nested and decimal ones included, reads back as
+    // written (rows compared, not exceptAll: map columns cannot be compared)
+    assert(r.toSeq == ST.read(spark, src).orderBy("id").collect().toSeq)
+    assert(r(0).getStruct(9) == org.apache.spark.sql.Row(7, "a") &&
+      r(0).getMap[String, Any](10) == Map("k" -> 3L, "z" -> null) &&
+      r(0).getDecimal(11) == new java.math.BigDecimal("12.34") &&
+      r(0).getSeq[Seq[Long]](12) == Seq(Seq(1L, 2L), Seq(3L)))
+    assert(r(1).getStruct(9) == org.apache.spark.sql.Row(null, null) &&
+      r(1).getMap[String, Any](10).isEmpty && r(1).getSeq[Seq[Long]](12) == Seq(Seq(), null))
+  }
+
+  test("sink: a column the parquet writer cannot store fails at plan time, nothing staged") {
+    val src = tmp(); val dst = tmp(); val chk = tmp()
+    ST.append(spark, rows(0 until 3), src)
+    val e = intercept[Exception] {
+      spark.readStream.format(Fmt).option("path", src).load()
+        .withColumn("iv", expr("make_interval(0, 0, 0, 1)"))
+        .writeStream.format(Fmt)
+        .option("path", dst).option("checkpointLocation", chk)
+        .trigger(Trigger.AvailableNow()).start().awaitTermination(120000)
+    }
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(messages.exists(m => m != null && "[`']iv[`']".r.findFirstIn(m).nonEmpty), e.toString)
+    assert(!new java.io.File(s"$dst/_streaming").exists())
+    assert(ST.latestId(spark, dst).isEmpty)
   }
 
   test("a row-removing snapshot in range fails the stream loudly") {
