@@ -10,8 +10,7 @@ import org.apache.spark.sql.functions._
   * Scale stance: dictionaries are small by construction (they fit in the
   * reference's process heap), so `broadcast()` keeps the enrich stage
   * shuffle-free at any input size — the 100 TB plan is scan -> map -> append.
-  * For dimension tables too big to broadcast, `lookupBig` pre-repartitions on
-  * the key and leans on AQE skew handling instead.
+  * A dimension with a known hot key goes through `saltedLookup`.
   */
 object Enrich {
 
@@ -91,12 +90,6 @@ object Enrich {
       d.withColumn(c, coalesce(col(c), lit(v)))
     }
   }
-
-  /** Non-broadcast path for huge dimensions: shuffle join with AQE skew-join
-    * splitting; caller should have AQE enabled (Pipeline.session does).
-    */
-  def lookupBig(events: DataFrame, dim: DataFrame, on: String): DataFrame =
-    events.join(dim.hint("shuffle_hash"), Seq(on), "left")
 
   /** The `http` enrich filter (logstash-filter-http), batch-sane: the
     * reference calls a (usually sprintf'd) URL per event and caches; the

@@ -367,15 +367,6 @@ object Parse {
     Mutate.addTagWhen(withFields, !matched, "_grokparsefailure")
   }
 
-  /** Multi-pattern grok (reference `match => { field => [p1, p2, ...] }`
-    * with default `break_on_match => true`): patterns tried in order, the
-    * FIRST match wins and only its captures are applied; `_grokparsefailure`
-    * only when none match. One regex pass per pattern (not per capture);
-    * the winner logic is a boolean cascade over the match structs.
-    */
-  def grokMulti(df: DataFrame, source: String, patterns: Seq[String]): DataFrame =
-    grokFull(df, source, patterns)
-
   /** The complete grok config surface (reference grok filter options):
     * `defs` = pattern_definitions (shadow the library, may be composites);
     * `overwrite` = fields a capture may REPLACE when the column already
@@ -540,11 +531,6 @@ object Parse {
   // ------------------------------------------------------------------
   // kv / json / csv / date
   // ------------------------------------------------------------------
-
-  /** kv filter: `k=v` pairs -> MapType column. */
-  def kv(df: DataFrame, source: String, target: String,
-         pairSep: String = " ", kvSep: String = "="): DataFrame =
-    df.withColumn(target, str_to_map(col(source), lit(pairSep), lit(kvSep)))
 
   /** kv with the full option surface (reference kv filter docs):
     * `trimKey`/`trimValue` strip any of the given CHARACTERS from both ends

@@ -4,11 +4,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Incremental table-to-table materialization over [[SnapshotTable]] chains —
   * the "streaming read of an Iceberg table" surface, built as a resumable
-  * batch pipe rather than a DSv2 reader on purpose: a custom
-  * `PartitionReader` would have to re-implement parquet decoding (bypassing
-  * Spark's vectorized reader), while here every chunk is an ordinary
-  * `incremental(a, b]` DataFrame planned through the native parquet scan,
-  * and the SINK TABLE'S OWN batch-commit ledger is the checkpoint.
+  * batch pipe rather than a Structured Streaming query on purpose: the SINK
+  * TABLE'S OWN batch-commit ledger is the checkpoint, so there is no
+  * checkpoint dir to keep beside the tables, and the transform sees the
+  * sink's history, which a streaming query's per-batch function does not.
+  * Every chunk is an ordinary `incremental(a, b]` DataFrame planned through
+  * the native parquet scan. A streaming read of a snapshot table
+  * (`readStream`) is [[graft.sources.SnapshotStreamSource]].
   *
   * Exactly-once by construction, with ZERO extra state files: chunk
   * `(a, b]` commits under batch id `incr-<src>-<b>` (`<src>` = a hash of

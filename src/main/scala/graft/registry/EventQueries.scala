@@ -116,7 +116,7 @@ object EventQueries {
           .when(col("event_id") % 2 === 0,
             concat(lit("uid="), col("user_id"), lit(" act="), col("event_type")))
           .otherwise(concat(col("event_type"), lit("/"), col("user_id"))))
-      Parse.grokMulti(df, "line", Seq(
+      Parse.grokFull(df, "line", Seq(
           "uid=%{INT:uid:int} act=%{WORD:act}",
           "%{WORD:act}/%{INT:uid:int}"))
         .select(col("event_id"), col("act"), col("uid"),
@@ -128,7 +128,7 @@ object EventQueries {
     "evt_kv" -> ((s, dir) => {
       val df = events(s, dir).withColumn("kvline",
         concat(lit("type="), col("event_type"), lit(" uid="), col("user_id")))
-      Parse.kv(df, "kvline", "kvmap")
+      Parse.kvFull(df, "kvline", "kvmap")
         .select(col("event_id"),
           col("kvmap")("type").as("type"),
           col("kvmap")("uid").cast("long").as("uid"))

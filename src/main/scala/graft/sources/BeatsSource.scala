@@ -1,16 +1,13 @@
 package graft.sources
 
-import java.util
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.types.StructType
+import java.nio.file.Path
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-/** Logstash `beats` input as a native DataSourceV2 source, speaking the
-  * PUBLIC lumberjack v2 wire protocol (the Beats transport; spec published
-  * with elastic/go-lumber and the beats protocol docs — implementation here
-  * is original, written from the framing rules):
+/** Logstash `beats` input as a journaled listener source (see
+  * [[JournaledListener]]), speaking the PUBLIC lumberjack v2 wire protocol
+  * (the Beats transport; spec published with elastic/go-lumber and the
+  * beats protocol docs — implementation here is original, written from the
+  * framing rules):
   *
   *   frame  = version '2' + type byte
   *   'W'    window size: uint32 count (events before the client expects ack)
@@ -20,38 +17,22 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *   'C'    compressed:  uint32 len, zlib payload of concatenated frames
   *   ack    server -> client: '2' 'A' uint32 seq (highest processed)
   *
-  * Same replayable-journal architecture as [[TcpSource]]: the accept-loop
-  * listener decodes frames and journals ONE JSON LINE PER EVENT ('J'
-  * payloads verbatim, 'D' pairs encoded as a flat JSON object), acking
-  * AFTER the journal append — ack implies durable, the protocol's
-  * at-least-once contract. The micro-batch stream then reads byte-offset
-  * deltas via the FileTail machinery; a `json` filter (with schema)
-  * recovers the event fields downstream.
+  * ONE JSON LINE PER EVENT is journaled ('J' payloads verbatim, 'D' pairs
+  * encoded as a flat JSON object), acked AFTER the journal append — ack
+  * implies durable, the protocol's at-least-once contract. A `json` filter
+  * (with schema) recovers the event fields downstream.
   */
-class BeatsSource extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    FileTailSource.Schema
+class BeatsSource extends ListenerSource(BeatsSource.table)
 
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    new BeatsTable(new CaseInsensitiveStringMap(properties))
-}
-
-object BeatsSource {
+object BeatsSource extends PortListeners("beats") {
 
   private def jsonEscape(s: String): String = graft.model.Json.escape(s)
 
-  final class Listener(port: Int, journal: java.nio.file.Path) {
+  final class Listener(port: Int, journal: Path) extends JournaledListener(journal) {
     private val server = new java.net.ServerSocket(port)
-    @volatile private var closed = false
     def localPort: Int = server.getLocalPort
-    def journalPath: java.nio.file.Path = journal
 
-    private def append(lines: String): Unit = synchronized {
-      java.nio.file.Files.writeString(journal, lines,
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-    }
+    def close(): Unit = stopAccepting(server)
 
     private def sendAck(out: java.io.OutputStream, seq: Int): Unit = {
       val b = java.nio.ByteBuffer.allocate(6)
@@ -113,77 +94,35 @@ object BeatsSource {
       }
     }
 
-    private val acceptLoop = new Thread(() => {
-      while (!closed) {
-        try {
-          val sock = server.accept()
-          val t = new Thread(() => {
-            val in = new java.io.DataInputStream(
-              new java.io.BufferedInputStream(sock.getInputStream))
-            val out = sock.getOutputStream
-            val state = new ConnState
-            try {
-              while (true) {
-                handleFrame(in, state)
-                // ack after the journal append once the window fills —
-                // ack implies durable (at-least-once contract)
-                if (state.window > 0 && state.inWindow >= state.window) {
-                  sendAck(out, state.maxSeq); state.inWindow = 0
-                }
-              }
-            } catch {
-              case _: java.io.EOFException =>
-                if (state.inWindow > 0)
-                  try sendAck(out, state.maxSeq) catch { case _: Throwable => () }
-              case _: Throwable => ()
-            } finally sock.close()
-          }, s"graft-beats-conn-$port")
-          t.setDaemon(true); t.start()
-        } catch { case _: Throwable if closed => () case _: Throwable => () }
+    /** Frames until the end of the stream, acking each filled window; the
+      * end acks whatever the last window journaled.
+      */
+    private def session(sock: java.net.Socket): Unit = {
+      val in = new java.io.DataInputStream(
+        new java.io.BufferedInputStream(sock.getInputStream))
+      val out = sock.getOutputStream
+      val state = new ConnState
+      try {
+        while (true) {
+          handleFrame(in, state)
+          // ack after the journal append once the window fills —
+          // ack implies durable (at-least-once contract)
+          if (state.window > 0 && state.inWindow >= state.window) {
+            sendAck(out, state.maxSeq); state.inWindow = 0
+          }
+        }
+      } catch {
+        case _: java.io.EOFException =>
+          if (state.inWindow > 0) sendAck(out, state.maxSeq)
       }
-    }, s"graft-beats-accept-$port")
-    acceptLoop.setDaemon(true)
-    acceptLoop.start()
+    }
 
-    def close(): Unit = { closed = true; server.close() }
+    acceptLoop(s"beats-$port", () => server.accept())(session)
   }
 
-  private val listeners =
-    scala.collection.concurrent.TrieMap.empty[Int, Listener]
+  def ensureListener(port: Int, journal: Path): Listener =
+    Listeners.ensure(endpoint(port), "journal" -> journal)(new Listener(port, journal))
 
-  def ensureListener(port: Int, journal: java.nio.file.Path): Listener = {
-    val l = listeners.getOrElseUpdate(port, new Listener(port, journal))
-    require(l.journalPath == journal,
-      s"beats port $port already journals to ${l.journalPath}, not $journal — " +
-        "stopListener first or reuse the existing journal")
-    l
-  }
-
-  def stopListener(port: Int): Unit =
-    listeners.remove(port).foreach(_.close())
-
-  def defaultJournal(port: Int): java.nio.file.Path =
-    java.nio.file.Paths.get(sys.props("java.io.tmpdir"), s"graft_beats_$port.journal")
-}
-
-private class BeatsTable(options: CaseInsensitiveStringMap)
-  extends Table with SupportsRead {
-
-  private val port = options.getInt("port", 0)
-  private val journal = Option(options.get("journal"))
-    .map(java.nio.file.Paths.get(_))
-    .getOrElse(BeatsSource.defaultJournal(port))
-
-  override def name(): String = s"graft_beats($port -> $journal)"
-  override def schema(): StructType = FileTailSource.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
-
-  override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder = {
-    BeatsSource.ensureListener(port, journal)
-    val merged = new util.HashMap[String, String](options)
-    merged.putAll(opts)
-    merged.put("path", journal.toString)
-    new FileTailScan(new CaseInsensitiveStringMap(merged))
-  }
+  protected def listen(port: Int, journal: Path, options: CaseInsensitiveStringMap): Listener =
+    ensureListener(port, journal)
 }

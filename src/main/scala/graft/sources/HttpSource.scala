@@ -1,52 +1,33 @@
 package graft.sources
 
-import java.util
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.types.StructType
+import java.nio.file.Path
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** Logstash `http` input (logstash-input-http, a default plugin — the
-  * webhook front door) as a native DataSourceV2 source.
+  * webhook front door) as a journaled listener source (see
+  * [[JournaledListener]]).
   *
   *   spark.readStream.format("graft.sources.HttpSource")
   *     .option("port", 8080).load()  // -> (offset BIGINT, message STRING)
   *
-  * Same replayable-journal architecture as [[TcpSource]]: a JDK
-  * `com.sun.net.httpserver` handler (driver-side daemon, one per port)
-  * journals each POST/PUT body as line-framed text — one event per body
-  * line, like the reference input's default `line`-ish treatment of
-  * newline-delimited payloads — and the micro-batch stream reads byte-offset
-  * DELTAs via the FileTail machinery. The handler answers 200 "ok" after
-  * the journal append (the reference acks after enqueue — ack implies
-  * durable), and 413 for a body over `size_limit` without buffering it.
+  * A JDK `com.sun.net.httpserver` handler journals each POST/PUT body as
+  * line-framed text — one event per non-empty body line, like the reference
+  * input's default `line`-ish treatment of newline-delimited payloads. The
+  * handler answers 200 "ok" after the journal append (the reference acks
+  * after enqueue — ack implies durable), and 413 for a body over
+  * `size_limit` without buffering it.
   */
-class HttpSource extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    FileTailSource.Schema
+class HttpSource extends ListenerSource(HttpSource.table)
 
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    new HttpTable(new CaseInsensitiveStringMap(properties))
-}
-
-object HttpSource {
+object HttpSource extends PortListeners("http") {
 
   val DefaultSizeLimit: Int = 1 << 20 // 1 MiB per request body
 
-  final class Listener(port: Int, journal: java.nio.file.Path,
-                       sizeLimit: Int = DefaultSizeLimit) {
+  final class Listener(port: Int, journal: Path,
+                       sizeLimit: Int = DefaultSizeLimit) extends JournaledListener(journal) {
     private val server = com.sun.net.httpserver.HttpServer.create(
       new java.net.InetSocketAddress(port), 0)
     def localPort: Int = server.getAddress.getPort
-    def journalPath: java.nio.file.Path = journal
-
-    private def append(lines: String): Unit = synchronized {
-      java.nio.file.Files.writeString(journal, lines,
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-    }
 
     server.createContext("/", (ex: com.sun.net.httpserver.HttpExchange) => {
       try {
@@ -75,44 +56,14 @@ object HttpSource {
     def close(): Unit = server.stop(0)
   }
 
-  private val listeners =
-    scala.collection.concurrent.TrieMap.empty[Int, Listener]
+  /** Idempotently start the listener for `port` journaling to `journal`;
+    * a request that differs from the live listener's settings fails loudly.
+    */
+  def ensureListener(port: Int, journal: Path,
+                     sizeLimit: Int = DefaultSizeLimit): Listener =
+    Listeners.ensure(endpoint(port), "journal" -> journal, "size_limit" -> sizeLimit)(
+      new Listener(port, journal, sizeLimit))
 
-  def ensureListener(port: Int, journal: java.nio.file.Path,
-                     sizeLimit: Int = DefaultSizeLimit): Listener = {
-    val l = listeners.getOrElseUpdate(port, new Listener(port, journal, sizeLimit))
-    require(l.journalPath == journal,
-      s"http port $port already journals to ${l.journalPath}, not $journal — " +
-        "stopListener first or reuse the existing journal")
-    l
-  }
-
-  def stopListener(port: Int): Unit =
-    listeners.remove(port).foreach(_.close())
-
-  def defaultJournal(port: Int): java.nio.file.Path =
-    java.nio.file.Paths.get(sys.props("java.io.tmpdir"), s"graft_http_$port.journal")
-}
-
-private class HttpTable(options: CaseInsensitiveStringMap)
-  extends Table with SupportsRead {
-
-  private val port = options.getInt("port", 0)
-  private val journal = Option(options.get("journal"))
-    .map(java.nio.file.Paths.get(_))
-    .getOrElse(HttpSource.defaultJournal(port))
-
-  override def name(): String = s"graft_http($port -> $journal)"
-  override def schema(): StructType = FileTailSource.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
-
-  override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder = {
-    HttpSource.ensureListener(port, journal,
-      options.getInt("size_limit", HttpSource.DefaultSizeLimit))
-    val merged = new util.HashMap[String, String](options)
-    merged.putAll(opts)
-    merged.put("path", journal.toString)
-    new FileTailScan(new CaseInsensitiveStringMap(merged))
-  }
+  protected def listen(port: Int, journal: Path, options: CaseInsensitiveStringMap): Listener =
+    ensureListener(port, journal, options.getInt("size_limit", DefaultSizeLimit))
 }

@@ -1,16 +1,13 @@
 package graft.sources
 
-import java.util
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.types.StructType
+import java.nio.file.Path
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-/** Logstash `relp` input as a native DataSourceV2 source, speaking RELP —
-  * the Reliable Event Logging Protocol rsyslog ships (PUBLIC spec,
-  * rsyslog.com/doc and the librelp protocol description; the implementation
-  * here is original, written from the framing rules):
+/** Logstash `relp` input as a journaled listener source (see
+  * [[JournaledListener]]), speaking RELP — the Reliable Event Logging
+  * Protocol rsyslog ships (PUBLIC spec, rsyslog.com/doc and the librelp
+  * protocol description; the implementation here is original, written from
+  * the framing rules):
   *
   *   frame    = TXNR SP COMMAND SP DATALEN [SP DATA] '\n'
   *   open     client offers, e.g. "relp_version=0\ncommands=syslog" — the
@@ -20,23 +17,14 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *            syslog/tcp (each is acked `TXNR rsp 6 200 OK`)
   *   close    session end — acked, then the connection closes
   *
-  * Same replayable-journal architecture as [[TcpSource]]/[[BeatsSource]]:
-  * the accept-loop listener journals one line per syslog command and acks
-  * AFTER the durable append (ack implies journaled — the protocol's
-  * at-least-once contract); the micro-batch stream reads byte-offset deltas
-  * through the FileTail machinery. A grok/syslog_pri stage recovers the
-  * message structure downstream, exactly like the syslog input.
+  * One journal line per syslog command (embedded newlines flatten to
+  * spaces), acked AFTER the append — ack implies journaled, the protocol's
+  * at-least-once contract. A grok/syslog_pri stage recovers the message
+  * structure downstream, exactly like the syslog input.
   */
-class RelpSource extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    FileTailSource.Schema
+class RelpSource extends ListenerSource(RelpSource.table)
 
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    new RelpTable(new CaseInsensitiveStringMap(properties))
-}
-
-object RelpSource {
+object RelpSource extends PortListeners("relp") {
 
   /** Largest accepted DATALEN — the librelp default maxDataSize ballpark;
     * a frame past it kills the connection (bounded buffering, like the tcp
@@ -44,18 +32,12 @@ object RelpSource {
     */
   val DefaultSizeLimit: Int = 1 << 20 // 1 MiB
 
-  final class Listener(port: Int, journal: java.nio.file.Path,
-                       sizeLimit: Int = DefaultSizeLimit) {
+  final class Listener(port: Int, journal: Path,
+                       sizeLimit: Int = DefaultSizeLimit) extends JournaledListener(journal) {
     private val server = new java.net.ServerSocket(port)
-    @volatile private var closed = false
     def localPort: Int = server.getLocalPort
-    def journalPath: java.nio.file.Path = journal
 
-    private def append(line: String): Unit = synchronized {
-      java.nio.file.Files.writeString(journal, line,
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-    }
+    def close(): Unit = stopAccepting(server)
 
     /** Read one space- or newline-terminated decimal token. */
     private def readToken(in: java.io.InputStream): (String, Int) = {
@@ -74,108 +56,51 @@ object RelpSource {
       out.write(head); out.write(d); out.write('\n'); out.flush()
     }
 
-    private val acceptLoop = new Thread(() => {
-      while (!closed) {
-        try {
-          val sock = server.accept()
-          val t = new Thread(() => {
-            val in = new java.io.BufferedInputStream(sock.getInputStream)
-            val out = sock.getOutputStream
-            try {
-              var running = true
-              while (running) {
-                val (txnrS, _) = readToken(in)
-                val txnr = txnrS.toLong
-                val (cmd, _) = readToken(in)
-                val (lenS, lenDelim) = readToken(in)
-                val len = lenS.toInt
-                require(len <= sizeLimit,
-                  s"relp frame of $len B exceeds size limit $sizeLimit")
-                val data =
-                  if (len == 0) Array.emptyByteArray
-                  else {
-                    val b = new Array[Byte](len)
-                    var off = 0
-                    while (off < len) {
-                      val n = in.read(b, off, len - off)
-                      if (n < 0) throw new java.io.EOFException
-                      off += n
-                    }
-                    b
-                  }
-                // trailer: frames with data still end in '\n'; a zero-length
-                // frame's token delimiter WAS the trailer
-                if (len > 0 || lenDelim == ' ') in.read()
-                cmd match {
-                  case "open" =>
-                    // offers: accept any relp_version, answer with ours —
-                    // 200 OK line, then the offer set (spec response form)
-                    respond(out, txnr,
-                      "200 OK\nrelp_version=0\nrelp_software=graft\ncommands=syslog")
-                  case "syslog" =>
-                    val line = new String(data,
-                      java.nio.charset.StandardCharsets.UTF_8).replace("\n", " ")
-                    append(line + "\n") // journal BEFORE ack: ack implies durable
-                    respond(out, txnr, "200 OK")
-                  case "close" =>
-                    respond(out, txnr, "200 OK")
-                    running = false
-                  case other =>
-                    // unknown command: RELP answers 500 and carries on
-                    respond(out, txnr, s"500 unknown command $other")
-                }
-              }
-            } catch {
-              case _: java.io.EOFException => ()
-              case _: Throwable => ()
-            } finally sock.close()
-          }, s"graft-relp-conn-$port")
-          t.setDaemon(true); t.start()
-        } catch { case _: Throwable if closed => () case _: Throwable => () }
+    /** One RELP session, until `close` or the end of the stream. */
+    private def session(sock: java.net.Socket): Unit = {
+      val in = new java.io.BufferedInputStream(sock.getInputStream)
+      val out = sock.getOutputStream
+      var running = true
+      while (running) {
+        val (txnrS, _) = readToken(in)
+        val txnr = txnrS.toLong
+        val (cmd, _) = readToken(in)
+        val (lenS, lenDelim) = readToken(in)
+        val len = lenS.toInt
+        require(len <= sizeLimit,
+          s"relp frame of $len B exceeds size limit $sizeLimit")
+        val data = new Array[Byte](len)
+        if (in.readNBytes(data, 0, len) < len) throw new java.io.EOFException
+        // trailer: frames with data still end in '\n'; a zero-length
+        // frame's token delimiter WAS the trailer
+        if (len > 0 || lenDelim == ' ') in.read()
+        cmd match {
+          case "open" =>
+            // offers: accept any relp_version, answer with ours —
+            // 200 OK line, then the offer set (spec response form)
+            respond(out, txnr,
+              "200 OK\nrelp_version=0\nrelp_software=graft\ncommands=syslog")
+          case "syslog" =>
+            val line = new String(data,
+              java.nio.charset.StandardCharsets.UTF_8).replace("\n", " ")
+            append(line + "\n") // journal BEFORE ack: ack implies durable
+            respond(out, txnr, "200 OK")
+          case "close" =>
+            respond(out, txnr, "200 OK")
+            running = false
+          case other =>
+            // unknown command: RELP answers 500 and carries on
+            respond(out, txnr, s"500 unknown command $other")
+        }
       }
-    }, s"graft-relp-accept-$port")
-    acceptLoop.setDaemon(true)
-    acceptLoop.start()
+    }
 
-    def close(): Unit = { closed = true; server.close() }
+    acceptLoop(s"relp-$port", () => server.accept())(session)
   }
 
-  private val listeners =
-    scala.collection.concurrent.TrieMap.empty[Int, Listener]
+  def ensureListener(port: Int, journal: Path): Listener =
+    Listeners.ensure(endpoint(port), "journal" -> journal)(new Listener(port, journal))
 
-  def ensureListener(port: Int, journal: java.nio.file.Path): Listener = {
-    val l = listeners.getOrElseUpdate(port, new Listener(port, journal))
-    require(l.journalPath == journal,
-      s"relp port $port already journals to ${l.journalPath}, not $journal — " +
-        "stopListener first or reuse the existing journal")
-    l
-  }
-
-  def stopListener(port: Int): Unit =
-    listeners.remove(port).foreach(_.close())
-
-  def defaultJournal(port: Int): java.nio.file.Path =
-    java.nio.file.Paths.get(sys.props("java.io.tmpdir"), s"graft_relp_$port.journal")
-}
-
-private class RelpTable(options: CaseInsensitiveStringMap)
-  extends Table with SupportsRead {
-
-  private val port = options.getInt("port", 0)
-  private val journal = Option(options.get("journal"))
-    .map(java.nio.file.Paths.get(_))
-    .getOrElse(RelpSource.defaultJournal(port))
-
-  override def name(): String = s"graft_relp($port -> $journal)"
-  override def schema(): StructType = FileTailSource.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
-
-  override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder = {
-    RelpSource.ensureListener(port, journal)
-    val merged = new util.HashMap[String, String](options)
-    merged.putAll(opts)
-    merged.put("path", journal.toString)
-    new FileTailScan(new CaseInsensitiveStringMap(merged))
-  }
+  protected def listen(port: Int, journal: Path, options: CaseInsensitiveStringMap): Listener =
+    ensureListener(port, journal)
 }

@@ -1,43 +1,20 @@
 package graft.sources
 
-import java.util
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
-import org.apache.spark.sql.types.StructType
+import java.nio.file.Path
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-/** Logstash `tcp` input as a native DataSourceV2 streaming source
-  * (reference: the tcp input plugin feeding the persistent queue).
+/** Logstash `tcp` input as a journaled listener source (see
+  * [[JournaledListener]]): one line per event.
   *
   *   spark.readStream.format("graft.sources.TcpSource")
   *     .option("port", 5140)
   *     .option("journal", "/shared/tcp-5140.journal")   // optional
+  *     .option("size_limit", 1048576)                   // optional
   *     .load()  // -> (offset BIGINT, message STRING)
-  *
-  * Raw TCP is not replayable, so exactly-once needs the reference's own
-  * architecture: ingest -> durable queue -> workers. Here the queue is a
-  * line-framed JOURNAL file — an accept-loop listener (driver-side daemon,
-  * one per port) appends every received line; the micro-batch stream then
-  * reads byte-offset DELTAS of the journal with the same sincedb-style
-  * offsets as [[FileTailSource]] (whose reader machinery it reuses). A
-  * restarted query replays from the committed journal offset — received
-  * lines are never lost or duplicated even across crashes, exactly the
-  * persistent-queue guarantee. At cluster scale the journal lives on
-  * shared storage and the listener on the driver (the reference's tcp
-  * input is likewise a single socket owner feeding the queue).
   */
-class TcpSource extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    FileTailSource.Schema
+class TcpSource extends ListenerSource(TcpSource.table)
 
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    new TcpTable(new CaseInsensitiveStringMap(properties))
-}
-
-object TcpSource {
+object TcpSource extends PortListeners("tcp") {
 
   /** Default per-frame size cap, mirroring the reference BufferedTokenizer's
     * sizeLimit contract (common/BufferedTokenizerExt.java): a writer that
@@ -45,116 +22,35 @@ object TcpSource {
     */
   val DefaultSizeLimit: Int = 1 << 20 // 1 MiB
 
-  /** One accept-loop listener per port (process-wide): accepts connections
-    * on a daemon thread and appends complete received lines to the journal
-    * atomically (single writer, synchronized appends, flush per line batch).
+  /** Accepts connections on `port` and journals each received line.
     *
-    * Frame-size guard: a line exceeding `sizeLimit` bytes stops buffering
-    * immediately (memory stays bounded at sizeLimit per connection), is
-    * DROPPED at the next newline, and counts in [[oversized]] — the
-    * reference BufferedTokenizer raises "input buffer full" and the event
-    * is lost to the DLQ-less tcp input; dropping+counting is the journal
-    * analogue.
+    * Frame-size guard: a line exceeding `sizeLimit` bytes is DROPPED and
+    * counts in [[oversized]] — the reference BufferedTokenizer raises
+    * "input buffer full" and the event is lost to the DLQ-less tcp input;
+    * dropping+counting is the journal analogue.
     */
-  final class Listener(port: Int, journal: java.nio.file.Path,
-                       sizeLimit: Int = DefaultSizeLimit) {
+  final class Listener(port: Int, journal: Path,
+                       sizeLimit: Int = DefaultSizeLimit) extends JournaledListener(journal) {
     private val server = new java.net.ServerSocket(port)
-    @volatile private var closed = false
-    private val oversizedCount = new java.util.concurrent.atomic.AtomicLong(0)
+    private val dropped = new java.util.concurrent.atomic.AtomicLong(0)
     def localPort: Int = server.getLocalPort
-    def journalPath: java.nio.file.Path = journal
     /** Frames dropped for exceeding sizeLimit. */
-    def oversized: Long = oversizedCount.get
+    def oversized: Long = dropped.get
 
-    private def append(lines: String): Unit = synchronized {
-      java.nio.file.Files.writeString(journal, lines,
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-    }
+    def close(): Unit = stopAccepting(server)
 
-    private val acceptLoop = new Thread(() => {
-      while (!closed) {
-        try {
-          val sock = server.accept()
-          val t = new Thread(() => {
-            val in = new java.io.BufferedInputStream(sock.getInputStream)
-            val buf = new java.io.ByteArrayOutputStream()
-            var over = false
-            try {
-              var b = in.read()
-              while (b != -1) {
-                if (b == '\n') {
-                  if (over) oversizedCount.incrementAndGet()
-                  else append(buf.toString("UTF-8") + "\n")
-                  buf.reset(); over = false
-                } else if (!over) {
-                  if (buf.size >= sizeLimit) { over = true; buf.reset() }
-                  else buf.write(b)
-                }
-                b = in.read()
-              }
-              // connection close flushes a final unterminated line (the
-              // reference line codec's flush-on-close) — a client sending
-              // "foo" then closing must not lose the event
-              if (buf.size > 0 && !over) append(buf.toString("UTF-8") + "\n")
-              else if (over) oversizedCount.incrementAndGet()
-            } finally sock.close()
-          }, s"graft-tcp-conn-$port")
-          t.setDaemon(true); t.start()
-        } catch { case _: Throwable if closed => () case _: Throwable => () }
-      }
-    }, s"graft-tcp-accept-$port")
-    acceptLoop.setDaemon(true)
-    acceptLoop.start()
-
-    def close(): Unit = { closed = true; server.close() }
+    acceptLoop(s"tcp-$port", () => server.accept())(sock =>
+      appendLines(sock.getInputStream, sizeLimit, dropped))
   }
 
-  private val listeners =
-    scala.collection.concurrent.TrieMap.empty[Int, Listener]
-
-  /** Idempotently start the listener for `port` journaling to `journal`.
-    * A later request naming a DIFFERENT journal for an already-listening
-    * port fails loudly — silently keeping the old journal would make the
-    * new source read an empty path with no error.
+  /** Idempotently start the listener for `port` journaling to `journal`;
+    * a request that differs from the live listener's settings fails loudly.
     */
-  def ensureListener(port: Int, journal: java.nio.file.Path,
-                     sizeLimit: Int = DefaultSizeLimit): Listener = {
-    val l = listeners.getOrElseUpdate(port, new Listener(port, journal, sizeLimit))
-    require(l.journalPath == journal,
-      s"tcp port $port already journals to ${l.journalPath}, not $journal — " +
-        "stopListener first or reuse the existing journal")
-    l
-  }
+  def ensureListener(port: Int, journal: Path,
+                     sizeLimit: Int = DefaultSizeLimit): Listener =
+    Listeners.ensure(endpoint(port), "journal" -> journal, "size_limit" -> sizeLimit)(
+      new Listener(port, journal, sizeLimit))
 
-  def stopListener(port: Int): Unit =
-    listeners.remove(port).foreach(_.close())
-
-  def defaultJournal(port: Int): java.nio.file.Path =
-    java.nio.file.Paths.get(sys.props("java.io.tmpdir"), s"graft_tcp_$port.journal")
-}
-
-private class TcpTable(options: CaseInsensitiveStringMap)
-  extends Table with SupportsRead {
-
-  private val port = options.getInt("port", 0)
-  private val journal = Option(options.get("journal"))
-    .map(java.nio.file.Paths.get(_))
-    .getOrElse(TcpSource.defaultJournal(port))
-
-  override def name(): String = s"graft_tcp($port -> $journal)"
-  override def schema(): StructType = FileTailSource.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
-
-  override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder = {
-    TcpSource.ensureListener(port, journal,
-      options.getInt("size_limit", TcpSource.DefaultSizeLimit))
-    val merged = new util.HashMap[String, String](options)
-    merged.putAll(opts)
-    merged.put("path", journal.toString)
-    // the journal IS a tailed file: delegate scan planning (batch splits +
-    // micro-batch byte-offset deltas) to the FileTail machinery
-    new FileTailScan(new CaseInsensitiveStringMap(merged))
-  }
+  protected def listen(port: Int, journal: Path, options: CaseInsensitiveStringMap): Listener =
+    ensureListener(port, journal, options.getInt("size_limit", DefaultSizeLimit))
 }

@@ -1,61 +1,39 @@
 package graft.sources
 
-import java.util
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.types.StructType
+import java.nio.file.Path
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** Logstash `udp` input (logstash-input-udp, a default plugin; also the
-  * syslog input's datagram transport) as a native DataSourceV2 source.
+  * syslog input's datagram transport) as a journaled listener source (see
+  * [[JournaledListener]]).
   *
   *   spark.readStream.format("graft.sources.UdpSource")
   *     .option("port", 5140)
   *     .option("journal", "/shared/udp-5140.journal")   // optional
   *     .load()  // -> (offset BIGINT, message STRING)
   *
-  * Datagrams are not replayable, so the same architecture as [[TcpSource]]
-  * applies: a receive-loop listener (driver-side daemon, one per port)
-  * journals each datagram as line-framed text — one event per datagram, with
-  * embedded newlines splitting into multiple events exactly like the
-  * reference udp input's per-datagram line codec — and the micro-batch
-  * stream reads byte-offset DELTAs of the journal via the FileTail
-  * machinery. A datagram larger than the receive buffer is truncated by UDP
-  * itself (the transport's own size contract), so the buffer bound
-  * (`size_limit`, default 64 KiB = the UDP maximum) is memory-safe by
-  * construction.
+  * One event per datagram, with embedded newlines splitting into multiple
+  * events exactly like the reference udp input's per-datagram line codec.
+  * With `frames => base64` (the binary codecs: gelf, collectd, netflow, ...)
+  * each whole datagram is journaled as one base64 line instead. A datagram
+  * larger than the receive buffer is truncated by UDP itself (the
+  * transport's own size contract), so the buffer bound (`size_limit`,
+  * default 64 KiB = the UDP maximum) is memory-safe by construction.
   */
-class UdpSource extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    FileTailSource.Schema
+class UdpSource extends ListenerSource(UdpSource.table)
 
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    new UdpTable(new CaseInsensitiveStringMap(properties))
-}
-
-object UdpSource {
+object UdpSource extends PortListeners("udp") {
 
   val DefaultSizeLimit: Int = 64 * 1024 // the UDP datagram maximum
 
-  /** One receive-loop listener per port (process-wide): journals every
-    * received datagram's non-empty lines atomically.
+  /** Receives datagrams on `port` and journals each one's non-empty lines
+    * (or, with `base64Frames`, the whole datagram as one base64 line).
     */
-  final class Listener(port: Int, journal: java.nio.file.Path,
+  final class Listener(port: Int, journal: Path,
                        sizeLimit: Int = DefaultSizeLimit,
-                       base64Frames: Boolean = false) {
+                       base64Frames: Boolean = false) extends JournaledListener(journal) {
     private val socket = new java.net.DatagramSocket(port)
-    @volatile private var closed = false
     def localPort: Int = socket.getLocalPort
-    def journalPath: java.nio.file.Path = journal
-    def framesBase64: Boolean = base64Frames
-
-    private def append(lines: String): Unit = synchronized {
-      java.nio.file.Files.writeString(journal, lines,
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-    }
 
     private val loop = new Thread(() => {
       val buf = new Array[Byte](sizeLimit)
@@ -77,64 +55,27 @@ object UdpSource {
             val lines = text.split("\n").filter(_.nonEmpty)
             if (lines.nonEmpty) append(lines.mkString("", "\n", "\n"))
           }
-        } catch { case _: Throwable if closed => () case _: Throwable => () }
+        } catch { case _: Throwable => () }
       }
     }, s"graft-udp-recv-$port")
     loop.setDaemon(true)
     loop.start()
 
-    def close(): Unit = { closed = true; socket.close() }
+    def close(): Unit = { closed = true; socket.close(); loop.join() }
   }
-
-  private val listeners =
-    scala.collection.concurrent.TrieMap.empty[Int, Listener]
 
   /** Idempotently start the listener for `port` journaling to `journal`;
-    * fails loudly when the port already journals elsewhere (see
-    * [[TcpSource.ensureListener]]).
+    * a request that differs from the live listener's settings (journal,
+    * size limit or framing) fails loudly.
     */
-  def ensureListener(port: Int, journal: java.nio.file.Path,
+  def ensureListener(port: Int, journal: Path,
                      sizeLimit: Int = DefaultSizeLimit,
-                     base64Frames: Boolean = false): Listener = {
-    val l = listeners.getOrElseUpdate(port,
+                     base64Frames: Boolean = false): Listener =
+    Listeners.ensure(endpoint(port), "journal" -> journal, "size_limit" -> sizeLimit,
+      "frames" -> (if (base64Frames) "base64" else "line"))(
       new Listener(port, journal, sizeLimit, base64Frames))
-    require(l.journalPath == journal,
-      s"udp port $port already journals to ${l.journalPath}, not $journal — " +
-        "stopListener first or reuse the existing journal")
-    require(l.framesBase64 == base64Frames,
-      s"udp port $port already listens in ${if (l.framesBase64) "base64-frame"
-        else "line"} mode — stopListener first")
-    l
-  }
 
-  def stopListener(port: Int): Unit =
-    listeners.remove(port).foreach(_.close())
-
-  def defaultJournal(port: Int): java.nio.file.Path =
-    java.nio.file.Paths.get(sys.props("java.io.tmpdir"), s"graft_udp_$port.journal")
-}
-
-private class UdpTable(options: CaseInsensitiveStringMap)
-  extends Table with SupportsRead {
-
-  private val port = options.getInt("port", 0)
-  private val journal = Option(options.get("journal"))
-    .map(java.nio.file.Paths.get(_))
-    .getOrElse(UdpSource.defaultJournal(port))
-
-  override def name(): String = s"graft_udp($port -> $journal)"
-  override def schema(): StructType = FileTailSource.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
-
-  override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder = {
-    UdpSource.ensureListener(port, journal,
-      options.getInt("size_limit", UdpSource.DefaultSizeLimit),
+  protected def listen(port: Int, journal: Path, options: CaseInsensitiveStringMap): Listener =
+    ensureListener(port, journal, options.getInt("size_limit", DefaultSizeLimit),
       "base64".equalsIgnoreCase(options.getOrDefault("frames", "line")))
-    val merged = new util.HashMap[String, String](options)
-    merged.putAll(opts)
-    merged.put("path", journal.toString)
-    // the journal IS a tailed file: delegate scan planning to FileTail
-    new FileTailScan(new CaseInsensitiveStringMap(merged))
-  }
 }

@@ -1,148 +1,72 @@
 package graft.sources
 
-import java.util
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.types.StructType
+import java.nio.file.Path
+import org.apache.spark.sql.connector.catalog.Table
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-/** Logstash `unix` input (logstash-input-unix, server mode) as a native
-  * DataSourceV2 source over an AF_UNIX stream socket:
+/** Logstash `unix` input (logstash-input-unix, server mode) as a journaled
+  * listener source (see [[JournaledListener]]) over an AF_UNIX stream
+  * socket:
   *
   *   spark.readStream.format("graft.sources.UnixSource")
   *     .option("socket", "/var/run/app.sock")
   *     .option("journal", "/shared/app-sock.journal")   // optional
   *     .load()  // -> (offset BIGINT, message STRING)
   *
-  * Same architecture as [[TcpSource]] (ingest -> durable journal -> offset
-  * deltas): an accept loop on a `ServerSocketChannel` bound to the UNIX
-  * domain address appends complete received lines to the journal; the scan
-  * delegates to the FileTail machinery for replayable byte offsets. The
-  * reference plugin's `force_unlink` option (remove a stale socket file
-  * before binding) is honored — without it a leftover path fails loudly,
-  * like the reference's "could not start UNIX server" error.
+  * Line framing, the per-frame size cap (`size_limit`) and flush-on-close
+  * are the tcp listener's ([[TcpSource.Listener]]). The reference plugin's
+  * `force_unlink` option (remove a stale socket file before binding) is
+  * honored — without it a leftover path fails loudly, like the reference's
+  * "could not start UNIX server" error.
   */
-class UnixSource extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    FileTailSource.Schema
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    new UnixTable(new CaseInsensitiveStringMap(properties))
-}
+class UnixSource extends ListenerSource(UnixSource.table)
 
 object UnixSource {
 
-  /** One accept-loop listener per socket path (process-wide); line framing,
-    * per-frame size cap, and flush-on-close all match the tcp listener
-    * contract ([[TcpSource.Listener]]).
+  /** Accepts connections on the socket path and journals each received
+    * line; closing removes the socket file.
     */
-  final class Listener(socket: java.nio.file.Path, journal: java.nio.file.Path,
+  final class Listener(socket: Path, journal: Path,
                        sizeLimit: Int = TcpSource.DefaultSizeLimit,
-                       forceUnlink: Boolean = false) {
+                       forceUnlink: Boolean = false) extends JournaledListener(journal) {
     if (forceUnlink) java.nio.file.Files.deleteIfExists(socket)
     private val server =
       java.nio.channels.ServerSocketChannel.open(java.net.StandardProtocolFamily.UNIX)
     server.bind(java.net.UnixDomainSocketAddress.of(socket))
-    @volatile private var closed = false
-    private val oversizedCount = new java.util.concurrent.atomic.AtomicLong(0)
-    def journalPath: java.nio.file.Path = journal
-    def oversized: Long = oversizedCount.get
-
-    private def append(lines: String): Unit = synchronized {
-      java.nio.file.Files.writeString(journal, lines,
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-    }
-
-    private val acceptLoop = new Thread(() => {
-      while (!closed) {
-        try {
-          val ch = server.accept()
-          val t = new Thread(() => {
-            val in = new java.io.BufferedInputStream(
-              java.nio.channels.Channels.newInputStream(ch))
-            val buf = new java.io.ByteArrayOutputStream()
-            var over = false
-            try {
-              var b = in.read()
-              while (b != -1) {
-                if (b == '\n') {
-                  if (over) oversizedCount.incrementAndGet()
-                  else append(buf.toString("UTF-8") + "\n")
-                  buf.reset(); over = false
-                } else if (!over) {
-                  if (buf.size >= sizeLimit) { over = true; buf.reset() }
-                  else buf.write(b)
-                }
-                b = in.read()
-              }
-              if (buf.size > 0 && !over) append(buf.toString("UTF-8") + "\n")
-              else if (over) oversizedCount.incrementAndGet()
-            } finally ch.close()
-          }, s"graft-unix-conn-$socket")
-          t.setDaemon(true); t.start()
-        } catch { case _: Throwable if closed => () case _: Throwable => () }
-      }
-    }, s"graft-unix-accept-$socket")
-    acceptLoop.setDaemon(true)
-    acceptLoop.start()
+    private val dropped = new java.util.concurrent.atomic.AtomicLong(0)
+    def oversized: Long = dropped.get
 
     def close(): Unit = {
-      closed = true; server.close()
+      stopAccepting(server)
       java.nio.file.Files.deleteIfExists(socket); ()
     }
+
+    acceptLoop(s"unix-$socket", () => server.accept())(ch =>
+      appendLines(java.nio.channels.Channels.newInputStream(ch), sizeLimit, dropped))
   }
 
-  private val listeners =
-    scala.collection.concurrent.TrieMap.empty[String, Listener]
+  private def endpoint(socket: Path): String = s"unix socket $socket"
 
   /** Idempotently start the listener for `socket` journaling to `journal`;
-    * a later request naming a different journal for an in-use socket fails
-    * loudly (same contract as the port listeners).
+    * a request that differs from the live listener's settings fails loudly.
     */
-  def ensureListener(socket: java.nio.file.Path, journal: java.nio.file.Path,
+  def ensureListener(socket: Path, journal: Path,
                      sizeLimit: Int = TcpSource.DefaultSizeLimit,
-                     forceUnlink: Boolean = false): Listener = {
-    val l = listeners.getOrElseUpdate(socket.toString,
+                     forceUnlink: Boolean = false): Listener =
+    Listeners.ensure(endpoint(socket), "journal" -> journal,
+      "size_limit" -> sizeLimit, "force_unlink" -> forceUnlink)(
       new Listener(socket, journal, sizeLimit, forceUnlink))
-    require(l.journalPath == journal,
-      s"unix socket $socket already journals to ${l.journalPath}, not $journal — " +
-        "stopListener first or reuse the existing journal")
-    l
-  }
 
-  def stopListener(socket: java.nio.file.Path): Unit =
-    listeners.remove(socket.toString).foreach(_.close())
+  def stopListener(socket: Path): Unit = Listeners.stop(endpoint(socket))
 
-  def defaultJournal(socket: java.nio.file.Path): java.nio.file.Path =
-    java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_unix_${Integer.toHexString(socket.toString.hashCode)}.journal")
-}
+  def defaultJournal(socket: Path): Path =
+    Listeners.defaultJournal("unix", Integer.toHexString(socket.toString.hashCode))
 
-private class UnixTable(options: CaseInsensitiveStringMap)
-  extends Table with SupportsRead {
-
-  private val socket = java.nio.file.Paths.get(
-    Option(options.get("socket")).getOrElse(
+  private[sources] def table(options: CaseInsensitiveStringMap): Table = {
+    val socket = java.nio.file.Paths.get(Option(options.get("socket")).getOrElse(
       throw new IllegalArgumentException("unix source: socket path required")))
-  private val journal = Option(options.get("journal"))
-    .map(java.nio.file.Paths.get(_))
-    .getOrElse(UnixSource.defaultJournal(socket))
-
-  override def name(): String = s"graft_unix($socket -> $journal)"
-  override def schema(): StructType = FileTailSource.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
-
-  override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder = {
-    UnixSource.ensureListener(socket, journal,
-      options.getInt("size_limit", TcpSource.DefaultSizeLimit),
-      options.getBoolean("force_unlink", false))
-    val merged = new util.HashMap[String, String](options)
-    merged.putAll(opts)
-    merged.put("path", journal.toString)
-    new FileTailScan(new CaseInsensitiveStringMap(merged))
+    new ListenerTable("unix", socket.toString, options, defaultJournal(socket))(
+      ensureListener(socket, _, options.getInt("size_limit", TcpSource.DefaultSizeLimit),
+        options.getBoolean("force_unlink", false)))
   }
 }

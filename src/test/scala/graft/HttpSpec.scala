@@ -29,7 +29,8 @@ class HttpSpec extends SparkSpec {
       val ck = s"$tmp/ck"; val out = s"$tmp/out"
       def runOnce(): Unit = {
         val q = spark.readStream.format("graft.sources.HttpSource")
-          .option("port", port).option("journal", journal.toString).load()
+          .option("port", port).option("journal", journal.toString)
+          .option("size_limit", 256).load() // the live listener's settings
           .writeStream.option("checkpointLocation", ck)
           .trigger(Trigger.AvailableNow())
           .format("parquet").option("path", out).start()

@@ -169,7 +169,7 @@ class MiscOpsSpec extends SparkSpec {
     // line 1 matches BOTH patterns with different captures -> p1 must win;
     // line 2 matches only p2; line 3 matches neither.
     val df = Seq("code=42 name=alpha", "beta 7", "???").toDF("line")
-    val out = graft.operators.Parse.grokMulti(df, "line", Seq(
+    val out = graft.operators.Parse.grokFull(df, "line", Seq(
       "code=%{INT:num:int} name=%{WORD:name}",
       "%{WORD:name} %{INT:num:int}")).collect()
     assert(out(0).getAs[String]("name") == "alpha" && out(0).getAs[Long]("num") == 42L)
